@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField,
+  StructType, TimestampType}
 import graft.plans.{ZoneMap, ZoneMapRegistry}
 
 /** S6 — tier lifecycle: the storage ladder the reference runs with
@@ -20,6 +22,13 @@ import graft.plans.{ZoneMap, ZoneMapRegistry}
   * partition rewrite — at 100 TB this is the standard compaction shape
   * (bounded per-job IO, no cross-partition shuffle beyond the PAA
   * aggregation key).
+  *
+  * Each step is ONE pass over its input: the row count a step returns is
+  * the metric its own write observed (Tiers.writeTier), never a second
+  * action that would re-scan the tier below and repeat every shuffle.
+  * Every tier is read with its fixed stored schema, so a step whose input
+  * tier is empty (a zero-row partitioned write leaves no Parquet file)
+  * moves 0 rows instead of failing to infer a schema.
   */
 class TierManager(spark: SparkSession, root: String) {
 
@@ -28,6 +37,8 @@ class TierManager(spark: SparkSession, root: String) {
   val tier2 = s"$root/tier2" // PAA chunk means (+ exact chunk sums)
   val tier3 = s"$root/tier3" // PAA at doubled width, re-recoded FROM tier2
   private def stats(t: String) = s"$t.stats"
+  private def readTier(t: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(t)
 
   /** Land exact readings into tier0 (ingest output). The data write and
     * the zone-map stats write are independent (separate outputs, both
@@ -60,9 +71,9 @@ class TierManager(spark: SparkSession, root: String) {
     * encodes natively — the BUFF-domain representation).
     */
   def compactToQuantized(cutoff: java.sql.Timestamp): Long = {
-    val aged = spark.read.parquet(tier0).filter(col("ts") < lit(cutoff))
+    val aged = readTier(tier0, TierManager.RowTier).filter(col("ts") < lit(cutoff))
     val out = aged.select(col("signal_id"), col("ts"), col("seq_no"), col("value_q"))
-    Tiers.writeTier(out, tier1)
+    val moved = Tiers.writeTier(out, tier1)
     // per-tier zone map: stats over the DEQUANTIZED view — exactly the
     // values a query over tier1 observes, so stats-only answers stay
     // consistent with data answers at this tier. (tier2/tier3 need no
@@ -72,7 +83,7 @@ class TierManager(spark: SparkSession, root: String) {
         out.withColumn("value", col("value_q").cast("double") / 100.0))
       .write.mode("overwrite").parquet(stats(tier1))
     ZoneMapRegistry.register(tier1, stats(tier1))
-    out.count()
+    moved
   }
 
   /** Age tier1 rows into PAA chunk means, guarded by projected CR:
@@ -95,7 +106,7 @@ class TierManager(spark: SparkSession, root: String) {
         .filter(col("recode")).select(col("signal_id"), col("seg")))
 
   private def compactToPaaPlanned(w: Int, planOf: DataFrame => DataFrame): Long = {
-    val t1 = spark.read.parquet(tier1)
+    val t1 = readTier(tier1, TierManager.RowTier)
       .withColumn("value", col("value_q").cast("double") / 100.0)
     val plan = planOf(t1)
     // per-SEGMENT guard (reference recoding_daemon.rs:283-348): only the
@@ -109,7 +120,6 @@ class TierManager(spark: SparkSession, root: String) {
     val paa = Tiers.paaChunks(eligible, w)
       .select(col("signal_id"), col("chunk"), col("chunk_mean"), col("cnt"), col("sq"))
     Tiers.writeTier(paa, tier2)
-    paa.count()
   }
 
   /** BUFF-lossy aging pass on the QUANTIZED tier (reference
@@ -122,11 +132,10 @@ class TierManager(spark: SparkSession, root: String) {
     * smaller. Returns the rewritten row count.
     */
   def compactQuantizedDropBits(bits: Int): Long = {
-    val t1 = spark.read.parquet(tier1)
+    val t1 = readTier(tier1, TierManager.RowTier)
     val out = t1.select(col("signal_id"), col("ts"), col("seq_no"),
       graft.functions.Quantize.approxTruncate(col("value_q"), bits).as("value_q"))
     Tiers.writeTier(out, tier1Lossy)
-    out.count()
   }
 
   val tier1Lossy = s"$root/tier1_lossy" // quantized with low bits dropped
@@ -139,7 +148,7 @@ class TierManager(spark: SparkSession, root: String) {
     * pass at width 2w bit-for-bit.
     */
   def compactToPaa2(w: Int, targetCr: Double): Long = {
-    val t2 = spark.read.parquet(tier2)
+    val t2 = readTier(tier2, TierManager.ChunkTier)
     val segOf = floor(col("chunk") * lit(w.toDouble) / lit(Readings.SegmentRows.toDouble))
       .cast("long").as("seg")
     val plan = t2.groupBy(col("signal_id"), segOf)
@@ -153,7 +162,6 @@ class TierManager(spark: SparkSession, root: String) {
       .drop("seg")
     val paa2 = Tiers.rePaaChunks(eligible, 2)
     Tiers.writeTier(paa2, tier3)
-    paa2.count()
   }
 
   /** Act on streamed bandit decisions (Ingest.policyStream output): the
@@ -173,12 +181,12 @@ class TierManager(spark: SparkSession, root: String) {
     * here: stats-only for grand totals (zone map), PAA for aged data.
     */
   def maxFromColdTier(): DataFrame =
-    spark.read.parquet(tier2)
+    readTier(tier2, TierManager.ChunkTier)
       .groupBy(col("signal_id")).agg(max(col("chunk_mean")).as("paa_max"))
 
   /** Same query answered from the tier3 (doubled-width) ladder step. */
   def maxFromTier3(): DataFrame =
-    spark.read.parquet(tier3)
+    readTier(tier3, TierManager.ChunkTier)
       .groupBy(col("signal_id")).agg(max(col("chunk_mean")).as("paa_max"))
 
   /** EXACT per-signal sum/avg served from the cold chunk tier — no
@@ -189,11 +197,11 @@ class TierManager(spark: SparkSession, root: String) {
     * 1/w the size of the data and the fold is one keyed aggregation.
     */
   def sumFromColdTier(): DataFrame =
-    TierManager.sumFromChunks(spark.read.parquet(tier2))
+    TierManager.sumFromChunks(readTier(tier2, TierManager.ChunkTier))
 
   /** Same exact-sum serving from the tier3 (doubled-width) step. */
   def sumFromTier3(): DataFrame =
-    TierManager.sumFromChunks(spark.read.parquet(tier3))
+    TierManager.sumFromChunks(readTier(tier3, TierManager.ChunkTier))
 
   /** Apply a [[Tiers.lruPlan]] decision table to landed readings: keep
     * segments stay raw in `hot/`, recode segments rewrite to PAA chunks in
@@ -285,6 +293,19 @@ class TierManager(spark: SparkSession, root: String) {
 }
 
 object TierManager {
+  /** Stored schemas of the tiers the ladder reads, with the partition
+    * column. A row tier (tier0's ladder columns, tier1) keeps readings;
+    * a chunk tier (tier2, tier3) keeps PAA chunks with their exact sums.
+    */
+  private val Bucket = StructField("sig_bucket", IntegerType)
+  private val RowTier: StructType = StructType(Seq(
+    StructField("signal_id", LongType), StructField("ts", TimestampType),
+    StructField("seq_no", LongType), StructField("value_q", LongType), Bucket))
+  private val ChunkTier: StructType = StructType(Seq(
+    StructField("signal_id", LongType), StructField("chunk", LongType),
+    StructField("chunk_mean", DoubleType), StructField("cnt", LongType),
+    StructField("sq", LongType), Bucket))
+
   /** Fold a chunk tier (signal_id, chunk, chunk_mean, cnt, sq) into exact
     * per-signal sum/count/avg: `sq` is the exact fixed-point in-chunk sum,
     * so the result is bit-equal to aggregating the raw readings.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TierTransforms
@@ -266,8 +266,15 @@ object Tiers {
 
   /** Write a tier as partitioned parquet — the storage shape at scale
     * (partition pruning on signal bucket, row-group stats for skipping).
+    * Returns the number of rows written, observed on the write itself
+    * (`Dataset.observe`): a caller that needs the count pays no second
+    * pass over `df` and none of its shuffles. An empty `df` returns 0.
     */
-  def writeTier(df: DataFrame, path: String, buckets: Int = 32): Unit =
+  def writeTier(df: DataFrame, path: String, buckets: Int = 32): Long = {
+    val obs = Observation()
     df.withColumn("sig_bucket", pmod(col("signal_id"), lit(buckets)))
+      .observe(obs, count(lit(1)).as("rows"))
       .write.mode("overwrite").partitionBy("sig_bucket").parquet(path)
+    obs.get("rows").asInstanceOf[Long]
+  }
 }

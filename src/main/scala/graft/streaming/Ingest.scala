@@ -45,6 +45,10 @@ object Ingest {
     // group-hash salt (MotifDiscord.groupHash): pre-salt snapshots read
     // it as null -> recovered as 0, the historical unsalted hash
     StructField("salt", LongType)))
+  /** policyStream's persisted Q state: one row per decided micro-batch. */
+  private val QStateSchema = StructType(Seq(
+    StructField("batch_id", LongType),
+    StructField("q", ArrayType(DoubleType)), StructField("step", LongType)))
 
   /** Normalized streaming readings from raw event files (schema must be
     * supplied for a file stream; ns timestamps arrive as longs).
@@ -678,6 +682,9 @@ object Ingest {
     var knownSegs: Option[scala.collection.mutable.TreeSet[Long]] = None
     var knownProf: Option[scala.collection.mutable.TreeSet[Long]] = None
     var knownState: Option[scala.collection.mutable.TreeSet[Long]] = None
+    // snapshot deletes that failed over the query's lifetime (each is
+    // retried next batch); reported by every failure's WARN line
+    var pruneFailures = 0L
     segmentStream(spark, srcDir, segRows, maxFilesPerTrigger)
       .writeStream
       .outputMode(OutputMode.Append)
@@ -950,7 +957,14 @@ object Ingest {
             try {
               fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batch=$b"), true)
               set -= b
-            } catch { case _: Throwable => () } // retry next batch
+            } catch { case scala.util.control.NonFatal(e) =>
+              // retry next batch: the snapshot stays in `set`
+              pruneFailures += 1
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"profileStream batch $batchId: could not prune snapshot " +
+                  s"$dir/batch=$b (prune failure $pruneFailures of this " +
+                  "query); retrying next batch", e)
+            }
         }
         lap("await-bg-writes")
       }
@@ -1034,18 +1048,24 @@ object Ingest {
     import spark.implicits._
     val arms = graft.ml.Bandit.RecodeArms
     val stateDir = s"$decisionsDir.qstate"
-    // restore the newest persisted state (restart continues the walk)
+    // restore the newest persisted state (restart continues the walk).
+    // Only a MISSING state directory means "first run"; a directory that
+    // exists but cannot be read fails the start rather than silently
+    // restarting the walk from Q0. The fixed schema reads a directory
+    // with no committed state file (a crash inside the first append) as
+    // empty, and needs no footer-inference job.
+    val statePath = new org.apache.hadoop.fs.Path(stateDir)
+    val stateRows =
+      if (!statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .exists(statePath)) Array.empty[org.apache.spark.sql.Row]
+      else spark.read.schema(QStateSchema).parquet(stateDir)
+        .orderBy(col("batch_id").desc).limit(1).collect()
     var (lastBatch, q, step) =
-      try {
-        val rows = spark.read.parquet(stateDir)
-          .orderBy(col("batch_id").desc).limit(1).collect()
-        if (rows.isEmpty) (-1L, Array.fill(arms.length)(graft.ml.Bandit.Q0), 0L)
-        else (rows(0).getAs[Long]("batch_id"),
-          rows(0).getAs[Seq[Double]]("q").toArray,
-          rows(0).getAs[Long]("step"))
-      } catch { case _: Throwable =>
+      if (stateRows.isEmpty)
         (-1L, Array.fill(arms.length)(graft.ml.Bandit.Q0), 0L)
-      }
+      else (stateRows(0).getAs[Long]("batch_id"),
+        stateRows(0).getAs[Seq[Double]]("q").toArray,
+        stateRows(0).getAs[Long]("step"))
     rewardStream(spark, srcDir, segRows, maxFilesPerTrigger)
       .writeStream
       .outputMode(OutputMode.Append)

@@ -456,6 +456,34 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       "the walk did not continue from the persisted state")
   }
 
+  test("policy restart: a missing Q state starts a fresh walk, an unreadable one fails loudly") {
+    val in = stageInput()
+    val root = Files.createTempDirectory("graft-policy-restart").toString
+    // missing state directory = first run: the walk starts from Q0 at step 1
+    val fresh = s"$root/fresh"
+    assert(!new java.io.File(s"$fresh.qstate").exists())
+    Ingest.policyStream(spark, in, Readings.SegmentRows.toInt, fresh,
+      s"$root/ckpt_fresh").awaitTermination()
+    val steps = spark.read.parquet(fresh).agg(min(col("step")), max(col("step")),
+      count(lit(1))).first()
+    assert(steps.getLong(0) == 1L && steps.getLong(1) == steps.getLong(2),
+      s"a first run did not start a fresh walk: $steps")
+    assert(spark.read.parquet(s"$fresh.qstate").count() == 1L)
+
+    // a state directory that exists but cannot be read must not be taken
+    // for a first run: the start fails, and no decision is written
+    val broken = s"$root/broken"
+    Files.createDirectories(Paths.get(s"$broken.qstate"))
+    Files.write(Paths.get(s"$broken.qstate", "part-00000.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception] {
+      Ingest.policyStream(spark, in, Readings.SegmentRows.toInt, broken,
+        s"$root/ckpt_broken").awaitTermination()
+    }
+    assert(!new java.io.File(broken).exists(),
+      "decisions were written from a silently restarted walk")
+  }
+
   test("streamed anomaly flags equal the batch seasonal-anomaly query") {
     val in = stageInput()
     import spark.implicits._

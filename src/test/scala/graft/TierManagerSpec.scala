@@ -75,6 +75,96 @@ class TierManagerSpec extends AnyFunSuite with SparkTest {
     assert(maxErr < 256, s"drop-bits error $maxErr out of bound")
   }
 
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Runs `f`, returning its value and the call site of every job it
+    * submitted ("<action> at <File>.scala:<line>"). Job properties carry no
+    * `callSite.short` unless a caller sets one, and adaptive execution
+    * submits stage jobs from a pool thread whose own call site names no
+    * action; so a SQL job's call site is the description of the SQL
+    * execution it belongs to (the call site of the action that started
+    * it), any other job's the name of its result stage.
+    */
+  private def jobsOf[T](f: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val execSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          execSites.put(x.executionId.toString, x.description)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.sql.execution.id"),
+          e.stageInfos.maxBy(_.stageId).name))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val v = f
+      org.apache.spark.ListenerBusDrain(sc)
+      import scala.jdk.CollectionConverters._
+      (v, jobs.asScala.toSeq.map { case (exec, stage) =>
+        Option(exec).flatMap(x => Option(execSites.get(x))).getOrElse(stage)
+      })
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("each ladder step is one pass: no recount job, returned count = rows written") {
+    val root = Files.createTempDirectory("graft-tiers-1pass").toString
+    val tm = new TierManager(spark, root)
+    val r = Readings.of(spark, sf)
+    tm.landTier0(r)
+    val cutoff = java.sql.Timestamp.valueOf("2024-01-15 00:00:00")
+    // every other aged segment is decided paa_4
+    val decisions = r.filter(col("ts") < lit(cutoff))
+      .select(col("signal_id"), Readings.segmentId(col("seq_no")).as("seg"))
+      .distinct()
+      .withColumn("codec", when(col("seg") % 2 === 0, "paa_4").otherwise("keep"))
+      .localCheckpoint()
+    val steps = Seq[(String, () => Long, String)](
+      ("compactToQuantized", () => tm.compactToQuantized(cutoff), tm.tier1),
+      ("compactToPaa", () => tm.compactToPaa(w = 4, targetCr = 0.5), tm.tier2),
+      ("compactToPaaWithFeedback",
+        () => tm.compactToPaaWithFeedback(4, 0.5, errBudget = 80.0), tm.tier2),
+      ("applyPaaDecisions", () => tm.applyPaaDecisions(decisions), tm.tier2),
+      ("compactToPaa2", () => tm.compactToPaa2(w = 4, targetCr = 0.6), tm.tier3),
+      ("compactQuantizedDropBits", () => tm.compactQuantizedDropBits(8),
+        tm.tier1Lossy))
+    for ((name, step, tier) <- steps) {
+      val (n, sites) = jobsOf(step())
+      assert(sites.nonEmpty && sites.forall(_.contains(" at ")),
+        s"$name: a job without a call site: $sites")
+      val recounts = sites.filter(s =>
+        s.startsWith("count at ") && s.contains("TierManager.scala"))
+      assert(recounts.isEmpty, s"$name re-ran its plan to count: $recounts")
+      assert(n > 0, s"$name moved nothing; the check below would be vacuous")
+      assert(n == spark.read.parquet(tier).count(),
+        s"$name returned $n, but $tier holds a different row count")
+    }
+  }
+
+  test("empty tier1: every later ladder step moves 0 rows instead of failing") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-tiers-empty").toString
+    val tm = new TierManager(spark, root)
+    tm.landTier0(Readings.of(spark, sf))
+    // a cutoff before all data ages nothing: tier1 is a zero-row write
+    assert(tm.compactToQuantized(java.sql.Timestamp.valueOf("1970-01-02 00:00:00")) == 0L)
+    assert(tm.compactToPaa(w = 4, targetCr = 0.5) == 0L)
+    assert(tm.compactToPaaWithFeedback(4, 0.5, errBudget = 80.0) == 0L)
+    val decisions = Seq((1L, 0L, "paa_4")).toDF("signal_id", "seg", "codec")
+    assert(tm.applyPaaDecisions(decisions) == 0L)
+    assert(tm.compactToPaa2(w = 4, targetCr = 0.6) == 0L)
+    assert(tm.compactQuantizedDropBits(8) == 0L)
+    // the reads served from the empty chunk tiers answer with no rows
+    assert(tm.sumFromColdTier().count() == 0L)
+    assert(tm.maxFromTier3().count() == 0L)
+  }
+
   test("correction upsert: merge wins, bounded rewrite, stats patched, idempotent") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-upsert").toString
