@@ -1,113 +1,249 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
-  * prints ONE machine-readable JSON line on stdout.
+/** Benchmark main. With no arguments it times every registered query at
+  * SPARK_GRAFT_SF_DIR and prints ONE machine-readable JSON line on stdout.
   *
-  * - Each query runs SPARK_GRAFT_REPS times (default 3); the reported
-  *   per-query number is the MEDIAN, so one-off JIT/GC hiccups don't
-  *   pollute the headline (the reference harness also runs repetitions,
-  *   database/script/end2end.sh). The full per-query file additionally
-  *   records {mean, sd, reps}, and any query whose sweep median exceeds
-  *   2x its committed prior is automatically re-run ISOLATED at the end
-  *   of the sweep with both numbers in the artifact — the adjudication
-  *   judges previously had to do by hand for in-sweep noise.
+  * - Each query runs SPARK_GRAFT_REPS times (default 3). Each rep records
+  *   its wall time and the work it did: what one SparkListener sees (jobs,
+  *   stages, tasks, shuffle bytes, input records, executor CPU) plus the
+  *   bench thread's own CPU.
+  * - Each row is checked against the prior taken under the same [[Key]]
+  *   (see [[regressions]]); wall time (`t`, the median, with mean/sd) is
+  *   evidence, never the gate. Priors live in the keyed store
+  *   SPARK_GRAFT_BENCH_OUT (default BENCH_QUERIES.json) — see [[merge]].
   * - `*_tier` variants read the PERSISTED ingest tier (seq_no/value_q
   *   landed once, untimed): the per-query cost excludes the seq_no
   *   derivation shuffle that ingest pays once at scale, and scans get
   *   parquet filter pushdown end-to-end.
+  *
+  * Modes `dedup-growth <in> <work>`, `profile-growth <in> <work>` and
+  * `fit <sf>` print one JSON line each instead: see [[dedupGrowth]],
+  * [[profileGrowth]] and [[fit]].
   */
 object Bench {
-  private[graft] case class Prior(queries: Map[String, Double], ingest: Option[Double])
-
-  /** The canary-scaled outlier trip line: a query re-adjudicates when its
-    * sweep median exceeds this (see the canaryRatio comment in main).
+  /** The counters compared against the prior. Input records and shuffle
+    * bytes are recorded but not gated: they moved between back-to-back
+    * sweeps of one build (by < 0.2 % on 1-3 of 258 rows).
     */
-  private[graft] def tripThreshold(prior: Double, canaryScale: Double): Double =
-    2 * prior * canaryScale + 0.25
+  val Gated = Seq("jobs", "stages", "tasks")
 
-  /** Host-factor clamp shared by the trip guard and the prior loader:
-    * below 1 a FAST host must never loosen/raise anything, above 3 the
-    * "host factor" explanation is itself suspect (measured swings are
-    * 1.5-2x).
+  /** A row as the store keeps it: median wall and CPU seconds, and the
+    * counters every rep repeated exactly (only those can be gated).
     */
-  private[graft] def clampCanary(r: Double): Double =
-    math.min(3.0, math.max(1.0, r))
+  case class Row(t: Double, cpuS: Double, counters: Map[String, Long])
+  def row(reps: Seq[Work]): Row = {
+    def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    Row(med(reps.map(_.wallS)), med(reps.map(_.cpuS)),
+      Work.CounterNames.map(k => k -> reps.map(_.counters(k)).distinct)
+        .collect { case (k, Seq(v)) => k -> v }.toMap)
+  }
 
-  /** Load last round's committed per-query map as this sweep's priors.
-    *
-    * CANARY NORMALIZATION (r14 verdict #1): when the committed artifact
-    * was measured on a loaded host, its honest-but-inflated times must
-    * not become priors RAW — r14's driver rerun landed on a 1.65x window
-    * and committed pipe_quality_filter t=3.444 against a clean
-    * same-binary 1.091, under which a real ~3x regression would sit
-    * below the 2x-prior trip line and pass silently. The artifact
-    * records its own host factor (o1_scan current/prior), so the loader
-    * divides each committed time by that run's clamped canary ratio:
-    * fork-adjudicated rows by `resweep_canary_ratio` (the fork JVM's own
-    * canary), plain sweep rows by `sweep_canary_ratio` (written since
-    * r15; absent in older artifacts -> raw, the pre-r15 behavior). The
-    * clamp keeps the discipline of the trip threshold: a fast host
-    * (ratio < 1) never RAISES a prior, and a reading above 3x caps so a
-    * broken scan path cannot scrub every other row's history.
+  /** Why `cur` regressed against its same-key `prior`; empty when it did
+    * not. A gated counter that repeated in both runs and now differs flags
+    * in either direction (the prior no longer describes the row), and so
+    * does CPU above 2 x prior + 0.25 s, the trip line the wall-clock gate
+    * used. Wall time never flags: host noise moves it 1.5-3x.
     */
-  private[graft] def loadPrior(path: String, sfDir: String): Prior =
-    try {
-      import scala.jdk.CollectionConverters._
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(path)))
-      // priors are only comparable at the same data scale: a scale-up
-      // run against a map committed at another sf must not mass-trigger
-      // isolation reruns
-      if (!Option(root.get("sf")).map(_.asText).contains(sfDir))
-        throw new IllegalStateException("sf mismatch")
-      def ratio(field: String): Option[Double] =
-        Option(root.get(field)).filter(_.isNumber).map(n => clampCanary(n.asDouble))
-      val sweepRatio = ratio("sweep_canary_ratio")
-      val forkRatio = ratio("resweep_canary_ratio")
-      val qs = Option(root.get("queries")).toSeq
-        .flatMap(_.fields().asScala)
-        .flatMap { e =>
-          val v = e.getValue
-          // a plain number is the query's time; an object carries the
-          // sweep t plus possibly a rerun (resweep, legacy iso). The
-          // rerun executes right after the full sweep (fresh JVM since
-          // r14, same JVM before), so residual load can inflate it — the
-          // prior takes the MINIMUM of the candidates: all are real runs
-          // of the same binary, and the faster one is the cleaner cost
-          // bound.
-          val cand: Seq[Double] =
-            if (v.isNumber) Seq(v.asDouble)
-            else Seq("t", "resweep", "iso").flatMap(f =>
-              Option(v.get(f)).filter(_.isNumber).map(_.asDouble))
-          if (cand.isEmpty) None
-          else {
-            val isFork = !v.isNumber &&
-              Option(v.get("resweep_mode")).map(_.asText).contains("fork")
-            val hostFactor =
-              (if (isFork) forkRatio.orElse(sweepRatio) else sweepRatio)
-                .getOrElse(1.0)
-            Some(e.getKey -> cand.min / hostFactor)
-          }
-        }.toMap
-      val ing = Option(root.get("ingest_pts_per_sec"))
-        .filter(_.isNumber).map(_.asDouble)
-      Prior(qs, ing)
-    } catch { case _: Throwable => Prior(Map.empty, None) }
+  def regressions(cur: Row, prior: Row): Seq[String] =
+    Gated.flatMap(k => (cur.counters.get(k), prior.counters.get(k)) match {
+      case (Some(a), Some(b)) if a != b => Some(s"$k $b->$a")
+      case _ => None
+    }) ++ (if (cur.cpuS <= 2 * prior.cpuS + 0.25) Nil
+           else Seq(s"cpu_s ${f3(prior.cpuS)}->${f3(cur.cpuS)}"))
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** What makes two runs' counters comparable. `action` is what each row
+    * does with its frame.
+    */
+  case class Key(sf: String, cpus: Int, shufflePartitions: Int, action: String) {
+    override def toString: String =
+      s"sf=$sf cpus=$cpus shuffle_partitions=$shufflePartitions action=$action"
+  }
+
+  private val mapper = new ObjectMapper()
+
+  /** The store's entries, one per key; a missing or pre-key file has none. */
+  def entries(path: String): Seq[JsonNode] =
+    try mapper.readTree(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
+      .get("entries").elements.asScala.toSeq
+    catch { case _: Throwable => Nil }
+
+  /** The rows of `key`'s entry in the store at `path`; none when no entry
+    * has that key.
+    */
+  def loadPrior(path: String, key: Key): Map[String, Row] =
+    entries(path).find(_.path("key").asText == key.toString).toSeq
+      .flatMap(_.path("queries").fields.asScala)
+      .flatMap { e =>
+        val v = e.getValue
+        def num(f: String) = Option(v.get(f)).filter(_.isNumber).map(_.asDouble)
+        for (t <- num("t"); cpu <- num("cpu_s")) yield e.getKey -> Row(t, cpu,
+          v.path("work").fields.asScala.map(c => c.getKey -> c.getValue.asLong).toMap)
+      }.toMap
+
+  /** The store after a run: a full sweep replaces its own key's entry; a
+    * SPARK_GRAFT_ONLY run only fills a key that has none. Other keys stay.
+    */
+  def merge(store: Seq[JsonNode], entry: String, fullSweep: Boolean): Seq[JsonNode] = {
+    val e = mapper.readTree(entry)
+    val same = (x: JsonNode) => x.path("key").asText == e.path("key").asText
+    if (!fullSweep && store.exists(same)) store else store.filterNot(same) :+ e
+  }
+
+  private def ms(p: org.apache.spark.sql.streaming.StreamingQueryProgress, k: String): Long =
+    Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
+  private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c => c.toString
+  }
+
+  def main(args: Array[String]): Unit = args match {
+    case Array() => sweep()
+    case Array("dedup-growth", in, work) => dedupGrowth(in, work)
+    case Array("profile-growth", in, work) => profileGrowth(in, work)
+    case Array("fit", sf) => fit(sf)
+    case _ =>
+      System.err.println("usage: graft.Bench [dedup-growth <in> <work> | " +
+        "profile-growth <in> <work> | fit <sf>]")
+      sys.exit(2)
+  }
+
+  private val Growth = "spark.sql.streaming.numRecentProgressUpdates" -> "10000"
+  /** The local session every mode runs on: SPARK_GRAFT_CPUS cores and as
+    * many shuffle partitions.
+    */
+  private def session(conf: (String, String)*): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    val spark = SparkSession.builder()
+    val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Prints a growth curve: per micro-batch the size folded into before it
+    * (`sizeField`, advanced by `grow(rowsIn)`), its input rows, `extra`
+    * fields and its addBatch seconds. recentProgress is a bounded ring
+    * (default 100): a replay with more slices would silently drop the
+    * EARLIEST batches, so the growth modes raise the cap with [[Growth]].
+    */
+  private def printGrowth(metric: String, in: String, totalS: Double,
+      q: org.apache.spark.sql.streaming.StreamingQuery, sizeField: String,
+      grow: Long => Long, extra: Long => String = _ => ""): Unit = {
+    var size = 0L
+    val batches = q.recentProgress.toSeq.map { p =>
+      val add = ms(p, "addBatch") / 1e3
+      val row = s"""{"$sizeField":$size,"rows_in":${p.numInputRows},""" +
+        s"""${extra(p.batchId)}"addBatch_sec":${f3(add)}}"""
+      size += grow(p.numInputRows)
+      row
+    }
+    println(s"""{"metric":"$metric","unit":"sec","input":"$in",""" +
+      s""""total_sec":${f3(totalS)},"batches":[${batches.mkString(",")}]}""")
+  }
+
+  /** Streaming near-dedup vs landed-store size: each micro-batch signs its
+    * documents, probes the PERSISTED band store for near-dup candidates
+    * against everything landed before it, and appends its own bands — the
+    * evidence for whether the per-batch cost stays flat as the corpus grows.
+    */
+  private def dedupGrowth(inDir: String, workDir: String): Unit = {
+    val spark = session(Growth)
+    val t0 = System.nanoTime()
+    val store = s"$workDir/store${System.nanoTime()}"
+    val q = graft.streaming.Ingest.dedupGrowStream(spark, inDir, store,
+      maxFilesPerTrigger = 1)
+    q.awaitTermination()
+    val total = (System.nanoTime() - t0) / 1e9
+    // staged copies near-dup every earlier copy, so confirmed output
+    // grows linearly with the landed store BY CONSTRUCTION — report the
+    // per-batch confirmed count so cost growth attributes to output (the
+    // scale table's dedup_minhash discipline), not to the probe
+    val confirmedByBatch: Map[Long, Long] =
+      if (!new java.io.File(s"$store/pairs").isDirectory) Map.empty
+      else spark.read.parquet(s"$store/pairs")
+        .groupBy(col("batch_id")).agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    printGrowth("dedup_growth", inDir, total, q, "docs_before", identity,
+      b => s""""confirmed_pairs":${confirmedByBatch.getOrElse(b, 0L)},""")
+    spark.stop()
+  }
+
+  /** Streaming matrix profile vs history size (in segments): replays a
+    * staged seg-ordered input (tools/make_ramp_history.py for the exact
+    * route, tools/make_adversarial.py restaged for the dense route) one
+    * file per micro-batch.
+    */
+  private def profileGrowth(inDir: String, workDir: String): Unit = {
+    val spark = session(Growth)
+    // SPARK_GRAFT_REBUILD_EVERY overrides profileStream's periodic
+    // route-state rebuild interval, so the harness can also measure the
+    // rebuild batch's cost against a large folded history (a small
+    // interval forces rebuilds INSIDE the replay window; the default 64
+    // keeps the growth curve rebuild-free, matching production cadence)
+    val rebuildEvery =
+      sys.env.getOrElse("SPARK_GRAFT_REBUILD_EVERY", "64").toInt
+    val t0 = System.nanoTime()
+    val q = graft.streaming.Ingest.profileStream(spark, inDir,
+      s"$workDir/w${System.nanoTime()}",
+      segRows = graft.operators.Readings.SegmentRows.toInt,
+      maxFilesPerTrigger = 1, rebuildEvery = rebuildEvery)
+    q.awaitTermination()
+    printGrowth("profile_growth", inDir, (System.nanoTime() - t0) / 1e9, q,
+      "m_before", _ / graft.operators.Readings.SegmentRows)
+    spark.stop()
+  }
+
+  /** Isolation forest fit-vs-score split, behind the fixed-ψ design claim:
+    * past the feature scan, fit cost is independent of data size (one
+    * distributed top-k pass + driver growth over ≤ trees·ψ rows) while
+    * scoring is one map-only pass that scales with rows. Run at two scales
+    * and compare. Each number is the median of 3 runs after a warmup.
+    */
+  private def fit(sfDir: String): Unit = {
+    val spark = session()
+    import graft.ml.IsolationForest
+    import graft.operators.Readings
+    def median3(f: () => Unit): Double = {
+      f()
+      (1 to 3).map { _ =>
+        val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
+      }.sorted.apply(1)
+    }
+    val ids = Seq("signal_id", "seg")
+    val fcs = Seq("f0", "f1", "f2", "f3")
+    // features pinned once: the fit/score split should not re-bill the
+    // shared PAA derivation to either phase
+    val feats = IsolationForest.paaFeatures(Readings.of(spark, sfDir))
+      .localCheckpoint()
+    val rows = feats.count()
+    val featSec = median3(() => {
+      IsolationForest.paaFeatures(Readings.of(spark, sfDir)).count(); ()
+    })
+    val fitSec = median3(() => { IsolationForest.fit(feats, ids, fcs); () })
+    val model = IsolationForest.fit(feats, ids, fcs)
+    val scoreSec = median3(() => {
+      IsolationForest.scoreWithModel(feats, ids, fcs, model).count(); ()
+    })
+    println(s"""{"sf":"$sfDir","rows":$rows,"feat_sec":${f3(featSec)},""" +
+      s""""fit_sec":${f3(fitSec)},"score_sec":${f3(scoreSec)}}""")
+    spark.stop()
+  }
+
+  private def sweep(): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
+    val spark = session()
     // untimed warmup: JVM/codegen/scan setup should not be billed to the
     // alphabetically-first query. One warm query PER DATA FAMILY, each in
     // its own try, so a single broken loader (r7: the events ts-type
@@ -126,82 +262,69 @@ object Bench {
       sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def needed(names: String*): Boolean =
       only.forall(sel => names.exists(sel.contains))
-    // untimed ingest: land tier0 once; the *_tier variants below then
-    // measure the read path the architecture actually ships at 100 TB.
-    // Setup failures are logged (a missing bench row must be diagnosable)
-    // and the scratch dirs are deleted after the run.
     var scratch: List[java.nio.file.Path] = Nil
     def tempDir(prefix: String): String = {
       val p = java.nio.file.Files.createTempDirectory(prefix)
       scratch ::= p
       p.toString
     }
-    val tierMgr: Option[graft.operators.TierManager] =
-      if (!needed("o6_window_pos_tier", "o3_range_tier", "ts_m4_tier",
-          "ts_twa_tier", "asof_native_tier", "tier3_paa_max", "tier2_sum",
-          "tier3_sum")) None
-      else try {
-        val tm = new graft.operators.TierManager(spark, tempDir("graft-bench-tier"))
-        tm.landTier0(graft.operators.Readings.of(spark, sfDir))
-        // walk the full aging ladder once (untimed) so the *_tier entries
-        // measure reads against every persisted tier, tier3 included
-        tm.compactToQuantized(java.sql.Timestamp.valueOf("2030-01-01 00:00:00"))
-        tm.compactToPaa(w = 4, targetCr = 0.5)
-        tm.compactToPaa2(w = 4, targetCr = 0.6)
-        Some(tm)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] tier setup failed (no *_tier rows): $e"); None }
+    // an untimed setup step, run only when one of `rows` is selected. A
+    // failure is logged (a missing bench row must be diagnosable) and
+    // drops those rows; the scratch dirs are deleted after the run.
+    def untimed[T](what: String, rows: String*)(f: => T): Option[T] =
+      if (!needed(rows: _*)) None
+      else try Some(f) catch { case e: Throwable =>
+        System.err.println(s"[bench] $what setup failed (no ${rows.mkString("/")} row): $e")
+        None }
+    // untimed ingest: land tier0 once; the *_tier variants below then
+    // measure the read path the architecture actually ships at 100 TB.
+    val tierMgr = untimed("tier", "o6_window_pos_tier", "o3_range_tier",
+        "ts_m4_tier", "ts_twa_tier", "asof_native_tier", "tier3_paa_max",
+        "tier2_sum", "tier3_sum") {
+      val tm = new graft.operators.TierManager(spark, tempDir("graft-bench-tier"))
+      tm.landTier0(graft.operators.Readings.of(spark, sfDir))
+      // walk the full aging ladder once (untimed) so the *_tier entries
+      // measure reads against every persisted tier, tier3 included
+      tm.compactToQuantized(java.sql.Timestamp.valueOf("2030-01-01 00:00:00"))
+      tm.compactToPaa(w = 4, targetCr = 0.5)
+      tm.compactToPaa2(w = 4, targetCr = 0.6)
+      tm
+    }
     val tier0: Option[String] = tierMgr.map(_.tier0)
 
     // bucketed co-located store (untimed write): the q_bucketed_* entries
     // then measure the exchange-free fact-fact join / keyed agg read path
-    val bucketed: Boolean =
-      if (!needed("q_bucketed_join", "q_bucketed_agg", "q_asof_bucketed")) false
-      else try {
-        val r = graft.operators.Readings.of(spark, sfDir)
-        graft.sources.BucketedStore.writeBucketed(
-          r.select(col("signal_id"), col("seq_no"), col("value")),
-          "bench_readings_b", "signal_id", buckets = 32, sortCols = Seq("seq_no"))
-        graft.sources.BucketedStore.writeBucketed(
-          r.groupBy(col("signal_id")).agg(max(col("value")).as("sig_max")),
-          "bench_sigstats_b", "signal_id", buckets = 32)
-        // (key, time)-sorted pair for the exchange-free AND sort-free
-        // native as-of (AsOfJoinSpec proves the plan shape)
-        graft.sources.BucketedStore.writeBucketed(
-          r.select(col("signal_id"), col("ts"), col("value")),
-          "bench_asof_l_b", "signal_id", buckets = 32,
-          sortCols = Seq("signal_id", "ts"))
-        graft.sources.BucketedStore.writeBucketed(
-          r.filter(col("seq_no") % 16 === 1)
-            .select(col("signal_id"), col("ts").as("mts"),
-              graft.operators.Readings.segmentId(col("seq_no")).as("seg")),
-          "bench_asof_r_b", "signal_id", buckets = 32,
-          sortCols = Seq("signal_id", "mts"))
-        true
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] bucketed setup failed (no q_bucketed rows): $e"); false }
-
-    // small-input benches broadcast the stats side and skip the bucketed
-    // path entirely; at 100 TB neither side broadcasts, so the co-located
-    // sort-merge IS the production plan — pin it for the measurement
-    def withoutAutoBroadcast(run: => Unit): Unit = {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try run finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
+    val bucketed = untimed("bucketed", "q_bucketed_join", "q_bucketed_agg",
+        "q_asof_bucketed") {
+      val r = graft.operators.Readings.of(spark, sfDir)
+      graft.sources.BucketedStore.writeBucketed(
+        r.select(col("signal_id"), col("seq_no"), col("value")),
+        "bench_readings_b", "signal_id", buckets = 32, sortCols = Seq("seq_no"))
+      graft.sources.BucketedStore.writeBucketed(
+        r.groupBy(col("signal_id")).agg(max(col("value")).as("sig_max")),
+        "bench_sigstats_b", "signal_id", buckets = 32)
+      // (key, time)-sorted pair for the exchange-free AND sort-free
+      // native as-of (AsOfJoinSpec proves the plan shape)
+      graft.sources.BucketedStore.writeBucketed(
+        r.select(col("signal_id"), col("ts"), col("value")),
+        "bench_asof_l_b", "signal_id", buckets = 32,
+        sortCols = Seq("signal_id", "ts"))
+      graft.sources.BucketedStore.writeBucketed(
+        r.filter(col("seq_no") % 16 === 1)
+          .select(col("signal_id"), col("ts").as("mts"),
+            graft.operators.Readings.segmentId(col("seq_no")).as("seg")),
+        "bench_asof_r_b", "signal_id", buckets = 32,
+        sortCols = Seq("signal_id", "mts"))
+    }.isDefined
 
     // untimed corpus materialization: the *_store variant then measures
     // the trainer's read path (partition-pruned split scan), not the
     // curation compute the pipeline pays once
-    val corpusDir: Option[String] =
-      if (!needed("pipe_corpus_store")) None
-      else try {
-        val dir = tempDir("graft-bench-corpus") + "/corpus"
-        graft.sources.CorpusStore.write(
-          graft.Tables.documents(spark, sfDir), dir)
-        Some(dir)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] corpus setup failed (no pipe_corpus_store row): $e"); None }
+    val corpusDir = untimed("corpus", "pipe_corpus_store") {
+      val dir = tempDir("graft-bench-corpus") + "/corpus"
+      graft.sources.CorpusStore.write(graft.Tables.documents(spark, sfDir), dir)
+      dir
+    }
 
     // untimed staging for the streaming matrix-profile maintenance row:
     // the events table as 4 files so the AvailableNow run has 4
@@ -212,152 +335,109 @@ object Bench {
     // row's wall time to harness init vs fold compute without a second
     // instrumented run
     var profileStreamBreakdown: Option[String] = None
-    val profileIn: Option[String] =
-      if (!needed("seg_profile_stream")) None
-      else try {
-        val in = tempDir("graft-bench-mpin")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(s"$sfDir/events.parquet")
-          .repartition(4).write.mode("overwrite").parquet(in)
-        Some(in)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] profile-stream setup failed (no seg_profile_stream row): $e"); None }
+    val profileIn = untimed("profile-stream", "seg_profile_stream") {
+      val in = tempDir("graft-bench-mpin")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(s"$sfDir/events.parquet")
+        .repartition(4).write.mode("overwrite").parquet(in)
+      in
+    }
 
     // untimed IVF index build for the serving-cost row: at 100 TB the
     // index is built once by the ingest pipeline and amortized over every
     // query, so ann_ivf_store's build+probe number misattributes the
     // scale cost — ann_ivf_probe times ONLY the partition-pruned serve
-    val ivfIdxDir: Option[String] =
-      if (!needed("ann_ivf_probe")) None
-      else try {
-        val dir = tempDir("graft-bench-ivfidx") + "/ivf"
-        graft.operators.AnnQueries.ivfBuildStore(spark, sfDir, dir)
-        Some(dir)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ivf index setup failed (no ann_ivf_probe row): $e"); None }
+    val ivfIdxDir = untimed("ivf index", "ann_ivf_probe") {
+      val dir = tempDir("graft-bench-ivfidx") + "/ivf"
+      graft.operators.AnnQueries.ivfBuildStore(spark, sfDir, dir)
+      dir
+    }
 
     // untimed reduced-store build: ann_rp_ivf_probe times the serve alone
     // (the reduced tier's amortized cost — projection + bucketing happen
     // at ingest in production)
-    val rpIvfIdxDir: Option[String] =
-      if (!needed("ann_rp_ivf_probe")) None
-      else try {
-        val dir = tempDir("graft-bench-rpivfidx") + "/rpivf"
-        graft.operators.AnnQueries.rpIvfBuildStore(spark, sfDir, dir)
-        Some(dir)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] rp-ivf index setup failed (no ann_rp_ivf_probe row): $e"); None }
+    val rpIvfIdxDir = untimed("rp-ivf index", "ann_rp_ivf_probe") {
+      val dir = tempDir("graft-bench-rpivfidx") + "/rpivf"
+      graft.operators.AnnQueries.rpIvfBuildStore(spark, sfDir, dir)
+      dir
+    }
 
     // untimed segment-array materialization: seg_profile_auto_tier times
     // the routed profile over PERSISTED (signal_id, seg, qvals) arrays —
     // the shape the streaming ingest already lands (profileStream's segs
     // store) — attributing seg_profile_auto's cost between the one-time
     // readings->arrays derivation shuffle and the profile compute itself
-    val segArrDir: Option[String] =
-      if (!needed("seg_profile_auto_tier")) None
-      else try {
-        val dir = tempDir("graft-bench-segarr") + "/segs"
-        graft.operators.Segments.completeQuantized(
-            graft.operators.Readings.of(spark, sfDir))
-          .select(col("signal_id"), col("seg"), col("qvals"))
-          .write.mode("overwrite").parquet(dir)
-        Some(dir)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] segment-array setup failed (no seg_profile_auto_tier row): $e"); None }
+    val segArrDir = untimed("segment-array", "seg_profile_auto_tier") {
+      val dir = tempDir("graft-bench-segarr") + "/segs"
+      graft.operators.Segments.completeQuantized(
+          graft.operators.Readings.of(spark, sfDir))
+        .select(col("signal_id"), col("seg"), col("qvals"))
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
 
     // untimed histogram-sketch materialization for the *_tier percentile
-    val histDir: Option[String] =
-      if (!needed("o8_percentile_sketch_tier")) None
-      else try {
-        val hd = tempDir("graft-bench-hist") + "/hist"
-        graft.plans.ZoneMap.segmentHistogram(
-            graft.operators.Readings.of(spark, sfDir))
-          .write.mode("overwrite").parquet(hd)
-        Some(hd)
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] hist setup failed (no o8_percentile_sketch_tier row): $e"); None }
-
-    val base: Seq[(String, () => Unit)] = SparkEntry.queries.toSeq
-      .map { case (n, fn) => (n, () => { fn(spark, sfDir).count(); () }) }
-    val corpusVariants: Seq[(String, () => Unit)] = corpusDir.toSeq.map { dir =>
-      ("pipe_corpus_store", () => {
-        graft.sources.CorpusStore.readSplit(spark, dir, "train").count(); ()
-      })
+    val histDir = untimed("hist", "o8_percentile_sketch_tier") {
+      val hd = tempDir("graft-bench-hist") + "/hist"
+      graft.plans.ZoneMap.segmentHistogram(
+          graft.operators.Readings.of(spark, sfDir))
+        .write.mode("overwrite").parquet(hd)
+      hd
     }
-    val tierVariants: Seq[(String, () => Unit)] = corpusVariants ++ tier0.toSeq.flatMap { t =>
+
+    // the timed action, named once: the prior key records it
+    val action = "count"
+    def timed(name: String)(df: => org.apache.spark.sql.DataFrame): (String, () => Unit) =
+      (name, () => { df.count(); () })
+    // a row run with one session conf pinned, restored afterwards
+    def withConf(k: String, v: String)(r: (String, () => Unit)): (String, () => Unit) =
+      (r._1, () => {
+        val prev = spark.conf.getOption(k)
+        spark.conf.set(k, v)
+        try r._2() finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      })
+    val base = SparkEntry.queries.toSeq.map { case (n, fn) => timed(n)(fn(spark, sfDir)) }
+    val tierVariants: Seq[(String, () => Unit)] = corpusDir.toSeq.map { dir =>
+      timed("pipe_corpus_store")(graft.sources.CorpusStore.readSplit(spark, dir, "train"))
+    } ++ tier0.toSeq.flatMap { t =>
       Seq(
-        ("o6_window_pos_tier", () => {
-          graft.operators.TsQuery.windowMaxPositional(
-            spark.read.parquet(t), 0L, Long.MaxValue, 16L).count(); ()
-        }),
-        ("o3_range_tier", () => {
-          spark.read.parquet(t).filter(col("value") > 150.0)
-            .select(col("signal_id"), col("seq_no")).count(); ()
-        }),
+        timed("o6_window_pos_tier")(graft.operators.TsQuery.windowMaxPositional(
+          spark.read.parquet(t), 0L, Long.MaxValue, 16L)),
+        timed("o3_range_tier")(spark.read.parquet(t).filter(col("value") > 150.0)
+          .select(col("signal_id"), col("seq_no"))),
         // rollups over the PERSISTED tier (stored seq_no/value_q — no
         // in-query derivation window): the read path ingest ships
-        ("ts_m4_tier", () => {
-          graft.operators.TsQueries.m4Of(spark.read.parquet(t)).count(); ()
-        }),
-        ("ts_twa_tier", () => {
-          graft.operators.TsQueries.twaOf(spark.read.parquet(t)).count(); ()
-        }),
+        timed("ts_m4_tier")(graft.operators.TsQueries.m4Of(spark.read.parquet(t))),
+        timed("ts_twa_tier")(graft.operators.TsQueries.twaOf(spark.read.parquet(t))),
         // the native as-of operator over the PERSISTED tier (stored seq_no,
         // no derivation window): the read path ingest actually ships
-        ("asof_native_tier", () => {
+        timed("asof_native_tier") {
           val rr = spark.read.parquet(t)
           val segStarts = rr.groupBy(col("signal_id"),
               graft.operators.Readings.segmentId(col("seq_no")).as("seg"))
             .agg(min(col("ts")).as("seg_ts"))
           graft.plans.NativeAsOf.asofJoin(
             rr.select(col("signal_id"), col("seq_no"), col("ts")),
-            segStarts, "signal_id", "ts", "seg_ts", Seq("seg")).count(); ()
-        }))
-    } ++
+            segStarts, "signal_id", "ts", "seg_ts", Seq("seg"))
+        })
+    } ++ Seq(
       // the approx-percentile scale twin of o5_percentile: bounded-memory
       // sketch vs the exact buffering form (see the o5_percentile comment).
       // Reads Readings.of directly — NOT gated on the tier setup, so
       // SPARK_GRAFT_ONLY=o5_percentile_approx neither pays the tier ladder
       // nor silently loses the row
-      Seq(("o5_percentile_approx", () => {
-        graft.operators.Readings.of(spark, sfDir).groupBy(col("signal_id"))
-          .agg(expr("approx_percentile(value, 0.5, 1000)").as("p50"),
-               expr("approx_percentile(value, 0.9, 1000)").as("p90")).count(); ()
-      }),
+      timed("o5_percentile_approx")(graft.operators.Readings.of(spark, sfDir)
+        .groupBy(col("signal_id"))
+        .agg(expr("approx_percentile(value, 0.5, 1000)").as("p50"),
+             expr("approx_percentile(value, 0.9, 1000)").as("p90"))),
       // SCAN-STAGE attribution for the dedup family (bench-only row, no
       // oracle — the values feed the oracle-checked dedup rows): text ->
       // native shingle hashes -> MinHash signatures, nothing else. The
       // per-round dial that shows whether the dedup scan stage itself
       // moved, separate from band-join/confirm/CC costs downstream.
-      ("dedup_sigs", () => {
-        graft.operators.Dedup.minhashSignatures(
-          graft.operators.Dedup.shingleSets(
-            graft.Tables.documents(spark, sfDir))).count(); ()
-      }),
-      // SHUFFLE-PATH canary (r15 verdict #2): o1_scan measures scan-path
-      // health only — this host class's page-fault storms hit the shuffle
-      // path hardest (r15: a fork JVM's o1_scan read 1.42x while the
-      // sweep's read 0.89x, and shuffle-heavy rows sat 3-4x over prior on
-      // untouched code), so one scan canary cannot distinguish a scan
-      // slowdown from a fault storm. This row is scan-light and
-      // shuffle-heavy by construction: a deterministic 8x row explode ->
-      // full hash exchange -> two-level aggregation. Bench-only row (no
-      // oracle — its value is a host measurement, not a query result);
-      // its current/prior ratio is emitted as sweep_shuffle_canary_ratio
-      // and the fork's as resweep_shuffle_canary_ratio, EVIDENCE for
-      // adjudication readers, deliberately not wired into the trip
-      // thresholds (one control canary stays o1_scan).
-      ("shuffle_canary", () => {
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .select(col("l_orderkey"), col("l_partkey"),
-            explode(sequence(lit(0L), lit(7L))).as("i"))
-          .select(xxhash64(col("l_orderkey"), col("l_partkey"), col("i")).as("k"))
-          .repartition(col("k"))
-          .groupBy(pmod(col("k"), lit(65536L)).as("g"))
-          .agg(count(lit(1)).as("c"))
-          .agg(max(col("c"))).count(); ()
-      })) ++ profileIn.toSeq.map { in =>
+      timed("dedup_sigs")(graft.operators.Dedup.minhashSignatures(
+        graft.operators.Dedup.shingleSets(graft.Tables.documents(spark, sfDir))))
+    ) ++ profileIn.toSeq.map { in =>
       // STAMPI-style streaming profile maintenance: 4 micro-batches of
       // sealed segments each fold into the persisted per-signal profile
       // (Ingest.profileStream); a fresh work dir per rep so every run
@@ -371,9 +451,6 @@ object Bench {
         q.awaitTermination()
         val prog = q.recentProgress
         if (prog.nonEmpty) {
-          def ms(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
-                 k: String): Long =
-            Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
           val add = prog.map(ms(_, "addBatch")).sum
           val trig = prog.map(ms(_, "triggerExecution")).sum
           // steady_state_sec = the MEDIAN post-warmup batch fold time —
@@ -394,53 +471,43 @@ object Bench {
         ()
       })
     } ++ ivfIdxDir.toSeq.map { dir =>
-      ("ann_ivf_probe", () => {
-        graft.operators.AnnQueries.ivfProbeStore(spark, sfDir, dir).count(); ()
-      })
+      timed("ann_ivf_probe")(graft.operators.AnnQueries.ivfProbeStore(spark, sfDir, dir))
     } ++ rpIvfIdxDir.toSeq.map { dir =>
-      ("ann_rp_ivf_probe", () => {
-        graft.operators.AnnQueries.rpIvfProbeStore(spark, sfDir, dir).count(); ()
-      })
+      timed("ann_rp_ivf_probe")(graft.operators.AnnQueries.rpIvfProbeStore(spark, sfDir, dir))
     } ++ segArrDir.toSeq.map { dir =>
-      ("seg_profile_auto_tier", () => {
-        graft.operators.MotifDiscord.profileAuto(
-          spark.read.parquet(dir)).count(); ()
-      })
+      timed("seg_profile_auto_tier")(
+        graft.operators.MotifDiscord.profileAuto(spark.read.parquet(dir)))
     } ++ histDir.toSeq.map { hd =>
       // percentile served from the PERSISTED histogram sketch — the
       // production path (o8_percentile_sketch rebuilds the histogram
       // in-query; this variant measures pure sketch-serve)
-      ("o8_percentile_sketch_tier", () => {
-        graft.plans.ZoneMap.percentileFromHistogram(
-          spark.read.parquet(hd), Seq(0.5, 0.9), scale = 100.0).count(); ()
-      })
+      timed("o8_percentile_sketch_tier")(graft.plans.ZoneMap.percentileFromHistogram(
+        spark.read.parquet(hd), Seq(0.5, 0.9), scale = 100.0))
     } ++ tierMgr.toSeq.flatMap { tm =>
       Seq(
-        ("tier3_paa_max", () => { tm.maxFromTier3().count(); () }),
+        timed("tier3_paa_max")(tm.maxFromTier3()),
         // exact sum/avg answered from the persisted chunk tiers (no
         // readings scan): the AggStats-style serving path
-        ("tier2_sum", () => { tm.sumFromColdTier().count(); () }),
-        ("tier3_sum", () => { tm.sumFromTier3().count(); () }))
-    } ++ (if (!bucketed) Seq.empty[(String, () => Unit)] else Seq(
-      ("q_bucketed_join", () => withoutAutoBroadcast {
-        graft.sources.BucketedStore
+        timed("tier2_sum")(tm.sumFromColdTier()),
+        timed("tier3_sum")(tm.sumFromTier3()))
+    } ++ (if (!bucketed) Nil else {
+      // small-input benches broadcast the stats side and skip the bucketed
+      // path entirely; at 100 TB neither side broadcasts, so the co-located
+      // sort-merge IS the production plan — pin it for the measurement
+      val noBroadcast = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") _
+      Seq(
+        noBroadcast(timed("q_bucketed_join")(graft.sources.BucketedStore
           .colocatedJoin(spark, "bench_readings_b", "bench_sigstats_b", "signal_id")
-          .filter(col("value") === col("sig_max")).count(); ()
-      }),
-      ("q_bucketed_agg", () => withoutAutoBroadcast {
-        graft.sources.BucketedStore
-          .colocatedAgg(spark, "bench_readings_b", "signal_id").count(); ()
-      }),
-      // native as-of as a pure streaming merge over two bucketed+sorted
-      // scans: zero exchanges, zero sorts (the 100 TB fact-fact shape)
-      ("q_asof_bucketed", () => {
-        spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        try graft.plans.NativeAsOf.asofJoin(
-          spark.table("bench_asof_l_b"), spark.table("bench_asof_r_b"),
-          "signal_id", "ts", "mts", Seq("seg")).count()
-        finally spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-        ()
-      })))
+          .filter(col("value") === col("sig_max")))),
+        noBroadcast(timed("q_bucketed_agg")(graft.sources.BucketedStore
+          .colocatedAgg(spark, "bench_readings_b", "signal_id"))),
+        // native as-of as a pure streaming merge over two bucketed+sorted
+        // scans: zero exchanges, zero sorts (the 100 TB fact-fact shape)
+        withConf("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")(
+          timed("q_asof_bucketed")(graft.plans.NativeAsOf.asofJoin(
+            spark.table("bench_asof_l_b"), spark.table("bench_asof_r_b"),
+            "signal_id", "ts", "mts", Seq("seg")))))
+    })
 
     // UNTIMED between-query cleanup: operators that cache/localCheckpoint
     // (the CC loops, DBSCAN, SemDeDup, bandit feeds) leave persisted RDDs
@@ -455,360 +522,107 @@ object Bench {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       } catch { case _: Throwable => () }
     }
-    case class QRes(name: String, med: Double, mean: Double, sd: Double,
-                    nOk: Int, err: Option[String], run: () => Unit)
+    val key = Key(sfDir, spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, action)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
+    val prior: Map[String, Row] = loadPrior(outPath, key)
+    if (prior.isEmpty) System.err.println(
+      s"[bench] no prior under key ($key) in $outPath: nothing is compared")
+    val listener = new Work.Listener
+    spark.sparkContext.addSparkListener(listener)
+    case class QRes(name: String, reps: Seq[Work], err: Option[String]) {
+      val row: Option[Row] = if (reps.isEmpty) None else Some(Bench.row(reps))
+      val flags: Seq[String] = (for (c <- row; p <- prior.get(name))
+        yield regressions(c, p)).getOrElse(Nil)
+    }
     def timeQuery(name: String, run: () => Unit): QRes = {
       val runs = (1 to reps).map { _ =>
         dropLeakedStorage()
-        val t0 = System.nanoTime()
-        val outcome =
-          try { run(); None }
-          catch { case e: Throwable => Some(e.getClass.getSimpleName + ": " + e.getMessage) }
-        ((System.nanoTime() - t0) / 1e9, outcome)
+        try Right(Work.measure(spark, listener)(run()))
+        catch { case e: Throwable => Left(e.getClass.getSimpleName + ": " + e.getMessage) }
       }
-      val okTimes = runs.collect { case (s, None) => s }.sorted
-      val err = runs.collectFirst { case (_, Some(e)) => e }
-        .filter(_ => okTimes.isEmpty)
-      val median = if (okTimes.isEmpty) 0.0 else okTimes(okTimes.size / 2)
-      val mean = if (okTimes.isEmpty) 0.0 else okTimes.sum / okTimes.size
-      val sd = if (okTimes.isEmpty) 0.0 else
-        math.sqrt(okTimes.map(t => (t - mean) * (t - mean)).sum / okTimes.size)
-      QRes(name, median, mean, sd, okTimes.size, err, run)
+      val ok = runs.collect { case Right(w) => w }
+      QRes(name, ok, runs.collectFirst { case Left(e) => e }.filter(_ => ok.isEmpty))
     }
     val results = (base ++ tierVariants).sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, run) =>
         val r = timeQuery(name, run)
-        System.err.println(f"[bench] $name%-22s ${r.med}%8.2fs " +
-          f"(sd ${r.sd}%5.2f, ${r.nOk}/$reps ok) ${r.err.getOrElse("")}")
+        System.err.println(r.row.fold(f"[bench] $name%-22s ${r.err.getOrElse("")}") { w =>
+          f"[bench] $name%-22s ${w.t}%8.2fs (${r.reps.size}/$reps ok) per rep " +
+            (Gated.map(k => k -> r.reps.map(_.counters(k).toString)) :+
+              ("cpu_s" -> r.reps.map(x => f3(x.cpuS)))).map { case (k, vs) =>
+              s"$k=${vs.mkString("/")}" }.mkString(" ") +
+            (if (r.flags.isEmpty) "" else s" REGRESSED ${r.flags.mkString(", ")}")
+        })
         r
       }
+    val regressed = results.filter(_.flags.nonEmpty)
+    val nCompared = results.count(r => r.row.isDefined && prior.contains(r.name))
+    // wall-clock evidence for the reader: how fast this host ran the scan
+    // canary against the prior's
+    val hostRatio: Option[Double] = for {
+      cur <- results.find(_.name == "o1_scan").flatMap(_.row)
+      p <- prior.get("o1_scan") if p.t > 0.0
+    } yield cur.t / p.t
 
-    // Self-adjudication of sweep outliers: two rounds running, one query's
-    // in-sweep time tripped a judge into a manual isolated re-run (q1_agg
-    // r8, tier_ladder r9) even though the code was unchanged — full-sweep
-    // times inflate on many-job queries from in-run GC/scheduler
-    // contention. So the sweep now does what the judge did: any query
-    // whose median exceeds 2x its committed prior (last round's map, iso
-    // value preferred) by more than 0.25s absolute reruns ISOLATED at the
-    // end of the sweep, and both numbers land in the artifact.
-    // real JSON parsing (Jackson ships with Spark): the old regex scrape
-    // ingested every numeric field (t/mean/sd/reps/...) as phantom prior
-    // keys and misparsed err strings containing braces — anchored to the
-    // "queries" object, only known fields read. Committed times from a
-    // loaded-host run are divided by that run's recorded canary ratio
-    // before becoming priors (see loadPrior).
-    val prior: Prior = loadPrior("/root/repo/BENCH_QUERIES.json", sfDir)
-    val priorMap: Map[String, Double] = prior.queries
-    // canary-relative trip threshold: this host family shows 1.5-2x
-    // wall-clock swings between rounds (Firecracker noisy neighbor), and
-    // a flat 2x-prior guard on a slow host both (a) trips a storm of
-    // clean rows and (b) lets a real regression hide just under the
-    // inflated breach line (r12: four >2x rows escaped while 11 clean
-    // rows tripped). o1_scan is the stable scan canary — scale every
-    // row's threshold by its current/prior ratio, clamped >= 1 so a FAST
-    // host never loosens the guard below the plain 2x.
-    // the ratio is clamped to [1, 3]: below 1 a FAST host must not
-    // loosen the guard, and above 3 the "host factor" explanation is
-    // itself suspect (measured swings are 1.5-2x) — a larger reading
-    // caps the scaling so a genuinely broken scan path cannot grant
-    // every other query a free pass. The canary NEVER scales its own
-    // threshold (it would be self-certifying: med > 2*med is never
-    // true), so an o1_scan regression still trips at the plain 2x.
-    // raw sweep host factor, emitted into the artifact so the NEXT
-    // round's prior loader can normalize this run's committed times by
-    // it (loadPrior clamps on read; the thresholds below use the
-    // clamped value)
-    val rawSweepCanary: Option[Double] = for {
-      cur <- results.find(_.name == "o1_scan").filter(_.err.isEmpty).map(_.med)
-      p <- priorMap.get("o1_scan")
-      if p > 0.0
-    } yield cur / p
-    val canaryRatio: Double = rawSweepCanary.map(clampCanary).getOrElse(1.0)
-    if (canaryRatio > 1.05) System.err.println(
-      f"[bench] o1_scan canary at ${canaryRatio}%.2fx prior - " +
-        "trip thresholds scaled accordingly (canary itself unscaled)")
-    val tripped = results.filter(r =>
-      priorMap.get(r.name).exists { p =>
-        val scale = if (r.name == "o1_scan") 1.0 else canaryRatio
-        r.err.isEmpty && r.med > tripThreshold(p, scale)
-      })
-    // storm guard: when MANY queries trip at once the cause is a global
-    // host slowdown (Firecracker noisy neighbor — measured 2-3x swings),
-    // not per-query regressions; isolated reruns would also run slow and
-    // just double the sweep. Record the condition instead and let the
-    // reader normalize by a canary (o1_scan) — the per-query adjudication
-    // is for the ISOLATED outlier, which is the only case it can explain.
-    val hostSlow = priorMap.nonEmpty &&
-      tripped.size > math.max(5, results.size / 10)
-    if (hostSlow) System.err.println(
-      f"[bench] ${tripped.size}/${results.size} queries above the " +
-        f"canary-scaled 2x prior (o1_scan ratio $canaryRatio%.2fx) - " +
-        "global host slowdown, skipping per-query isolation reruns")
-    // FORKED re-adjudication (r13 verdict #1): the old rerun executed in
-    // the SAME JVM right after the 250-query storm and inherited its
-    // GC/scheduler residue — r13 committed pipe_dedup_quality t=4.577 as
-    // the new prior when a fresh process measured ~1.6 s host-normalized,
-    // so a future 2.5x real regression would have passed silently.
-    // Tripped queries now rerun in ONE fresh child JVM (same java, same
-    // flags, same classpath, SPARK_GRAFT_ONLY=<tripped>+o1_scan) and the
-    // child's numbers are the adjudicated ones; the child also times
-    // o1_scan so the artifact records the fork's own host canary. The
-    // same-JVM rerun survives only as the fallback when the fork cannot
-    // run (and is labeled as such in the artifact).
-    def forkBench(names: Seq[String]): Option[Map[String, Double]] = {
-      if (sys.env.contains("SPARK_GRAFT_NO_FORK")) return None
-      try {
-        import scala.jdk.CollectionConverters._
-        val javaBin = java.nio.file.Paths.get(
-          System.getProperty("java.home"), "bin", "java").toString
-        // inherit this JVM's flags (the --add-opens set, -Xmx, -D confs)
-        // minus debug agents, so the child is the same runtime
-        val jvmArgs = java.lang.management.ManagementFactory
-          .getRuntimeMXBean.getInputArguments.asScala.toSeq
-          .filterNot(a => a.startsWith("-agentlib:") ||
-            a.startsWith("-javaagent:") || a.startsWith("-Xrunjdwp"))
-        val outFile = java.nio.file.Files.createTempFile("graft-fork-bench", ".json")
-        // the child prints its own summary JSON line on stdout, which
-        // must not corrupt THIS process's parsed stdout — file-redirect it
-        val childOut = java.nio.file.Files.createTempFile("graft-fork-stdout", ".txt")
-        try {
-          val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp",
-            System.getProperty("java.class.path"), "graft.Bench")).asJava
-          val pb = new ProcessBuilder(cmd)
-          val env = pb.environment()
-          env.put("SPARK_GRAFT_ONLY",
-            (names :+ "o1_scan" :+ "shuffle_canary").distinct.mkString(","))
-          env.put("SPARK_GRAFT_SF_DIR", sfDir)
-          env.put("SPARK_GRAFT_CPUS", cpus)
-          env.put("SPARK_GRAFT_REPS", reps.toString)
-          env.put("SPARK_GRAFT_BENCH_OUT", outFile.toString)
-          env.put("SPARK_GRAFT_NO_FORK", "1")
-          pb.redirectOutput(ProcessBuilder.Redirect.to(childOut.toFile))
-          pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-          System.err.println(s"[bench] forking fresh JVM for " +
-            s"${names.mkString(",")} (+o1_scan canary)")
-          val p = pb.start()
-          val done = p.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
-          if (!done) {
-            p.destroyForcibly()
-            System.err.println("[bench] fork timed out after 30 min"); return None
-          }
-          if (p.exitValue() != 0) {
-            System.err.println(s"[bench] fork exited ${p.exitValue()}"); return None
-          }
-          val root = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(java.nio.file.Files.readAllBytes(outFile))
-          val qs = Option(root.get("queries")).toSeq
-            .flatMap(_.fields().asScala)
-            .flatMap { e =>
-              val v = e.getValue
-              val t = if (v.isNumber) Some(v.asDouble)
-                      else Option(v.get("t")).filter(_.isNumber).map(_.asDouble)
-              t.map(e.getKey -> _)
-            }.toMap
-          val ing = Option(root.get("ingest_pts_per_sec")).filter(_.isNumber)
-            .map(n => "ingest_pts_per_sec" -> n.asDouble)
-          Some(qs ++ ing)
-        } finally {
-          // unconditional: timeout/exit/parse failures must not leak the
-          // two temp files across repeated adjudication runs
-          java.nio.file.Files.deleteIfExists(childOut)
-          java.nio.file.Files.deleteIfExists(outFile)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] fork failed: $e"); None }
-    }
-    // child runs (SPARK_GRAFT_ONLY set) never self-adjudicate: they ARE
-    // the isolated measurement, and recursion must terminate.
-    // Per-row mode: "fork" (fresh-JVM child) or "same_jvm" (fallback —
-    // fork unavailable, or the query errored IN the child: it must not
-    // silently keep its storm-inflated sweep median as the committed
-    // prior, which is the exact failure this machinery closes).
-    var forkCanary: Option[Double] = None
-    var forkShuffleCanary: Option[Double] = None
-    val adjudicated: Map[String, (Double, Double, String)] =
-      if (hostSlow || tripped.isEmpty || only.nonEmpty) Map.empty
-      else {
-        tripped.foreach(r => priorMap.get(r.name).foreach(p =>
-          System.err.println(
-            f"[bench] ${r.name}: sweep ${r.med}%.2fs > 2x prior $p%.2fs " +
-              "- re-adjudicating in a fresh JVM")))
-        val forked = forkBench(tripped.map(_.name)).getOrElse(Map.empty)
-        forkCanary = forked.get("o1_scan")
-        forkShuffleCanary = forked.get("shuffle_canary")
-        def sameJvm(name: String, run: () => Unit): Double = {
-          val iso = timeQuery(name, run)
-          System.err.println(
-            f"[bench] $name: same-JVM resweep ${iso.med}%.2fs " +
-              "(fork unavailable or query errored in the child)")
-          iso.med
-        }
-        tripped.flatMap { r =>
-          priorMap.get(r.name).map { p =>
-            forked.get(r.name) match {
-              case Some(t) =>
-                System.err.println(f"[bench] ${r.name}: fork ${t}%.2fs")
-                r.name -> (t, p, "fork")
-              case None => r.name -> (sameJvm(r.name, r.run), p, "same_jvm")
-            }
-          }
-        }.toMap
-      }
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
     // ingestion throughput (reference future_signal.rs:134 prints points/sec
     // per signal): replay the events table through the streaming
     // segmentation pipeline (S1 source -> S2 keyed state) and report pts/s.
     // The events table is restaged (untimed) as `ingestFiles` parquet files
     // and the whole set rides ONE AvailableNow batch, so the measurement is
-    // the PARALLEL S2 ceiling across all cores — not the single-file,
-    // one-batch-at-a-time replay that r5 reported (52 k pts/s was a
-    // maxFilesPerTrigger=1 serial number, flagged in VERDICT r5 item 9)
-    // extra adjudication fields for the ingest row (set when the measured
-    // throughput lands >1.5x below the committed prior)
-    var ingestExtra = ""
+    // the PARALLEL S2 ceiling across all cores.
     val ingestFiles = 32
     val ingestCfg = s"files=$ingestFiles,maxFilesPerTrigger=$ingestFiles," +
       "trigger=AvailableNow,warm=true"
     // "ingest" is an addressable row like any query: SPARK_GRAFT_ONLY
     // runs skip it unless named (an isolated query rerun must not pay —
-    // or be perturbed by — a streaming replay it didn't ask for), and
-    // the forked ingest adjudication below reaches it by name
-    val ingestPps: Option[Double] =
-      if (!needed("ingest")) None
-      else try {
-        val in = tempDir("graft-bench-ingest")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.parquet(s"$sfDir/events.parquet")
-          .repartition(ingestFiles).write.mode("overwrite").parquet(in)
-        val pts = spark.read.parquet(in).count()
-        def runOnce(): Double = {
-          val t0 = System.nanoTime()
-          val q = graft.streaming.Ingest.segmentStream(
-              spark, in, graft.operators.Readings.SegmentRows.toInt,
-              maxFilesPerTrigger = ingestFiles)
-            .writeStream.outputMode("append").format("noop")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          (System.nanoTime() - t0) / 1e9
-        }
-        // first run is an UNTIMED warmup: the JVM's first streaming query
-        // pays one-off state-store/codegen/source-listing init that is not
-        // ingest work (measured: ~650 k pts/s warm vs ~33 k cold at sf0.1)
-        runOnce()
-        val secs = runOnce()
-        val pps = pts / secs
-        System.err.println(f"[bench] ingest: $pts pts in $secs%.2fs ($ingestCfg)")
-        // ingest adjudication (the query storm guard's sibling): the
-        // throughput slid 94.6k -> 52.9k pts/s across r9-r10 with the same
-        // cfg while the 10x replay said 843k — host noise and code
-        // regressions were indistinguishable because only queries were
-        // adjudicated. When the number lands >1.5x BELOW the committed
-        // prior, rerun it in a FRESH JVM (r13 verdict #2: the in-sweep
-        // measurement swung 3x from storm residue) and COMMIT the forked
-        // number as the primary — the in-sweep reading stays in the
-        // artifact as ingest_sweep. Fallback when the fork cannot run:
-        // same-JVM best-of-2 (throughput is a max-estimator).
-        var committed = pps
-        prior.ingest.filter(pi => pps < pi / 1.5).foreach { pi =>
-          def fmt(v: Double): String =
-            "%.3f".formatLocal(java.util.Locale.ROOT, v)
-          val forked = forkBench(Seq("ingest"))
-            .flatMap(_.get("ingest_pts_per_sec"))
-          val (best, mode) = forked match {
-            case Some(f) => (f, "fork")
-            case None =>
-              (math.max(pps, (1 to 2).map(_ => pts / runOnce()).max),
-                "same_jvm")
-          }
-          val canary = for {
-            cur <- results.find(_.name == "o1_scan")
-              .filter(_.err.isEmpty).map(_.med)
-            cp <- priorMap.get("o1_scan")
-          } yield cur / cp
-          ingestExtra =
-            s""""ingest_prior":${fmt(pi)},"ingest_sweep":${fmt(pps)},""" +
-              s""""ingest_resweep":${fmt(best)},""" +
-              s""""ingest_resweep_mode":"$mode",""" +
-              canary.map(c => s""""ingest_canary_ratio":${fmt(c)},""")
-                .getOrElse("")
-          committed = math.max(pps, best)
-          System.err.println(
-            f"[bench] ingest adjudication: prior $pi%.0f pts/s, " +
-              f"$mode rerun $best%.0f pts/s (committed $committed%.0f), " +
-              "o1_scan canary " +
-              s"${canary.map(c => f"$c%.2fx").getOrElse("n/a")}")
-        }
-        Some(committed)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ingest throughput failed: $e"); None }
-
-    // the stdout line must survive the driver's bounded tail capture: r5's
-    // full 126-entry map made the line long enough that its head was
-    // clipped and the artifact unparseable ("parsed": null). So stdout now
-    // carries a SHORT line — totals, ingest, and a headline subset of
-    // queries — and the COMPLETE per-query map is written to a file
-    // (SPARK_GRAFT_BENCH_OUT, default BENCH_QUERIES.json in the repo)
-    // that the stdout line points at via "queries_file".
-    def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // stdout keeps the plain name->seconds map the driver parses; the
-    // full file carries {t, mean, sd, reps} (+ iso/prior on adjudicated
-    // rows) so the artifact shows its own variance
-    def qmap(rs: Seq[QRes]): String = rs.map {
-      case r if r.err.isEmpty => s""""${r.name}":${f3(r.med)}"""
-      case r => s""""${r.name}":{"err":"${esc(r.err.get.take(200))}"}"""
-    }.mkString("{", ",", "}")
-    // adjudicated rows commit the ADJUDICATED number as the primary t
-    // (min of sweep and resweep — both real runs of the same binary, the
-    // faster one is the cleaner cost bound) and keep the contended sweep
-    // median as metadata: a next-round guard comparing against t must see
-    // the honest prior, not the contention artifact (r12: q1_agg t=0.846
-    // vs true 0.19 would have masked a 4x regression)
-    def qmapFull(rs: Seq[QRes]): String = rs.map {
-      case r if r.err.isEmpty =>
-        adjudicated.get(r.name) match {
-          case Some((iso, p, mode)) =>
-            s""""${r.name}":{"t":${f3(math.min(r.med, iso))},""" +
-              s""""sweep":${f3(r.med)},"mean":${f3(r.mean)},""" +
-              s""""sd":${f3(r.sd)},"reps":${r.nOk},""" +
-              s""""resweep":${f3(iso)},"resweep_mode":"$mode",""" +
-              s""""prior":${f3(p)}}"""
-          case None =>
-            s""""${r.name}":{"t":${f3(r.med)},"mean":${f3(r.mean)},""" +
-              s""""sd":${f3(r.sd)},"reps":${r.nOk}}"""
-        }
-      case r => s""""${r.name}":{"err":"${esc(r.err.get.take(200))}"}"""
-    }.mkString("{", ",", "}")
-    val isoField =
-      if (adjudicated.isEmpty) ""
-      else {
-        // the fork's own o1_scan vs prior: the honest host factor of the
-        // adjudication run itself (reader normalizes by it, not by the
-        // storm-contended sweep canary)
-        val forkCanaryField = (for {
-          fc <- forkCanary; p <- priorMap.get("o1_scan") if p > 0.0
-        } yield s""""resweep_canary_ratio":${f3(fc / p)},""").getOrElse("")
-        // the fork's shuffle-path health, for the same reader (see the
-        // shuffle_canary row comment): scan vs fault-storm attribution
-        val forkShuffleField = (for {
-          fc <- forkShuffleCanary; p <- priorMap.get("shuffle_canary")
-          if p > 0.0
-        } yield s""""resweep_shuffle_canary_ratio":${f3(fc / p)},""")
-          .getOrElse("")
-        forkCanaryField + forkShuffleField +
-          s""""adjudicated":${adjudicated.toSeq.sortBy(_._1).map {
-            case (n, (iso, p, mode)) =>
-              val sweep = results.find(_.name == n).map(_.med).getOrElse(0.0)
-              s""""$n":{"sweep":${f3(sweep)},"resweep":${f3(iso)},""" +
-                s""""resweep_mode":"$mode","prior":${f3(p)}}"""
-          }.mkString("{", ",", "}")},"""
+    // or be perturbed by — a streaming replay it didn't ask for)
+    val ingestPps = untimed("ingest", "ingest") {
+      val in = tempDir("graft-bench-ingest")
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(s"$sfDir/events.parquet")
+        .repartition(ingestFiles).write.mode("overwrite").parquet(in)
+      val pts = spark.read.parquet(in).count()
+      def runOnce(): Double = {
+        val t0 = System.nanoTime()
+        val q = graft.streaming.Ingest.segmentStream(
+            spark, in, graft.operators.Readings.SegmentRows.toInt,
+            maxFilesPerTrigger = ingestFiles)
+          .writeStream.outputMode("append").format("noop")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        (System.nanoTime() - t0) / 1e9
       }
+      // first run is an UNTIMED warmup: the JVM's first streaming query
+      // pays one-off state-store/codegen/source-listing init that is not
+      // ingest work (measured: ~650 k pts/s warm vs ~33 k cold at sf0.1)
+      runOnce()
+      val secs = runOnce()
+      System.err.println(f"[bench] ingest: $pts pts in $secs%.2fs ($ingestCfg)")
+      pts / secs
+    }
+
+    // the stdout line must survive a bounded tail capture, so it carries
+    // totals and a headline subset; the COMPLETE entry goes to the keyed
+    // store that the line points at via "queries_file".
+    def errJson(r: QRes): String = s"""{"err":"${esc(r.err.getOrElse("").take(200))}"}"""
+    // a row keeps the counters its reps repeated under "work" and the
+    // [min, max] of the others under "varied"
+    def rowJson(r: QRes): String = r.row.fold(errJson(r)) { w =>
+      val ws = r.reps.map(_.wallS)
+      val mean = ws.sum / ws.size
+      val sd = math.sqrt(ws.map(t => (t - mean) * (t - mean)).sum / ws.size)
+      val varied = Work.CounterNames.filterNot(w.counters.contains).map { k =>
+        val vs = r.reps.map(_.counters(k))
+        s""""$k":[${vs.min},${vs.max}]"""
+      }
+      s"""{"t":${f3(w.t)},"mean":${f3(mean)},"sd":${f3(sd)},"reps":${ws.size},""" +
+        s""""cpu_s":${f3(w.cpuS)},"work":{""" + Work.CounterNames.flatMap(k =>
+          w.counters.get(k).map(v => s""""$k":$v""")).mkString(",") + "}" +
+        (if (varied.isEmpty) "" else varied.mkString(""","varied":{""", ",", "}")) + "}"
+    }
     val headline = Set(
       "q1_agg", "q3_join", "q5_join", "q6_filter_agg", "o1_scan", "o3_range",
       "o6_window_pos", "tsbs_last_loc", "influx_max_groupby", "dedup_minhash",
@@ -819,46 +633,33 @@ object Bench {
       // and the sketch-served percentile
       "ann_ivf_store", "dedup_semantic", "pipe_quality_filter",
       "o8_percentile_sketch")
-    val ok = results.filter(_.err.isEmpty)
-    val total = ok.map(_.med).sum
-    val nerr = results.count(_.err.nonEmpty)
-    val ingestField = ingestPps.map(v =>
-      s""""ingest_pts_per_sec":${f3(v)},"ingest_cfg":"$ingestCfg",$ingestExtra""")
-      .getOrElse("")
-    val hostSlowField =
-      if (hostSlow) s""""host_slow":true,"n_above_2x_prior":${tripped.size},"""
-      else ""
-    val mpStreamField = profileStreamBreakdown
-      .map(b => s""""seg_profile_stream_batches":$b,""").getOrElse("")
-    val sweepCanaryField = rawSweepCanary
-      .map(r => s""""sweep_canary_ratio":${f3(r)},""").getOrElse("")
-    val rawShuffleCanary: Option[Double] = for {
-      cur <- results.find(_.name == "shuffle_canary")
-        .filter(_.err.isEmpty).map(_.med)
-      p <- priorMap.get("shuffle_canary")
-      if p > 0.0
-    } yield cur / p
-    val shuffleCanaryField = rawShuffleCanary
-      .map(r => s""""sweep_shuffle_canary_ratio":${f3(r)},""").getOrElse("")
+    val ok = results.flatMap(_.row)
     val summary =
-      s"""$hostSlowField$mpStreamField$ingestField""" +
-        s"""$sweepCanaryField$shuffleCanaryField""" +
-        s""""value":${f3(total)},"n_ok":${ok.size},"n_err":$nerr"""
-    val prefix = s""""metric":"total","unit":"sec","reps":$reps,"sf":"$sfDir""""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/BENCH_QUERIES.json")
-    val fileLine =
-      s"""{$prefix,$isoField"queries":${qmapFull(results)},$summary}"""
+      profileStreamBreakdown.map(b => s""""seg_profile_stream_batches":$b,""").getOrElse("") +
+        ingestPps.map(v => s""""ingest_pts_per_sec":${f3(v)},"ingest_cfg":"$ingestCfg",""")
+          .getOrElse("") +
+        hostRatio.map(h => s""""host_ratio":${f3(h)},""").getOrElse("") +
+        s""""n_compared":$nCompared,"n_regressed":${regressed.size},""" +
+        s""""value":${f3(ok.map(_.t).sum)},"n_ok":${ok.size},"n_err":${results.size - ok.size}"""
+    val prefix = s""""metric":"total","unit":"sec","reps":$reps,"sf":"$sfDir","key":"$key""""
+    val regressedField = regressed.map(r => s""""${r.name}":""" +
+      r.flags.map(f => s""""$f"""").mkString("[", ",", "]")).mkString(""""regressed":{""", ",", "},")
+    val entry = s"""{$prefix,"queries":""" +
+      results.map(r => s""""${r.name}":${rowJson(r)}""").mkString("{", ",", "}") +
+      s""",$regressedField$summary}"""
     val wrote =
       try {
+        val store = merge(entries(outPath), entry, fullSweep = only.isEmpty)
         java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-          fileLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          store.map(mapper.writeValueAsString).mkString("{\"entries\":[\n", ",\n", "\n]}\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         true
       } catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $outPath: $e"); false }
-    val shortQs = qmap(results.filter(r => headline(r.name)))
+    val shortQs = results.filter(r => headline(r.name)).map(r =>
+      s""""${r.name}":${r.row.fold(errJson(r))(w => f3(w.t))}""").mkString("{", ",", "}")
     val fileField = if (wrote) s""""queries_file":"$outPath",""" else ""
-    println(s"""{$prefix,$fileField$isoField"queries":$shortQs,$summary}""")
+    println(s"""{$prefix,$fileField"queries":$shortQs,$summary}""")
     if (bucketed) try {
       Seq("bench_readings_b", "bench_sigstats_b", "bench_asof_l_b",
         "bench_asof_r_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
@@ -866,7 +667,6 @@ object Bench {
       System.err.println(s"[bench] bucketed table cleanup failed: $e") }
     scratch.foreach { p =>
       try {
-        import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
           .foreach(java.nio.file.Files.deleteIfExists(_))
       } catch { case e: Throwable =>

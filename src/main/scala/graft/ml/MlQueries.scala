@@ -31,7 +31,9 @@ object MlQueries {
     // holds bitwise or not at all.
     // reuses ml_classifiers' published dump when that query already ran
     // this session (FitCache) — a full sweep pays the classifier
-    // training once, not once per companion
+    // training once, not once per companion. So the bench row's work
+    // depends on sweep order (sf0.1, local[4]: 11 jobs after
+    // ml_classifiers, 40 run alone); its prior only holds for a full sweep.
     "ml_classifiers_check" -> ((s, d) => {
       import s.implicits._
       val dump = FitCache.getOrFitDf(s, s"classifiersDump:$d")(
@@ -88,7 +90,9 @@ object MlQueries {
     // IEEE division of the same two integers on both sides).
     "ml_kmeans_purity_check" -> ((s, d) => {
       import s.implicits._
-      // reuses ml_kmeans_purity's published fit when it ran this session
+      // reuses ml_kmeans_purity's published fit when it ran this session,
+      // so the bench row's work depends on sweep order (sf0.1, local[4]:
+      // 6 jobs after ml_kmeans_purity, 42 run alone)
       val purity = FitCache.getOrFitDf(s, s"kmeansPurity:$d")(
         Classifiers.kmeansPurity(
           Classifiers.featuresFrame(Tables.embeddings(s, d),
@@ -145,7 +149,9 @@ object MlQueries {
       // through the FitCache companion mechanism when that query already
       // ran this session, and refits identically when standalone — a
       // full sweep pays the embeddings KMeans once, not three times
-      // (purity + its _check + this gate)
+      // (purity + its _check + this gate). So the bench row's work depends
+      // on sweep order (sf0.1, local[4]: 29 jobs after ml_kmeans_purity,
+      // 65 run alone); its prior only holds for a full sweep.
       val purity = FitCache.getOrFitDf(s, s"kmeansPurity:$d")(
         Classifiers.kmeansPurity(
           Classifiers.featuresFrame(Tables.embeddings(s, d),

@@ -585,6 +585,9 @@ object AnnQueries {
       val e = emb(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("embv"))
       val feat = e.select(col("vec_id"), array_to_vector(col("embv")).as("features"))
+      // reuses emb_kmeans' published fit when it ran this session, so the
+      // bench row's work depends on sweep order (sf0.1, local[4]: 8 jobs
+      // after emb_kmeans, 39 run alone)
       val model = graft.ml.FitCache.getOrFit(s, s"embKmeans:$d")(
         new KMeans().setK(10).setSeed(42L).setMaxIter(20).fit(feat))
       val assigned = model.transform(feat)

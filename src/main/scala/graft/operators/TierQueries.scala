@@ -321,7 +321,9 @@ object TierQueries {
     // cr column exactly bytes/baseline-bytes (same IEEE operands on both
     // computations), and the three native segment codecs decode back
     // bit-exactly over every segment. Reuses storage_codec_cr's
-    // published matrix when that query already ran this session.
+    // published matrix when that query already ran this session, so the
+    // bench row's work depends on sweep order (sf0.1, local[4]: 15 jobs
+    // after storage_codec_cr, 53 run alone).
     "storage_codec_cr_check" -> ((s, d) => {
       import s.implicits._
       import graft.functions.CodecFunctions._

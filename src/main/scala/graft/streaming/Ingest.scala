@@ -191,7 +191,7 @@ object Ingest {
     * corpus dedups each batch against EVERYTHING landed before it, then
     * lands itself). [[nearDupStream]] serves a FIXED corpus; this is the
     * growth regime, and the shape whose per-batch cost curve the scale
-    * harness commits (r14 verdict #5, `DedupGrowthBench`). Per
+    * harness commits (`graft.Bench dedup-growth`). Per
     * micro-batch:
     *
     *  1. per-row native shingle hashes -> per-row MinHash signature (the

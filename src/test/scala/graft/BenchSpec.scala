@@ -1,95 +1,136 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench harness's prior-loading discipline (r14 verdict #1): a
-  * loaded-host adjudication run records its own honest host factor
-  * (`resweep_canary_ratio`, and since r15 `sweep_canary_ratio`), and the
-  * NEXT sweep's prior loader must normalize the committed times by it —
-  * otherwise a fork-mode t=3.444 committed on a 1.65x window becomes the
-  * prior against a clean 1.091 history, and a real ~3x regression would
-  * sit under the 2x-prior trip line and never re-adjudicate.
+/** The bench's regression check: each row's counters and CPU time are
+  * compared against a prior taken under the same key. The injected
+  * regressions below are the ones the wall-clock gate existed to catch —
+  * an extra exchange, a dropped broadcast and an expression slowdown past
+  * the trip line — each measured by the bench's own listener on a real
+  * action, so the check is shown to catch them without wall-clock noise.
   */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with SparkTest {
 
-  private val Sf = "/root/testdata/sf0.1"
+  private lazy val facts: DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bench-spec").toString
+    spark.range(0, 200000, 1, 4)
+      .select((col("id") % 100).as("k"), col("id").as("v"))
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+  private lazy val dims: DataFrame =
+    spark.range(0, 100).select(col("id").as("k"), (col("id") * 2).as("w"))
 
-  private def writeArtifact(json: String): String = {
-    val f = java.nio.file.Files.createTempFile("graft-bench-spec", ".json")
+  /** Three measured reps of `f` after one warm run, as the bench keeps them. */
+  private def measured(f: => Unit): Bench.Row = {
+    val l = new Work.Listener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      Bench.row((1 to 3).map(_ => Work.measure(spark, l)(f)))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def withConf[T](k: String, v: String)(f: => T): T = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try f finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  private def agg: Unit = { facts.groupBy("k").agg(sum("v")).count(); () }
+  private def join: Unit = { facts.join(dims, "k").agg(sum("w")).count(); () }
+
+  test("an unchanged query repeats its counters and is not flagged") {
+    val prior = measured(agg)
+    val cur = measured(agg)
+    assert(Bench.Gated.forall(prior.counters.contains), prior)
+    assert(Bench.regressions(cur, prior).isEmpty)
+  }
+
+  test("an injected extra exchange is flagged on its counters") {
+    val prior = measured(agg)
+    val cur = measured { facts.repartition(8).groupBy("k").agg(sum("v")).count(); () }
+    val flags = Bench.regressions(cur, prior)
+    assert(flags.exists(_.startsWith("stages")), flags)
+    assert(flags.exists(_.startsWith("tasks")), flags)
+  }
+
+  test("a dropped broadcast is flagged on its counters") {
+    val prior = measured(join)
+    val cur = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(measured(join))
+    assert(Bench.regressions(prior, measured(join)).isEmpty)
+    val flags = Bench.regressions(cur, prior)
+    assert(flags.exists(_.startsWith("stages")), flags)
+  }
+
+  test("an expression slowdown past the trip line is flagged on CPU time alone") {
+    // the same plan with a costlier per-row expression: no counter moves,
+    // so only the CPU line (2 x prior + 0.25 s) can catch it
+    val spin = udf { (v: Long) =>
+      var x = v
+      var i = 0
+      while (i < 20000) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
+      x
+    }
+    val prior = measured { facts.select(max(col("v") + 1)).collect(); () }
+    val cur = measured { facts.select(max(spin(col("v")))).collect(); () }
+    assert(cur.cpuS > 2 * prior.cpuS + 0.25, (cur, prior))
+    val flags = Bench.regressions(cur, prior)
+    assert(flags.nonEmpty && flags.forall(_.startsWith("cpu_s")), flags)
+  }
+
+  private def file(json: String): String = {
+    val f = java.nio.file.Files.createTempFile("graft-bench-store", ".json")
     java.nio.file.Files.write(f, json.getBytes("UTF-8"))
     f.toFile.deleteOnExit()
     f.toString
   }
-
-  // the r14 loaded-window artifact, reduced to its load-bearing fields:
-  // whole sweep on a 1.65x host, fork adjudication on the same window
-  private def r14StyleArtifact(canary: Double): String =
-    s"""{"metric":"total","unit":"sec","reps":3,"sf":"$Sf",
-       |"resweep_canary_ratio":$canary,"sweep_canary_ratio":$canary,
-       |"queries":{
-       |  "pipe_quality_filter":{"t":3.444,"sweep":23.275,"mean":23.767,
-       |    "sd":18.197,"reps":3,"resweep":3.444,"resweep_mode":"fork",
-       |    "prior":1.091},
-       |  "q18_bigorders":{"t":1.202,"sweep":1.202,"mean":1.365,"sd":0.354,
-       |    "reps":3,"resweep":3.904,"resweep_mode":"fork","prior":0.474},
-       |  "o1_scan":{"t":0.193,"mean":0.2,"sd":0.01,"reps":3},
-       |  "plain_row":0.495
-       |},"value":220.489,"n_ok":254,"n_err":0}""".stripMargin
-
-  test("fork-mode committed times are divided by the recorded canary ratio") {
-    val p = Bench.loadPrior(writeArtifact(r14StyleArtifact(1.65)), Sf)
-    // 3.444 measured on the 1.65x window enters as ~2.087, so a clean-host
-    // rerun of the same binary (~1.1 s) sits comfortably under the prior
-    // and a REAL 3x regression (3.3 s) trips 2x-prior again
-    assert(math.abs(p.queries("pipe_quality_filter") - 3.444 / 1.65) < 1e-9)
-    // min of {t, resweep} first, then the host normalization
-    assert(math.abs(p.queries("q18_bigorders") - 1.202 / 1.65) < 1e-9)
-  }
-
-  test("plain sweep rows normalize by sweep_canary_ratio when recorded") {
-    val p = Bench.loadPrior(writeArtifact(r14StyleArtifact(1.65)), Sf)
-    assert(math.abs(p.queries("plain_row") - 0.495 / 1.65) < 1e-9)
-    // o1_scan itself normalizes too: the canary's prior stays anchored to
-    // the clean-host cost instead of ratcheting up across loaded rounds
-    assert(math.abs(p.queries("o1_scan") - 0.193 / 1.65) < 1e-9)
-  }
-
-  test("the normalized prior restores the trip threshold a loaded window would mask") {
-    val p = Bench.loadPrior(writeArtifact(r14StyleArtifact(1.65)), Sf)
-    val prior = p.queries("pipe_quality_filter")
-    // clean sweep next round (canary scale 1): the r14-verdict scenario —
-    // a real 3x regression of the clean 1.091 cost (≈3.3 s) MUST trip.
-    // Against the raw 3.444 prior the threshold was 7.14 s (masked);
-    // against the normalized ~2.087 it is ~4.42 s... still above 3.3 —
-    // the decisive check is against the committed-raw threshold:
-    assert(Bench.tripThreshold(prior, 1.0) < Bench.tripThreshold(3.444, 1.0))
-    // and a full re-run at the storm level (23.3 s sweep) always trips
-    assert(23.275 > Bench.tripThreshold(prior, 1.0))
-  }
-
-  test("canary ratios clamp to [1, 3] on read") {
-    // a fast adjudication host (ratio < 1) must never RAISE a prior
-    val fast = Bench.loadPrior(writeArtifact(r14StyleArtifact(0.8)), Sf)
-    assert(math.abs(fast.queries("plain_row") - 0.495) < 1e-9)
-    // a >3x reading caps: the host-factor explanation is itself suspect
-    val wild = Bench.loadPrior(writeArtifact(r14StyleArtifact(5.0)), Sf)
-    assert(math.abs(wild.queries("pipe_quality_filter") - 3.444 / 3.0) < 1e-9)
-  }
+  private def storeWith(entries: String*): String =
+    file(entries.mkString("""{"entries":[""", ",", "]}"))
+  private val k4 = Bench.Key("/data/sf0.1", 4, 4, "count")
+  private def entry(key: Bench.Key, t: Double): String =
+    s"""{"key":"$key","queries":{"q":{"t":$t,"cpu_s":0.5,""" +
+      """"work":{"jobs":3,"tasks":12}},"bad":{"err":"x"}}}"""
 
   test("artifacts without canary fields load raw (pre-r15 behavior)") {
-    val json =
-      s"""{"sf":"$Sf","queries":{
-         |  "a":{"t":2.0,"resweep":1.5,"resweep_mode":"fork"},
-         |  "b":0.25}}""".stripMargin
-    val p = Bench.loadPrior(writeArtifact(json), Sf)
-    assert(math.abs(p.queries("a") - 1.5) < 1e-9)
-    assert(math.abs(p.queries("b") - 0.25) < 1e-9)
+    // what an entry records is the prior, unscaled; a host-factor field
+    // left in an entry by an older bench is ignored, not applied
+    val want = Map("q" -> Bench.Row(1.0, 0.5, Map("jobs" -> 3L, "tasks" -> 12L)))
+    assert(Bench.loadPrior(storeWith(entry(k4, 1.0)), k4) == want)
+    val withCanary = entry(k4, 1.0).replace("\"key\"", "\"sweep_canary_ratio\":1.65,\"key\"")
+      .replace("\"t\":", "\"resweep\":0.5,\"resweep_mode\":\"fork\",\"t\":")
+    assert(withCanary.contains("sweep_canary_ratio") && withCanary.contains("resweep"))
+    assert(Bench.loadPrior(storeWith(withCanary), k4) == want)
   }
 
   test("sf mismatch and unreadable files yield no priors") {
-    val p = Bench.loadPrior(writeArtifact(r14StyleArtifact(1.65)), "/other/sf")
-    assert(p.queries.isEmpty && p.ingest.isEmpty)
-    val q = Bench.loadPrior("/nonexistent/path.json", Sf)
-    assert(q.queries.isEmpty)
+    val path = storeWith(entry(k4, 1.0))
+    assert(Bench.loadPrior(path, k4.copy(sf = "/data/sf1")).isEmpty)
+    assert(Bench.loadPrior("/nonexistent/path.json", k4).isEmpty)
+    assert(Bench.loadPrior(file("not json {"), k4).isEmpty)
+  }
+
+  test("cpus, shuffle partition and action mismatches and pre-key files yield no priors") {
+    val path = storeWith(entry(k4, 1.0))
+    for (other <- Seq(k4.copy(cpus = 8), k4.copy(shufflePartitions = 8),
+        k4.copy(action = "noop")))
+      assert(Bench.loadPrior(path, other).isEmpty, other)
+    val preKey = file("""{"sf":"/data/sf0.1","queries":{"q":{"t":1.0}}}""")
+    assert(Bench.loadPrior(preKey, k4).isEmpty)
+  }
+
+  test("a full sweep replaces only its own key's entry; an ONLY run never replaces") {
+    val k8 = k4.copy(cpus = 8)
+    val store = Bench.entries(storeWith(entry(k4, 1.0), entry(k8, 2.0)))
+    def t(es: Seq[com.fasterxml.jackson.databind.JsonNode], k: Bench.Key) =
+      es.filter(_.path("key").asText == k.toString)
+        .map(_.path("queries").path("q").path("t").asDouble)
+    val swept = Bench.merge(store, entry(k4, 3.0), fullSweep = true)
+    assert(t(swept, k4) == Seq(3.0) && t(swept, k8) == Seq(2.0))
+    assert(t(Bench.merge(store, entry(k4, 3.0), fullSweep = false), k4) == Seq(1.0))
+    val k16 = k4.copy(cpus = 16)
+    assert(t(Bench.merge(store, entry(k16, 5.0), fullSweep = false), k16) == Seq(5.0))
   }
 }

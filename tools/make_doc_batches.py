@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Stage a document corpus as N sequential parquet files for the streaming
-dedup growth replay (DedupGrowthBench): batch k is a full copy of the
+dedup growth replay (graft.Bench dedup-growth): batch k is a full copy of the
 source documents with a doc_id offset and a copy-index token salt, so
 copies are NEAR- (not exact-) duplicates of every earlier batch — each
 arriving batch genuinely collides with the landed store, exercising the

@@ -1,23 +1,8 @@
 #!/bin/bash
 # Usage: tools/run_bench.sh [sfDir] [cpus]
+# The keyed prior store defaults to BENCH_QUERIES.json at the repo root.
 SF=${1:-/root/testdata/sf0.1}
 CPUS=${2:-32}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-# Heap is PINNED (-Xms=-Xmx), PRE-TOUCHED, and THP-backed: on
-# virtualized hosts with slow anonymous-page faulting, an on-demand 4K
-# heap turns shuffle-heavy queries into kernel-time storms (measured
-# here: mm_near_dup at x10 90 s default-G1 vs 15 s pinned+THP, with
-# sys-time dominating user 10:1 in the slow case) — page population is
-# one-time startup cost, never billed to a query. Production executors
-# pin their heaps the same way.
-exec env SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" java $ADD_OPENS -Xms16g -Xmx16g -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
-  graft.Bench
+. "$(dirname "$0")/jvm.sh"
+cd "$GRAFT_ROOT"
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" graft_java 16 graft.Bench

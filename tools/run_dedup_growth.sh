@@ -3,7 +3,7 @@
 # copies as sequential files, replay one per micro-batch through
 # Ingest.dedupGrowStream (sign -> probe landed band store -> append), and
 # print the per-batch {docs_before, addBatch_sec} JSON line from
-# graft.DedupGrowthBench. profile_growth's sibling (r14 verdict #5).
+# graft.Bench dedup-growth. profile_growth's sibling (r14 verdict #5).
 #
 #   tools/run_dedup_growth.sh [srcDir] [batches] [outFile]
 set -e
@@ -14,17 +14,7 @@ cd "$(dirname "$0")/.."
 IN=/tmp/graft_doc_batches_${BATCHES}
 rm -rf "$IN"
 python3 tools/make_doc_batches.py "$SRC" "$IN" "$BATCHES" >&2
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm.sh
 WORK=$(mktemp -d /tmp/graft_dg.XXXXXX)
-java $ADD_OPENS -Xms16g -Xmx16g -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
-  graft.DedupGrowthBench "$IN" "$WORK" | tee "$OUT"
+graft_java 16 graft.Bench dedup-growth "$IN" "$WORK" | tee "$OUT"
 rm -rf "$WORK"

@@ -2,7 +2,7 @@
 # Streaming-profile marginal-cost-vs-history curve (the exact route's
 # asymptote evidence): stage a long drifting-ramp history, replay it one
 # slice per micro-batch, print the per-batch {m_before, addBatch_sec}
-# JSON line from graft.ProfileGrowthBench.
+# JSON line from graft.Bench profile-growth.
 #
 #   tools/run_profile_growth.sh [segmentsPerSignal] [files] [outFile]
 set -e
@@ -12,17 +12,7 @@ OUT=${3:-/tmp/graft_profile_growth.json}
 cd "$(dirname "$0")/.."
 IN=/tmp/graft_ramp_${SEGS}
 python3 tools/make_ramp_history.py "$IN" "$SEGS" "$FILES" >&2
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. tools/jvm.sh
 WORK=$(mktemp -d /tmp/graft_pg.XXXXXX)
-java $ADD_OPENS -Xms16g -Xmx16g -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
-  graft.ProfileGrowthBench "$IN" "$WORK" | tee "$OUT"
+graft_java 16 graft.Bench profile-growth "$IN" "$WORK" | tee "$OUT"
 rm -rf "$WORK"

@@ -39,6 +39,8 @@ for tag in base x10 x100; do
     base) dir="$SRC";;
     *)    dir="$WORK/$tag";;
   esac
+  # an ONLY run never replaces an entry already under its key
+  rm -f "$WORK/bench_$tag.json"
   SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_REPS=2 \
     SPARK_GRAFT_BENCH_OUT="$WORK/bench_$tag.json" \
     tools/run_bench.sh "$dir" 32 > /dev/null 2> "$WORK/bench_stderr_$tag.txt"
@@ -60,7 +62,7 @@ import json, sys, os
 w = sys.argv[1]
 out = {}
 for tag in ("base", "x10", "x100"):
-    bench = json.load(open(f"{w}/bench_{tag}.json"))["queries"]
+    bench = json.load(open(f"{w}/bench_{tag}.json"))["entries"][0]["queries"]
     rows = dict(l.split()[1:3] for l in open(f"{w}/counts_{tag}.txt"))
     out[tag] = {q: {"sec": v["t"], "rows": int(rows.get(q, -1))}
                 for q, v in bench.items()}

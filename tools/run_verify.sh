@@ -4,16 +4,6 @@
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+. "$(dirname "$0")/jvm.sh"
 rm -rf "$OUT"
-exec java $ADD_OPENS -Xms8g -Xmx8g -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes" \
-  graft.Verify "$SF" "$OUT"
+graft_java 8 graft.Verify "$SF" "$OUT"
