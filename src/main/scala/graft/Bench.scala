@@ -3,6 +3,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
+import graft.operators.{AnnQueries, Ivf}
+import graft.sources.IvfStore
 
 /** Benchmark main. With no arguments it times every registered query at
   * SPARK_GRAFT_SF_DIR and prints ONE machine-readable JSON line on stdout.
@@ -349,7 +351,7 @@ object Bench {
     // scale cost — ann_ivf_probe times ONLY the partition-pruned serve
     val ivfIdxDir = untimed("ivf index", "ann_ivf_probe") {
       val dir = tempDir("graft-bench-ivfidx") + "/ivf"
-      graft.operators.AnnQueries.ivfBuildStore(spark, sfDir, dir)
+      AnnQueries.buildStore(spark, sfDir, dir, AnnQueries.flatIndex(spark, sfDir))
       dir
     }
 
@@ -358,7 +360,7 @@ object Bench {
     // at ingest in production)
     val rpIvfIdxDir = untimed("rp-ivf index", "ann_rp_ivf_probe") {
       val dir = tempDir("graft-bench-rpivfidx") + "/rpivf"
-      graft.operators.AnnQueries.rpIvfBuildStore(spark, sfDir, dir)
+      AnnQueries.buildStore(spark, sfDir, dir, AnnQueries.rpIndex(spark, sfDir))
       dir
     }
 
@@ -471,9 +473,13 @@ object Bench {
         ()
       })
     } ++ ivfIdxDir.toSeq.map { dir =>
-      timed("ann_ivf_probe")(graft.operators.AnnQueries.ivfProbeStore(spark, sfDir, dir))
+      // the probes serve from the index's OWN persisted centroids (a
+      // |cells|-row sidecar read), not a corpus-scan re-derivation
+      timed("ann_ivf_probe")(AnnQueries.probeStore(spark, sfDir, dir,
+        Ivf(IvfStore.readCentroids(spark, dir))))
     } ++ rpIvfIdxDir.toSeq.map { dir =>
-      timed("ann_rp_ivf_probe")(graft.operators.AnnQueries.rpIvfProbeStore(spark, sfDir, dir))
+      timed("ann_rp_ivf_probe")(AnnQueries.probeStore(spark, sfDir, dir,
+        Ivf(IvfStore.readCentroids(spark, dir), AnnQueries.RpPlanes)))
     } ++ segArrDir.toSeq.map { dir =>
       timed("seg_profile_auto_tier")(
         graft.operators.MotifDiscord.profileAuto(spark.read.parquet(dir)))

@@ -6,10 +6,11 @@ import graft.functions.VectorFunctions
 
 /** SparkSessionExtensions entry point: enable with
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
-  * Injects the native vector expressions (and the zone-map rewrite rule,
-  * see graft.plans.ZoneMapRewrite) into every session of the cluster —
-  * the deployment shape for the 1000-executor case; tests and the
-  * driver-contract mains use the programmatic registration instead.
+  * Injects the native vector and codec expressions by name (the only
+  * route for SQL strings; DataFrame code builds them directly), the
+  * zone-map rewrite rule (graft.plans.ZoneMapRewrite) and the as-of join
+  * strategy into every session of the cluster — the deployment shape for
+  * the 1000-executor case.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -224,12 +224,11 @@ object TextOps {
     * output (id, sig_lo, sig_hi).
     */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    VectorFunctions.ensureRegistered(docs.sparkSession)
     val tf = docs
       .select(col(idCol), explode(tokens(col(textCol))).as("tok"))
       .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h_lo", call_function("graft_fnv32", col("tok"), lit(FnvSeedLo)))
-      .withColumn("h_hi", call_function("graft_fnv32", col("tok"), lit(FnvSeedHi)))
+      .withColumn("h_lo", VectorFunctions.fnv32(col("tok"), lit(FnvSeedLo)))
+      .withColumn("h_hi", VectorFunctions.fnv32(col("tok"), lit(FnvSeedHi)))
     def bitSums(h: String, p: String) = (0 until 32).map { b =>
       sum((shiftright(col(h), b).bitwiseAND(lit(1L)) * 2 - 1) * col("cnt")).as(s"$p$b")
     }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -747,10 +745,16 @@ case class PqDecode(child: Expression, codebook: Array[Array[Array[Double]]])
     copy(child = c)
 }
 
-/** Registration: programmatic (idempotent, per-session) and via
-  * `spark.sql.extensions=graft.GraftExtensions` (see graft.GraftExtensions).
+/** Column builders for the native expressions (no name lookup, so no
+  * session needs them registered), and the by-name builders that
+  * `spark.sql.extensions=graft.GraftExtensions` injects for SQL strings.
   */
 object VectorFunctions {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+
+  def fnv32(key: Column, seed: Column): Column = column(Fnv32(expression(key), expression(seed)))
+
   val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("graft_dot",
       new ExpressionInfo(classOf[VecDot].getName, "graft_dot"),
@@ -764,13 +768,4 @@ object VectorFunctions {
     ("graft_fnv32",
       new ExpressionInfo(classOf[Fnv32].getName, "graft_fnv32"),
       (args: Seq[Expression]) => Fnv32(args(0), args(1))))
-
-  /** Register into a session's function registry (safe to call repeatedly). */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    (functions ++ CodecFunctions.functions).foreach { case (name, info, builder) =>
-      val id = FunctionIdentifier(name)
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    }
-  }
 }

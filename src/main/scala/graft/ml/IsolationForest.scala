@@ -69,7 +69,7 @@ object IsolationForest {
       s"WHEN $n = 2 THEN 1.0 ELSE 0.0 END"
 
   private def fnv(key: Column): Column =
-    call_function("graft_fnv32", key, lit(2166136261L))
+    VectorFunctions.fnv32(key, lit(2166136261L))
 
   /** PAA-4 feature vector per complete 16-row segment — the `read_paafile`
     * input of the reference study (file_io.rs:60), derived from the
@@ -276,7 +276,6 @@ object IsolationForest {
           trees: Int = 8, depth: Int = 6, psi: Int = 256,
           fitFilter: Column = lit(true)): ForestModel = {
     require(psi >= 1, s"psi must be >= 1, got $psi")
-    VectorFunctions.ensureRegistered(points.sparkSession)
     import points.sparkSession.implicits._
     val d = featCols.length
     val idKey = concat_ws(":", idCols.map(c => col(c).cast("string")): _*)

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.IvfStore
 
 /** Driver-facing registrations for embedding similarity search and
   * embedding-space ML. The brute-force AND LSH paths carry exact DuckDB
@@ -56,127 +57,72 @@ object AnnQueries {
   private val RpDim = 32
   private val RpShortlist = 100
 
-  private def ivfCentroids(s: SparkSession, d: String): Seq[(Int, Seq[Double])] =
-    emb(s, d).filter(col("vec_id") < NCells).orderBy(col("vec_id"))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq
-
-  /** Reduced-space IVF centroids: the projections of the SAME first
-    * NCells vectors the flat codebook uses, computed through the SAME
-    * codegen'd projection expressions the query path runs (a bounded
-    * NCells-row collect) — so the SQL oracle's projected-codebook is
-    * double-identical by construction, with zero driver-side arithmetic
-    * to keep in sync.
-    */
-  private def rpIvfCentroids(s: SparkSession, d: String): Seq[(Int, Seq[Double])] =
-    emb(s, d).filter(col("vec_id") < NCells).orderBy(col("vec_id"))
-      .select(col("vec_id"),
-        Similarity.rpProject(col("embedding"),
-          Similarity.lcgPlanes(RpDim, Dim)).as("r"))
-      .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq
-
-  /** The ann_rp_ivf_store query split at the index boundary (the
-    * ivfBuildStore/ivfProbeStore pattern): the bench builds the reduced
-    * store once untimed and times the serve alone — the amortized
-    * reduced-tier serving cost at 100 TB, where projection + bucketing
-    * happen at ingest.
-    */
-  private[graft] def rpIvfBuildStore(s: SparkSession, d: String,
-                                     path: String): Unit =
-    rpIvfBuildStore(s, d, path, rpIvfCentroids(s, d))
-
-  private[graft] def rpIvfBuildStore(s: SparkSession, d: String, path: String,
-                                     cents: Seq[(Int, Seq[Double])]): Unit =
-    graft.sources.IvfStore.write(
-      emb(s, d).select(col("vec_id"),
-        Similarity.rpProject(col("embedding"),
-          Similarity.lcgPlanes(RpDim, Dim)).as("rvec")),
-      "vec_id", "rvec", cents, path)
-
-  private[graft] def rpIvfProbeStore(s: SparkSession, d: String,
-                                     path: String): DataFrame =
-    // serve from the index's OWN persisted codebook (a |cells|-row
-    // sidecar read) instead of re-deriving it with a corpus-scan collect
-    // — the dictionary is bit-identical (doubles round-trip parquet)
-    rpIvfProbeStore(s, d, path, graft.sources.IvfStore.readCentroids(s, path))
-
-  private[graft] def rpIvfProbeStore(s: SparkSession, d: String, path: String,
-                                     cents: Seq[(Int, Seq[Double])]): DataFrame =
-    graft.sources.IvfStore.topKReduced(s, path, probes(s, d), corpus(s, d),
-      TopK, Similarity.lcgPlanes(RpDim, Dim), cents,
-      NProbe, RpShortlist)
-
-  /** The ann_ivf_store query split at the index boundary, so the bench
-    * can attribute serving cost separately from the one-time build — at
-    * 100 TB the index is built once by the ingest pipeline and amortized
-    * over every query, so BUILD+PROBE as one number misattributes the
-    * scale cost (SCALE100 r12: 119 s at x100 for a fixed 100-row answer,
-    * unattributed).
-    */
-  private[graft] def ivfBuildStore(s: SparkSession, d: String,
-                                   path: String): Unit =
-    ivfBuildStore(s, d, path, ivfCentroids(s, d))
-
-  private[graft] def ivfBuildStore(s: SparkSession, d: String, path: String,
-                                   cents: Seq[(Int, Seq[Double])]): Unit =
-    graft.sources.IvfStore.write(emb(s, d), "vec_id", "embedding",
-      cents, path)
-
-  private[graft] def ivfProbeStore(s: SparkSession, d: String,
-                                   path: String): DataFrame =
-    // serve from the index's OWN persisted codebook (see rpIvfProbeStore)
-    ivfProbeStore(s, d, path, graft.sources.IvfStore.readCentroids(s, path))
-
-  private[graft] def ivfProbeStore(s: SparkSession, d: String, path: String,
-                                   cents: Seq[(Int, Seq[Double])]): DataFrame =
-    graft.sources.IvfStore.topK(s, path, probes(s, d), TopK,
-      cents, NProbe)
+  private[graft] val RpPlanes = Similarity.lcgPlanes(RpDim, Dim)
 
   // PQ layout: 8 subspaces x 8 dims, 16 centroids per subspace taken from
-  // the first 16 corpus vectors' subvectors (deterministic sample — k-means
-  // init without the iteration, same trick as the IVF codebook, so the SQL
+  // 16 corpus vectors' subvectors (deterministic sample — k-means init
+  // without the iteration, same trick as the IVF codebook, so the SQL
   // oracle regenerates the identical codebook). 8 codes/vector = 8 bytes
   // of search state vs 256 bytes of floats.
   private val PqM = 8
   private val PqSubDim = 8
   private val PqCells = 16
 
-  private def pqCodebook(s: SparkSession, d: String): Array[Array[Array[Double]]] = {
-    val base = emb(s, d).filter(col("vec_id") < PqCells).orderBy(col("vec_id"))
-      .select(col("embedding").cast("array<double>"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    Array.tabulate(PqM)(m => base.map(v => v.slice(m * PqSubDim, (m + 1) * PqSubDim)))
+  /** Embeddings [from, until) through `v`, in vec_id order — a bounded
+    * driver collect. Every dictionary below is one: computed through the
+    * same codegen'd expressions the query path runs, so the codebook the
+    * SQL oracle regenerates is double-identical, with no driver-side
+    * arithmetic to keep in sync.
+    */
+  private def sample(s: SparkSession, d: String, from: Int, until: Int,
+                     v: Column): Seq[(Int, Seq[Double])] =
+    emb(s, d).filter(col("vec_id") >= from && col("vec_id") < until)
+      .orderBy(col("vec_id")).select(col("vec_id"), v)
+      .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq
+
+  /** PQ codebook: each sampled vector sliced into its PqM subspaces. */
+  private def subspaces(vecs: Seq[(Int, Seq[Double])]): Array[Array[Array[Double]]] =
+    Array.tabulate(PqM)(m =>
+      vecs.map(_._2.slice(m * PqSubDim, (m + 1) * PqSubDim).toArray).toArray)
+
+  /** IVF-Flat: the first NCells vectors are the cell centroids. */
+  private[graft] def flatIndex(s: SparkSession, d: String): Ivf =
+    Ivf(sample(s, d, 0, NCells, col("embedding").cast("array<double>")))
+
+  /** RP-IVF: the projections of the SAME first NCells vectors. */
+  private[graft] def rpIndex(s: SparkSession, d: String): Ivf =
+    Ivf(sample(s, d, 0, NCells, Similarity.rpProject(col("embedding"), RpPlanes)), RpPlanes)
+
+  /** IVF-PQ: the flat cells plus a residual codebook — the residuals of
+    * vectors [NCells, NCells+PqCells) w.r.t. their own best cell.
+    */
+  private def pqIndex(s: SparkSession, d: String): Ivf = {
+    val flat = flatIndex(s, d)
+    flat.copy(codebook = Some(subspaces(
+      sample(s, d, NCells, NCells + PqCells, flat.residual(col("embedding"))))))
   }
 
-  /** IVF-PQ residual codebook: the RESIDUALS of vectors [NCells,
-    * NCells+PqCells) w.r.t. their own best coarse cell, sliced into
-    * subspaces. Derived through the very same cellScore/zip_with
-    * expressions the query path runs (a 16-row bounded collect), so the
-    * codebook the oracle regenerates in SQL is double-identical.
-    */
-  private def ivfPqCodebook(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    ivfPqCodebookFrom(s, d, ivfCentroids(s, d))
+  /** Flat PQ (no cells): subspaces of the first PqCells vectors. */
+  private def pqCodebook(s: SparkSession, d: String): Array[Array[Array[Double]]] =
+    subspaces(sample(s, d, 0, PqCells, col("embedding").cast("array<double>")))
 
-  /** [[ivfPqCodebook]] with the coarse centroids supplied by a caller
-    * that already collected them — the IVF-PQ rows all need BOTH the
-    * centroid dictionary and the residual codebook, and the nested
-    * ivfCentroids collect re-ran the same bounded corpus-scan job once
-    * (ann_ivfpq/_recall) to twice (ann_ivfpq_store) per construction.
+  /** The ann_*_store queries split at the index boundary, so the bench
+    * can time the partition-pruned serve apart from the one-time build —
+    * at 100 TB the index is built once by the ingest pipeline and
+    * amortized over every query, so BUILD+PROBE as one number
+    * misattributes the scale cost (SCALE100 r12: 119 s at x100 for a
+    * fixed 100-row answer, unattributed).
     */
-  private def ivfPqCodebookFrom(s: SparkSession, d: String,
-                                cents: Seq[(Int, Seq[Double])])
-      : Array[Array[Array[Double]]] = {
-    val centArr = array(cents.sortBy(_._1).map { case (_, c) => typedLit(c) }: _*)
-    val base = emb(s, d)
-      .filter(col("vec_id") >= NCells && col("vec_id") < NCells + PqCells)
-      .withColumn("cell", Similarity.bestCell(col("embedding"), cents))
-      .withColumn("cent", element_at(centArr, col("cell").cast("int") + lit(1)))
-      .select(col("vec_id"),
-        zip_with(col("embedding").cast("array<double>"), col("cent"),
-          (a, b) => a - b).as("resid"))
-      .orderBy(col("vec_id"))
-      .collect().map(_.getSeq[Double](1).toArray)
-    Array.tabulate(PqM)(m => base.map(v => v.slice(m * PqSubDim, (m + 1) * PqSubDim)))
+  private[graft] def buildStore(s: SparkSession, d: String, path: String,
+                                index: Ivf): Unit =
+    IvfStore.write(emb(s, d), "vec_id", "embedding", index.centroids, path,
+      index.planes, index.codebook)
+
+  private[graft] def probeStore(s: SparkSession, d: String, path: String,
+                                index: Ivf): DataFrame = {
+    val p = probes(s, d)
+    IvfStore.topK(s, path, p, TopK, index.centroids, NProbe, index.planes,
+      index.codebook, Option.when(index.planes.nonEmpty)(Ivf.Rerank(p, corpus(s, d), RpShortlist)))
   }
 
   /** recall = |approx ∩ brute| / |brute| over the given key columns —
@@ -190,10 +136,7 @@ object AnnQueries {
       .withColumn("recall",
         round(col("n_hit").cast("double") / col("n_brute").cast("double"), 4))
 
-  private def emb(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    Tables.embeddings(s, d)
-  }
+  private def emb(s: SparkSession, d: String): DataFrame = Tables.embeddings(s, d)
 
   private def probes(s: SparkSession, d: String): DataFrame =
     emb(s, d).filter(col("vec_id") < 10)
@@ -223,14 +166,12 @@ object AnnQueries {
     // IVF-Flat variant: deterministic 16-cell codebook, map-only cell
     // assignment, probes search their 4 nearest cells exactly
     "ann_ivf" -> ((s, d) =>
-      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK,
-        ivfCentroids(s, d), NProbe)),
+      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, flatIndex(s, d), NProbe)),
 
     "ann_ivf_recall" -> ((s, d) => recallSummary(
       Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
         .select(col("probe_id"), col("cand_id")),
-      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK,
-          ivfCentroids(s, d), NProbe)
+      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, flatIndex(s, d), NProbe)
         .select(col("probe_id"), col("cand_id")),
       Seq("probe_id", "cand_id"))),
 
@@ -247,10 +188,10 @@ object AnnQueries {
       // collect is knob-independent — hoisted out of the loop.
       val brute = Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
         .select(col("probe_id"), col("cand_id")).localCheckpoint()
-      val cents = ivfCentroids(s, d)
+      val index = flatIndex(s, d)
       Seq(1, 2, 4, 8).map { np =>
         recallSummary(brute,
-          Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, cents, np)
+          Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, index, np)
             .select(col("probe_id"), col("cand_id")),
           Seq("probe_id", "cand_id"))
           .withColumn("nprobe", lit(np.toLong))
@@ -261,7 +202,7 @@ object AnnQueries {
     // the corpus is covered — fixed-I/O-per-query under skewed cells
     "ann_ivf_adaptive" -> ((s, d) =>
       Similarity.ivfTopKAdaptive(probes(s, d), corpus(s, d), TopK,
-        ivfCentroids(s, d), targetFrac = 0.25)),
+        flatIndex(s, d).centroids, targetFrac = 0.25)),
 
     // the persisted IVF index: corpus written partitioned by cell, probes
     // read ONLY their nProbe cells (static partition pruning at the scan)
@@ -269,9 +210,9 @@ object AnnQueries {
     "ann_ivf_store" -> ((s, d) => {
       val path = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
       // one centroid collect feeds build AND probe (was one each)
-      val cents = ivfCentroids(s, d)
-      ivfBuildStore(s, d, path, cents)
-      ivfProbeStore(s, d, path, cents)
+      val index = flatIndex(s, d)
+      buildStore(s, d, path, index)
+      probeStore(s, d, path, index)
     }),
 
     // embedding-cosine near-duplicate pairs (LSH-bucketed candidates,
@@ -286,7 +227,7 @@ object AnnQueries {
     "dedup_semantic" -> ((s, d) =>
       Similarity.semanticDedup(
         emb(s, d).select(col("vec_id"), col("embedding")),
-        "vec_id", "embedding", ivfCentroids(s, d), DupThreshold)),
+        "vec_id", "embedding", flatIndex(s, d).centroids, DupThreshold)),
 
     "dedup_emb_recall" -> ((s, d) => {
       val vecs = emb(s, d).select(col("vec_id"), col("embedding"))
@@ -316,11 +257,8 @@ object AnnQueries {
     // The bounded centroid dictionary is collected ONCE per construction
     // and shared with the residual-codebook derivation (it was
     // re-collected per consumer — one identical corpus-scan job each)
-    "ann_ivfpq" -> ((s, d) => {
-      val cents = ivfCentroids(s, d)
-      Similarity.ivfPqTopK(probes(s, d), corpus(s, d), TopK,
-        cents, NProbe, ivfPqCodebookFrom(s, d, cents))
-    }),
+    "ann_ivfpq" -> ((s, d) =>
+      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, pqIndex(s, d), NProbe)),
 
     // the persisted IVF-PQ index: cell-partitioned codes on disk (no
     // floats), probes read only their cells — same arithmetic as
@@ -329,24 +267,17 @@ object AnnQueries {
     // — three identical collect jobs per construction before r16)
     "ann_ivfpq_store" -> ((s, d) => {
       val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-store").toString
-      val cents = ivfCentroids(s, d)
-      val cb = ivfPqCodebookFrom(s, d, cents)
-      graft.sources.IvfStore.writePq(emb(s, d), "vec_id", "embedding",
-        cents, cb, path)
-      graft.sources.IvfStore.topKPq(s, path, probes(s, d), TopK,
-        cents, cb, NProbe)
+      val index = pqIndex(s, d)
+      buildStore(s, d, path, index)
+      probeStore(s, d, path, index)
     }),
 
-    "ann_ivfpq_recall" -> ((s, d) => {
-      val cents = ivfCentroids(s, d)
-      recallSummary(
-        Similarity.bruteTopKL2(probes(s, d), corpus(s, d), TopK)
-          .select(col("probe_id"), col("cand_id")),
-        Similarity.ivfPqTopK(probes(s, d), corpus(s, d), TopK,
-            cents, NProbe, ivfPqCodebookFrom(s, d, cents))
-          .select(col("probe_id"), col("cand_id")),
-        Seq("probe_id", "cand_id"))
-    }),
+    "ann_ivfpq_recall" -> ((s, d) => recallSummary(
+      Similarity.bruteTopKL2(probes(s, d), corpus(s, d), TopK)
+        .select(col("probe_id"), col("cand_id")),
+      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, pqIndex(s, d), NProbe)
+        .select(col("probe_id"), col("cand_id")),
+      Seq("probe_id", "cand_id"))),
 
     // top-k ranked entirely in the quantized integer domain (no f32 reads)
     "ann_quant" -> ((s, d) =>
@@ -401,15 +332,13 @@ object AnnQueries {
     // full-space rerank — IVF prunes WHICH vectors are scanned, RP
     // shrinks WHAT is scanned per vector
     "ann_rp_ivf" -> ((s, d) =>
-      Similarity.rpIvfTopK(probes(s, d), corpus(s, d), TopK,
-        Similarity.lcgPlanes(RpDim, Dim), rpIvfCentroids(s, d),
+      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, rpIndex(s, d),
         NProbe, RpShortlist)),
 
     "ann_rp_ivf_recall" -> ((s, d) => recallSummary(
       Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
         .select(col("probe_id"), col("cand_id")),
-      Similarity.rpIvfTopK(probes(s, d), corpus(s, d), TopK,
-          Similarity.lcgPlanes(RpDim, Dim), rpIvfCentroids(s, d),
+      Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, rpIndex(s, d),
           NProbe, RpShortlist)
         .select(col("probe_id"), col("cand_id")),
       Seq("probe_id", "cand_id"))),
@@ -427,15 +356,14 @@ object AnnQueries {
       // brute baseline materialized once (it is the shared reference,
       // not the serve under sweep — see ann_ivf_curve); the reduced
       // codebook collect is knob-independent and hoisted. Each knob's
-      // rpIvfTopK serve remains fully self-contained per the honesty
+      // ivfTopK serve remains fully self-contained per the honesty
       // note above.
       val brute = Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
         .select(col("probe_id"), col("cand_id")).localCheckpoint()
-      val cents = rpIvfCentroids(s, d)
+      val index = rpIndex(s, d)
       Seq(1, 2, 4, 8).map { np =>
         recallSummary(brute,
-          Similarity.rpIvfTopK(probes(s, d), corpus(s, d), TopK,
-              Similarity.lcgPlanes(RpDim, Dim), cents,
+          Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, index,
               np, RpShortlist)
             .select(col("probe_id"), col("cand_id")),
           Seq("probe_id", "cand_id"))
@@ -455,11 +383,10 @@ object AnnQueries {
       // nprobe curve; each shortlist point's serve stays self-contained
       val brute = Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
         .select(col("probe_id"), col("cand_id")).localCheckpoint()
-      val cents = rpIvfCentroids(s, d)
+      val index = rpIndex(s, d)
       Seq(10, 25, 50, 100).map { sl =>
         recallSummary(brute,
-          Similarity.rpIvfTopK(probes(s, d), corpus(s, d), TopK,
-              Similarity.lcgPlanes(RpDim, Dim), cents,
+          Similarity.ivfTopK(probes(s, d), corpus(s, d), TopK, index,
               NProbe, sl)
             .select(col("probe_id"), col("cand_id")),
           Seq("probe_id", "cand_id"))
@@ -476,9 +403,9 @@ object AnnQueries {
       val path = java.nio.file.Files
         .createTempDirectory("graft-rpivf-store").toString
       // one reduced-centroid collect feeds build AND probe (was one each)
-      val cents = rpIvfCentroids(s, d)
-      rpIvfBuildStore(s, d, path, cents)
-      rpIvfProbeStore(s, d, path, cents)
+      val index = rpIndex(s, d)
+      buildStore(s, d, path, index)
+      probeStore(s, d, path, index)
     }),
 
     "emb_norm" -> ((s, d) =>

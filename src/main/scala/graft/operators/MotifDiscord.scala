@@ -438,18 +438,16 @@ object MotifDiscord {
     */
   private def sampledRefs(segs: DataFrame, mod: Int): DataFrame =
     segs
-      .withColumn("h", refHash(segs))
+      .withColumn("h", refHash)
       .withColumn("srk", row_number().over(
         Window.partitionBy(col("signal_id")).orderBy(col("seg"))))
       .filter(col("h") % mod === 0 || col("srk") <= 2)
       .drop("h", "srk")
 
-  private def refHash(segs: DataFrame): Column = {
-    graft.functions.VectorFunctions.ensureRegistered(segs.sparkSession)
-    call_function("graft_fnv32",
+  private def refHash: Column =
+    graft.functions.VectorFunctions.fnv32(
       concat(lit("ps:"), col("signal_id").cast("string"), lit(":"),
         col("seg").cast("string")), lit(2166136261L))
-  }
 
   /** INCREMENTAL sampled upper bound — the streaming fold of
     * [[profileSampled]]. Per batch it pays
@@ -488,7 +486,7 @@ object MotifDiscord {
     // is <= 2 — i.e. only for signals with fewer than 2 prior segments
     val eCnt = e.groupBy(col("signal_id")).agg(count(lit(1)).as("ce"))
     val nRefs = n
-      .withColumn("h", refHash(n))
+      .withColumn("h", refHash)
       .withColumn("srk", row_number().over(
         Window.partitionBy(col("signal_id")).orderBy(col("seg"))))
       .join(eCnt, Seq("signal_id"), "left")

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{PqDecode, PqEncode, VecDot, VecQuantize, VecSqDist}
 
 /** Vector-similarity operators over an `array<float>` embedding column.
   *
@@ -20,10 +22,9 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Sequential-fold dot product in double — the native codegen'd
-    * expression (graft.functions.VecDot). Callers must have run
-    * VectorFunctions.ensureRegistered(spark) (query entry points do).
+    * expression (graft.functions.VecDot).
     */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  def dot(a: Column, b: Column): Column = column(VecDot(expression(a), expression(b)))
 
   def l2(a: Column): Column = sqrt(dot(a, a))
 
@@ -32,11 +33,16 @@ object Similarity {
     round(dot(a, b) / (l2(a) * l2(b)), 6)
 
   /** Squared euclidean distance (native sequential fold, VecSqDist). */
-  def sqDist(a: Column, b: Column): Column = call_function("graft_sqdist", a, b)
+  def sqDist(a: Column, b: Column): Column = column(VecSqDist(expression(a), expression(b)))
 
-  /** Brute-force cosine top-k: for each probe (small, broadcast), rank the
-    * whole corpus. Deterministic tiebreak on candidate id.
+  /** The ranking tail every top-k path shares: `rnk` (long) = row_number
+    * per probe over `order`, ties to the lower candidate id; keep rnk <= k.
     */
+  private[graft] def topKPerProbe(scored: DataFrame, order: Column, k: Int): DataFrame =
+    scored.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(order, col("cand_id"))).cast("long"))
+      .filter(col("rnk") <= k)
+
   /** Widen the STREAM side of a compute-heavy nested-loop join to the
     * cluster's default parallelism — measured r16: the bench corpora are
     * one parquet split, so the brute-force distance loops ran
@@ -61,6 +67,9 @@ object Similarity {
     if (df.rdd.getNumPartitions >= n) df else df.repartition(n, col(key))
   }
 
+  /** Brute-force cosine top-k: for each probe (small, broadcast), rank the
+    * whole corpus. Deterministic tiebreak on candidate id.
+    */
   def bruteTopK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     // norms are computed ONCE per vector before the join (1 fold per pair
     // instead of 3); sqrt(dot(v,v)) and the product order are unchanged,
@@ -70,10 +79,7 @@ object Similarity {
     val joined = cn.join(broadcast(pn), col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         round(dot(col("pe"), col("ce")) / (col("pn") * col("cn")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKPerProbe(joined, col("sim").desc, k)
   }
 
   /** Deterministic sign-LSH hyperplanes from integer LCG samples
@@ -130,10 +136,7 @@ object Similarity {
       .where(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         round(dot(col("pe"), col("ce")) / (col("pn") * col("cn")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKPerProbe(joined, col("sim").desc, k)
   }
 
   /** Product-quantization approximate top-k (Jégou et al.): the corpus is
@@ -148,18 +151,14 @@ object Similarity {
     */
   def pqTopK(probes: DataFrame, corpus: DataFrame, k: Int,
              codebook: Array[Array[Array[Double]]]): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     val coded = corpus.withColumn("recon",
-      column(graft.functions.PqDecode(
-        expression(column(graft.functions.PqEncode(
+      column(PqDecode(
+        expression(column(PqEncode(
           expression(col("ce")), codebook))), codebook)))
     val joined = coded.join(broadcast(probes), col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         sqDist(col("pe").cast("array<double>"), col("recon")).as("dist"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("dist").asc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKPerProbe(joined, col("dist").asc, k)
       .select(col("probe_id"), col("cand_id"), round(col("dist"), 6).as("dist"), col("rnk"))
   }
 
@@ -170,45 +169,32 @@ object Similarity {
     val joined = corpus.join(broadcast(probes), col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         sqDist(col("pe").cast("array<double>"), col("ce").cast("array<double>")).as("dist"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("dist").asc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKPerProbe(joined, col("dist").asc, k)
       .select(col("probe_id"), col("cand_id"), round(col("dist"), 6).as("dist"), col("rnk"))
   }
 
-  /** IVF-style approximate top-k (IVF-Flat with a deterministic sampled
-    * codebook): the corpus is partitioned into `centroids.size` Voronoi
-    * cells by cosine; each probe searches its `nProbe` nearest cells
-    * exactly. The centroid dictionary is a bounded driver-side constant
-    * (the caller samples it deterministically), so CELL ASSIGNMENT IS
-    * MAP-ONLY — an argmax over per-centroid cosine expressions, no join,
-    * no shuffle, no row amplification of the corpus; at 100 TB the cells
-    * can be written as partition keys and probing prunes the scan. Ties:
-    * highest cosine, then lowest cell id (struct-max on (cos, -cell)).
+  /** IVF approximate top-k (see [[Ivf]]): the corpus is assigned to the
+    * index's cells, and each probe searches its `nProbe` nearest cells —
+    * raw, projected (then reranked by exact cosine from a `shortlist` per
+    * probe) or PQ-coded, as the index describes.
     */
-  /** Best-cell score struct for a vector against a bounded centroid
-    * dictionary: array_max over (cosine, -cell) picks the highest cosine,
-    * lowest cell id on ties — `.c` is the cosine TO the chosen centroid,
-    * `-.negCell` the cell id. Map-only (broadcast literal centroids, no
-    * join, no shuffle), shared by the IVF, IVF+PQ and SemDeDup paths.
-    */
-  def cellScore(v: Column, centroids: Seq[(Int, Seq[Double])]): Column =
-    array_max(array(centroids.map { case (i, c) =>
-      struct(cosine(v.cast("array<double>"), typedLit(c)).as("c"),
-        lit(-i).as("negCell"))
-    }: _*))
+  def ivfTopK(probes: DataFrame, corpus: DataFrame, k: Int, index: Ivf,
+              nProbe: Int, shortlist: Int = 0): DataFrame =
+    index.serve(index.assign(corpus, "cand_id", "ce"), index.probeCells(probes, nProbe), k,
+      Option.when(index.planes.nonEmpty)(Ivf.Rerank(probes, corpus, shortlist)))
 
-  /** Native argmax-cosine cell assignment (graft.functions.VoronoiCell),
-    * bit-identical to `-cellScore(v, cents).getField("negCell")` — see
-    * the expression's scaladoc for why the column formula was a
-    * pushdown-inlining hazard on join keys. Centroids iterate in
+  /** Native argmax-cosine cell assignment (graft.functions.VoronoiCell):
+    * the highest rounded cosine wins, ties to the lowest cell id —
+    * bit-identical to the struct-max column formula the oracles mirror
+    * (VoronoiCellSpec keeps it as the reference); see the expression's
+    * scaladoc for why that formula was a pushdown-inlining hazard on join
+    * keys. Map-only (literal centroids, no join, no shuffle), shared by
+    * [[Ivf]] and SemDeDup. Centroids iterate in
     * ascending-id order so equal rounded scores keep the smallest id,
     * exactly the struct-max tiebreak; centroid norms are precomputed
     * with the same sequential fold Catalyst const-folds `l2(lit(c))` to.
     */
   def bestCell(v: Column, centroids: Seq[(Int, Seq[Double])]): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     val sorted = centroids.sortBy(_._1)
     val cents = sorted.map(_._2.toArray).toArray
     val norms = cents.map { c =>
@@ -220,57 +206,6 @@ object Similarity {
       sorted.map(_._1).toArray))
   }
 
-  /** Each probe's `nProbe` nearest cells (probes are the small side: the
-    * per-probe cell ranking is a broadcast-size window, never a shuffle
-    * of the corpus).
-    */
-  def probeCells(probes: DataFrame, centroids: Seq[(Int, Seq[Double])],
-                 nProbe: Int): DataFrame = {
-    val pc = probes.select(col("probe_id"), col("pe"),
-        explode(array(centroids.map { case (i, c) =>
-          struct(lit(i).as("cell"),
-            cosine(col("pe").cast("array<double>"), typedLit(c)).as("pcos"))
-        }: _*)).as("e"))
-      .select(col("probe_id"), col("pe"), col("e.cell").as("cell"), col("e.pcos").as("pcos"))
-    val wP = Window.partitionBy(col("probe_id")).orderBy(col("pcos").desc, col("cell"))
-    pc.withColumn("prnk", row_number().over(wP))
-      .filter(col("prnk") <= nProbe).select(col("probe_id"), col("pe"), col("cell"))
-  }
-
-  /** IVF-PQ (Jégou et al., IVFADC): coarse cell assignment (map-only, as
-    * ivfTopK) + product-quantized RESIDUALS (vector minus its cell
-    * centroid), searched by reconstructed squared-L2 inside the probed
-    * cells only. The 100 TB shape of Faiss's workhorse index: corpus
-    * carries cell + 8 int codes per vector (the residual codebook is a
-    * bounded broadcast literal), probing prunes cells, ADC never touches
-    * raw floats. Reconstruction order is centroid + decoded residual,
-    * element-wise, so the DuckDB oracle reproduces the doubles exactly.
-    */
-  def ivfPqTopK(probes: DataFrame, corpus: DataFrame, k: Int,
-                centroids: Seq[(Int, Seq[Double])], nProbe: Int,
-                codebook: Array[Array[Array[Double]]]): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val centArr = array(centroids.sortBy(_._1).map { case (_, c) => typedLit(c) }: _*)
-    val assigned = corpus
-      .withColumn("cell", bestCell(col("ce"), centroids))
-      .withColumn("cent", element_at(centArr, col("cell").cast("int") + lit(1)))
-      .withColumn("resid", zip_with(col("ce").cast("array<double>"), col("cent"),
-        (a, b) => a - b))
-    val recon = assigned
-      .withColumn("rres", column(graft.functions.PqDecode(
-        expression(column(graft.functions.PqEncode(
-          expression(col("resid")), codebook))), codebook)))
-      .withColumn("rv", zip_with(col("cent"), col("rres"), (a, b) => a + b))
-    val joined = recon.join(
-        broadcast(probeCells(probes, centroids, nProbe)), Seq("cell"))
-      .where(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(sqDist(col("pe").cast("array<double>"), col("rv")), 6).as("dist"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("dist").asc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
   /** ADAPTIVE IVF probing: instead of a fixed nProbe, each probe visits
     * its best cells (cosine-ranked) until the CUMULATIVE corpus fraction
     * covered reaches `targetFrac` — probes whose neighborhoods fall in
@@ -280,15 +215,15 @@ object Similarity {
     * sizes are collected into a |cells|-bounded driver dictionary and
     * embedded in the plan as a literal lookup (|cells| is the codebook
     * size — a deliberate constant, never corpus-sized); the corpus total
-    * is one bounded scalar. Same scoring/ranking as ivfTopK.
+    * is one bounded scalar. Same assignment and serve as ivfTopK.
     */
   def ivfTopKAdaptive(probes: DataFrame, corpus: DataFrame, k: Int,
                       centroids: Seq[(Int, Seq[Double])],
                       targetFrac: Double): DataFrame = {
-    val assigned = corpus.withColumn("cn", l2(col("ce")))
-      .withColumn("cell", bestCell(col("ce"), centroids))
+    val index = Ivf(centroids)
+    val assigned = index.assign(corpus, "cand_id", "ce")
     // the cell-size histogram is ncells rows — fetch it ONCE as a bounded
-    // driver dictionary (the ivfCentroids discipline) instead of a
+    // driver dictionary (like the centroid sample) instead of a
     // broadcast join plus a separate total-count action: one corpus pass
     // serves both the per-cell sizes and their sum. A null-vector row
     // groups under a null cell: it still counts toward the corpus total
@@ -315,29 +250,7 @@ object Similarity {
       .withColumn("prev_cum", coalesce(sum(col("csz")).over(wCum), lit(0L)))
       .filter(col("prev_cum") < lit(targetFrac) * lit(total.toDouble))
       .select(col("probe_id"), col("pe"), col("cell"))
-      .withColumn("pn", l2(col("pe")))
-    val joined = assigned.join(broadcast(chosen), Seq("cell"))
-      .where(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(dot(col("pe"), col("ce")) / (col("pn") * col("cn")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  def ivfTopK(probes: DataFrame, corpus: DataFrame, k: Int,
-              centroids: Seq[(Int, Seq[Double])], nProbe: Int): DataFrame = {
-    val assigned = corpus.withColumn("cn", l2(col("ce")))
-      .withColumn("cell", bestCell(col("ce"), centroids))
-    val joined = assigned.join(
-        broadcast(probeCells(probes, centroids, nProbe).withColumn("pn", l2(col("pe")))),
-        Seq("cell"))
-      .where(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(dot(col("pe"), col("ce")) / (col("pn") * col("cn")), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    index.serve(assigned, chosen, k)
   }
 
   /** Embedding-cosine near-duplicate pairs, LSH-bucketed: candidates are
@@ -458,7 +371,7 @@ object Similarity {
     * the quantized domain without touching the f32 originals.
     */
   def quantizeVec(v: Column, scale: Double): Column =
-    call_function("graft_quantize", v.cast("array<double>"), lit(scale))
+    column(VecQuantize(expression(v.cast("array<double>")), expression(lit(scale))))
 
   /** Brute-force top-k ranked entirely in the quantized domain. The sim
     * values differ from float cosine by O(1/scale); `ann_quant_recall`
@@ -472,10 +385,7 @@ object Similarity {
     val joined = qc.join(broadcast(qp), col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         round(dot(col("qp"), col("qc")) / (col("pn") * col("cn")), 6).as("sim_q"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim_q").desc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
+    topKPerProbe(joined, col("sim_q").desc, k)
   }
 
   /** Johnson–Lindenstrauss random projection: reduced[i] = <v, plane_i>
@@ -493,7 +403,6 @@ object Similarity {
     * column is touched again only by the rerank fetch.
     */
   def rpProject(v: Column, planes: Seq[Seq[Double]]): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     column(graft.functions.RpProject(expression(v),
       planes.map(_.toArray).toArray))
   }
@@ -544,64 +453,7 @@ object Similarity {
       .join(broadcast(probes.withColumn("pn", l2(col("pe")))), Seq("probe_id"))
       .select(col("probe_id"), col("cand_id"),
         round(dot(col("pe"), col("ce")) / (col("pn") * l2(col("ce"))), 6).as("sim"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    fetched.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** RP-IVF: the 100 TB serving shape of the reduced tier — the corpus's
-    * REDUCED vectors are Voronoi-bucketed against REDUCED centroids (the
-    * same map-only assignment as ivfTopK, at r-dim arithmetic), probes
-    * search their nProbe reduced cells for a reduced-cosine shortlist,
-    * and the shortlist alone is re-ranked by exact full-space cosine.
-    * Composes the two orthogonal scale moves: IVF prunes WHICH vectors
-    * are scanned (partition pruning), RP shrinks WHAT is scanned per
-    * vector (r/d bandwidth + arithmetic); the full-resolution column is
-    * touched only by the rerank fetch. `rpCentroids` must be the
-    * projections of the SAME vectors ivfTopK's codebook uses, computed
-    * through the same projection expressions (callers collect them
-    * bounded, the ivfCentroids discipline).
-    */
-  def rpIvfTopK(probes: DataFrame, corpus: DataFrame, k: Int,
-                planes: Seq[Seq[Double]],
-                rpCents: Seq[(Int, Seq[Double])],
-                nProbe: Int, shortlist: Int): DataFrame = {
-    val cr = corpus.select(col("cand_id"),
-        rpProject(col("ce"), planes).as("rc"))
-      .withColumn("cell", bestCell(col("rc"), rpCents))
-      .withColumn("cn_r", l2(col("rc")))
-    reducedCellShortlistRerank(cr, probes, corpus, k, planes, rpCents,
-      nProbe, shortlist)
-  }
-
-  /** Shared tail of the in-memory RP-IVF path and the persisted reduced
-    * store (IvfStore.topKReduced): probe-cell ranking in the reduced
-    * space, cell equi-join against a (cand_id, rc, cn_r, cell) reduced
-    * corpus, reduced-cosine shortlist, exact full-space rerank. One body
-    * so the two paths cannot drift off the "bit-identical, one oracle"
-    * contract.
-    */
-  private[graft] def reducedCellShortlistRerank(
-      reducedCorpus: DataFrame, probes: DataFrame, corpus: DataFrame,
-      k: Int, planes: Seq[Seq[Double]], rpCents: Seq[(Int, Seq[Double])],
-      nProbe: Int, shortlist: Int): DataFrame = {
-    val pr = probes.select(col("probe_id"),
-      rpProject(col("pe"), planes).as("pe"))
-    val pc = probeCells(pr, rpCents, nProbe)
-      .select(col("probe_id"), col("pe").as("rp"), col("cell"))
-      .withColumn("pn_r", l2(col("rp")))
-    val short = reducedCorpus.join(broadcast(pc), Seq("cell"))
-      .where(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(dot(col("rp"), col("rc")) / (col("pn_r") * col("cn_r")), 6)
-          .as("sim_r"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("sim_r").desc, col("cand_id"))
-    val shortIds = short.withColumn("srnk", row_number().over(w))
-      .filter(col("srnk") <= shortlist)
-      .select(col("probe_id"), col("cand_id"))
-    rerankFull(shortIds, probes, corpus, k)
+    topKPerProbe(fetched, col("sim").desc, k)
   }
 
   /** M1 — 1-NN classification: each test vector takes the label of its

@@ -13,10 +13,7 @@ import graft.operators.Readings.OracleCte
   */
 object TierQueries {
 
-  private def r(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    Readings.of(s, d)
-  }
+  private def r(s: SparkSession, d: String): DataFrame = Readings.of(s, d)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "tier_paa_max" -> ((s, d) => Tiers.paaMax(r(s, d), 4)),

@@ -14,9 +14,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * max/min over a registered readings tier is rewritten to scan the
   * (SegmentRows-times smaller) per-segment stats table instead of the data.
   *
-  * Register tier -> stats pairs with [[ZoneMapRegistry.register]]; enable
-  * the rule per session via [[ZoneMapRewrite.enable]] (programmatic,
-  * `spark.experimental.extraOptimizations`) or cluster-wide via
+  * Register tier -> stats pairs with [[ZoneMapRegistry.register]]; the
+  * rule runs in sessions built with
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * Scope is deliberately conservative: ungrouped Max/Min over the bare
@@ -107,14 +106,5 @@ case class ZoneMapRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (rewritten.forall(_.isDefined))
       Some(Aggregate(Nil, rewritten.map(_.get), statsPlan))
     else None
-  }
-}
-
-object ZoneMapRewrite {
-  /** Programmatic enablement on an existing session (idempotent). */
-  def enable(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[ZoneMapRewrite]))
-      spark.experimental.extraOptimizations = existing :+ ZoneMapRewrite(spark)
   }
 }

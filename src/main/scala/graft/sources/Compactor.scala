@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   * uses the Hadoop FileSystem API so it works on any cluster filesystem.
   *
   * Atomicity: the rewrite lands in `<path>.compact.tmp` and swaps in via
-  * two renames (the Hadoop pattern for non-transactional stores; a table
-  * format with a transaction log is the production upgrade).
+  * two renames ([[swap]]: the Hadoop pattern for non-transactional
+  * stores; a table format with a transaction log is the production
+  * upgrade).
   */
 object Compactor {
 
@@ -60,12 +61,29 @@ object Compactor {
       else df.repartition(nOut)
     val tmp = path + ".compact.tmp"
     clustered.write.mode("overwrite").parquet(tmp)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new Path(path + ".compact.old")
-    fs.rename(new Path(path), old)
-    fs.rename(new Path(tmp), new Path(path))
-    fs.delete(old, true)
+    swap(spark, path, tmp)
     val (nAfter, _) = fileStats(spark, path)
     (nBefore, nAfter, bytes)
+  }
+
+  /** Put the rewrite at `tmp` in place of the store at `path`: move the
+    * old store aside, rename the rewrite in, delete the old store. Any
+    * step that fails throws, naming both paths; a failure before the
+    * rewrite is in place leaves the old store at `path` (a failed
+    * rename-in moves it back).
+    */
+  def swap(spark: SparkSession, path: String, tmp: String): Unit = {
+    val (cur, next, old) = (new Path(path), new Path(tmp), new Path(path + ".compact.old"))
+    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def fail(step: String): Nothing =
+      throw new java.io.IOException(s"compaction swap of $tmp into $path failed: $step")
+    if (!fs.exists(next)) fail(s"$tmp does not exist")
+    if (fs.exists(old)) fail(s"$old is left from an earlier swap")
+    if (!fs.rename(cur, old)) fail(s"could not move $path aside to $old")
+    if (!fs.rename(next, cur)) {
+      if (!fs.rename(old, cur)) fail(s"could not rename $tmp in, and the old store is at $old")
+      fail(s"could not rename $tmp in; the old store is back at $path")
+    }
+    if (!fs.delete(old, true)) fail(s"the new store is in place, but $old was not deleted")
   }
 }

@@ -2,23 +2,26 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.operators.Similarity
+import graft.operators.Ivf
 
 /** Persisted IVF index — the 100 TB serving story for ANN: the corpus is
   * written ONCE partitioned by Voronoi cell (cell = Parquet partition
-  * directory, the same map-only assignment as `Similarity.ivfTopK`), and
-  * every query afterwards reads ONLY its probes' nProbe cells via static
-  * partition pruning — the scan never touches the other (k - nProbe)/k of
-  * the corpus. This is the storage-layer twin of the reference's
-  * cell-pruned index serving (SURVEY §2.1 candidate-set filtering): the
-  * filter arrives at the scan as a PartitionFilter, not a post-scan
-  * predicate (IvfStoreSpec asserts both the pruning and result parity
-  * with the in-memory ivfTopK).
+  * directory, holding what [[graft.operators.Ivf.assign]] puts there: raw
+  * vectors, JL-projected vectors or PQ residual codes), and every query
+  * afterwards reads ONLY its probes' nProbe cells via static partition
+  * pruning — the scan never touches the other (k - nProbe)/k of the
+  * corpus. This is the storage-layer twin of the reference's cell-pruned
+  * index serving (SURVEY §2.1 candidate-set filtering): the filter arrives
+  * at the scan as a PartitionFilter, not a post-scan predicate. The
+  * pruned cells go through the same [[graft.operators.Ivf.serve]] as the
+  * in-memory `Similarity.ivfTopK`, so the two paths share one oracle
+  * (IvfStoreSpec asserts both the pruning and the parity, per payload).
   *
-  * At 100 TB: cell count ~ sqrt(n) keeps directories executor-sized; the
-  * write shuffles once on cell (the same price as any partitioned write)
-  * and probe-time I/O drops by the pruning factor.
+  * The projection planes and PQ codebook are not persisted: a caller
+  * passes the same ones to write and serve. At 100 TB: cell count ~
+  * sqrt(n) keeps directories executor-sized; the write shuffles once on
+  * cell (the same price as any partitioned write) and probe-time I/O drops
+  * by the pruning factor.
   */
 object IvfStore {
 
@@ -31,9 +34,10 @@ object IvfStore {
     * corpus scan on 16 rows the store already knew).
     */
   def write(vecs: DataFrame, idCol: String, vecCol: String,
-            centroids: Seq[(Int, Seq[Double])], path: String): Unit = {
-    vecs.select(col(idCol).as("vec_id"), col(vecCol).as("e"))
-      .withColumn("cell", Similarity.bestCell(col("e"), centroids).cast("long"))
+            centroids: Seq[(Int, Seq[Double])], path: String,
+            planes: Seq[Seq[Double]] = Nil,
+            codebook: Option[Array[Array[Array[Double]]]] = None): Unit = {
+    Ivf(centroids, planes, codebook).assign(vecs, idCol, vecCol)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
     writeCentroids(vecs.sparkSession, centroids, path)
   }
@@ -48,8 +52,8 @@ object IvfStore {
       .write.mode("overwrite").parquet(centroidsDir(path))
   }
 
-  /** The centroid dictionary persisted by [[write]]/[[writePq]] — the
-    * bounded (|cells| rows) sidecar read that replaces the corpus-scan
+  /** The centroid dictionary persisted by [[write]] — the bounded
+    * (|cells| rows) sidecar read that replaces the corpus-scan
     * re-derivation on the serving path. Doubles round-trip parquet
     * exactly, so the dictionary is bit-identical to the one the index
     * was built with.
@@ -65,18 +69,19 @@ object IvfStore {
     * (the cell filter prunes inside every batch directory). The serving
     * path is unchanged: [[topK]] reads the same layout.
     */
-  def appendStream(vecs: org.apache.spark.sql.DataFrame, idCol: String,
-                   vecCol: String, centroids: Seq[(Int, Seq[Double])],
-                   path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+  def appendStream(vecs: DataFrame, idCol: String, vecCol: String,
+                   centroids: Seq[(Int, Seq[Double])],
+                   path: String, checkpointDir: String,
+                   planes: Seq[Seq[Double]] = Nil,
+                   codebook: Option[Array[Array[Array[Double]]]] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val index = Ivf(centroids, planes, codebook)
     vecs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col(idCol).as("vec_id"), col(vecCol).as("e"))
-          .withColumn("cell",
-            Similarity.bestCell(col("e"), centroids).cast("long"))
+        index.assign(batch, idCol, vecCol)
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -84,190 +89,40 @@ object IvfStore {
           .parquet(path)
       }
       .start()
+  }
 
   /** Compact a streamed store: N micro-batches leave (batch_id, cell)
     * directories whose per-cell files multiply with every trigger (the
     * classic streaming small-file problem, same as the tier Compactor).
     * Rewriting to the batch-free (cell)-partitioned layout restores one
     * directory per cell; serving is unchanged ([[topK]] reads either
-    * layout). Write-then-swap keeps readers consistent: the compacted
-    * copy lands in a fresh directory and replaces the store atomically
-    * at the filesystem-rename level.
+    * layout). The compacted copy lands in a fresh directory and
+    * [[Compactor.swap]] puts it in place, failing loudly with the old
+    * store still readable.
     */
   def compact(spark: SparkSession, path: String): Unit = {
     val tmp = path + ".compacting"
-    spark.read.parquet(path)
-      .select(col("vec_id"), col("e"), col("cell"))
+    spark.read.parquet(path).drop("batch_id")
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
+    Compactor.swap(spark, path, tmp)
   }
 
-  /** Write the IVF-PQ layout: cell partition + the 8 int residual codes
-    * per vector — NO raw floats are stored. This is the Faiss-IVFADC
-    * on-disk shape at 100 TB: 8 bytes of codes against 256 bytes of
-    * floats (32×), with the same partition-pruned serving as the flat
-    * store. The codes are exactly `PqEncode(vec - centroid(cell))`, so
-    * [[topKPq]] reproduces `Similarity.ivfPqTopK` bit-for-bit and the
-    * two paths share one oracle.
-    */
-  def writePq(vecs: DataFrame, idCol: String, vecCol: String,
-              centroids: Seq[(Int, Seq[Double])],
-              codebook: Array[Array[Array[Double]]], path: String): Unit = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val centArr = array(centroids.sortBy(_._1).map { case (_, c) => typedLit(c) }: _*)
-    vecs.select(col(idCol).as("vec_id"), col(vecCol).as("e"))
-      .withColumn("cell", Similarity.bestCell(col("e"), centroids).cast("long"))
-      .withColumn("cent", element_at(centArr, col("cell").cast("int") + lit(1)))
-      .withColumn("resid", zip_with(col("e").cast("array<double>"), col("cent"),
-        (a, b) => a - b))
-      .withColumn("codes", column(graft.functions.PqEncode(
-        expression(col("resid")), codebook)))
-      .select(col("vec_id"), col("codes"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    writeCentroids(vecs.sparkSession, centroids, path)
-  }
-
-  /** Streaming maintenance of the PQ layout: micro-batches land as
-    * (batch_id, cell)-partitioned CODES (idempotent under replay via
-    * dynamic-partition overwrite, as [[appendStream]]); [[topKPq]] reads
-    * either layout, and [[compactPq]] collapses to (cell) partitions.
-    */
-  def appendStreamPq(vecs: DataFrame, idCol: String, vecCol: String,
-                     centroids: Seq[(Int, Seq[Double])],
-                     codebook: Array[Array[Array[Double]]],
-                     path: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val centArr = array(centroids.sortBy(_._1).map { case (_, c) => typedLit(c) }: _*)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.select(col(idCol).as("vec_id"), col(vecCol).as("e"))
-          .withColumn("cell",
-            Similarity.bestCell(col("e"), centroids).cast("long"))
-          .withColumn("cent", element_at(centArr, col("cell").cast("int") + lit(1)))
-          .withColumn("resid", zip_with(col("e").cast("array<double>"),
-            col("cent"), (a, b) => a - b))
-          .withColumn("codes", column(graft.functions.PqEncode(
-            expression(col("resid")), codebook)))
-          .withColumn("batch_id", lit(batchId))
-          .select(col("vec_id"), col("codes"), col("batch_id"), col("cell"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell")
-          .parquet(path)
-      }
-      .start()
-  }
-
-  /** Compact a streamed PQ store to the batch (cell)-partitioned layout. */
-  def compactPq(spark: SparkSession, path: String): Unit = {
-    val tmp = path + ".compacting"
-    spark.read.parquet(path)
-      .select(col("vec_id"), col("codes"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), new org.apache.hadoop.fs.Path(path))
-  }
-
-  /** ADC top-k served from the PQ store: read ONLY the probed cells
-    * (static partition pruning, as [[topK]]), decode codes to the
-    * reconstruction centroid + decoded residual, rank by rounded
-    * squared-L2 — the same arithmetic as `Similarity.ivfPqTopK`.
-    */
-  def topKPq(spark: SparkSession, path: String, probes: DataFrame, k: Int,
-             centroids: Seq[(Int, Seq[Double])],
-             codebook: Array[Array[Array[Double]]], nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val centArr = array(centroids.sortBy(_._1).map { case (_, c) => typedLit(c) }: _*)
-    val pc = Similarity.probeCells(probes, centroids, nProbe)
-      .withColumn("cell", col("cell").cast("long"))
-    val cells = pc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val stored = spark.read.parquet(path)
-      .filter(col("cell").isin(cells.map(x => x: Any): _*))
-      .select(col("vec_id").as("cand_id"), col("codes"), col("cell"))
-      .withColumn("cent", element_at(centArr, col("cell").cast("int") + lit(1)))
-      .withColumn("rres", column(graft.functions.PqDecode(
-        expression(col("codes")), codebook)))
-      .withColumn("rv", zip_with(col("cent"), col("rres"), (a, b) => a + b))
-    val joined = stored.join(broadcast(pc), Seq("cell"))
-      .where(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(Similarity.sqDist(col("pe").cast("array<double>"), col("rv")), 6)
-          .as("dist"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("dist").asc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Exact top-k within the probes' nProbe cells, served from the store.
-    * The probe cell set is bounded (|probes| × nProbe ≤ |cells|), so it
+  /** Top-k within the probes' nProbe cells, served from the store. The
+    * probe cell set is bounded (|probes| × nProbe ≤ |cells|), so it
     * collects to a literal isin — STATIC partition pruning, visible in
-    * the scan's PartitionFilters. Scoring/ranking arithmetic matches
-    * `Similarity.ivfTopK` exactly (same ties, same rounding), so the two
-    * paths share one oracle.
+    * the scan's PartitionFilters. A projected index (`planes`) needs its
+    * full-space `rerank`.
     */
   def topK(spark: SparkSession, path: String, probes: DataFrame, k: Int,
-           centroids: Seq[(Int, Seq[Double])], nProbe: Int): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val pc = Similarity.probeCells(probes, centroids, nProbe)
-      .withColumn("cell", col("cell").cast("long"))
-      .withColumn("pn", Similarity.l2(col("pe")))
-    val cells = pc.select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val stored = spark.read.parquet(path)
-      .filter(col("cell").isin(cells.map(x => x: Any): _*))
-      .select(col("vec_id").as("cand_id"), col("e").as("ce"), col("cell"))
-      .withColumn("cn", Similarity.l2(col("ce")))
-    val joined = stored.join(broadcast(pc), Seq("cell"))
-      .where(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        round(Similarity.dot(col("pe"), col("ce")) / (col("pn") * col("cn")), 6)
-          .as("sim"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("cand_id"))
-    joined.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-  }
-
-  /** Coarse-to-fine serve from a REDUCED-vector store (written by
-    * [[write]] over JL-projected vectors bucketed by reduced centroids —
-    * "project once at ingest" as a persisted artifact): probes read only
-    * their nProbe reduced cells (the same static partition pruning as
-    * [[topK]], over r-dim payloads — the RP bandwidth cut lands on the
-    * serving scan itself), shortlist by reduced cosine, then rerank the
-    * shortlist by exact full-space cosine against `corpus`. Arithmetic
-    * matches `Similarity.rpIvfTopK` exactly (doubles round-trip parquet
-    * bit-for-bit), so the two paths share one oracle.
-    */
-  def topKReduced(spark: SparkSession, path: String, probes: DataFrame,
-                  corpus: DataFrame, k: Int, planes: Seq[Seq[Double]],
-                  rpCents: Seq[(Int, Seq[Double])], nProbe: Int,
-                  shortlist: Int): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    // the probes' reduced cell set is bounded — collect it to a literal
-    // isin so the cell filter reaches the scan as a STATIC partition
-    // filter (IvfStoreSpec asserts), then hand the pruned reduced frame
-    // to the same shortlist+rerank body the in-memory rpIvfTopK runs
-    val pr = probes.select(col("probe_id"),
-      Similarity.rpProject(col("pe"), planes).as("pe"))
-    val cells = Similarity.probeCells(pr, rpCents, nProbe)
-      .select(col("cell").cast("long").as("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val stored = spark.read.parquet(path)
-      .filter(col("cell").isin(cells.map(x => x: Any): _*))
-      .select(col("vec_id").as("cand_id"), col("e").as("rc"),
-        col("cell").cast("int").as("cell"))
-      .withColumn("cn_r", Similarity.l2(col("rc")))
-    Similarity.reducedCellShortlistRerank(stored, probes, corpus, k,
-      planes, rpCents, nProbe, shortlist)
+           centroids: Seq[(Int, Seq[Double])], nProbe: Int,
+           planes: Seq[Seq[Double]] = Nil,
+           codebook: Option[Array[Array[Array[Double]]]] = None,
+           rerank: Option[Ivf.Rerank] = None): DataFrame = {
+    val index = Ivf(centroids, planes, codebook)
+    val cells = index.probeCells(probes, nProbe)
+    val probed = cells.select(col("cell")).distinct()
+      .collect().map(_.getInt(0)).sorted
+    index.serve(spark.read.parquet(path).filter(col("cell").isin(probed.map(x => x: Any): _*)),
+      cells, k, rerank)
   }
 }

@@ -104,7 +104,6 @@ class AnnSpec extends AnyFunSuite with SparkTest {
     val d = sfDirs.head
     val e = spark.read.parquet(s"$d/embeddings.parquet")
     import graft.operators.Similarity
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val probes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
     val corpus = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))

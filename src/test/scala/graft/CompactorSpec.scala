@@ -35,6 +35,19 @@ class CompactorSpec extends AnyFunSuite with SparkTest {
     assert(after == before)
   }
 
+  test("a failed swap throws, naming both paths, and leaves the store readable") {
+    val dir = freshStore(4)
+    def rows = spark.read.parquet(dir)
+      .select(col("signal_id"), col("seq_no"), col("value_q"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val before = rows
+    val missing = dir + ".missing"
+    val err = intercept[java.io.IOException](Compactor.swap(spark, dir, missing))
+    assert(err.getMessage.contains(dir) && err.getMessage.contains(missing),
+      s"message does not name both paths: ${err.getMessage}")
+    assert(rows == before)
+  }
+
   test("target size controls the output file count") {
     val dir = freshStore(32)
     val (_, bytes) = Compactor.fileStats(spark, dir)

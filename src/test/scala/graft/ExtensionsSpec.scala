@@ -14,8 +14,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkTest
 
   test("injected functions resolve by name in pure SQL") {
     // a fresh session re-applies the extensions to a NEW function
-    // registry, but never SparkTest's programmatic ensureRegistered —
-    // so resolution here can only come from the injection
+    // registry — resolution by name can only come from the injection
     val s2 = spark.newSession()
     val row = s2.sql(
       """SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,

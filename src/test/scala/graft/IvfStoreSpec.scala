@@ -1,15 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Similarity
+import graft.operators.{Ivf, Similarity}
 import graft.sources.IvfStore
 
-/** The persisted IVF index: result parity with the in-memory ivfTopK and
-  * REAL partition pruning — the scan must touch only the probes' cells.
+/** The persisted IVF index, for each payload kind (raw, JL-projected, PQ
+  * codes): result parity with the in-memory ivfTopK for batch-written,
+  * streamed and compacted stores, and REAL partition pruning — the scan
+  * must touch only the probes' cells.
   */
 class IvfStoreSpec extends AnyFunSuite with SparkTest
     with AdaptiveSparkPlanHelper {
@@ -17,33 +20,47 @@ class IvfStoreSpec extends AnyFunSuite with SparkTest
   private val sf = "/root/testdata/sf0.001"
   private val nCells = 16
   private val nProbe = 4
+  private val k = 10
+  private val shortlist = 100
+  private val planes = Similarity.lcgPlanes(32, 64)
 
-  private lazy val (path, centroids, probes) = {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val emb = Tables.embeddings(spark, sf)
-    val cents = emb.filter(col("vec_id") < nCells).orderBy(col("vec_id"))
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
+  private def emb = Tables.embeddings(spark, sf)
+  private def probes = emb.filter(col("vec_id") < 10)
+    .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+  private def corpus = emb.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
+
+  // dictionaries sampled the way AnnQueries derives them
+  private def sample(from: Int, until: Int, v: Column): Seq[(Int, Seq[Double])] =
+    emb.filter(col("vec_id") >= from && col("vec_id") < until).orderBy(col("vec_id"))
+      .select(col("vec_id"), v)
       .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq
+
+  private lazy val indexes: Map[String, Ivf] = {
+    val flat = Ivf(sample(0, nCells, col("embedding").cast("array<double>")))
+    val resid = sample(nCells, 2 * nCells, flat.residual(col("embedding"))).map(_._2)
+    Map(
+      "IVF" -> flat,
+      "RP-IVF" -> Ivf(sample(0, nCells, Similarity.rpProject(col("embedding"), planes)), planes),
+      "IVF-PQ" -> flat.copy(codebook = Some(
+        Array.tabulate(8)(m => resid.map(_.slice(m * 8, (m + 1) * 8).toArray).toArray))))
+  }
+
+  private def write(index: Ivf, path: String): Unit =
+    IvfStore.write(emb, "vec_id", "embedding", index.centroids, path,
+      index.planes, index.codebook)
+
+  private def serve(index: Ivf, path: String): DataFrame =
+    IvfStore.topK(spark, path, probes, k, index.centroids, nProbe, index.planes,
+      index.codebook, Option.when(index.planes.nonEmpty)(Ivf.Rerank(probes, corpus, shortlist)))
+
+  private lazy val batchStores: Map[String, String] = indexes.map { case (kind, index) =>
     val p = Files.createTempDirectory("graft-ivfstore").toString
-    IvfStore.write(emb, "vec_id", "embedding", cents, p)
-    (p, cents,
-      emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe")))
+    write(index, p)
+    kind -> p
   }
 
-  test("store-served top-k equals the in-memory IVF result exactly") {
-    val fromStore = IvfStore.topK(spark, path, probes, 10, centroids, nProbe)
-    val inMemory = Similarity.ivfTopK(probes,
-      Tables.embeddings(spark, sf)
-        .select(col("vec_id").as("cand_id"), col("embedding").as("ce")),
-      10, centroids, nProbe)
-    assert(fromStore.exceptAll(inMemory).count() === 0)
-    assert(inMemory.exceptAll(fromStore).count() === 0)
-  }
-
-  test("streaming index maintenance serves the identical top-k") {
-    // stage the embeddings as two files -> two micro-batches
-    val emb = Tables.embeddings(spark, sf)
+  /** The embeddings streamed into a fresh store as two micro-batches. */
+  private def streamedStore(index: Ivf): String = {
     val in = Files.createTempDirectory("graft-ivf-in").toString
     emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("overwrite")
       .parquet(s"$in/half0")
@@ -58,141 +75,68 @@ class IvfStoreSpec extends AnyFunSuite with SparkTest
     val base = Files.createTempDirectory("graft-ivf-streamed").toString
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = IvfStore.appendStream(stream, "vec_id", "embedding", centroids,
-      s"$base/store", s"$base/ckpt")
-    q.awaitTermination()
-    // two batches landed
+    IvfStore.appendStream(stream, "vec_id", "embedding", index.centroids,
+      s"$base/store", s"$base/ckpt", index.planes, index.codebook).awaitTermination()
     assert(new java.io.File(s"$base/store").listFiles()
-      .count(_.getName.startsWith("batch_id=")) === 2)
-    val streamed = IvfStore.topK(spark, s"$base/store", probes, 10, centroids, nProbe)
-    val batch = IvfStore.topK(spark, path, probes, 10, centroids, nProbe)
-    assert(streamed.exceptAll(batch).count() === 0)
-    assert(batch.exceptAll(streamed).count() === 0)
-
-    // compaction collapses the per-batch layout to one dir per cell and
-    // serves the identical result
-    IvfStore.compact(spark, s"$base/store")
-    val dirs = new java.io.File(s"$base/store").listFiles().map(_.getName)
-    assert(dirs.count(_.startsWith("cell=")) > 0)
-    assert(!dirs.exists(_.startsWith("batch_id=")), s"uncompacted: ${dirs.toSeq}")
-    val compacted = IvfStore.topK(spark, s"$base/store", probes, 10, centroids, nProbe)
-    assert(compacted.exceptAll(batch).count() === 0)
-    assert(batch.exceptAll(compacted).count() === 0)
+      .count(_.getName.startsWith("batch_id=")) === 2, "two batches landed")
+    s"$base/store"
   }
 
-  // residual codebook the same way AnnQueries derives it (vectors
-  // [nCells, 2*nCells) against their own best cell)
-  private lazy val cb: Array[Array[Array[Double]]] = {
-    val emb = Tables.embeddings(spark, sf)
-    val centArr = array(centroids.sortBy(_._1).map { case (_, c) => typedLit(c) }: _*)
-    val base = emb.filter(col("vec_id") >= nCells && col("vec_id") < 2 * nCells)
-      .withColumn("cell", Similarity.bestCell(col("embedding"), centroids))
-      .withColumn("cent", element_at(centArr, col("cell").cast("int") + lit(1)))
-      .select(col("vec_id"),
-        zip_with(col("embedding").cast("array<double>"), col("cent"),
-          (a, b) => a - b).as("resid"))
-      .orderBy(col("vec_id")).collect().map(_.getSeq[Double](1).toArray)
-    Array.tabulate(8)(m => base.map(v => v.slice(m * 8, (m + 1) * 8)))
+  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.exceptAll(b).count() === 0)
+    assert(b.exceptAll(a).count() === 0)
   }
 
-  test("PQ store serves the in-memory IVF-PQ result exactly, storing no floats") {
-    val emb = Tables.embeddings(spark, sf)
-    val p = Files.createTempDirectory("graft-ivfpqstore").toString
-    IvfStore.writePq(emb, "vec_id", "embedding", centroids, cb, p)
-    // on-disk payload is codes only — no float/double array column
-    val stored = spark.read.parquet(p)
-    val types = stored.schema.map(_.dataType.simpleString)
-    assert(!types.exists(t => t.contains("float") || t.contains("double")),
-      s"PQ store leaked a float payload: ${stored.schema.treeString}")
-    val fromStore = IvfStore.topKPq(spark, p, probes, 10, centroids, cb, nProbe)
-    val inMemory = Similarity.ivfPqTopK(probes,
-      emb.select(col("vec_id").as("cand_id"), col("embedding").as("ce")),
-      10, centroids, nProbe, cb)
-    assert(fromStore.exceptAll(inMemory).count() === 0)
-    assert(inMemory.exceptAll(fromStore).count() === 0)
-  }
-
-  test("streamed PQ maintenance + compaction serve the batch PQ result") {
-    val emb = Tables.embeddings(spark, sf)
-    val in = Files.createTempDirectory("graft-ivfpq-in").toString
-    emb.filter(col("vec_id") % 2 === 0).coalesce(1).write.mode("overwrite")
-      .parquet(s"$in/half0")
-    emb.filter(col("vec_id") % 2 =!= 0).coalesce(1).write.mode("overwrite")
-      .parquet(s"$in/half1")
-    val staged = Files.createTempDirectory("graft-ivfpq-staged").toString
-    for ((h, i) <- Seq("half0", "half1").zipWithIndex) {
-      val part = new java.io.File(s"$in/$h").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, java.nio.file.Paths.get(staged, s"b$i.parquet"))
+  for (kind <- Seq("IVF", "RP-IVF", "IVF-PQ")) {
+    test(s"store-served top-k equals the in-memory $kind result exactly") {
+      val index = indexes(kind)
+      if (index.codebook.isDefined) {
+        // on-disk payload is codes only — no float/double array column
+        val stored = spark.read.parquet(batchStores(kind))
+        val types = stored.schema.map(_.dataType.simpleString)
+        assert(!types.exists(t => t.contains("float") || t.contains("double")),
+          s"PQ store leaked a float payload: ${stored.schema.treeString}")
+      }
+      assertSameRows(serve(index, batchStores(kind)),
+        Similarity.ivfTopK(probes, corpus, k, index, nProbe, shortlist))
     }
-    val base = Files.createTempDirectory("graft-ivfpq-streamed").toString
-    val stream = spark.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = IvfStore.appendStreamPq(stream, "vec_id", "embedding", centroids,
-      cb, s"$base/store", s"$base/ckpt")
-    q.awaitTermination()
-    val batchDir = Files.createTempDirectory("graft-ivfpq-batch").toString
-    IvfStore.writePq(emb, "vec_id", "embedding", centroids, cb, batchDir)
-    val batch = IvfStore.topKPq(spark, batchDir, probes, 10, centroids, cb, nProbe)
-    val streamed = IvfStore.topKPq(spark, s"$base/store", probes, 10,
-      centroids, cb, nProbe)
-    assert(streamed.exceptAll(batch).count() === 0)
-    assert(batch.exceptAll(streamed).count() === 0)
-    IvfStore.compactPq(spark, s"$base/store")
-    val dirs = new java.io.File(s"$base/store").listFiles().map(_.getName)
-    assert(!dirs.exists(_.startsWith("batch_id=")), s"uncompacted: ${dirs.toSeq}")
-    val compacted = IvfStore.topKPq(spark, s"$base/store", probes, 10,
-      centroids, cb, nProbe)
-    assert(compacted.exceptAll(batch).count() === 0)
-    assert(batch.exceptAll(compacted).count() === 0)
-  }
 
-  test("the scan is partition-pruned to the probe cells") {
-    val q = IvfStore.topK(spark, path, probes, 10, centroids, nProbe)
-    q.count() // materialize so AQE finalizes the plan
-    val scans = collect(q.queryExecution.executedPlan) {
-      case s: FileSourceScanExec => s
+    test(s"streamed $kind store serves the batch top-k") {
+      val index = indexes(kind)
+      assertSameRows(serve(index, streamedStore(index)), serve(index, batchStores(kind)))
     }
-    assert(scans.nonEmpty)
-    val scan = scans.head
-    assert(scan.partitionFilters.nonEmpty,
-      s"cell filter did not reach the scan as a PartitionFilter:\n$scan")
-    // the probes' distinct cell set is < the full cell count, and the
-    // scan's selected partitions must match it, not the whole store
-    val probeCells = Similarity.probeCells(probes, centroids, nProbe)
-      .select(col("cell")).distinct().count()
-    assert(probeCells < nCells, "fixture degenerate: probes cover every cell")
-    assert(scan.selectedPartitions.partitionCount.toLong === probeCells,
-      s"scan read ${scan.selectedPartitions.partitionCount} partitions, " +
-      s"expected $probeCells probe cells")
-  }
 
-  test("reduced-vector store serves rpIvfTopK exactly with pruned r-dim scans") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
-    val emb = Tables.embeddings(spark, sf)
-    val planes = Similarity.lcgPlanes(32, 64)
-    val rpCents = emb.filter(col("vec_id") < nCells).orderBy(col("vec_id"))
-      .select(col("vec_id"), Similarity.rpProject(col("embedding"), planes).as("r"))
-      .collect().map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq
-    val p = Files.createTempDirectory("graft-rpivfstore").toString
-    IvfStore.write(
-      emb.select(col("vec_id"), Similarity.rpProject(col("embedding"), planes).as("rvec")),
-      "vec_id", "rvec", rpCents, p)
-    val corpus = emb.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-    val fromStore = IvfStore.topKReduced(spark, p, probes, corpus, 10,
-      planes, rpCents, nProbe, shortlist = 100)
-    val inMemory = Similarity.rpIvfTopK(probes, corpus, 10, planes, rpCents,
-      nProbe, 100)
-    assert(fromStore.exceptAll(inMemory).count() === 0)
-    assert(inMemory.exceptAll(fromStore).count() === 0)
-    // the reduced scan is partition-pruned to the probes' reduced cells
-    fromStore.count()
-    val scans = collect(fromStore.queryExecution.executedPlan) {
-      case s: FileSourceScanExec if s.relation.location.rootPaths
-        .exists(_.toString.contains("graft-rpivfstore")) => s
+    test(s"compacted $kind store serves the batch top-k") {
+      // compaction collapses the per-batch layout to one dir per cell
+      val index = indexes(kind)
+      val store = streamedStore(index)
+      IvfStore.compact(spark, store)
+      val dirs = new java.io.File(store).listFiles().map(_.getName)
+      assert(dirs.count(_.startsWith("cell=")) > 0)
+      assert(!dirs.exists(_.startsWith("batch_id=")), s"uncompacted: ${dirs.toSeq}")
+      assertSameRows(serve(index, store), serve(index, batchStores(kind)))
     }
-    assert(scans.nonEmpty, "no scan over the reduced store in the plan")
-    assert(scans.head.partitionFilters.nonEmpty,
-      "reduced-cell filter did not reach the scan as a PartitionFilter")
+
+    test(s"$kind store scan is partition-pruned to the probe cells") {
+      val index = indexes(kind)
+      val q = serve(index, batchStores(kind))
+      q.count() // materialize so AQE finalizes the plan
+      val scans = collect(q.queryExecution.executedPlan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths
+          .exists(_.toString.contains(batchStores(kind))) => s
+      }
+      assert(scans.nonEmpty, "no scan over the store in the plan")
+      val scan = scans.head
+      assert(scan.partitionFilters.nonEmpty,
+        s"cell filter did not reach the scan as a PartitionFilter:\n$scan")
+      // the probes' distinct cell set is < the full cell count, and the
+      // scan's selected partitions must match it, not the whole store
+      val probeCells = index.probeCells(probes, nProbe)
+        .select(col("cell")).distinct().count()
+      assert(probeCells < nCells, "fixture degenerate: probes cover every cell")
+      assert(scan.selectedPartitions.partitionCount.toLong === probeCells,
+        s"scan read ${scan.selectedPartitions.partitionCount} partitions, " +
+        s"expected $probeCells probe cells")
+    }
   }
 }

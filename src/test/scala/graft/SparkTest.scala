@@ -5,8 +5,8 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local SparkSession for specs. */
 trait SparkTest extends BeforeAndAfterAll { self: Suite =>
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+  lazy val spark: SparkSession =
+    SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -20,9 +20,6 @@ trait SparkTest extends BeforeAndAfterAll { self: Suite =>
       // the injections took)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    s
-  }
 
   override def afterAll(): Unit = {
     // shared across suites in one forked JVM; do not stop

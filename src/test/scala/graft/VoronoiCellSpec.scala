@@ -29,7 +29,6 @@ class VoronoiCellSpec extends AnyFunSuite with SparkTest {
 
   test("native cell assignment equals the struct-max formula on all vectors") {
     assume(sfDirs.nonEmpty, "no testdata present")
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     for (d <- sfDirs) {
       val e = spark.read.parquet(s"$d/embeddings.parquet")
       val cents = e.filter(col("vec_id") < 16).orderBy(col("vec_id"))
@@ -58,7 +57,6 @@ class VoronoiCellSpec extends AnyFunSuite with SparkTest {
   }
 
   test("tie on rounded score keeps the smallest centroid id") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     // centroids 3 and 7 are the same direction (scaled), so every vector
     // rounds to the same cosine against both — the winner must be id 3

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Readings
-import graft.plans.{ZoneMap, ZoneMapRegistry, ZoneMapRewrite}
+import graft.plans.{ZoneMap, ZoneMapRegistry}
 
 /** O8 — the zone-map optimizer rule: grand-total max/min over a registered
   * tier must be answered from the stats table, with identical results.
@@ -21,7 +21,6 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
 
   test("max/min over a registered tier is rewritten to the stats table") {
     ZoneMapRegistry.register(tierPath, statsPath)
-    ZoneMapRewrite.enable(spark)
     val q = spark.read.parquet(tierPath)
       .agg(max(col("value")).as("vmax"), min(col("value")).as("vmin"))
     val plan = q.queryExecution.executedPlan.toString
@@ -37,7 +36,6 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
 
   test("sum over the fixed-point column is rewritten to the stats sums") {
     ZoneMapRegistry.register(tierPath, statsPath)
-    ZoneMapRewrite.enable(spark)
     val q = spark.read.parquet(tierPath)
       .agg(sum(col("value_q")).as("sum_q"))
     val plan = q.queryExecution.executedPlan.toString
@@ -51,7 +49,6 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
 
   test("filtered or grouped aggregates are NOT rewritten") {
     ZoneMapRegistry.register(tierPath, statsPath)
-    ZoneMapRewrite.enable(spark)
     val filtered = spark.read.parquet(tierPath)
       .filter(col("signal_id") === 1).agg(max(col("value")))
     assert(filtered.queryExecution.executedPlan.toString.contains(tierPath))
