@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
-import graft.operators.{AnnQueries, Ivf}
+import graft.operators.{AnnQueries, Ivf, Materialize}
 import graft.sources.IvfStore
 
 /** Benchmark main. With no arguments it times every registered query at
@@ -56,6 +56,22 @@ object Bench {
       case _ => None
     }) ++ (if (cur.cpuS <= 2 * prior.cpuS + 0.25) Nil
            else Seq(s"cpu_s ${f3(prior.cpuS)}->${f3(cur.cpuS)}"))
+
+  /** One rep of a row: `work` is what `run` did, measured inside its own
+    * materialization scope, or why it threw; `leak` names the storage the
+    * rep added and still held once that scope released (a persisted RDD, a
+    * cached plan or a staged dir), which fails the whole row. Storage held
+    * before the rep is not its leak, so a leak fails only its own row.
+    */
+  case class Rep(work: Either[String, Work], leak: Option[String])
+  def rep(spark: SparkSession, l: Work.Listener)(run: => Unit): Rep = {
+    val before = Materialize.stored(spark)
+    val work =
+      try Right(Materialize.scoped(Work.measure(spark, l)(run)))
+      catch { case e: Throwable => Left(e.getClass.getSimpleName + ": " + e.getMessage) }
+    val left = before.added(Materialize.stored(spark))
+    Rep(work, if (left.isEmpty) None else Some(s"storage left after a rep: ${left.mkString(", ")}"))
+  }
 
   /** What makes two runs' counters comparable. `action` is what each row
     * does with its frame.
@@ -130,8 +146,18 @@ object Bench {
     conf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    quietCheckpointRelease()
     spark
   }
+
+  /** Silences the WARN `RDD.unpersist` logs for every local checkpoint
+    * (a `MapPartitionsRDD`, logging under its own class name): each
+    * [[Materialize]] scope releases its checkpoints on exit, which is
+    * their intended end, not a lost lineage.
+    */
+  def quietCheckpointRelease(): Unit =
+    org.apache.logging.log4j.core.config.Configurator
+      .setLevel("org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
 
   /** Prints a growth curve: per micro-batch the size folded into before it
     * (`sizeField`, advanced by `grow(rowsIn)`), its input rows, `extra`
@@ -226,8 +252,7 @@ object Bench {
     val fcs = Seq("f0", "f1", "f2", "f3")
     // features pinned once: the fit/score split should not re-bill the
     // shared PAA derivation to either phase
-    val feats = IsolationForest.paaFeatures(Readings.of(spark, sfDir))
-      .localCheckpoint()
+    val feats = Materialize.checkpoint(IsolationForest.paaFeatures(Readings.of(spark, sfDir)))
     val rows = feats.count()
     val featSec = median3(() => {
       IsolationForest.paaFeatures(Readings.of(spark, sfDir)).count(); ()
@@ -251,7 +276,7 @@ object Bench {
     // its own try, so a single broken loader (r7: the events ts-type
     // drift) cannot turn the whole artifact into cold-JVM noise
     for (wq <- Seq("q1_agg", "text_stats", "ann_lsh", "o5_agg_all"))
-      try { SparkEntry.queries.get(wq).foreach(_(spark, sfDir).count()) }
+      try { SparkEntry.queries.get(wq).foreach(q => Materialize.scoped(q(spark, sfDir).count())) }
       catch { case e: Throwable =>
         System.err.println(s"[bench] warmup $wq failed: $e") }
     try { spark.read.parquet(s"$sfDir/lineitem.parquet").count() }
@@ -270,12 +295,13 @@ object Bench {
       scratch ::= p
       p.toString
     }
-    // an untimed setup step, run only when one of `rows` is selected. A
-    // failure is logged (a missing bench row must be diagnosable) and
+    // an untimed setup step, run only when one of `rows` is selected, in
+    // its own materialization scope (what it hands the rows is on disk).
+    // A failure is logged (a missing bench row must be diagnosable) and
     // drops those rows; the scratch dirs are deleted after the run.
     def untimed[T](what: String, rows: String*)(f: => T): Option[T] =
       if (!needed(rows: _*)) None
-      else try Some(f) catch { case e: Throwable =>
+      else try Some(Materialize.scoped(f)) catch { case e: Throwable =>
         System.err.println(s"[bench] $what setup failed (no ${rows.mkString("/")} row): $e")
         None }
     // untimed ingest: land tier0 once; the *_tier variants below then
@@ -339,8 +365,7 @@ object Bench {
     var profileStreamBreakdown: Option[String] = None
     val profileIn = untimed("profile-stream", "seg_profile_stream") {
       val in = tempDir("graft-bench-mpin")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/events.parquet")
+      Tables.readEvents(spark, s"$sfDir/events.parquet")
         .repartition(4).write.mode("overwrite").parquet(in)
       in
     }
@@ -515,19 +540,6 @@ object Bench {
             "signal_id", "ts", "mts", Seq("seg")))))
     })
 
-    // UNTIMED between-query cleanup: operators that cache/localCheckpoint
-    // (the CC loops, DBSCAN, SemDeDup, bandit feeds) leave persisted RDDs
-    // behind; over a 150+-query sweep the leaked storage squeezes
-    // execution memory and inflates late-alphabet queries 5-10x (measured:
-    // pipe_bpe_pairs 8.2s in-sweep vs 0.51s isolated, same binary). The
-    // driver-side ContextCleaner only reclaims them on a JVM GC, which a
-    // large heap may never trigger mid-sweep — so drop them explicitly.
-    def dropLeakedStorage(): Unit = {
-      try {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
-    }
     val key = Key(sfDir, spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt, action)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
@@ -541,14 +553,12 @@ object Bench {
       val flags: Seq[String] = (for (c <- row; p <- prior.get(name))
         yield regressions(c, p)).getOrElse(Nil)
     }
+    // a row errs when every rep threw, or when any rep left storage
     def timeQuery(name: String, run: () => Unit): QRes = {
-      val runs = (1 to reps).map { _ =>
-        dropLeakedStorage()
-        try Right(Work.measure(spark, listener)(run()))
-        catch { case e: Throwable => Left(e.getClass.getSimpleName + ": " + e.getMessage) }
-      }
-      val ok = runs.collect { case Right(w) => w }
-      QRes(name, ok, runs.collectFirst { case Left(e) => e }.filter(_ => ok.isEmpty))
+      val runs = (1 to reps).map(_ => rep(spark, listener)(run()))
+      val leak = runs.flatMap(_.leak).headOption
+      val ok = if (leak.isDefined) Nil else runs.flatMap(_.work.toOption)
+      QRes(name, ok, leak.orElse(runs.flatMap(_.work.swap.toOption).headOption.filter(_ => ok.isEmpty)))
     }
     val results = (base ++ tierVariants).sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -586,8 +596,7 @@ object Bench {
     // or be perturbed by — a streaming replay it didn't ask for)
     val ingestPps = untimed("ingest", "ingest") {
       val in = tempDir("graft-bench-ingest")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$sfDir/events.parquet")
+      Tables.readEvents(spark, s"$sfDir/events.parquet")
         .repartition(ingestFiles).write.mode("overwrite").parquet(in)
       val pts = spark.read.parquet(in).count()
       def runOnce(): Double = {

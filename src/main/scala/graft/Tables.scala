@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   * At cluster scale these would be catalog tables partitioned by key/time;
@@ -15,15 +16,30 @@ object Tables {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** events.ts has shipped in two parquet generations: TIMESTAMP(NANOS)
-    * (which Spark's vectorized reader rejects — read nanos as long under
-    * `nanosAsLong` and rebuild a micros timestamp with integer division) and
+    * (which Spark's vectorized reader rejects — read nanos as long and
+    * rebuild a micros timestamp with integer division) and
     * TIMESTAMP(MICROS) with isAdjustedToUTC=0 (read as TIMESTAMP_NTZ).
     * Branch on the loaded type so either generation resolves; session TZ is
     * UTC everywhere so the NTZ→TZ cast is value-preserving.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(load(spark, dir, "events"))
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(readEvents(spark, s"$dir/events.parquet"))
+
+  /** The raw events-shaped parquet at `path`, `ts` as stored: nanos as a
+    * long, or a micros timestamp. The caller's session conf is not touched.
+    */
+  def readEvents(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(eventsSchema(spark, path)).parquet(path)
+
+  /** The schema of the events-shaped parquet at `path`, with a nanos `ts`
+    * as a long. Only schema inference needs `nanosAsLong`; it runs in a
+    * new session (isolated SQL conf, same context), and a read with the
+    * returned schema then needs no conf at all.
+    */
+  def eventsSchema(spark: SparkSession, path: String): StructType = {
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    iso.read.parquet(path).schema
   }
 
   /** Normalize an events-shaped frame's `ts` column to TimestampType

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.operators.Materialize
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,6 +15,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Bench.quietCheckpointRelease()
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (the driver never sets it): run only the
     // named queries, e.g. SPARK_GRAFT_VERIFY_ONLY=seg_knn_dtw,ts_ohlc
@@ -26,8 +28,10 @@ object Verify {
     // count-only mode (local scale measurements: output-growth accounting
     // without dumping multi-million-row results through coalesce(1))
     val countOnly = sys.env.get("SPARK_GRAFT_VERIFY_COUNT").contains("1")
+    // each query owns what it materializes: its scope releases it once the
+    // dump is written
     selected.foreach { case (name, fn) =>
-      try {
+      try Materialize.scoped {
         if (countOnly) println(s"[count] $name ${fn(spark, sfDir).count()}")
         else fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Quantize
+import graft.operators.Materialize
 
 /** M5 — compression-ratio prediction from a sample, mirroring the
   * reference's per-codec CR estimators (database/src/predict/
@@ -35,16 +36,15 @@ object CrPredictor {
     java.lang.Long.toBinaryString(math.max(m, 2L) - 1L).length.toLong
 
   def estimate(readings: DataFrame, sampleFraction: Double, scale: Int,
-               paaW: Int = 4, rrdK: Int = 4): DataFrame = {
+               paaW: Int = 4, rrdK: Int = 4): DataFrame = Materialize.scoped {
     val spark = readings.sparkSession
     import spark.implicits._
     val threshold = math.round(sampleFraction * 1000000L)
-    val s = readings
+    val s = Materialize.cache(readings
       .where(Fixtures.mix32(col("signal_id") * lit(131071L) + col("seq_no"),
         SampleSalt) % 1000000L < threshold)
       .select(col("signal_id"), col("seq_no"),
-        Quantize.quantize(col("value"), scale).as("q"))
-      .cache()
+        Quantize.quantize(col("value"), scale).as("q")))
 
     val distinct = s.agg(countDistinct(col("q")).as("nd")).collect()(0).getLong(0)
     val dictBits = ceilLog2(distinct)
@@ -63,7 +63,6 @@ object CrPredictor {
     val p95i = math.max(2L, math.ceil(p95).toLong)
     val deltaBits = ceilLog2(2L * p95i) + 1L
 
-    s.unpersist()
     Seq(
       ("uncompressed", 1.0),
       ("dict", dictBits / 64.0),

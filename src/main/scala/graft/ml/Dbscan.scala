@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** M3 — density clustering (DBSCAN, Ester et al. KDD'96), completing the
   * reference's lossyML sweep (reference smartcore/src/cluster/dbscan.rs,
@@ -48,9 +48,9 @@ object Dbscan {
       .select(col("a"), col("b"))
 
     // |N_eps(p)| >= minPts, the point itself included
-    val cores = nbrs.groupBy(col("a")).agg(count(lit(1)).as("n"))
+    val cores = Materialize.cache(nbrs.groupBy(col("a")).agg(count(lit(1)).as("n"))
       .filter(col("n") + 1L >= minPts.toLong)
-      .select(col("a").as("id")).cache()
+      .select(col("a").as("id")))
 
     // core-core adjacency -> distributed components (min reachable id);
     // isolated cores (no core neighbor) keep their own id as the label

@@ -15,9 +15,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * DataFrame artifacts are stored as COLLECTED rows + schema, not as
   * cached/checkpointed frames: every published artifact is a bounded
   * summary (accuracy/prediction dumps, a 19-row codec matrix, a 1-row
-  * purity), and driver-held rows survive the bench harness's
-  * between-rep unpersist sweep, which would invalidate a localCheckpoint
-  * and poison the companion.
+  * purity), and driver-held rows outlive the primary query's
+  * materialization scope, which releases every checkpoint the query made
+  * once it has run (a released checkpoint would poison the companion).
   *
   * Boundedness: entries hang off the OWNING SparkSession through a
   * weak-keyed map, so a stopped/dropped session's artifacts become

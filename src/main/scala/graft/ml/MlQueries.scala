@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Readings
+import graft.operators.{Materialize, Readings}
 
 /** Driver-facing registrations for the ML/policy surface (M3/M4/M5).
   * These are model-training / generator / estimator ops — not
@@ -258,7 +258,7 @@ object MlQueries {
     "ml_iforest_lossy_agree" -> ((s, d) => {
       // one seq_no derivation: rr feeds BOTH the PAA and raw feature
       // scoring paths (unmaterialized, the window-over-events ran twice)
-      val rr = Readings.of(s, d).localCheckpoint()
+      val rr = Materialize.checkpoint(Readings.of(s, d))
       def top(df: org.apache.spark.sql.DataFrame, fc: Seq[String]) =
         IsolationForest.scores(df, Seq("signal_id", "seg"), fc)
           .orderBy(col("score").desc, col("signal_id"), col("seg"))

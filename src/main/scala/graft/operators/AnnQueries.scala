@@ -186,8 +186,8 @@ object AnnQueries {
       // branches (r15: 4x brute executions for identical rows). Each
       // knob's ivfTopK serve stays fully self-contained. The codebook
       // collect is knob-independent — hoisted out of the loop.
-      val brute = Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
-        .select(col("probe_id"), col("cand_id")).localCheckpoint()
+      val brute = Materialize.checkpoint(Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
+        .select(col("probe_id"), col("cand_id")))
       val index = flatIndex(s, d)
       Seq(1, 2, 4, 8).map { np =>
         recallSummary(brute,
@@ -358,8 +358,8 @@ object AnnQueries {
       // codebook collect is knob-independent and hoisted. Each knob's
       // ivfTopK serve remains fully self-contained per the honesty
       // note above.
-      val brute = Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
-        .select(col("probe_id"), col("cand_id")).localCheckpoint()
+      val brute = Materialize.checkpoint(Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
+        .select(col("probe_id"), col("cand_id")))
       val index = rpIndex(s, d)
       Seq(1, 2, 4, 8).map { np =>
         recallSummary(brute,
@@ -381,8 +381,8 @@ object AnnQueries {
     "ann_rp_sl_curve" -> ((s, d) => {
       // same brute-baseline materialization + codebook hoist as the
       // nprobe curve; each shortlist point's serve stays self-contained
-      val brute = Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
-        .select(col("probe_id"), col("cand_id")).localCheckpoint()
+      val brute = Materialize.checkpoint(Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
+        .select(col("probe_id"), col("cand_id")))
       val index = rpIndex(s, d)
       Seq(10, 25, 50, 100).map { sl =>
         recallSummary(brute,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.functions.TextOps
 
 /** Deduplication operators for the document pipeline. All candidate
@@ -302,9 +303,8 @@ object Dedup {
     val combos = (0 until blocks).combinations(keyBlocks).toSeq
     // materialized once: the signature table feeds both sides of the
     // band self-join — unmaterialized, the tokenize+per-bit-sum simhash
-    // scan executed twice (doc_id + two longs per doc, tiny to hold;
-    // cluster-scale caveat of localCheckpoint: see Materialize's doc)
-    val sig = TextOps.simhash(docs, "doc_id", "text").localCheckpoint()
+    // scan executed twice (doc_id + two longs per doc, tiny to hold)
+    val sig = Materialize.checkpoint(TextOps.simhash(docs, "doc_id", "text"))
     val bands = sig.select(col("doc_id"), col("sig_lo"), col("sig_hi"),
       explode(array(combos.zipWithIndex.map { case (combo, ci) =>
         val bv = combo.map(blockVal).reduce((acc, v) => shiftleft(acc, w).bitwiseOR(v))
@@ -381,11 +381,14 @@ object Dedup {
     * flag — deterministic at any parallelism.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id")).localCheckpoint()
+    val edges = Materialize.checkpoint(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+        .distinct())
+    // `held` is the checkpoint `labels` reads; each pass supersedes it
+    var held = Materialize.checkpoint(edges.select(col("src").as("doc_id")).distinct()
+      .withColumn("component", col("doc_id")))
+    var labels = held
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -400,13 +403,14 @@ object Dedup {
       // previous pass's: lineage grows 2^diameter without truncation,
       // which overflows the driver on long chains even though the DATA
       // is tiny — the star variant below shares the same discipline
-      val next = labels.select(col("doc_id"), col("component"),
+      val next = Materialize.checkpoint(labels.select(col("doc_id"), col("component"),
           col("component").as("old"))
         .unionByName(prop.withColumn("old", lit(Long.MaxValue)))
         .groupBy(col("doc_id"))
-        .agg(min(col("component")).as("component"), min(col("old")).as("old"))
-        .localCheckpoint()
+        .agg(min(col("component")).as("component"), min(col("old")).as("old")))
       val changed = next.filter(col("component") =!= col("old")).count()
+      Materialize.release(held)
+      held = next
       labels = next.select(col("doc_id"), col("component"))
       converged = changed == 0
       i += 1
@@ -419,6 +423,7 @@ object Dedup {
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter passes; " +
         "raise maxIter (component diameter exceeds the dup-cluster assumption)")
+    Materialize.release(edges)
     labels.select(col("doc_id"), col("component"),
       (col("doc_id") === col("component")).as("keeper"))
   }
@@ -452,24 +457,33 @@ object Dedup {
     val spark = pairs.sparkSession
     // canonical undirected edges u>v as (big=src, small=dst), self-free.
     // Each round REWRITES the edge set through joins, so plan lineage
-    // grows multiplicatively — localCheckpoint (lineage truncation, kept
-    // in executor storage) after every round is what makes the iteration
-    // viable; at cluster scale swap for reliable checkpointing to the
-    // shuffle-tracking store
-    var edges = pairs
+    // grows multiplicatively — a checkpoint (lineage truncation, kept in
+    // executor storage) after every round is what makes the iteration
+    // viable; each round's checkpoint is released once the next one
+    // supersedes it
+    var edges = Materialize.checkpoint(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("src"),
         least(col("doc_a"), col("doc_b")).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      .filter(col("src") =!= col("dst")).distinct())
+    var edgeCount = edges.count()
     var converged = false
     var round = 0
     while (!converged && round < maxRounds) {
+      // the per-node minima (at most 2 |edges| rows of two longs) join
+      // back to the edges. Below the session's broadcast bound, sized from
+      // the exact edge count, they broadcast by plan: left to adaptive
+      // execution, both sides of each join are small stages finishing
+      // concurrently, and which side it broadcast — and with it how many
+      // jobs the round ran — depended on which stage finished first
+      val small = 32L * edgeCount <= SQLConf.get.autoBroadcastJoinThreshold
+      def perNode(df: DataFrame): DataFrame = if (small) broadcast(df) else df
       // large-star: group by u over BOTH directions; m = min(N(u) ∪ u);
       // emit (v, m) for neighbors v > u
       val nbrs = edges.select(col("src").as("u"), col("dst").as("v"))
         .union(edges.select(col("dst").as("u"), col("src").as("v")))
       val mins = nbrs.groupBy(col("u"))
         .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val large = nbrs.join(mins, "u")
+      val large = nbrs.join(perNode(mins), "u")
         .filter(col("v") > col("u"))
         .select(col("v").as("src"), col("m").as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
@@ -477,22 +491,25 @@ object Dedup {
       // emit (v, m) for v ∈ N_small(u) ∪ {u}, v ≠ m
       val smins = large.groupBy(col("src"))
         .agg(min(col("dst")).as("m"))
-      val smallNbrs = large.join(smins, "src")
+      val smallNbrs = large.join(perNode(smins), "src")
         .select(col("src"), col("dst").as("v"), col("m"))
       val hangSelf = smallNbrs.select(col("src").as("v2"), col("m")).distinct()
         .filter(col("v2") =!= col("m"))
         .select(col("v2").as("src"), col("m").as("dst"))
       val hangNbrs = smallNbrs.filter(col("v") =!= col("m"))
         .select(col("v").as("src"), col("m").as("dst"))
-      val next = hangNbrs.union(hangSelf)
-        .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+      val next = Materialize.checkpoint(hangNbrs.union(hangSelf)
+        .filter(col("src") =!= col("dst")).distinct())
       // fixpoint check: both frames are distinct sets (the .distinct()
       // above), so |next| = |edges| plus next ⊆ edges is set equality —
-      // one cheap count over checkpointed blocks replaces the second
-      // full exceptAll anti-join per round
-      converged = next.count() == edges.count() &&
-        next.exceptAll(edges).isEmpty
+      // |edges| is carried from the previous round's count, and the
+      // containment check counts the whole anti-join (a fixed job count,
+      // unlike an incremental isEmpty scan)
+      val nextCount = next.count()
+      converged = nextCount == edgeCount && next.exceptAll(edges).count() == 0L
+      Materialize.release(edges)
       edges = next
+      edgeCount = nextCount
       round += 1
     }
     if (!converged)
@@ -558,7 +575,7 @@ object Dedup {
   def connectedComponentsAuto(pairs: DataFrame,
                               starThreshold: Long = 10000000L,
                               localThreshold: Long = 100000L): DataFrame = {
-    val cached = pairs.cache()
+    val cached = Materialize.cache(pairs)
     val edgeCount = cached.count()
     // name and implementation decided together — one three-way branch
     // (the choice is part of the scale evidence: SCALE100 captures the
@@ -570,6 +587,10 @@ object Dedup {
         ("local", () => connectedComponentsLocal(cached))
       else ("propagation", () => connectedComponents(cached))
     System.err.println(s"[cc-route] edges=$edgeCount route=$route")
-    impl()
+    // every route consumes the pairs eagerly (a collect or a first
+    // checkpoint), so the result no longer reads them
+    val out = impl()
+    Materialize.release(cached)
+    out
   }
 }

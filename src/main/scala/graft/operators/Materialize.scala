@@ -1,63 +1,194 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path}
+import scala.concurrent.ExecutionContext
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Materialize a REUSED intermediate exactly once — the shared form of the
-  * `localCheckpoint()`-at-the-reuse-point pattern the optimization rounds
-  * apply wherever one derived frame feeds several subtrees (Spark
-  * re-executes the full upstream pipeline per reference otherwise; the
-  * differently-pruned copies never produce a ReusedExchange).
+/** The one place that materializes a frame and the one place that releases
+  * it. Every materialization has an owner: the innermost [[scoped]] block
+  * open on the calling thread when it is made. The block releases
+  * everything it owns when it exits, normally or by an exception.
   *
-  * THE CLUSTER-SCALE CAVEAT (applies to EVERY localCheckpoint in this
-  * repo, including the small-frame call sites that use it directly —
-  * Similarity.nearDupLsh/semanticDedup, ZoneMap.percentileFromHistogram,
-  * Relevance, Dedup's CC loops): `localCheckpoint` stores the
-  * lineage-truncated blocks in NON-REPLICATED executor storage. In
-  * local-mode and single-executor deployments that is free insurance; on
-  * a multi-executor cluster an executor loss makes the job FAIL instead
-  * of recompute, and a corpus-sized checkpoint additionally pins
-  * data-sized blocks in executor memory/disk. At cluster scale swap for
-  * reliable checkpointing (`spark.sparkContext.setCheckpointDir` +
-  * `.checkpoint()`) or a staged write to durable storage — which is
-  * exactly what [[shared]] does automatically past a size threshold.
+  * Kinds of materialization:
+  *  - [[checkpoint]]: `localCheckpoint` — lineage-truncated blocks in
+  *    executor storage. Local-mode and single-executor deployments lose
+  *    nothing by it; on a multi-executor cluster an executor loss fails the
+  *    job instead of recomputing, so data-sized reuse goes through
+  *    [[shared]], which stages to durable parquet past its size bound.
+  *  - [[cache]]: a cached plan (`persist()`), for frames whose consumers
+  *    must see the cache manager's in-memory relation.
+  *  - [[shared]] / [[sharedIfLarge]]: size-gated reuse of a frame with
+  *    several consumers — a checkpoint when small, a staged parquet copy
+  *    in a scratch dir when large.
   *
-  * [[shared]] gates on the optimizer's size ESTIMATE for the frame:
-  *  - at or below `spark.graft.materialize.maxLocalBytes` (default 1 GiB)
-  *    it local-checkpoints — the small-frame fast path every bench-scale
-  *    call hits;
-  *  - above it, the frame is STAGED TO PARQUET scratch and read back:
-  *    durable, spillable, partition-parallel on re-read, and holding no
-  *    executor storage — the 100 TB-safe shape for corpus-sized reuse
-  *    (readings in the codec matrix, landed upsert batches, segment
-  *    arrays). Row VALUES are identical either way; the staged frame's
-  *    fields read back NULLABLE (Spark file sources force nullability
-  *    regardless of the supplied schema — value-neutral), and
-  *    PARTITIONING AND PER-PARTITION ORDER ARE NOT guaranteed to survive
-  *    the parquet round-trip, so callers whose downstream depends on
-  *    physical order
-  *    (e.g. byte-accounting writers) must impose it explicitly or accept
-  *    the estimate-gated behavior (all current callers sort or aggregate
-  *    downstream, or only engage the staged path far above bench scale).
+  * Who opens scopes: the bench (each rep, each warm-up, each untimed
+  * set-up), Verify (each query), each streaming micro-batch body, and an
+  * operator for what it consumes itself (a write, a driver-side result, a
+  * superseded round of a fixpoint loop, freed early with [[release]]). A
+  * frame backing a lazily returned result belongs to the caller's scope.
+  * Work submitted through [[inScope]] runs in the scope open where it was
+  * submitted, so frames materialized on those threads have the same owner;
+  * the submitter awaits that work before its scope exits. A frame
+  * materialized in a scope that has already exited is released at once.
   *
-  * The threshold is a conf knob, not a constant tuned to local mode: a
-  * production deployment sizes it to per-executor storage headroom.
+  * With no scope open, only staged dirs get an owner: a root scope that
+  * deletes them when the JVM exits. Checkpoints and cached plans made
+  * there are left to Spark, as a direct `localCheckpoint`/`persist()`
+  * would be: the ContextCleaner reclaims a checkpoint once nothing
+  * references it, a cached plan stays until unpersisted, and [[release]]
+  * frees neither.
   */
 object Materialize {
-  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private val hooked = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Scratch dirs of staged frames are named with this prefix (one per
+    * JVM, so [[stored]] never sees another process's dirs).
+    */
+  val StagedPrefix: String = s"graft-mat-${ProcessHandle.current.pid}-"
 
-  private def cleanupOnExit(p: java.nio.file.Path): Unit = {
-    scratch.add(p)
-    if (hooked.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.jdk.CollectionConverters._
-        scratch.iterator().asScala.foreach { d =>
-          try java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          catch { case _: Throwable => () }
-        }
-      }))
+  /** One owned materialization: `key` finds it for [[release]]. */
+  private final case class Held(key: Any, free: () => Unit)
+
+  /** The materializations made while a [[scoped]] block was open. */
+  private final class Scope {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[Held]
+    private var closed = false
+
+    /** Records what `drop` frees under `key`; frees it at once if this
+      * scope has already released.
+      */
+    def own(key: Any)(drop: => Unit): Unit = {
+      val h = Held(key, () => drop)
+      val late = synchronized { if (!closed) held += h; closed }
+      if (late) {
+        log.warn(s"$key was materialized after its scope exited; releasing it")
+        free(h)
+      }
+    }
+
+    /** Removes and returns what this scope holds under the first of `keys`
+      * it holds anything under.
+      */
+    def take(keys: Seq[Any]): Seq[Held] = synchronized {
+      keys.iterator.map(k => held.filter(_.key == k)).find(_.nonEmpty)
+        .fold(Seq.empty[Held]) { hit => held --= hit; hit.toSeq }
+    }
+
+    /** Frees what this scope still owns, newest first, and closes it. A
+      * free that fails is logged and the rest still run.
+      */
+    def release(): Unit = {
+      val all = synchronized { closed = true; val a = held.toList; held.clear(); a }
+      all.reverse.foreach(free)
+    }
   }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private def free(h: Held): Unit =
+    try h.free() catch { case NonFatal(e) => log.warn(s"could not release ${h.key}", e) }
+
+  private val root = new Scope
+  sys.addShutdownHook(root.release())
+  private val open = new ThreadLocal[Scope] {
+    override def initialValue(): Scope = root
+  }
+
+  /** Runs `body` in a new scope and releases what it materialized when
+    * `body` returns or throws. Scopes nest: an inner scope releases only
+    * its own materializations.
+    */
+  def scoped[T](body: => T): T = {
+    val outer = open.get
+    val s = new Scope
+    open.set(s)
+    try body
+    finally { open.set(outer); s.release() }
+  }
+
+  /** `ec`, with every task run in the scope open on the thread that
+    * submitted it.
+    */
+  def inScope(ec: ExecutionContext): ExecutionContext = new ExecutionContext {
+    def execute(task: Runnable): Unit = {
+      val s = open.get
+      ec.execute { () =>
+        val prev = open.get
+        open.set(s)
+        try task.run() finally open.set(prev)
+      }
+    }
+    def reportFailure(t: Throwable): Unit = ec.reportFailure(t)
+  }
+
+  private case class RddKey(id: Int)
+  private def rddKey(df: DataFrame): Option[RddKey] =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => Some(RddKey(r.rdd.id))
+      case _ => None
+    }
+
+  /** The scope open on this thread, or None when only the root is. */
+  private def current: Option[Scope] = Some(open.get).filter(_ ne root)
+
+  /** `df.localCheckpoint(eager)`, owned by the current scope. */
+  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val cp = df.localCheckpoint(eager)
+    val sc = df.sparkSession.sparkContext
+    val id = cp.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+    current.foreach(_.own(RddKey(id)) {
+      if (!sc.isStopped) sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
+    })
+    cp
+  }
+
+  /** `df.persist()` (the same storage level as `cache()`), owned by the
+    * current scope. A frame that is already cached stays with whoever
+    * cached it.
+    */
+  def cache(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist()
+      current.foreach(_.own(df) {
+        if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
+      })
+    }
+    df
+  }
+
+  /** Frees `df` (a frame the current scope got from this object) before
+    * the scope exits: for a superseded round of a loop, once nothing will
+    * read it again. Reading `df` afterwards fails (a released checkpoint
+    * does not recompute). Only what the call that returned `df` made is
+    * freed: the plan [[cache]] cached or the copy [[shared]] staged, else
+    * the checkpoint `df` reads. A frame the current scope does not own is
+    * left alone.
+    */
+  def release(df: DataFrame): Unit =
+    open.get.take(df +: rddKey(df).toSeq).foreach(free)
+
+  /** What `spark`'s context holds at one moment: its persisted RDDs (id
+    * -> name and creation site), whether any plan is cached, and this
+    * JVM's staged scratch dirs. Spark does not list cached plans, so a
+    * plan cached while others already are shows only once it has been
+    * read: through the persisted RDD that holds its blocks.
+    */
+  final case class Stored(rdds: Map[Int, String], cachedPlans: Boolean, stagedDirs: Set[String]) {
+    /** What `later` holds that this did not: empty when everything made
+      * in between has been released.
+      */
+    def added(later: Stored): Seq[String] =
+      (later.rdds -- rdds.keys).toSeq.sortBy(_._1).map { case (id, r) => s"persisted RDD $id ($r)" } ++
+        (if (later.cachedPlans && !cachedPlans) Seq("cached plans") else Nil) ++
+        (later.stagedDirs -- stagedDirs).toSeq.sorted.map(d => s"staged dir $d")
+  }
+
+  /** What `spark`'s context holds now. */
+  def stored(spark: SparkSession): Stored = Stored(
+    spark.sparkContext.getPersistentRDDs.map { case (id, r) => id -> r.toString }.toMap,
+    !spark.sharedState.cacheManager.isEmpty,
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith(StagedPrefix)).map(_.toString).toSet)
 
   /** [[shared]] that only engages past a LOWER size bound — for reuse
     * points where the duplicated upstream is so cheap at small scale
@@ -79,9 +210,28 @@ object Materialize {
     if (est < minShared) df else shared(df)
   }
 
-  /** Size-gated one-time materialization of a multiply-consumed frame
-    * (see the object doc). Returns a frame whose plan is a leaf — the
-    * upstream pipeline has executed exactly once when this returns.
+  /** Size-gated one-time materialization of a multiply-consumed frame.
+    * Returns a frame whose plan is a leaf — the upstream pipeline has
+    * executed exactly once when this returns. The gate is the optimizer's
+    * size ESTIMATE for the frame:
+    *  - at or below `spark.graft.materialize.maxLocalBytes` (default
+    *    1 GiB) it is a [[checkpoint]] — the small-frame fast path every
+    *    bench-scale call hits;
+    *  - above it, the frame is STAGED TO PARQUET in a scratch dir, owned by
+    *    the current scope, and read back: durable, spillable,
+    *    partition-parallel on re-read, and holding no executor storage —
+    *    the shape for corpus-sized reuse (readings in the codec matrix,
+    *    landed upsert batches, segment arrays).
+    * Row VALUES are identical either way; the staged frame's fields read
+    * back NULLABLE (Spark file sources force nullability regardless of the
+    * supplied schema — value-neutral), and PARTITIONING AND PER-PARTITION
+    * ORDER ARE NOT guaranteed to survive the parquet round-trip, so callers
+    * whose downstream depends on physical order (e.g. byte-accounting
+    * writers) must impose it explicitly (all current callers sort or
+    * aggregate downstream, or only engage the staged path far above bench
+    * scale). The threshold is a conf knob, not a constant tuned to local
+    * mode: a production deployment sizes it to per-executor storage
+    * headroom.
     */
   def shared(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -89,13 +239,23 @@ object Materialize {
       .getOption("spark.graft.materialize.maxLocalBytes")
       .map(_.toLong).getOrElse(1L << 30)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= maxLocal) df.localCheckpoint()
+    if (est <= maxLocal) checkpoint(df)
     else {
-      val dir = java.nio.file.Files.createTempDirectory("graft-mat")
-      cleanupOnExit(dir)
-      val out = dir.resolve("staged").toString
-      df.write.mode("overwrite").parquet(out)
-      spark.read.schema(df.schema).parquet(out)
+      val dir = Files.createTempDirectory(StagedPrefix)
+      val staged =
+        try {
+          val out = dir.resolve("staged").toString
+          df.write.mode("overwrite").parquet(out)
+          spark.read.schema(df.schema).parquet(out)
+        } catch { case e: Throwable => deleteTree(dir); throw e }
+      open.get.own(staged)(deleteTree(dir))
+      staged
     }
+  }
+
+  private def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
+    val paths = Files.walk(dir)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally paths.close()
   }
 }

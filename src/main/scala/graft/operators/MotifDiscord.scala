@@ -186,7 +186,7 @@ object MotifDiscord {
     * signal with >= 2 complete segments.
     */
   def profile(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = segs.localCheckpoint()
+    val sc = Materialize.checkpoint(segs)
     if (maxSegments(sc) <= pruneAbove) directProfile(sc)
     else prunedProfile(sc)
   }
@@ -207,7 +207,7 @@ object MotifDiscord {
     * exactness argument is unchanged.
     */
   private def prunedProfile(sc: DataFrame): DataFrame =
-    prunedProfileFrom(withGroupRank(sc).localCheckpoint(),
+    prunedProfileFrom(Materialize.checkpoint(withGroupRank(sc)),
       adjacentPairs(sc).groupBy(col("signal_id"))
         .agg(max(col("adj_d")).as("t")))
 
@@ -335,7 +335,7 @@ object MotifDiscord {
     // there would be a pure per-batch O(m) materialization cost
     val eReps = withGroupRank(existingSegs).filter(col("grk") === 1)
       .select(col("signal_id"), col("seg"), col("qvals"))
-    val n = withGroupRank(newSegs).localCheckpoint()
+    val n = Materialize.checkpoint(withGroupRank(newSegs))
     val nReps = n.filter(col("grk") === 1)
       .select(col("signal_id"), col("seg"), col("qvals"))
     // rep-level cross distances (equal vectors across sides meet as
@@ -485,15 +485,14 @@ object MotifDiscord {
     // rank (existing count + in-batch rank; new ids sort after existing)
     // is <= 2 — i.e. only for signals with fewer than 2 prior segments
     val eCnt = e.groupBy(col("signal_id")).agg(count(lit(1)).as("ce"))
-    val nRefs = n
+    val nRefs = Materialize.checkpoint(n
       .withColumn("h", refHash)
       .withColumn("srk", row_number().over(
         Window.partitionBy(col("signal_id")).orderBy(col("seg"))))
       .join(eCnt, Seq("signal_id"), "left")
       .filter(col("h") % mod === 0 ||
         col("srk") + coalesce(col("ce"), lit(0L)) <= 2)
-      .select(col("signal_id"), col("seg"), col("qvals"))
-      .localCheckpoint()
+      .select(col("signal_id"), col("seg"), col("qvals")))
     def minDists(a: DataFrame, refs: DataFrame): DataFrame =
       a.select(col("signal_id"), col("seg"), col("qvals").as("qa"))
         .join(refs.select(col("signal_id"), col("seg").as("seg_b"),
@@ -763,7 +762,7 @@ object MotifDiscord {
     // each frame has exactly one consumer, so a checkpoint would be a
     // pure block-write premium.
     val sigMerged =
-      if (skipGrid) sigMergedPlan else sigMergedPlan.localCheckpoint(eager = false)
+      if (skipGrid) sigMergedPlan else Materialize.checkpoint(sigMergedPlan, eager = false)
     // ONE signal-hash exchange feeds the group fold and the whole grid:
     // every grouping key downstream is a superset of signal_id, so
     // Catalyst adds no further shuffles past this repartition
@@ -772,7 +771,7 @@ object MotifDiscord {
       .groupBy(col("signal_id"), col("h"))
       .agg(sum(col("cnt")).as("cnt"), min(col("s0")).as("s0"))
     val grpNew =
-      if (skipGrid) grpNewPlan else grpNewPlan.localCheckpoint(eager = false)
+      if (skipGrid) grpNewPlan else Materialize.checkpoint(grpNewPlan, eager = false)
     if (skipGrid) {
       // the caller certified no touched m can exceed pruneAbove: the
       // grid would fold an empty frame, so its flag columns are the
@@ -1053,11 +1052,10 @@ object MotifDiscord {
                            newSegs: DataFrame,
                            budget: Long = RouteBudget, mod: Int = 4,
                            pruneAbove: Int = PruneAbove): DataFrame = {
-    val e = existingSegs.localCheckpoint()
-    val n = newSegs.localCheckpoint()
-    val p = existingProfile.localCheckpoint()
-    val st = foldRouteState(routeStateOf(e, p), n, budget, pruneAbove)
-      .localCheckpoint()
+    val e = Materialize.checkpoint(existingSegs)
+    val n = Materialize.checkpoint(newSegs)
+    val p = Materialize.checkpoint(existingProfile)
+    val st = Materialize.checkpoint(foldRouteState(routeStateOf(e, p), n, budget, pruneAbove))
     routedProfileFrom(e, p, n, st, probeRouteState(st), mod, pruneAbove)
   }
 
@@ -1088,7 +1086,7 @@ object MotifDiscord {
     */
   def routePlan(segs: DataFrame, budget: Long = RouteBudget,
                 pruneAbove: Int = PruneAbove): DataFrame =
-    routePlanOf(segs.localCheckpoint(), budget, pruneAbove)
+    routePlanOf(Materialize.checkpoint(segs), budget, pruneAbove)
 
   private def routePlanOf(sc: DataFrame, budget: Long,
                           pruneAbove: Int): DataFrame =
@@ -1145,7 +1143,7 @@ object MotifDiscord {
   def profileAuto(segs: DataFrame, budget: Long = RouteBudget,
                   mod: Int = 4,
                   pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = segs.localCheckpoint()
+    val sc = Materialize.checkpoint(segs)
     // materialize the rank window, the per-signal threshold and the tiny
     // route table ONCE: the three route branches below each reference
     // them (plus discordAuto's window on top), and without the
@@ -1154,11 +1152,11 @@ object MotifDiscord {
     // every branch of the union (measured r15: 278-Exchange / 4.7k-line
     // physical plan for seg_profile_auto), and the pruned branch re-ran
     // the same two window passes over its split
-    val ranked = withGroupRank(sc).localCheckpoint()
-    val thresh = adjacentPairs(sc).groupBy(col("signal_id"))
-      .agg(max(col("adj_d")).as("t")).localCheckpoint()
-    val routes = routePlanFrom(ranked, thresh, budget, pruneAbove)
-      .select(col("signal_id"), col("route")).localCheckpoint()
+    val ranked = Materialize.checkpoint(withGroupRank(sc))
+    val thresh = Materialize.checkpoint(adjacentPairs(sc).groupBy(col("signal_id"))
+      .agg(max(col("adj_d")).as("t")))
+    val routes = Materialize.checkpoint(routePlanFrom(ranked, thresh, budget, pruneAbove)
+      .select(col("signal_id"), col("route")))
     val routed = sc.join(broadcast(routes), "signal_id")
     def side(r: String) = routed.filter(col("route") === r).drop("route")
     val prunedRanked = ranked.join(broadcast(routes), "signal_id")
@@ -1228,7 +1226,7 @@ object MotifDiscord {
     */
   def motifTopK(segs: DataFrame, k: Int,
                 pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = segs.localCheckpoint()
+    val sc = Materialize.checkpoint(segs)
     val pairs =
       if (maxSegments(sc) <= pruneAbove) naivePairs(sc)
       else {
@@ -1246,7 +1244,7 @@ object MotifDiscord {
         //    group (<= (k+1)^2 per rep pair).
         // A constant 10^4-segment signal thus contributes C(k+1,2) rows
         // instead of 10^8.
-        val ranked = withGroupRank(sc).localCheckpoint()
+        val ranked = Materialize.checkpoint(withGroupRank(sc))
         val capped = ranked.filter(col("grk") <= k + 1)
         val cz = capped.select(col("signal_id"), col("qvals"), col("seg"))
         val zeroPairs = cz
@@ -1304,10 +1302,10 @@ object MotifDiscord {
     * wins); only duplicate-free signals run the grid enumeration.
     */
   def motif(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = segs.localCheckpoint()
+    val sc = Materialize.checkpoint(segs)
     if (maxSegments(sc) <= pruneAbove) winners(naivePairs(sc), forDiscord = false)
     else {
-      val ranked = withGroupRank(sc).localCheckpoint()
+      val ranked = Materialize.checkpoint(withGroupRank(sc))
       // per dup group, its minimal pair = the two smallest members; the
       // signal's winner among zero pairs is the (seg_a, seg_b) minimum
       val zp = ranked.filter(col("grk") <= 2 && col("gcnt") >= 2)
@@ -1321,8 +1319,7 @@ object MotifDiscord {
         .select(col("signal_id"), col("seg_a"), col("seg_b"),
           lit(0L).as("dist_q"))
       val dupSignals = zeroWinners.select(col("signal_id"))
-      val noDup = sc.join(dupSignals, Seq("signal_id"), "left_anti")
-        .localCheckpoint()
+      val noDup = Materialize.checkpoint(sc.join(dupSignals, Seq("signal_id"), "left_anti"))
       val thresh = adjacentPairs(noDup).groupBy(col("signal_id"))
         .agg(min(col("adj_d")).as("t"))
       winners(candidatePairs(noDup, noDup, thresh), forDiscord = false)

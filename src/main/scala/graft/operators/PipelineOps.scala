@@ -300,7 +300,7 @@ object PipelineOps {
     bpeTrain(words, rounds, rebaseEvery = 64)
 
   private[graft] def bpeTrain(words: DataFrame, rounds: Int,
-                              rebaseEvery: Int): Seq[(String, String, Long)] = {
+                              rebaseEvery: Int): Seq[(String, String, Long)] = Materialize.scoped {
     // upper bound = the single-UTF16-char marker space (bpeMarker: 26
     // letters + BMP codepoints below the surrogate range)
     require(rounds >= 1 && rounds <= 50000,
@@ -308,37 +308,35 @@ object PipelineOps {
     require(rebaseEvery >= 1, s"rebaseEvery must be positive: $rebaseEvery")
     // the single corpus-wide pass: one keyed count (map-side combined).
     // `base` = the vocabulary encoded through merges[0, mBase).
-    var base = words.groupBy(col("w")).agg(count(lit(1)).as("cnt")).persist()
+    var base = Materialize.cache(words.groupBy(col("w")).agg(count(lit(1)).as("cnt")))
     var mBase = 0
-    try {
-      val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-      var k = 0
-      var exhausted = false
-      while (k < rounds && !exhausted) {
-        val pending = merges.slice(mBase, k)
-        val applied =
-          if (pending.isEmpty) col("w") else bpeEncode(col("w"), pending.toSeq)
-        val top = base
-          .select(explode(TextOps.charPairsRaw(applied)).as("pair"), col("cnt"))
-          .groupBy(col("pair")).agg(sum(col("cnt")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair")).limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val pair = top(0).getString(0)
-          merges += ((pair, bpeMarker(k), top(0).getLong(1)))
-          k += 1
-          if (k - mBase >= rebaseEvery && k < rounds) {
-            val next = base.select(
-              bpeEncode(col("w"), merges.slice(mBase, k).toSeq).as("w"),
-              col("cnt")).localCheckpoint(true)
-            base.unpersist(false)
-            base = next
-            mBase = k
-          }
+    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+    var k = 0
+    var exhausted = false
+    while (k < rounds && !exhausted) {
+      val pending = merges.slice(mBase, k)
+      val applied =
+        if (pending.isEmpty) col("w") else bpeEncode(col("w"), pending.toSeq)
+      val top = base
+        .select(explode(TextOps.charPairsRaw(applied)).as("pair"), col("cnt"))
+        .groupBy(col("pair")).agg(sum(col("cnt")).as("cnt"))
+        .orderBy(col("cnt").desc, col("pair")).limit(1).collect()
+      if (top.isEmpty) exhausted = true
+      else {
+        val pair = top(0).getString(0)
+        merges += ((pair, bpeMarker(k), top(0).getLong(1)))
+        k += 1
+        if (k - mBase >= rebaseEvery && k < rounds) {
+          val next = Materialize.checkpoint(base.select(
+            bpeEncode(col("w"), merges.slice(mBase, k).toSeq).as("w"),
+            col("cnt")))
+          Materialize.release(base)
+          base = next
+          mBase = k
         }
       }
-      merges.toSeq
-    } finally { base.unpersist(false); () }
+    }
+    merges.toSeq
   }
 
   /** Apply a learned merge table in round order (each pair may contain

@@ -229,7 +229,7 @@ object PipelineQueries {
       // filter join — unmaterialized, the xent pipeline + tokenizer
       // executed twice (the CCNet-style two-pass filter is inherent; the
       // second pass should read the scores, not recompute them)
-      val j = tc.join(x, Seq("doc_id")).localCheckpoint()
+      val j = Materialize.checkpoint(tc.join(x, Seq("doc_id")))
       val med = j.groupBy(col("lang"))
         .agg(org.apache.spark.sql.functions.expr("percentile(xent, 0.5)").as("med"))
       j.join(broadcast(med), Seq("lang"))

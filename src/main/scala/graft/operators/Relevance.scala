@@ -82,10 +82,9 @@ object Relevance {
     // below AND the final join — without it the tokenize+explode+count
     // subtree executes three times (the post-optimization subtrees differ
     // in pruned columns, so exchange reuse never fires on them; measured
-    // r15 in the text_xent plan). Cluster-scale caveat of
-    // localCheckpoint: see Materialize's object doc
-    val tf = toks.groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf")).localCheckpoint()
+    // r15 in the text_xent plan)
+    val tf = Materialize.checkpoint(toks.groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).cast("double").as("tf")))
     val lm = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
     // Two bounded scalars: total token mass and vocabulary size.
     val st = lm.agg(sum(col("cnt")).as("t"), count(lit(1)).cast("double").as("v")).head()
@@ -134,9 +133,8 @@ object Relevance {
     // without it the tokenize+window+count subtree executes three times
     // (no exchange reuse fires across the differently-pruned copies;
     // measured r15: text_xent2's plan scanned+tokenized the corpus 3x).
-    // Cluster-scale caveat of localCheckpoint: see Materialize's doc
-    val bf = bg.groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).cast("double").as("bf")).localCheckpoint()
+    val bf = Materialize.checkpoint(bg.groupBy(col("doc_id"), col("w1"), col("w2"))
+      .agg(count(lit(1)).cast("double").as("bf")))
     val lm2 = bf.groupBy(col("w1"), col("w2")).agg(sum(col("bf")).as("c12"))
     val lm1 = lm2.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val st = toks.agg(countDistinct(col("term")).cast("double").as("v")).head()

@@ -98,7 +98,7 @@ object SegmentMl {
     // the train side WITH its band envelopes once (it feeds the beta
     // probe pass and the survivor pass — unmaterialized, the O(n)
     // envelope build per train segment executed twice). Both frames are
-    // O(corpus) — size-gated via Materialize.shared (see its caveat doc)
+    // O(corpus) — size-gated via Materialize.shared
     val segsM = Materialize.shared(segmentsQ)
     val test = segsM.filter(col("signal_id").isin(testSignals: _*))
       .select(col("signal_id").as("test_sig"), col("seg").as("test_seg"),

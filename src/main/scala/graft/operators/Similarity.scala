@@ -268,12 +268,10 @@ object Similarity {
     val planes = lcgPlanes(nPlanes, dim)
     // materialized once: the bucketed table feeds both sides of the
     // band self-join — unmaterialized, the corpus scan + nPlanes
-    // hyperplane dots per vector executed twice (cluster-scale caveat
-    // of localCheckpoint: see Materialize's object doc)
-    val b = vecs.select(col(idCol), col(vecCol),
+    // hyperplane dots per vector executed twice
+    val b = Materialize.checkpoint(vecs.select(col(idCol), col(vecCol),
       l2(col(vecCol)).as("nrm"),
-      lshBucket(col(vecCol), planes).as("bucket"))
-      .localCheckpoint()
+      lshBucket(col(vecCol), planes).as("bucket")))
     val a = b.select(col(idCol).as("vec_a"), col(vecCol).as("ea"), col("nrm").as("na"),
         explode(multiProbeBuckets(col("bucket"), nPlanes, maxFlip)).as("bucket"))
     val bb = b.select(col(idCol).as("vec_b"), col(vecCol).as("eb"),
@@ -337,13 +335,11 @@ object Similarity {
                     threshold: Double): DataFrame = {
     // materialized once: the assignment feeds both sides of the
     // within-cell pair join AND the final keeper join — unmaterialized,
-    // the |centroids| Voronoi dots per vector executed 3x (cluster-scale
-    // caveat of localCheckpoint: see Materialize's object doc)
-    val assigned = vecs.select(col(idCol).as("vec_id"),
+    // the |centroids| Voronoi dots per vector executed 3x
+    val assigned = Materialize.checkpoint(vecs.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("e"))
       .withColumn("cell", bestCell(col("e"), centroids).cast("long"))
-      .withColumn("nrm", l2(col("e")))
-      .localCheckpoint()
+      .withColumn("nrm", l2(col("e"))))
     val a = assigned.select(col("vec_id").as("doc_a"), col("e").as("ea"),
       col("nrm").as("na"), col("cell"))
     val b = assigned.select(col("vec_id").as("doc_b"), col("e").as("eb"),

@@ -57,14 +57,12 @@ object SkewJoin {
     * on the plain hash path).
     */
   def heavyHitters(df: DataFrame, key: String, threshold: Double,
-                   maxKeys: Int = 64): Seq[Any] = {
-    val counts = df.groupBy(col(key)).agg(count(lit(1)).as("n")).cache()
-    try {
-      val mean = counts.agg(avg(col("n"))).collect()(0).getDouble(0)
-      counts.filter(col("n") > mean * threshold)
-        .orderBy(col("n").desc, col(key))
-        .limit(maxKeys)
-        .select(col(key)).collect().map(_.get(0)).toSeq
-    } finally counts.unpersist()
+                   maxKeys: Int = 64): Seq[Any] = Materialize.scoped {
+    val counts = Materialize.cache(df.groupBy(col(key)).agg(count(lit(1)).as("n")))
+    val mean = counts.agg(avg(col("n"))).collect()(0).getDouble(0)
+    counts.filter(col("n") > mean * threshold)
+      .orderBy(col("n").desc, col(key))
+      .limit(maxKeys)
+      .select(col(key)).collect().map(_.get(0)).toSeq
   }
 }

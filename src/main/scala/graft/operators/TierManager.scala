@@ -234,11 +234,11 @@ class TierManager(spark: SparkSession, root: String) {
     * stats are PATCHED the same way: affected signals' rows recomputed,
     * the rest carried over untouched. A size-gated materialization
     * (Materialize.shared) breaks the read-own-path cycle both rewrites
-    * would otherwise hit.
+    * would otherwise hit; both are released once the rewrites land.
     * Idempotent: re-applying the same corrections is a no-op.
     * Returns the number of correction rows applied.
     */
-  def upsertCorrections(corrections: DataFrame, buckets: Int = 32): Long = {
+  def upsertCorrections(corrections: DataFrame, buckets: Int = 32): Long = Materialize.scoped {
     // the 'corrections win by (signal_id, seq_no)' contract must also hold
     // WITHIN a batch: byte-identical resends collapse silently; two
     // CONFLICTING rows for one key have no defined winner (the batch

@@ -225,7 +225,7 @@ object TierQueries {
     // the incremental-correctness statement (STAMPI at segment
     // granularity)
     "seg_profile_inc" -> ((s, d) => {
-      val segs = Segments.completeQuantized(r(s, d)).localCheckpoint()
+      val segs = Materialize.checkpoint(Segments.completeQuantized(r(s, d)))
       val cut = segs.groupBy(col("signal_id"))
         .agg((max(col("seg")) / 2).cast("long").as("cut"))
       val marked = segs.join(broadcast(cut), "signal_id")
@@ -527,7 +527,7 @@ object TierQueries {
       // plane frame 4-5x so materializing wins; on the plain-plane rows
       // the checkpoint cost exceeded the one saved window and was
       // reverted)
-      val rd = r(s, d).localCheckpoint()
+      val rd = Materialize.checkpoint(r(s, d))
       val base = rd.agg(min(col("value_q"))).first().getLong(0)
       val pl = graft.sources.BuffStore.planes(rd, base, 3)
       val (enc, maj) = graft.sources.BuffStore.outlierEncode(pl, 3)
@@ -556,7 +556,7 @@ object TierQueries {
       // plane frame 4-5x so materializing wins; on the plain-plane rows
       // the checkpoint cost exceeded the one saved window and was
       // reverted)
-      val rd = r(s, d).localCheckpoint()
+      val rd = Materialize.checkpoint(r(s, d))
       val base = rd.agg(min(col("value_q"))).first().getLong(0)
       val pl = graft.sources.BuffStore.planes(rd, base, 3)
       val (enc, maj) = graft.sources.BuffStore.outlierEncode(pl, 3)

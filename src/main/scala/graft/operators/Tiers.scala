@@ -135,9 +135,8 @@ object Tiers {
     // materialized ONCE: the cumsum branch and the offsets branch must see
     // the SAME sampled range boundaries — re-evaluating repartitionByRange
     // per branch could re-sample and desynchronize spark_partition_id
-    val parts = stats.repartitionByRange(order: _*)
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+    val parts = Materialize.checkpoint(stats.repartitionByRange(order: _*)
+      .withColumn("pid", spark_partition_id()))
     val wLocal = Window.partitionBy(col("pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = parts.withColumn("cum_local", sum(col("bytes_raw")).over(wLocal))

@@ -883,10 +883,9 @@ object TsQueries {
       // (including the seq_no window beneath it) executed twice. The
       // two-pass shape is inherent to MAD; the second pass should read
       // the deviations, not recompute them.
-      val dev = r(s, d).join(med, "signal_id")
+      val dev = Materialize.checkpoint(r(s, d).join(med, "signal_id")
         .select(col("signal_id"), col("seq_no"), col("value_q"), col("med_q"),
-          abs(col("value_q").cast("double") - col("med_q")).as("dev"))
-        .localCheckpoint()
+          abs(col("value_q").cast("double") - col("med_q")).as("dev")))
       val mad = dev.groupBy(col("signal_id"))
         .agg(expr("percentile(dev, 0.5)").as("mad_q"))
       dev.join(mad, "signal_id")

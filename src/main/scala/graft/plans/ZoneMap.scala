@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Readings
+import graft.operators.{Materialize, Readings}
 
 /** O8 — hierarchical pre-aggregated stats ("zone map" / segment-stats tree).
   *
@@ -128,9 +128,8 @@ object ZoneMap {
     // table — unmaterialized, the upstream histogram build (and for
     // o8_percentile_sketch the whole readings seq_no window beneath it)
     // executed 3x; the sketch is per-signal-cell-sized, the exact thing
-    // the stats tier persists anyway (cluster-scale caveat of
-    // localCheckpoint: see Materialize's object doc)
-    val h = foldHistogram(hist).localCheckpoint()
+    // the stats tier persists anyway
+    val h = Materialize.checkpoint(foldHistogram(hist))
     val w = Window.partitionBy(col("signal_id")).orderBy(col("value_q"))
     val cum = h.select(col("signal_id").as("c_sig"), col("value_q"),
         sum(col("cnt")).over(w).as("cume"),

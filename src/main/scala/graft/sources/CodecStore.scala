@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Materialize
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Storage-codec matrix — the Spark-native answer to the reference's
   * per-codec compression-ratio benchmark (database/src/compress/mod.rs:
@@ -26,9 +29,30 @@ object CodecStore {
   }
 
   /** Write `df` once per codec, return (codec, representation, bytes, cr)
-    * with cr relative to the uncompressed double representation.
+    * with cr relative to the uncompressed double representation. The
+    * result is a local frame: every materialization made for the
+    * measurement is released before it returns.
     */
-  def compressionMatrix(readings: DataFrame): DataFrame = {
+  def compressionMatrix(readings: DataFrame): DataFrame = Materialize.scoped {
+    // the matrix is ~20 independent single-partition write jobs; submit
+    // them concurrently (Spark schedules concurrent jobs fine) so the
+    // measurement's wall time is bounded by the slowest write, not the
+    // sum — byte accounting is per-directory and unaffected by order.
+    // The pool is sized to the in-flight job count, not the core count:
+    // every job here is a single-partition write (or one bounded agg), so
+    // the cluster scheduler, not this pool, bounds real parallelism — at
+    // 8 the twelve repr writes queued in two waves for no reason
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    // every task has finished, on success or failure, before the scope
+    // releases what the tasks materialized and read
+    try matrix(readings)(Materialize.inScope(ExecutionContext.fromExecutor(pool)))
+    finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
+  }
+
+  private def matrix(readings: DataFrame)(implicit ec: ExecutionContext): DataFrame = {
     val spark = readings.sparkSession
     import spark.implicits._
     val base = Files.createTempDirectory("graft-codec")
@@ -40,7 +64,7 @@ object CodecStore {
     // checkpoint); these frames are O(corpus), so the materialization is
     // SIZE-GATED (Materialize.shared): past the threshold it stages to
     // parquet instead of pinning data-sized blocks in executor storage.
-    val rd = graft.operators.Materialize.shared(readings)
+    val rd = Materialize.shared(readings)
     // delta_q: per-signal first differences of the fixed-point column —
     // the Sprintz/Gorilla insight (deltas of slowly-varying signals are
     // small ints that dictionary/bit-pack encodings crush) expressed as a
@@ -48,25 +72,13 @@ object CodecStore {
     val w = Window.partitionBy(col("signal_id")).orderBy(col("seq_no"))
     // the delta representation is written under 4 codecs — one window
     // pass, not four
-    val deltas = graft.operators.Materialize.shared(
+    val deltas = Materialize.shared(
       rd.select(col("signal_id"), col("seq_no"),
         (col("value_q") - coalesce(lag(col("value_q"), 1).over(w), lit(0L))).as("dq")))
     val reprs = Seq(
       "double" -> rd.select(col("signal_id"), col("seq_no"), col("value")),
       "fixed_q" -> rd.select(col("signal_id"), col("seq_no"), col("value_q")),
       "delta_q" -> deltas)
-    // the matrix is ~20 independent single-partition write jobs; submit
-    // them concurrently (Spark schedules concurrent jobs fine) so the
-    // measurement's wall time is bounded by the slowest write, not the
-    // sum — byte accounting is per-directory and unaffected by order
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    // sized to the in-flight job count, not the core count: every job
-    // here is a single-partition write (or one bounded agg), so the
-    // cluster scheduler, not this pool, bounds real parallelism — at 8
-    // the twelve repr writes queued in two waves for no reason
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def measured(repr: String, codec: String, df: DataFrame)
         : Future[(String, String, Long)] = Future {
       val out = base.resolve(s"$repr-$codec")
@@ -115,10 +127,10 @@ object CodecStore {
     // codec) write is its own future: the former per-codec future ran
     // its three writes back-to-back, so the measurement's wall time was
     // 3x a write instead of the slowest one.
-    val pl = graft.operators.Materialize.shared(BuffStore.planes(rd, baseQ, 3))
+    val pl = Materialize.shared(BuffStore.planes(rd, baseQ, 3))
     val (encL, majL) = BuffStore.outlierEncode(pl, 3)
-    val encF = Future(graft.operators.Materialize.shared(encL))
-    val majF = Future(graft.operators.Materialize.shared(majL))
+    val encF = Future(Materialize.shared(encL))
+    val majF = Future(Materialize.shared(majL))
     val (enc, maj) =
       (Await.result(encF, Duration.Inf), Await.result(majF, Duration.Inf))
     def measuredDir(repr: String, codec: String, df: DataFrame)
@@ -134,11 +146,9 @@ object CodecStore {
         "buff_outlier_dict" -> maj)
     } yield measuredDir(repr, codec, df))
     val (rows, planeParts, nativeRows) =
-      try {
-        (Await.result(rowsF, Duration.Inf),
-          Await.result(planeRowsF, Duration.Inf),
-          Await.result(nativeRowsF, Duration.Inf))
-      } finally pool.shutdown()
+      (Await.result(rowsF, Duration.Inf),
+        Await.result(planeRowsF, Duration.Inf),
+        Await.result(nativeRowsF, Duration.Inf))
     // the outlier layout's published bytes stay enc + dict, as before
     val planeRows = Seq("uncompressed", "zstd").map { codec =>
       def b(r: String): Long = planeParts.collectFirst {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.functions.Quantize
+import graft.operators.Materialize
 
 /** Structured Streaming ingestion — the Spark shape of the reference's
   * client -> BufferedSignal -> CompressionDaemon pipeline
@@ -55,10 +56,8 @@ object Ingest {
     */
   def readingsStream(spark: SparkSession, srcDir: String,
                      maxFilesPerTrigger: Int = 1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream
-      .schema(schema)
+      .schema(graft.Tables.eventsSchema(spark, srcDir))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(srcDir)
     // ts arrives as nanos-long or TIMESTAMP_NTZ/TIMESTAMP depending on the
@@ -229,14 +228,13 @@ object Ingest {
     docs.writeStream.outputMode("append")
       .option("checkpointLocation", s"$storeDir/_chk")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) => Materialize.scoped {
         val sp = batch.sparkSession
         import sp.implicits._
-        val batchSets = batch
+        val batchSets = Materialize.cache(batch
           .select(col("doc_id"),
             graft.functions.TextOps.shingleHashes3(col("text")).as("sh"))
-          .filter(size(col("sh")) > 0)
-          .persist()
+          .filter(size(col("sh")) > 0))
         val sigs = batchSets
           .as[(Long, Seq[Long])]
           .map { case (id, sh) =>
@@ -244,52 +242,43 @@ object Ingest {
           }
           .toDF("doc_id", "sig")
         // probe + append both consume the band rows; compute them once
-        val bands = graft.operators.Dedup.bandsOfSignatures(sigs).persist()
-        try {
-          val hasStore = new java.io.File(bandDir).isDirectory
-          if (hasStore) {
-            val cand = sp.read.parquet(bandDir)
-              .select(col("doc_id").as("dup_of"), col("band"), col("bh"))
-              .join(broadcast(bands.withColumnRenamed("doc_id", "new_id")),
-                Seq("band", "bh"))
-              .select(col("new_id"), col("dup_of")).distinct()
-            // exact confirm, candidate-bounded: the set store is read
-            // only at the flagged dup_of ids (join pruning), the batch's
-            // own sets broadcast, same size-ratio prune + one-pass
-            // Jaccard as the batch confirm
-            val confirmed = cand
-              .join(sp.read.parquet(setsDir)
-                  .select(col("doc_id").as("dup_of"), col("sh").as("shb")),
-                Seq("dup_of"))
-              .join(broadcast(batchSets.withColumnRenamed("doc_id", "new_id")),
-                Seq("new_id"))
-              .where(least(size(col("sh")), size(col("shb"))).cast("double") >=
-                lit(threshold) *
-                  greatest(size(col("sh")), size(col("shb"))).cast("double"))
-              .withColumn("jac",
-                graft.functions.TextOps.jaccardLongSets(col("sh"), col("shb")))
-              .filter(col("jac") >= threshold)
-              .select(col("new_id").as("doc_id"), col("dup_of"), col("jac"),
-                lit(batchId).as("batch_id"))
-              .persist()
-            try {
-              val nConfirmed = confirmed.count()
-              confirmed.write.mode("append").parquet(pairsDir)
-              System.err.println(s"[dedup-grow] batch=$batchId " +
-                s"confirmed_pairs=$nConfirmed")
-            } finally { confirmed.unpersist(false); () }
-          } else {
-            System.err.println(s"[dedup-grow] batch=$batchId store empty")
-          }
-          bands.select(col("doc_id"), col("band"), col("bh"))
-            .write.mode("append").parquet(bandDir)
-          batchSets.write.mode("append").parquet(setsDir)
-        } finally {
-          bands.unpersist(false)
-          batchSets.unpersist(false)
-          ()
+        val bands = Materialize.cache(graft.operators.Dedup.bandsOfSignatures(sigs))
+        val hasStore = new java.io.File(bandDir).isDirectory
+        if (hasStore) {
+          val cand = sp.read.parquet(bandDir)
+            .select(col("doc_id").as("dup_of"), col("band"), col("bh"))
+            .join(broadcast(bands.withColumnRenamed("doc_id", "new_id")),
+              Seq("band", "bh"))
+            .select(col("new_id"), col("dup_of")).distinct()
+          // exact confirm, candidate-bounded: the set store is read
+          // only at the flagged dup_of ids (join pruning), the batch's
+          // own sets broadcast, same size-ratio prune + one-pass
+          // Jaccard as the batch confirm
+          val confirmed = Materialize.cache(cand
+            .join(sp.read.parquet(setsDir)
+                .select(col("doc_id").as("dup_of"), col("sh").as("shb")),
+              Seq("dup_of"))
+            .join(broadcast(batchSets.withColumnRenamed("doc_id", "new_id")),
+              Seq("new_id"))
+            .where(least(size(col("sh")), size(col("shb"))).cast("double") >=
+              lit(threshold) *
+                greatest(size(col("sh")), size(col("shb"))).cast("double"))
+            .withColumn("jac",
+              graft.functions.TextOps.jaccardLongSets(col("sh"), col("shb")))
+            .filter(col("jac") >= threshold)
+            .select(col("new_id").as("doc_id"), col("dup_of"), col("jac"),
+              lit(batchId).as("batch_id")))
+          val nConfirmed = confirmed.count()
+          confirmed.write.mode("append").parquet(pairsDir)
+          System.err.println(s"[dedup-grow] batch=$batchId " +
+            s"confirmed_pairs=$nConfirmed")
+        } else {
+          System.err.println(s"[dedup-grow] batch=$batchId store empty")
         }
-      }
+        bands.select(col("doc_id"), col("band"), col("bh"))
+          .write.mode("append").parquet(bandDir)
+        batchSets.write.mode("append").parquet(setsDir)
+      }}
       .start()
   }
 
@@ -324,19 +313,17 @@ object Ingest {
     import graft.operators.Dedup
 
     // stream-static joins re-execute the static side's plan EVERY
-    // micro-batch; persist both static frames so the corpus is shingled
+    // micro-batch; cache both static frames so the corpus is shingled
     // and minhashed once per query start, not once per trigger (in
     // production these live as parquet, the IvfStore discipline — the
-    // persist here is the in-session equivalent; storage is released
-    // when the streaming query's session ends or the bench's untimed
-    // between-query cleanup runs)
+    // cache here is the in-session equivalent). The returned stream
+    // reads them for its whole life, so they belong to the caller's
+    // scope and are released when it closes.
     val corpusSets = Dedup.shingleSets(corpus)
-    val corpusBands = Dedup.bandTable(corpusSets)
-      .select(col("doc_id").as("dup_of"), col("band"), col("bh"))
-      .persist()
-    val corpusSh = corpusSets.select(col("doc_id").as("dup_of"),
-      col("sh").as("shb"))
-      .persist()
+    val corpusBands = Materialize.cache(Dedup.bandTable(corpusSets)
+      .select(col("doc_id").as("dup_of"), col("band"), col("bh")))
+    val corpusSh = Materialize.cache(corpusSets.select(col("doc_id").as("dup_of"),
+      col("sh").as("shb")))
 
     // per-row signature: the native shingle-hash expression (same
     // xxhash64 values as the batch path's shingleSets), then the shared
@@ -499,13 +486,13 @@ object Ingest {
     */
   def xentStream(docs: DataFrame, corpus: DataFrame, width: String,
                  watermark: String, alpha: Double = 0.5): DataFrame = {
-    // persisted for the same reason as nearDupStream's static frames:
-    // the stream-static join would otherwise rebuild the corpus-wide LM
-    // aggregation every micro-batch
-    val lm = corpus
+    // cached for the same reason as nearDupStream's static frames, and
+    // owned the same way (the caller's scope): the stream-static join
+    // would otherwise rebuild the corpus-wide LM aggregation every
+    // micro-batch
+    val lm = Materialize.cache(corpus
       .select(explode(graft.functions.TextOps.tokens(col("text"))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).cast("double").as("cnt"))
-      .persist()
+      .groupBy(col("term")).agg(count(lit(1)).cast("double").as("cnt")))
     val st = lm.agg(sum(col("cnt")).as("t"),
       count(lit(1)).cast("double").as("v")).head()
     val (total, vocab) =
@@ -690,7 +677,7 @@ object Ingest {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", s"$workDir/ckpt")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) => Materialize.scoped {
         // everything below runs as BATCH jobs on the OUTER session, not
         // the micro-batch session clone: MicroBatchExecution force-
         // disables AQE on its clone (stateful-op limitation), which
@@ -722,11 +709,10 @@ object Ingest {
         // segment-store append runs CONCURRENTLY with the route-state
         // fold below (both consume the materialized δ, neither depends
         // on the other)
-        val newSegsClone = batch
+        val newSegsClone = Materialize.checkpoint(batch
           .withColumn("qvals",
             transform(col("values"), v => floor(v * lit(100)).cast("long")))
-          .select(col("signal_id"), col("seg"), col("qvals"))
-          .localCheckpoint()
+          .select(col("signal_id"), col("seg"), col("qvals")))
         val newSegs =
           s.createDataFrame(newSegsClone.rdd, newSegsClone.schema)
         lap("delta-ckpt")
@@ -745,9 +731,9 @@ object Ingest {
         val segFiles = math.max(1L, math.min(
           newSegsClone.rdd.getNumPartitions.toLong,
           (deltaRows + 65535L) / 65536L)).toInt
-        import scala.concurrent.{Await, Future}
+        import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
+        implicit val ec: ExecutionContext = Materialize.inScope(ExecutionContext.global)
         val segsWrite = Future {
           newSegs.coalesce(segFiles).withColumn("batch", lit(batchId))
             .write.mode("overwrite")
@@ -967,7 +953,7 @@ object Ingest {
             }
         }
         lap("await-bg-writes")
-      }
+      }}
       .start()
   }
 

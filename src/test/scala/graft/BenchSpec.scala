@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.Materialize
 
 /** The bench's regression check: each row's counters and CPU time are
   * compared against a prior taken under the same key. The injected
@@ -10,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * an extra exchange, a dropped broadcast and an expression slowdown past
   * the trip line — each measured by the bench's own listener on a real
   * action, so the check is shown to catch them without wall-clock noise.
+  * A rep that leaves storage behind (an unowned materialization) fails.
   */
 class BenchSpec extends AnyFunSuite with SparkTest {
 
@@ -79,6 +81,38 @@ class BenchSpec extends AnyFunSuite with SparkTest {
     assert(cur.cpuS > 2 * prior.cpuS + 0.25, (cur, prior))
     val flags = Bench.regressions(cur, prior)
     assert(flags.nonEmpty && flags.forall(_.startsWith("cpu_s")), flags)
+  }
+
+  test("a row that leaves storage behind fails its rep") {
+    val l = new Work.Listener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      // suites share this session, so storage may be held before the
+      // first rep: each rep reports only what it added. Start with no
+      // cached plan, so the raw persist() below is named as one
+      spark.sharedState.cacheManager.clearCache()
+      val start = Materialize.stored(spark)
+      val owned = Bench.rep(spark, l) {
+        Materialize.checkpoint(facts.groupBy("k").agg(sum("v"))).count(); ()
+      }
+      assert(owned.work.isRight && owned.leak.isEmpty, owned)
+      // a raw persist() has no owner: the rep runs, and then trips the check
+      var raw: DataFrame = null
+      val leaky = Bench.rep(spark, l) {
+        raw = facts.groupBy("k").agg(sum("v")).persist()
+        raw.count(); ()
+      }
+      assert(leaky.work.isRight, leaky)
+      assert(leaky.leak.exists(m => m.contains("cached plans") && m.contains("persisted RDD")),
+        leaky.leak)
+      // the leak fails only the rep that made it, not the next one
+      val next = Bench.rep(spark, l) {
+        Materialize.checkpoint(facts.groupBy("k").agg(max("v"))).count(); ()
+      }
+      assert(next.work.isRight && next.leak.isEmpty, next)
+      raw.unpersist(blocking = true)
+      assert(start.added(Materialize.stored(spark)).isEmpty)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   private def file(json: String): String = {

@@ -49,8 +49,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // stage the events table as TWO files so the run has two micro-batches
     // (maxFilesPerTrigger=1) and the stats table genuinely contains
     // partial rows for the same (signal, day) keys
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
     val in = Files.createTempDirectory("graft-stream-in2").toString
     Seq(raw.filter(col("event_id") % 2 === 0), raw.filter(col("event_id") % 2 =!= 0))
       .zipWithIndex.foreach { case (half, i) =>
@@ -89,8 +88,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
   }
 
   test("incremental percentile-sketch cells fold to the batch histogram and serve exact percentiles") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
     val in = Files.createTempDirectory("graft-stream-inh").toString
     Seq(raw.filter(col("event_id") % 2 === 0), raw.filter(col("event_id") % 2 =!= 0))
       .zipWithIndex.foreach { case (half, i) =>
@@ -160,8 +158,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     * parity is end-to-end.
     */
   private def stageTiles(): String = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sf/events.parquet")
+    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
     val tiled = raw.withColumn("tile",
       ntile(4).over(org.apache.spark.sql.expressions.Window
         .orderBy(col("ts"), col("event_id"))))
@@ -438,8 +435,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // continuation across micro-batches: a second file arriving later
     // continues the SAME walk (steps keep increasing, state accrues)
     val n1 = streamed.length
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val more = spark.read.parquet(s"$sf/events.parquet")
+    val more = Tables.readEvents(spark, s"$sf/events.parquet")
       .withColumn("event_id", col("event_id") + 1000000L)
     more.coalesce(1).write.mode("overwrite").parquet(s"$root/more")
     val part = new java.io.File(s"$root/more").listFiles()
