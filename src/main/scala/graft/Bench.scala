@@ -367,6 +367,12 @@ object Bench {
       val in = tempDir("graft-bench-mpin")
       Tables.readEvents(spark, s"$sfDir/events.parquet")
         .repartition(4).write.mode("overwrite").parquet(in)
+      // the stream takes files in modification-time order; the 4 part
+      // files' times tie, so stamp distinct ones in name order to fix
+      // which rows each micro-batch holds
+      new java.io.File(in).listFiles().filter(_.getName.endsWith(".parquet"))
+        .sortBy(_.getName).zipWithIndex.foreach { case (f, k) =>
+          f.setLastModified(1700000000000L + k * 60000L) }
       in
     }
 

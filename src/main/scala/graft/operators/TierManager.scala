@@ -51,9 +51,9 @@ class TierManager(spark: SparkSession, root: String) {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    val tierStats = ZoneMap.segmentStats(readings)
     val statsW = Future {
-      ZoneMap.segmentStats(readings)
-        .write.mode("overwrite").parquet(stats(tier0))
+      tierStats.write.mode("overwrite").parquet(stats(tier0))
     }
     // on a failure path the stats future is drained before rethrowing
     // (the Ingest.profileStream discipline: never leave a zombie write
@@ -63,7 +63,7 @@ class TierManager(spark: SparkSession, root: String) {
       scala.util.Try(Await.result(statsW, Duration.Inf)); throw t
     }
     Await.result(statsW, Duration.Inf)
-    ZoneMapRegistry.register(tier0, stats(tier0))
+    ZoneMapRegistry.register(tier0, stats(tier0), tierStats.schema)
   }
 
   /** Age tier0 rows with ts < cutoff into the quantized tier (drop the
@@ -79,10 +79,10 @@ class TierManager(spark: SparkSession, root: String) {
     // consistent with data answers at this tier. (tier2/tier3 need no
     // zone map: chunk tiers ARE pre-aggregates; their stats query is a
     // plain fold, maxFromColdTier/maxFromTier3.)
-    ZoneMap.segmentStats(
-        out.withColumn("value", col("value_q").cast("double") / 100.0))
-      .write.mode("overwrite").parquet(stats(tier1))
-    ZoneMapRegistry.register(tier1, stats(tier1))
+    val tierStats = ZoneMap.segmentStats(
+      out.withColumn("value", col("value_q").cast("double") / 100.0))
+    tierStats.write.mode("overwrite").parquet(stats(tier1))
+    ZoneMapRegistry.register(tier1, stats(tier1), tierStats.schema)
     moved
   }
 

@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.{Materialize, Readings}
+import graft.operators.Readings
 
 /** O8 — hierarchical pre-aggregated stats ("zone map" / segment-stats tree).
   *
@@ -116,41 +116,36 @@ object ZoneMap {
 
   /** Interpolated per-signal percentiles served from the histogram alone —
     * no data scan. Equals percentile_cont over the dequantized values:
-    * rank index i = (n-1)p; the bracketing cells come from one cumulative
-    * window over the (tiny) per-signal histogram plus two equi-joins on
-    * signal_id with range post-filters — no sort of the raw data anywhere.
+    * rank index i = (n-1)p. One window over the raw cells (partitioned by
+    * signal, ordered by value_q, a ROWS frame) gives each cell its rank
+    * interval [strt, cume); the cells whose interval holds floor(i) or
+    * ceil(i) are kept and grouped per (signal, p) on the window's own
+    * partitioning, so the whole query is one shuffle. Cells of the same
+    * value_q from different segments or days need no fold first: the
+    * cell that holds a rank carries the value at that rank whichever way
+    * the ties are ordered.
     */
   def percentileFromHistogram(hist: DataFrame, ps: Seq[Double],
                               scale: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // materialized once: the folded histogram feeds the cumulative window
-    // (referenced by BOTH bracket sides) and the per-signal rank-index
-    // table — unmaterialized, the upstream histogram build (and for
-    // o8_percentile_sketch the whole readings seq_no window beneath it)
-    // executed 3x; the sketch is per-signal-cell-sized, the exact thing
-    // the stats tier persists anyway
-    val h = Materialize.checkpoint(foldHistogram(hist))
     val w = Window.partitionBy(col("signal_id")).orderBy(col("value_q"))
-    val cum = h.select(col("signal_id").as("c_sig"), col("value_q"),
-        sum(col("cnt")).over(w).as("cume"),
-        (sum(col("cnt")).over(w) - col("cnt")).as("strt"))
-    val idx = h.groupBy(col("signal_id")).agg(sum(col("cnt")).cast("long").as("n"))
-      .select(col("signal_id"), col("n"), explode(array(ps.map(lit): _*)).as("p"))
-      .withColumn("i", (col("n") - lit(1L)).cast("double") * col("p"))
-      .withColumn("lo", floor(col("i")).cast("long"))
-      .withColumn("hi", ceil(col("i")).cast("long"))
-    val vlo = cum.select(col("c_sig"), col("value_q").as("vlo"),
-      col("strt").as("lo_s"), col("cume").as("lo_c"))
-    val vhi = cum.select(col("c_sig").as("c_sig2"), col("value_q").as("vhi"),
-      col("strt").as("hi_s"), col("cume").as("hi_c"))
-    idx
-      .join(vlo, idx("signal_id") === vlo("c_sig") &&
-        vlo("lo_s") <= idx("lo") && idx("lo") < vlo("lo_c"))
-      .join(vhi, idx("signal_id") === vhi("c_sig2") &&
-        vhi("hi_s") <= idx("hi") && idx("hi") < vhi("hi_c"))
+    val cume = sum(col("cnt")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val i = (col("n") - lit(1L)).cast("double") * col("p")
+    val (lo, hi) = (floor(i).cast("long"), ceil(i).cast("long"))
+    def holds(rank: Column): Column = col("strt") <= rank && rank < col("cume")
+    hist.select(col("signal_id"), col("value_q"), cume.as("cume"),
+        (cume - col("cnt")).as("strt"),
+        sum(col("cnt")).over(w.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("n"))
+      .withColumn("p", explode(array(ps.map(lit): _*)))
+      .filter(holds(lo) || holds(hi))
+      .groupBy(col("signal_id"), col("p"))
+      .agg(max(col("n")).as("n"),
+        max(when(holds(lo), col("value_q"))).as("vlo"),
+        max(when(holds(hi), col("value_q"))).as("vhi"))
       .select(col("signal_id"), col("p"),
         round((col("vlo").cast("double") +
           (col("vhi") - col("vlo")).cast("double") *
-            (col("i") - col("lo").cast("double"))) / lit(scale), 6).as("v"))
+            (i - lo.cast("double"))) / lit(scale), 6).as("v"))
   }
 }

@@ -2,11 +2,12 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, NamedExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** O8 — zone-map answering as a Catalyst optimizer rule (the SQL-visible
   * flavor of the reference's stats-only query path,
@@ -23,39 +24,69 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * cases a zone map answers exactly.
   */
 object ZoneMapRegistry {
-  private val statsFor = TrieMap.empty[String, String]
+  private val statsFor = TrieMap.empty[String, (String, StructType)]
 
   private def norm(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  def register(dataPath: String, statsPath: String): Unit =
-    statsFor.put(norm(dataPath), statsPath)
+  /** `statsSchema` is the schema of the frame written to `statsPath`: the
+    * rule reads the stats with it, so planning never infers a schema.
+    */
+  def register(dataPath: String, statsPath: String, statsSchema: StructType): Unit =
+    statsFor.put(norm(dataPath), (statsPath, statsSchema))
 
-  def lookup(dataPath: String): Option[String] = statsFor.get(norm(dataPath))
+  def lookup(dataPath: String): Option[(String, StructType)] = statsFor.get(norm(dataPath))
 
   def clear(): Unit = statsFor.clear()
 }
 
 case class ZoneMapRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private val statsColFor = Map[Class[_], String](
-    classOf[Max] -> "vmax", classOf[Min] -> "vmin")
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(Nil, aggExprs, child, _) =>
-      rewrite(agg, aggExprs, child).getOrElse(agg)
+      rewrite(aggExprs, child).getOrElse(agg)
   }
 
-  private def rewrite(agg: Aggregate, aggExprs: Seq[NamedExpression],
-                      child: LogicalPlan): Option[LogicalPlan] = {
-    for {
-      statsPath <- registeredLeafStats(child)
-      rewritten <- rewriteAggExprs(aggExprs, statsPath)
-    } yield rewritten
+  /** Decided from the aggregate expressions and the registered schema
+    * before the stats are read, so a plan the rule leaves alone costs
+    * nothing; reading the stats with the registered schema runs no job.
+    */
+  private def rewrite(aggExprs: Seq[NamedExpression],
+                      child: LogicalPlan): Option[LogicalPlan] = for {
+    cols <- statsColumns(aggExprs)
+    (statsPath, schema) <- registeredLeafStats(child)
+    if cols.forall { case (ae, c) =>
+      schema.find(_.name == c).exists(_.dataType == ae.dataType) }
+    statsPlan = spark.read.schema(schema).parquet(statsPath).queryExecution.analyzed
+    attrs = statsPlan.output.map(a => a.name -> a).toMap
+  } yield Aggregate(Nil, aggExprs.zip(cols).map { case (al, (ae, c)) =>
+      Alias(ae.copy(aggregateFunction =
+        ae.aggregateFunction.withNewChildren(Seq(attrs(c))).asInstanceOf[AggregateFunction]),
+        al.name)(exprId = al.exprId)
+    }, statsPlan)
+
+  /** Each aggregate with the stats column that answers it, or None if
+    * one cannot be answered from stats: max/min over `value` read
+    * vmax/vmin; sum over the fixed-point `value_q` reads the exact long
+    * per-segment sums (the AggStats sum path, buffer_pool.rs:940-1101).
+    */
+  private def statsColumns(aggExprs: Seq[NamedExpression])
+      : Option[Seq[(AggregateExpression, String)]] = {
+    val cols = aggExprs.map {
+      case Alias(ae: AggregateExpression, _) if ae.filter.isEmpty && !ae.isDistinct =>
+        (ae.aggregateFunction match {
+          case Max(a: AttributeReference) if a.name == "value" => Some("vmax")
+          case Min(a: AttributeReference) if a.name == "value" => Some("vmin")
+          case Sum(a: AttributeReference, _) if a.name == "value_q" => Some("sum_q")
+          case _ => None
+        }).map(ae -> _)
+      case _ => None
+    }
+    if (cols.forall(_.isDefined)) Some(cols.flatten) else None
   }
 
   /** The child must be a pure column selection over one registered scan. */
-  private def registeredLeafStats(plan: LogicalPlan): Option[String] = plan match {
+  private def registeredLeafStats(plan: LogicalPlan): Option[(String, StructType)] = plan match {
     case Project(projectList, c) if projectList.forall(isPlainColumn) =>
       registeredLeafStats(c)
     case SubqueryAlias(_, c) => registeredLeafStats(c)
@@ -66,7 +97,6 @@ case class ZoneMapRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             .flatMap(p => ZoneMapRegistry.lookup(p.toString))
         case _ => None
       }
-    case _: Filter => None
     case _ => None
   }
 
@@ -74,37 +104,5 @@ case class ZoneMapRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case _: AttributeReference => true
     case Alias(_: AttributeReference, _) => true
     case _ => false
-  }
-
-  private def rewriteAggExprs(aggExprs: Seq[NamedExpression],
-                              statsPath: String): Option[LogicalPlan] = {
-    val statsPlan = spark.read.parquet(statsPath).queryExecution.analyzed
-    def statsAttr(name: String): Option[AttributeReference] =
-      statsPlan.output.collectFirst {
-        case a: AttributeReference if a.name == name => a
-      }
-
-    val rewritten = aggExprs.map {
-      case al @ Alias(ae: AggregateExpression, name) =>
-        (ae.aggregateFunction, ae.filter) match {
-          case (Max(a: AttributeReference), None) if a.name == "value" =>
-            statsAttr("vmax").map(s =>
-              Alias(ae.copy(aggregateFunction = Max(s)), name)(exprId = al.exprId))
-          case (Min(a: AttributeReference), None) if a.name == "value" =>
-            statsAttr("vmin").map(s =>
-              Alias(ae.copy(aggregateFunction = Min(s)), name)(exprId = al.exprId))
-          // sum over the fixed-point column: per-segment sum_q values are
-          // exact longs, so summing them equals summing the data column
-          // (the AggStats sum path, buffer_pool.rs:940-1101)
-          case (Sum(a: AttributeReference, _), None) if a.name == "value_q" =>
-            statsAttr("sum_q").map(s =>
-              Alias(ae.copy(aggregateFunction = Sum(s)), name)(exprId = al.exprId))
-          case _ => None
-        }
-      case _ => None
-    }
-    if (rewritten.forall(_.isDefined))
-      Some(Aggregate(Nil, rewritten.map(_.get), statsPlan))
-    else None
   }
 }

@@ -24,15 +24,18 @@ import org.apache.spark.sql.functions._
   * byte planes — and the two reference wins map onto the two columnar
   * wins:
   *  - *plane pruning*  = column pruning: a filter leg that references
-  *    only `p0..pj` reads only those columns (`ReadSchema` shows it);
-  *  - *early exit*     = predicate pushdown: the tie leg's equality on
-  *    the high planes reaches the scan as `PushedFilters`, so row groups
-  *    with no tie rows are skipped by min/max stats before any low plane
-  *    byte is read.
-  * The progressive filter is a UNION of disjoint legs — one per plane
-  * level, each deciding exactly the rows whose first non-tie level is
-  * that plane — so the whole refinement ladder is visible to Catalyst
-  * and each leg's scan is as narrow as that level needs. Result is a
+  *    only `p0` reads only that plane (`ReadSchema` shows it);
+  *  - *early exit*     = predicate pushdown: both legs of the range
+  *    filter test the plain `p0` column, so the predicate reaches the
+  *    scan as a `PushedFilters` entry and row groups (and files) whose
+  *    `p0` min/max rule the leg out are skipped before any byte is read.
+  * The progressive filter is a UNION of two disjoint legs: the rows the
+  * top plane decides (reading `p0` only) and the rows that tie a bound
+  * byte on it (reading every plane, but only in row groups that hold
+  * a tie byte). One leg per plane level would rescan the store once per
+  * level and test prefix expressions Parquet cannot push, so from n = 3
+  * planes on it reads more; the tie leg reads each plane column once
+  * over the row groups that the per-level legs each reread. Result is a
   * position list (signal_id, seq_no), the reference's bitmap-of-row-ids
   * result shape (query/bit_vec_iter.rs:8-49).
   *
@@ -78,41 +81,25 @@ object BuffStore {
     (0 until n).map(i => shiftleft(col(s"p$i").cast("long"), shiftBits(n, i)))
       .reduce(_ + _) + lit(base)
 
-  /** Progressive range filter: positions with value_q in [lo, hi].
-    *
-    * Leg j qualifies rows whose plane-prefix is strictly inside the
-    * bound prefixes at level j after tying at every level above —
-    * referencing only p0..pj. The last leg resolves remaining full-depth
-    * ties with the exact compare. Legs are disjoint by construction
-    * (first non-tie level is unique), so the union is exact.
+  /** Progressive range filter: positions with value_q in [lo, hi], as
+    * two disjoint legs split on the top plane's bound bytes `lo0`/`hi0`:
+    *  - decided: `lo0 < p0 < hi0` is inside the range whatever the lower
+    *    planes hold, so this leg reads `p0` alone;
+    *  - tie: `p0` equals a bound byte and the exact compare on the
+    *    reconstructed value settles the row.
+    * Both predicates are on the plain `p0` column, so both reach Parquet.
     */
   def rangeProgressive(planesDf: DataFrame, base: Long, n: Int,
                        lo: Long, hi: Long): DataFrame = {
-    val loA = lo - base
-    val hiA = hi - base
-    // prefix of the adjusted value through plane j, and the bound prefixes
-    def prefix(j: Int): Column =
-      (0 to j).map(i => shiftleft(col(s"p$i").cast("long"), 8 * (j - i)))
-        .reduce(_ + _)
-    def loP(j: Int): Long = loA >> shiftBits(n, j)   // floor-div, negative-safe
-    def hiP(j: Int): Long = hiA >> shiftBits(n, j)
-    def tieAbove(j: Int): Column =
-      (0 until j).map(i => prefix(i) === lit(loP(i)) || prefix(i) === lit(hiP(i)))
-        .foldLeft(lit(true))(_ && _)
+    val (loA, hiA) = (lo - base, hi - base)
+    val (lo0, hi0) = (loA >> shiftBits(n, 0), hiA >> shiftBits(n, 0)) // floor-div
+    val p0 = col("p0")
     val keys = Seq(col("signal_id"), col("seq_no"))
-    val decidedLegs = (0 until n - 1).map { j =>
-      planesDf
-        .filter(tieAbove(j) && prefix(j) > lit(loP(j)) && prefix(j) < lit(hiP(j)))
-        .select(keys: _*)
-    }
-    // full-depth leg: rows that tied on every plane above; prefix(n-1) IS
-    // the adjusted value, so this is the exact residual compare the
-    // reference runs on the surviving candidate set
-    val finalLeg = planesDf
-      .filter(tieAbove(n - 1) &&
-        prefix(n - 1) >= lit(loA) && prefix(n - 1) <= lit(hiA))
-      .select(keys: _*)
-    (decidedLegs :+ finalLeg).reduce(_ union _)
+    planesDf.filter(p0 > lit(lo0) && p0 < lit(hi0)).select(keys: _*)
+      .union(planesDf
+        .filter((p0 === lit(lo0) || p0 === lit(hi0)) &&
+          reconstruct(0L, n).between(loA, hiA))
+        .select(keys: _*))
   }
 
   /** Exact per-signal sum/count of value_q folded plane-wise — the BUFF

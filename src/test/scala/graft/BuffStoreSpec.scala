@@ -7,9 +7,9 @@ import graft.operators.Readings
 import graft.sources.BuffStore
 
 /** BUFF byte-plane store: roundtrip exactness, progressive-filter
-  * equivalence with the raw predicate, plane pruning (a decided leg's
-  * scan reads only the planes it needs) and pushdown (the tie legs'
-  * high-plane equalities reach the Parquet scan).
+  * equivalence with the raw predicate, plane pruning (the decided leg's
+  * scan reads only the top plane) and pushdown (both legs' top-plane
+  * predicates reach the Parquet scan).
   */
 class BuffStoreSpec extends AnyFunSuite with SparkTest {
 
@@ -77,6 +77,52 @@ class BuffStoreSpec extends AnyFunSuite with SparkTest {
     // tie bytes are skipped by stats before low planes are read
     assert(scans.exists(_.dataFilters.exists(_.references.exists(_.name == "p0"))),
       "no scan carries a pushed p0 filter")
+  }
+
+  test("the range filter is two scans, each with a pushed p0 filter") {
+    for (n <- Seq(3, 4)) {
+      val dir = Files.createTempDirectory(s"graft-buff$n").toString + "/planes"
+      BuffStore.write(BuffStore.planes(readings, base, n), dir)
+      val q = BuffStore.rangeProgressive(BuffStore.read(spark, dir), base, n,
+        12345L, 34567L)
+      val scans = q.queryExecution.executedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+      assert(scans.size == 2, s"n=$n: ${scans.size} scans")
+      assert(scans.forall(_.dataFilters.exists(_.references.exists(_.name == "p0"))),
+        s"n=$n: a scan without a pushed p0 filter")
+    }
+  }
+
+  test("range filter equals the raw predicate at the domain edges, n = 1..3") {
+    import spark.implicits._
+    val b = 1000L
+    for (n <- 1 to 3) {
+      val cap = 1L << (8 * n)
+      // values spread over the whole adjusted domain [0, 256^n), both
+      // extremes included
+      val rows = ((0L until 3000L).map(k => (k % 7, k, b + (k * 7919L) % cap)) ++
+        Seq((9L, 1L, b), (9L, 2L, b + cap - 1))).toDF("signal_id", "seq_no", "value_q")
+      val dir = Files.createTempDirectory(s"graft-buff-edge$n").toString + "/planes"
+      BuffStore.write(BuffStore.planes(rows, b, n), dir)
+      val pl = BuffStore.read(spark, dir)
+      val plane = cap >> 8
+      for ((lo, hi) <- Seq(
+          (b - 50L, b + cap / 3),                 // lo below base
+          (b + cap / 5, b + cap + 100L),          // hi beyond 256^n
+          (b + 7919L % cap, b + 7919L % cap),     // lo == hi
+          (b + cap / 2, b + cap / 4),             // lo > hi: empty
+          (b + plane, b + 2 * plane - 1L),        // plane-aligned
+          (b - 10L, b + cap + 10L))) {            // the whole domain
+        // sorted sequences, not sets: a row in both legs would repeat
+        val got = BuffStore.rangeProgressive(pl, b, n, lo, hi)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+        val want = rows.filter(col("value_q").between(lo, hi))
+          .select(col("signal_id"), col("seq_no"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+        assert(got == want, s"n=$n [$lo,$hi]: progressive=${got.size} raw=${want.size}")
+      }
+    }
   }
 
   test("plane-wise sum is exactly sum(value_q) per signal") {

@@ -192,4 +192,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkTest
       assert(spans.nonEmpty, s"$name has no codegen span")
     }
   }
+
+  test("o8_percentile_sketch builds with no job beyond the events schema read") {
+    // building any readings query reads the events schema; o1_scan is
+    // that read alone
+    def buildJobs(name: String): Long = counters(SparkEntry.queries(name)(spark, sf))("jobs")
+    assert(buildJobs("o8_percentile_sketch") == buildJobs("o1_scan"))
+  }
 }

@@ -21,6 +21,14 @@ trait SparkTest extends BeforeAndAfterAll { self: Suite =>
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
 
+  /** The work counters (jobs, tasks, input records, ...) of running `f`. */
+  def counters(f: => Unit): Map[String, Long] = {
+    val l = new Work.Listener
+    spark.sparkContext.addSparkListener(l)
+    try Work.measure(spark, l)(f).counters
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
   override def afterAll(): Unit = {
     // shared across suites in one forked JVM; do not stop
     super.afterAll()

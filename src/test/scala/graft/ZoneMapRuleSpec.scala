@@ -11,16 +11,17 @@ import graft.plans.{ZoneMap, ZoneMapRegistry}
   */
 class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
 
-  private lazy val (tierPath, statsPath) = {
+  private lazy val (tierPath, statsPath, statsSchema) = {
     val base = Files.createTempDirectory("graft-zonemap").toString
     val r = Readings.of(spark, "/root/testdata/sf0.001")
     r.write.mode("overwrite").parquet(s"$base/tier")
-    ZoneMap.segmentStats(r).write.mode("overwrite").parquet(s"$base/stats")
-    (s"$base/tier", s"$base/stats")
+    val stats = ZoneMap.segmentStats(r)
+    stats.write.mode("overwrite").parquet(s"$base/stats")
+    (s"$base/tier", s"$base/stats", stats.schema)
   }
 
   test("max/min over a registered tier is rewritten to the stats table") {
-    ZoneMapRegistry.register(tierPath, statsPath)
+    ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
     val q = spark.read.parquet(tierPath)
       .agg(max(col("value")).as("vmax"), min(col("value")).as("vmin"))
     val plan = q.queryExecution.executedPlan.toString
@@ -35,7 +36,7 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
   }
 
   test("sum over the fixed-point column is rewritten to the stats sums") {
-    ZoneMapRegistry.register(tierPath, statsPath)
+    ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
     val q = spark.read.parquet(tierPath)
       .agg(sum(col("value_q")).as("sum_q"))
     val plan = q.queryExecution.executedPlan.toString
@@ -48,12 +49,48 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
   }
 
   test("filtered or grouped aggregates are NOT rewritten") {
-    ZoneMapRegistry.register(tierPath, statsPath)
+    ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
     val filtered = spark.read.parquet(tierPath)
       .filter(col("signal_id") === 1).agg(max(col("value")))
     assert(filtered.queryExecution.executedPlan.toString.contains(tierPath))
     val grouped = spark.read.parquet(tierPath)
       .groupBy(col("signal_id")).agg(max(col("value")))
     assert(grouped.queryExecution.executedPlan.toString.contains(tierPath))
+  }
+
+  test("a distinct sum is NOT rewritten") {
+    // per-segment sums cannot answer sum(DISTINCT value_q)
+    ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
+    val q = spark.read.parquet(tierPath).agg(sum_distinct(col("value_q")))
+    assert(q.queryExecution.executedPlan.toString.contains(tierPath))
+    val direct = spark.read.parquet(tierPath).select(col("value_q")).distinct()
+      .agg(sum(col("value_q"))).collect()(0).getLong(0)
+    assert(q.collect()(0).getLong(0) == direct)
+  }
+
+  test("planning an ungrouped aggregate over a registered tier runs no job") {
+    ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
+    val rewritable = spark.read.parquet(tierPath).agg(max(col("value")))
+    val other = spark.read.parquet(tierPath)
+      .agg(min(col("value_q")), max(col("value_q")))
+    for (q <- Seq(rewritable, other))
+      assert(counters(q.queryExecution.optimizedPlan)("jobs") == 0L,
+        s"planning ran a job:\n${q.queryExecution.optimizedPlan}")
+    assert(rewritable.queryExecution.executedPlan.toString.contains(statsPath))
+    assert(other.queryExecution.executedPlan.toString.contains(tierPath))
+  }
+
+  test("a stats table without the needed column is not used") {
+    // registered without vmax: max(value) must read the data, not nulls
+    ZoneMapRegistry.register(tierPath, statsPath,
+      org.apache.spark.sql.types.StructType(statsSchema.filterNot(_.name == "vmax")))
+    try {
+      val q = spark.read.parquet(tierPath).agg(max(col("value")))
+      assert(q.queryExecution.executedPlan.toString.contains(tierPath))
+      // a filter between scan and aggregate keeps the rule off
+      val direct = spark.read.parquet(tierPath).filter(col("value").isNotNull)
+        .agg(max(col("value"))).collect()(0).getDouble(0)
+      assert(q.collect()(0).getDouble(0) == direct)
+    } finally ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
   }
 }
