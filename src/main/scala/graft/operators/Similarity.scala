@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{PqDecode, PqEncode, VecDot, VecQuantize, VecSqDist}
@@ -61,10 +63,28 @@ object Similarity {
     * REVERTED: their pair count is linear in the corpus, the distance
     * loop was never the bottleneck, and the added exchange cost those
     * rows ~0.1 s each (ann_brute 0.40 -> 0.53 in the same-window sweep).
+    *
+    * The width is read off the physical plan ([[arrivingPartitions]]), so
+    * building the join runs no job.
     */
   private def widenForCompute(df: DataFrame, key: String): DataFrame = {
     val n = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= n) df else df.repartition(n, col(key))
+    if (arrivingPartitions(df).exists(_ >= n)) df else df.repartition(n, col(key))
+  }
+
+  /** The partition count `df` arrives in, read off its physical plan
+    * without running it. An exchange-free plan's RDD partitions are its
+    * scans' file splits, and building that RDD lists files and runs
+    * nothing. Under an exchange or a subquery the count is None: adaptive
+    * execution settles it only when the plan runs (a small aggregate is
+    * coalesced to one partition), and asking `df.rdd` for it runs the
+    * shuffle stage.
+    */
+  private def arrivingPartitions(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.executedPlan
+    val settledAtRun = plan.exists(p => p.isInstanceOf[AdaptiveSparkPlanExec] ||
+      p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
+    if (settledAtRun) None else Some(plan.execute().getNumPartitions)
   }
 
   /** Brute-force cosine top-k: for each probe (small, broadcast), rank the

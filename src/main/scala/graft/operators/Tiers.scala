@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TierTransforms
+import graft.sources.Pages
 
 /** The lossy tier ladder as batch compaction (the Spark shape of the
   * reference's recoding daemons, database/src/recoding_daemon.rs:257-441):
@@ -264,7 +265,9 @@ object Tiers {
       .withColumn("recode", col("cr_paa") < targetCr)
 
   /** Write a tier as partitioned parquet — the storage shape at scale
-    * (partition pruning on signal bucket, row-group stats for skipping).
+    * (partition pruning on signal bucket, page stats for skipping: pages
+    * are capped at `Pages.Rows` rows, so a pushed predicate skips
+    * 1,024-row pages of a signal file, not only whole files).
     * Returns the number of rows written, observed on the write itself
     * (`Dataset.observe`): a caller that needs the count pays no second
     * pass over `df` and none of its shuffles. An empty `df` returns 0.
@@ -273,7 +276,8 @@ object Tiers {
     val obs = Observation()
     df.withColumn("sig_bucket", pmod(col("signal_id"), lit(buckets)))
       .observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite").partitionBy("sig_bucket").parquet(path)
+      .write.mode("overwrite").options(Pages.WriterOptions)
+      .partitionBy("sig_bucket").parquet(path)
     obs.get("rows").asInstanceOf[Long]
   }
 }

@@ -25,19 +25,23 @@ import org.apache.spark.sql.functions._
   * wins:
   *  - *plane pruning*  = column pruning: a filter leg that references
   *    only `p0` reads only that plane (`ReadSchema` shows it);
-  *  - *early exit*     = predicate pushdown: both legs of the range
-  *    filter test the plain `p0` column, so the predicate reaches the
-  *    scan as a `PushedFilters` entry and row groups (and files) whose
-  *    `p0` min/max rule the leg out are skipped before any byte is read.
+  *  - *early exit*     = predicate pushdown: each leg of the range
+  *    filter is a predicate over the plain plane columns only, so the
+  *    whole of it reaches the scan as a `PushedFilters` entry. The store
+  *    is written with pages capped at `Pages.Rows` rows, and Parquet's
+  *    page index (per-page min/max of every plane column) is the
+  *    reference's per-segment zone map: each 1,024-row page whose plane
+  *    stats rule the leg out is skipped before any of its bytes are read,
+  *    as are whole files.
   * The progressive filter is a UNION of two disjoint legs: the rows the
   * top plane decides (reading `p0` only) and the rows that tie a bound
-  * byte on it (reading every plane, but only in row groups that hold
-  * a tie byte). One leg per plane level would rescan the store once per
-  * level and test prefix expressions Parquet cannot push, so from n = 3
-  * planes on it reads more; the tie leg reads each plane column once
-  * over the row groups that the per-level legs each reread. Result is a
-  * position list (signal_id, seq_no), the reference's bitmap-of-row-ids
-  * result shape (query/bit_vec_iter.rs:8-49).
+  * byte on it (reading every plane, but only in pages that hold a tie
+  * byte and whose lower-plane stats admit the bound). One leg per plane
+  * level would rescan the store once per level, so from n = 3 planes on
+  * it reads more; the tie leg reads each plane column once over the
+  * pages that the per-level legs each reread. Result is a position list
+  * (signal_id, seq_no), the reference's bitmap-of-row-ids result shape
+  * (query/bit_vec_iter.rs:8-49).
   *
   * Plane-wise sum folds `sum(p_i) << 8*(n-1-i)` per plane plus
   * `cnt * base` — all integer math on longs, so it is exactly
@@ -81,13 +85,36 @@ object BuffStore {
     (0 until n).map(i => shiftleft(col(s"p$i").cast("long"), shiftBits(n, i)))
       .reduce(_ + _) + lit(base)
 
+  /** `x >= a` (`ge`) or `x <= a` for the adjusted value x held in the
+    * planes p0..p{n-1}, as the lexicographic compare over the plain plane
+    * columns: for n = 3, `x >= a` is
+    * `p0 > a0 || (p0 === a0 && (p1 > a1 || (p1 === a1 && p2 >= a2)))`.
+    * A bound outside the domain [0, 256^n) is clamped to a constant. Every
+    * conjunct is a column-vs-literal compare, so Parquet prunes pages on
+    * the stats of each plane.
+    */
+  private def planeBound(a: Long, n: Int, ge: Boolean): Column = {
+    val top = if (n >= 8) Long.MaxValue else (1L << (8 * n)) - 1L
+    val (always, never) = if (ge) (a <= 0L, a > top) else (a >= top, a < 0L)
+    if (always) lit(true)
+    else if (never) lit(false)
+    else {
+      def p(i: Int) = col(s"p$i")
+      def b(i: Int) = lit(((a >> shiftBits(n, i)) & 255L).toInt)
+      (n - 2 to 0 by -1).foldLeft(if (ge) p(n - 1) >= b(n - 1) else p(n - 1) <= b(n - 1)) {
+        (lower, i) => (if (ge) p(i) > b(i) else p(i) < b(i)) || (p(i) === b(i) && lower)
+      }
+    }
+  }
+
   /** Progressive range filter: positions with value_q in [lo, hi], as
     * two disjoint legs split on the top plane's bound bytes `lo0`/`hi0`:
     *  - decided: `lo0 < p0 < hi0` is inside the range whatever the lower
     *    planes hold, so this leg reads `p0` alone;
-    *  - tie: `p0` equals a bound byte and the exact compare on the
-    *    reconstructed value settles the row.
-    * Both predicates are on the plain `p0` column, so both reach Parquet.
+    *  - tie: `p0` equals a bound byte and the exact lexicographic compare
+    *    over the planes ([[planeBound]]) settles the row.
+    * Both legs are pushed whole to Parquet, which skips each file and
+    * each 1,024-row page whose plane stats rule a leg out.
     */
   def rangeProgressive(planesDf: DataFrame, base: Long, n: Int,
                        lo: Long, hi: Long): DataFrame = {
@@ -98,7 +125,7 @@ object BuffStore {
     planesDf.filter(p0 > lit(lo0) && p0 < lit(hi0)).select(keys: _*)
       .union(planesDf
         .filter((p0 === lit(lo0) || p0 === lit(hi0)) &&
-          reconstruct(0L, n).between(loA, hiA))
+          planeBound(loA, n, ge = true) && planeBound(hiA, n, ge = false))
         .select(keys: _*))
   }
 
@@ -264,10 +291,12 @@ object BuffStore {
   }
 
   /** Persist the plane representation (the on-disk BUFF layout: one
-    * Parquet column per byte plane, dictionary/bit-pack encoded).
+    * Parquet column per byte plane, dictionary/bit-pack encoded, in pages
+    * of at most `Pages.Rows` rows whose per-plane min/max the range
+    * filter skips on).
     */
   def write(planesDf: DataFrame, path: String): Unit =
-    planesDf.write.mode("overwrite").parquet(path)
+    planesDf.write.mode("overwrite").options(Pages.WriterOptions).parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)

@@ -104,6 +104,10 @@ object Ingest {
     * write and the checkpoint commit replaces its own partitions instead
     * of appending duplicates (which would double-count cnt/sum in the
     * folded stats and duplicate tier-0 rows).
+    *
+    * The tier-0 files are written with pages capped at `Pages.Rows` rows
+    * (the layout `Tiers.writeTier` gives every tier), so pushed
+    * predicates over the landing skip 1,024-row pages, not only files.
     */
   def tier0Writer(readings: DataFrame, tier0Dir: String, checkpointDir: String,
                   buckets: Int = 32, statsDir: Option[String] = None,
@@ -118,6 +122,7 @@ object Ingest {
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
+          .options(graft.sources.Pages.WriterOptions)
           .partitionBy("batch_id", "sig_bucket")
           .parquet(tier0Dir)
         statsDir.foreach { sd =>

@@ -73,10 +73,19 @@ class BuffStoreSpec extends AnyFunSuite with SparkTest {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
     // the full-depth leg filters on p0 equality (tie prefixes) — that
-    // conjunct must appear as a pushed data filter so row groups with no
+    // conjunct must appear as a pushed data filter so pages with no
     // tie bytes are skipped by stats before low planes are read
     assert(scans.exists(_.dataFilters.exists(_.references.exists(_.name == "p0"))),
       "no scan carries a pushed p0 filter")
+    // the whole tie compare is pushed: a bound compare on every lower
+    // plane, not only the p0 equality and inferred null checks, so page
+    // stats of p1..p{n-1} prune too
+    val tie = scans.filter(_.requiredSchema.fieldNames.contains(s"p${N - 1}"))
+    assert(tie.size == 1, s"${tie.size} scans read the lowest plane")
+    val pushed = tie.head.metadata("PushedFilters")
+    for (i <- 1 until N)
+      assert(s"(GreaterThan|LessThan)(OrEqual)?\\(p$i,".r.findFirstIn(pushed).isDefined,
+        s"no pushed bound compare on p$i: $pushed")
   }
 
   test("the range filter is two scans, each with a pushed p0 filter") {

@@ -63,4 +63,39 @@ class SimilaritySpec extends AnyFunSuite with SparkTest {
     val out = Similarity.knn1(test, train).collect()
     assert(out.length == 1 && out(0).getAs[Long]("pred_label") == 2L)
   }
+
+  test("building knn1 and cosinePairsBrute runs no job; a side already as wide as the cluster stays") {
+    import spark.implicits._
+    val n = spark.sparkContext.defaultParallelism
+    val vecs = (0 until 64).map(i => (i.toLong, Array(i.toFloat, (i % 7).toFloat), (i % 3).toLong))
+      .toDF("id", "v", "label")
+    def widened(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists {
+        case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+          r.optNumPartitions.contains(n)
+        case _ => false
+      }
+    // an exchange under the quadratic side: adaptive execution settles its
+    // width only when the plan runs, so the side is widened without asking
+    val grouped = vecs.groupBy(col("id"))
+      .agg(first(col("v")).as("v"), first(col("label")).as("label"))
+    val test = vecs.filter(col("id") < 4)
+      .select(col("id").as("test_id"), col("v").as("te"), col("label").as("true_label"))
+    def train(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id").as("train_id"), col("v").as("tre"), col("label").as("train_label"))
+    assert(counters(Similarity.knn1(test, train(grouped)))("jobs") == 0L)
+    assert(counters(Similarity.cosinePairsBrute(grouped, "id", "v", 0.9))("jobs") == 0L)
+    assert(widened(Similarity.knn1(test, train(grouped))))
+    // scans: one split is widened, n or more splits are left as they are
+    val dir = java.nio.file.Files.createTempDirectory("graft-widen").toString
+    vecs.coalesce(1).write.parquet(s"$dir/one")
+    vecs.repartition(2 * n).write.parquet(s"$dir/many")
+    val (one, many) = (spark.read.parquet(s"$dir/one"), spark.read.parquet(s"$dir/many"))
+    assert(many.rdd.getNumPartitions >= n)
+    assert(counters(Similarity.cosinePairsBrute(many, "id", "v", 0.9))("jobs") == 0L)
+    assert(widened(Similarity.cosinePairsBrute(one, "id", "v", 0.9)))
+    assert(widened(Similarity.knn1(test, train(one))))
+    assert(!widened(Similarity.cosinePairsBrute(many, "id", "v", 0.9)))
+    assert(!widened(Similarity.knn1(test, train(many))))
+  }
 }
