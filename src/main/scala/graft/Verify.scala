@@ -13,6 +13,9 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the deployment shape: native functions, the zone-map rule and the
+      // as-of strategy are live, as in every session of the cluster
+      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Bench.quietCheckpointRelease()

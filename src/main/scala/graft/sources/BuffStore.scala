@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** BUFF-style byte-plane decomposition of the fixed-point column — the
   * reference's flagship compressed-domain query path re-expressed
@@ -47,10 +48,19 @@ import org.apache.spark.sql.functions._
   * `cnt * base` — all integer math on longs, so it is exactly
   * `sum(value_q)` (the fixed-point exactness BUFF's plane sum relies on).
   *
+  * The stats are read before the rows. [[read]] takes the store's schema
+  * from one footer, read in the calling JVM, so opening the store runs no
+  * job. On a bare store, [[maxWithArgmax]] settles the top plane from the
+  * row-group max of `p0` in the footers (the reference's first refinement
+  * step) and folds only the rows that hold it, in the files and pages
+  * whose `p0` stats admit that byte.
+  *
   * 100 TB shape: decomposition and reconstruction are map-only column
   * expressions (codegen'd shifts/masks, no UDF); the range filter is
   * scan+filter+union (no shuffle, no join); the sum is one partial+final
-  * aggregation. Nothing here collects or breaks partition parallelism.
+  * aggregation. Nothing here collects or breaks partition parallelism;
+  * the footer reads are metadata reads in the calling JVM, bounded by
+  * Spark's own parallel-listing threshold.
   */
 object BuffStore {
 
@@ -151,18 +161,44 @@ object BuffStore {
     * maxima — expressed as a broadcast semi-join against the one-row
     * maximum, so the whole thing is declarative: no driver loop, no
     * collect.
+    *
+    * The first level is decided from the footers when `planesDf` is a
+    * bare scan of the store ([[topPlaneMax]]): the fold then runs over the
+    * rows whose `p0` is that byte, a predicate Parquet pushes, so files
+    * and pages without it are skipped. On a derived frame (`restore`, or
+    * planes computed from readings) the fold runs over every row.
     */
   def maxWithArgmax(planesDf: DataFrame, base: Long, n: Int): DataFrame = {
     import org.apache.spark.sql.functions.{max => fmax}
+    val rows = topPlaneMax(planesDf).fold(planesDf)(m0 => planesDf.filter(col("p0") === lit(m0)))
     // per-level maxima as a chain of conditional aggregates: m0 = max(p0),
     // m1 = max(p1 | p0 = m0), ... — computed in ONE aggregation pass by
     // folding lexicographically: max(struct(p0, p1, ..)) is exactly the
     // plane-major byte refinement (struct ordering = lexicographic)
     val packed = struct((0 until n).map(i => col(s"p$i")): _*)
-    val top = planesDf.agg(fmax(packed).as("m"))
-    planesDf.join(broadcast(top), packed === col("m"))
+    val top = rows.agg(fmax(packed).as("m"))
+    rows.join(broadcast(top), packed === col("m"))
       .select(col("signal_id"), col("seq_no"),
         reconstruct(base, n).as("value_q"))
+  }
+
+  /** The largest `p0` of a bare plane store, from the row-group stats in
+    * its footers. None (read every row) when the frame is not a bare scan
+    * with an int `p0`, when it spans more files than Spark lists without a
+    * job (`spark.sql.sources.parallelPartitionDiscovery.threshold`), or
+    * when a non-empty row group has no `p0` stats.
+    */
+  private def topPlaneMax(planesDf: DataFrame): Option[Int] = {
+    val spark = planesDf.sparkSession
+    val plan = planesDf.queryExecution.analyzed
+    for {
+      scan <- BareScan.unapply(plan)
+      p0 <- plan.output.find(_.name == "p0") if p0.dataType == IntegerType
+      column <- scan.column(p0)
+      files = scan.relation.location.inputFiles.toSeq
+      if files.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+      m0 <- Pages.footerMaxInt(spark, files, column)
+    } yield m0
   }
 
   /** Precision-progressive sum (split_double.rs:2949 `sum@precision`):
@@ -298,6 +334,11 @@ object BuffStore {
   def write(planesDf: DataFrame, path: String): Unit =
     planesDf.write.mode("overwrite").options(Pages.WriterOptions).parquet(path)
 
+  /** The store at `path`, read with the schema of one footer (the file
+    * Spark's inference would read, without its job). A missing or empty
+    * store has no footer; Spark's inference then raises its own error.
+    */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Pages.footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Readings
@@ -282,5 +283,44 @@ class BuffStoreSpec extends AnyFunSuite with SparkTest {
     assert(BuffStore.planesFor(256L) == 2)
     assert(BuffStore.planesFor(65535L) == 2)
     assert(BuffStore.planesFor(65536L) == 3)
+  }
+
+  test("read takes the schema from one footer: no job, the inferred schema") {
+    val root = Files.createTempDirectory("graft-buff-read").toString
+    val (_, maj) = BuffStore.outlierEncode(BuffStore.read(spark, storePath), N)
+    BuffStore.write(maj, s"$root/dict")
+    for (dir <- Seq(storePath, s"$root/dict")) {
+      var df: DataFrame = null
+      val jobs = counters { df = BuffStore.read(spark, dir) }("jobs")
+      assert(jobs == 0L, s"reading $dir ran $jobs jobs")
+      assert(df.schema == spark.read.parquet(dir).schema)
+    }
+    // a missing or empty store still fails loudly
+    intercept[AnalysisException](BuffStore.read(spark, s"$root/missing"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/empty"))
+    intercept[AnalysisException](BuffStore.read(spark, s"$root/empty"))
+  }
+
+  test("maxWithArgmax over a derived frame keeps the fold over every row") {
+    // the fold as maxWithArgmax builds it, with no narrowing filter
+    def fold(pl: DataFrame): DataFrame = {
+      val packed = struct((0 until N).map(i => col(s"p$i")): _*)
+      pl.join(broadcast(pl.agg(max(packed).as("m"))), packed === col("m"))
+        .select(col("signal_id"), col("seq_no"), BuffStore.reconstruct(base, N).as("value_q"))
+    }
+    def samePlan(a: DataFrame, b: DataFrame) =
+      a.queryExecution.optimizedPlan.sameResult(b.queryExecution.optimizedPlan)
+    val root = Files.createTempDirectory("graft-buff-derived").toString
+    val pl = BuffStore.read(spark, storePath)
+    val (enc, maj) = BuffStore.outlierEncode(pl, N)
+    BuffStore.write(enc, s"$root/planes")
+    BuffStore.write(maj, s"$root/dict")
+    val restored = BuffStore.restore(BuffStore.read(spark, s"$root/planes"),
+      BuffStore.read(spark, s"$root/dict"), N)
+    for (derived <- Seq(restored, BuffStore.planes(readings, base, N)))
+      assert(samePlan(BuffStore.maxWithArgmax(derived, base, N), fold(derived)))
+    // the bare store's plan narrows, to the same answer
+    assert(!samePlan(BuffStore.maxWithArgmax(pl, base, N), fold(pl)))
+    assert(BuffStore.maxWithArgmax(pl, base, N).collect().toSet == fold(pl).collect().toSet)
   }
 }

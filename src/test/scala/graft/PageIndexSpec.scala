@@ -116,4 +116,75 @@ class PageIndexSpec extends AnyFunSuite with SparkTest {
     assert(planesRead < fileRows, s"the plane range read $planesRead records of " +
       s"$touched touched signal files ($fileRows rows); the tier0 range read $rangeRead")
   }
+
+  /** Rows in the pages of `dir`'s files whose int `column` min/max holds `v`,
+    * from each file's column index.
+    */
+  private def rowsInPagesHolding(dir: String, column: String, v: Int): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    def int(b: java.nio.ByteBuffer) = b.order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(0)
+    spark.read.parquet(dir).inputFiles.toSeq.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try {
+        (for (b <- reader.getRowGroups.asScala.toSeq;
+              c <- b.getColumns.asScala if c.getPath.toDotString == column;
+              ci = reader.readColumnIndex(c); oi = reader.readOffsetIndex(c);
+              i <- 0 until oi.getPageCount
+              if !ci.getNullPages.get(i) &&
+                int(ci.getMinValues.get(i)) <= v && v <= int(ci.getMaxValues.get(i)))
+          yield (if (i + 1 < oi.getPageCount) oi.getFirstRowIndex(i + 1) else b.getRowCount) -
+            oi.getFirstRowIndex(i)).sum
+      } finally reader.close()
+    }.sum
+  }
+
+  /** (max positions, records read) of `maxWithArgmax` over the store in `dir`;
+    * each position is (signal_id, seq_no, value_q).
+    */
+  private def maxRead(dir: String, b: Long, k: Int): (Set[(Long, Long, Long)], Long) = {
+    var got = Set.empty[(Long, Long, Long)]
+    val c = counters {
+      got = BuffStore.maxWithArgmax(BuffStore.read(spark, dir), b, k).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    }
+    (got, c("input_records"))
+  }
+
+  private def maxRows(df: DataFrame): Set[(Long, Long, Long)] = {
+    val top = df.agg(max(col("value_q"))).first().getLong(0)
+    df.filter(col("value_q") === top).select(col("signal_id"), col("seq_no"), col("value_q"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+  }
+
+  test("maxWithArgmax reads only the pages that hold the footers' top plane byte") {
+    val want = maxRows(walk)
+    val m0 = ((want.head._3 - base) >> (8 * (n - 1))).toInt
+    val (got, read) = maxRead(planesDir, base, n)
+    assert(got == want)
+    val bound = 2L * rowsInPagesHolding(planesDir, "p0", m0)
+    assert(read <= bound, s"read $read records; pages holding p0 = $m0 hold ${bound / 2} rows")
+    assert(bound < 2L * Signals * RowsPerSignal, "every page holds the top byte")
+  }
+
+  test("maxWithArgmax reads only the top plane's pages when the maximum ties across two files") {
+    // two signals' walks, each lifted to one shared maximum at one position
+    val twoWalks = walk.filter(col("signal_id") < 2L)
+    val top = twoWalks.agg(max(col("value_q"))).first().getLong(0) + 1000L
+    val lifted = (col("signal_id") === 0L && col("seq_no") === 100L) ||
+      (col("signal_id") === 1L && col("seq_no") === 4000L)
+    val tie = twoWalks.withColumn("value_q", when(lifted, lit(top)).otherwise(col("value_q")))
+    val b = tie.agg(min(col("value_q"))).first().getLong(0)
+    val k = BuffStore.planesFor(top - b)
+    val dir = s"$root/tie-planes"
+    BuffStore.write(BuffStore.planes(tie, b, k), dir)
+    val files = BuffStore.read(spark, dir).filter(col("p0") === lit(((top - b) >> (8 * (k - 1))).toInt))
+      .select(input_file_name()).distinct().count()
+    assert(files == 2L, s"the maximum lands in $files files")
+
+    val (got, read) = maxRead(dir, b, k)
+    assert(got == Set((0L, 100L, top), (1L, 4000L, top)))
+    val bound = 2L * rowsInPagesHolding(dir, "p0", ((top - b) >> (8 * (k - 1))).toInt)
+    assert(read <= bound, s"read $read records; the top byte's pages hold ${bound / 2} rows")
+    assert(bound <= 4L * Pages.Rows, s"the top byte's pages hold ${bound / 2} rows")
+  }
 }
