@@ -200,7 +200,7 @@ object Bench {
     val confirmedByBatch: Map[Long, Long] =
       if (!new java.io.File(s"$store/pairs").isDirectory) Map.empty
       else spark.read.parquet(s"$store/pairs")
-        .groupBy(col("batch_id")).agg(count(lit(1)).as("n"))
+        .groupBy(col("batch_id").cast("long")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     printGrowth("dedup_growth", inDir, total, q, "docs_before", identity,
       b => s""""confirmed_pairs":${confirmedByBatch.getOrElse(b, 0L)},""")

@@ -138,8 +138,7 @@ object Bandit {
       val first = chunks.next()
       if (!chunks.hasNext) chunkDf(first)
       else {
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-bandit-decisions").toString
+        val dir = graft.operators.Materialize.scratchDir("bandit-decisions")
         chunkDf(first).write.mode("append").parquet(dir)
         chunks.foreach(c => chunkDf(c).write.mode("append").parquet(dir))
         spark.read.parquet(dir)

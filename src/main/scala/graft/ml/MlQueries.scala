@@ -229,7 +229,7 @@ object MlQueries {
     // semantics as ml_iforest_serve (shared oracle shape), proving the
     // stored model serves identically across sessions
     "ml_iforest_store" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-iforest").toString
+      val path = Materialize.scratchDir("iforest")
       val feats = IsolationForest.paaFeatures(Readings.of(s, d))
       val model = IsolationForest.fit(feats, Seq("signal_id", "seg"),
         Seq("f0", "f1", "f2", "f3"), fitFilter = col("signal_id") % 2 === 0)

@@ -208,7 +208,7 @@ object AnnQueries {
     // read ONLY their nProbe cells (static partition pruning at the scan)
     // — same scoring arithmetic as ann_ivf, so the same oracle checks it
     "ann_ivf_store" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
+      val path = Materialize.scratchDir("ivf-store")
       // one centroid collect feeds build AND probe (was one each)
       val index = flatIndex(s, d)
       buildStore(s, d, path, index)
@@ -266,7 +266,7 @@ object AnnQueries {
     // (they fed the codebook derivation, the store write AND the probe
     // — three identical collect jobs per construction before r16)
     "ann_ivfpq_store" -> ((s, d) => {
-      val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-store").toString
+      val path = Materialize.scratchDir("ivfpq-store")
       val index = pqIndex(s, d)
       buildStore(s, d, path, index)
       probeStore(s, d, path, index)
@@ -400,8 +400,7 @@ object AnnQueries {
     // already d/r times smaller), rerank fetches full resolution from the
     // base table. Same arithmetic as ann_rp_ivf, so the same oracle.
     "ann_rp_ivf_store" -> ((s, d) => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-rpivf-store").toString
+      val path = Materialize.scratchDir("rpivf-store")
       // one reduced-centroid collect feeds build AND probe (was one each)
       val index = rpIndex(s, d)
       buildStore(s, d, path, index)

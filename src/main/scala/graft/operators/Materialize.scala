@@ -22,7 +22,9 @@ import org.apache.spark.storage.StorageLevel
   *    must see the cache manager's in-memory relation.
   *  - [[shared]] / [[sharedIfLarge]]: size-gated reuse of a frame with
   *    several consumers — a checkpoint when small, a staged parquet copy
-  *    in a scratch dir when large.
+  *    in a [[scratchDir]] when large.
+  *  - [[scratchDir]]: a temp dir a query writes a store into (an index,
+  *    a model, a compacted copy), deleted with the scope.
   *
   * Who opens scopes: the bench (each rep, each warm-up, each untimed
   * set-up), Verify (each query), each streaming micro-batch body, and an
@@ -42,7 +44,7 @@ import org.apache.spark.storage.StorageLevel
   * frees neither.
   */
 object Materialize {
-  /** Scratch dirs of staged frames are named with this prefix (one per
+  /** Scratch dirs ([[scratchDir]]) are named with this prefix (one per
     * JVM, so [[stored]] never sees another process's dirs).
     */
   val StagedPrefix: String = s"graft-mat-${ProcessHandle.current.pid}-"
@@ -160,9 +162,9 @@ object Materialize {
     * the scope exits: for a superseded round of a loop, once nothing will
     * read it again. Reading `df` afterwards fails (a released checkpoint
     * does not recompute). Only what the call that returned `df` made is
-    * freed: the plan [[cache]] cached or the copy [[shared]] staged, else
-    * the checkpoint `df` reads. A frame the current scope does not own is
-    * left alone.
+    * freed: the plan [[cache]] cached, else the checkpoint `df` reads. A
+    * copy [[shared]] staged ends with its scope. A frame the current
+    * scope does not own is left alone.
     */
   def release(df: DataFrame): Unit =
     open.get.take(df +: rddKey(df).toSeq).foreach(free)
@@ -241,16 +243,22 @@ object Materialize {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= maxLocal) checkpoint(df)
     else {
-      val dir = Files.createTempDirectory(StagedPrefix)
-      val staged =
-        try {
-          val out = dir.resolve("staged").toString
-          df.write.mode("overwrite").parquet(out)
-          spark.read.schema(df.schema).parquet(out)
-        } catch { case e: Throwable => deleteTree(dir); throw e }
-      open.get.own(staged)(deleteTree(dir))
-      staged
+      val out = s"${scratchDir("staged")}/staged"
+      df.write.mode("overwrite").parquet(out)
+      spark.read.schema(df.schema).parquet(out)
     }
+  }
+
+  /** A new temp dir (named `<StagedPrefix><prefix>-...`) owned by the open
+    * scope: deleted when the scope releases, or at JVM exit when no scope
+    * is open. A query that writes a store of its own (an index, a model,
+    * a compacted copy) writes it here, so the store ends with the query,
+    * and [[stored]] reports one that outlives its scope.
+    */
+  def scratchDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(s"$StagedPrefix$prefix-")
+    open.get.own(dir)(deleteTree(dir))
+    dir.toString
   }
 
   private def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {

@@ -34,6 +34,20 @@ import graft.functions.DtwFunctions.sqDistQ
   * segments are mutually near-identical — in which case the threshold T
   * is itself tiny and the exact distances being computed are the answer.
   * MotifDiscordSpec asserts the sub-quadratic count on a spread fixture.
+  *
+  * The kernel is three primitives; every profile, increment and stream
+  * batch is a composition of them:
+  *  - [[pairs]], the one pair generator: the keyed per-signal product, or
+  *    the grid under a per-signal threshold;
+  *  - [[nnd]], the one min-fold: (signal_id, seg, d) contributions to one
+  *    nearest-neighbor distance per segment. A batch profile folds the
+  *    pairs of one route; an increment ([[increment]]) folds the prior
+  *    profile with what a [[Generator]] draws from the existing and new
+  *    segments (the EDBT 2020 incremental top-k contract: the prior
+  *    step's minima bound the next step's candidates);
+  *  - [[route]], the one route decision: grid_pairs and direct / pruned /
+  *    sampled from per-signal (m, t) and per-group (cnt, s0), shared by
+  *    the batch plan and the folded streaming state.
   */
 object MotifDiscord {
 
@@ -42,11 +56,11 @@ object MotifDiscord {
 
   /** Grid width under a (squared-L2) threshold t and the cell of a
     * first-chunk sum under that width — THE single implementation of
-    * the class doc's cell arithmetic. Every grid site (candidatePairs,
-    * routePlanOf, foldRouteState, gridPruneHistory) must share these
-    * two formulas: the exactness proofs rest on all sides of every
-    * grid join bucketing identically, and a drifted copy would break
-    * the candidate-superset guarantee silently rather than visibly.
+    * the class doc's cell arithmetic. Every grid site ([[pairs]],
+    * [[route]], [[gridPruneHistory]]) must share these two formulas: the
+    * exactness proofs rest on all sides of every grid join bucketing
+    * identically, and a drifted copy would break the candidate-superset
+    * guarantee silently rather than visibly.
     */
   private def gridWidth(t: Column): Column =
     (floor(lit(2.0) * sqrt(t.cast("double"))) + 1).cast("long")
@@ -54,12 +68,18 @@ object MotifDiscord {
     ((s0 - pmod(s0, w)) / w).cast("long")
 
   /** Segment rows + integer chunk sums s_0..s_{k-1} of qvals. */
-  private[graft] def withChunkSums(segs: DataFrame): DataFrame =
+  private def withChunkSums(segs: DataFrame): DataFrame =
     (0 until nChunks).foldLeft(segs) { (df, i) =>
       df.withColumn(s"s_$i",
         aggregate(slice(col("qvals"), i * ChunkRows + 1, ChunkRows),
           lit(0L), (acc, x) => acc + x))
     }
+
+  /** First-chunk integer sum of a qvals array — the only chunk statistic
+    * the routing grid keys on (cells bucket s_0 alone).
+    */
+  private def chunk0Sum(qvals: Column): Column =
+    aggregate(slice(qvals, 1, ChunkRows), lit(0L), (acc, x) => acc + x)
 
   /** Exact distances of per-signal ADJACENT complete segments (consecutive
     * by rank, so seg-index gaps don't break coverage): one window pass +
@@ -78,37 +98,80 @@ object MotifDiscord {
         sqDistQ(col("qa"), col("qb")).as("adj_d"))
   }
 
-  /** Exact-distance candidate pairs under a per-signal threshold
-    * (`thresh`: signal_id, t), a-side rows from `aSegs` against b-side
-    * rows from `bSegs` (pass the same frame for the symmetric
-    * enumeration — both orientations are then emitted). seg_a != seg_b;
-    * grid cells are first-chunk-sum buckets of width
-    * floor(2*sqrt(t)) + 1, the a-side exploded to its 3 neighboring
-    * cells. Output: signal_id, seg_a, seg_b, d.
+  /** Per-signal statistics in one window pass and one aggregation on its
+    * partitioning: m (complete segments), t (the max adjacent distance —
+    * the discord threshold, null below 2 segments; the lead window pairs
+    * rank-consecutive segments, exactly [[adjacentPairs]]), and the first
+    * and last segment with their vectors. Columns a caller does not read
+    * are pruned from the aggregation.
     */
-  private[graft] def candidatePairs(aSegs: DataFrame, bSegs: DataFrame,
-                                    thresh: DataFrame): DataFrame = {
-    val withW = thresh.withColumn("w", gridWidth(col("t")))
-    def sumsOf(df: DataFrame) =
-      withChunkSums(df).join(broadcast(withW), "signal_id")
-        .withColumn("cell", gridCell(col("s_0"), col("w")))
-    val aCols = Seq(col("signal_id"), col("seg").as("seg_a"),
-      col("qvals").as("qa"), col("t")) ++
-      (0 until nChunks).map(i => col(s"s_$i").as(s"sa_$i")) :+
-      explode(array(col("cell") - 1, col("cell"), col("cell") + 1)).as("cell")
-    val a = sumsOf(aSegs).select(aCols: _*)
-    val bCols = Seq(col("signal_id"), col("seg").as("seg_b"),
-      col("qvals").as("qb"), col("cell")) ++
-      (0 until nChunks).map(i => col(s"s_$i").as(s"sb_$i"))
-    val b = sumsOf(bSegs).select(bCols: _*)
-    val lb = (0 until nChunks)
-      .map(i => (col(s"sa_$i") - col(s"sb_$i")) * (col(s"sa_$i") - col(s"sb_$i")))
-      .reduce(_ + _)
-    a.join(b, Seq("signal_id", "cell"))
-      .where(col("seg_a") =!= col("seg_b") && lb <= lit(4L) * col("t"))
+  private def signalStats(segs: DataFrame): DataFrame = {
+    val wSeg = Window.partitionBy(col("signal_id")).orderBy(col("seg"))
+    segs.withColumn("nq", lead(col("qvals"), 1).over(wSeg))
+      .groupBy(col("signal_id")).agg(
+        count(lit(1)).as("m"), min(col("seg")).as("first_seg"),
+        max(col("seg")).as("last_seg"),
+        min_by(col("qvals"), col("seg")).as("first_qvals"),
+        max_by(col("qvals"), col("seg")).as("last_qvals"),
+        max(sqDistQ(col("qvals"), col("nq"))).as("t"))
+  }
+
+  /** (signal_id, t) of [[signalStats]] for signals with >= 2 segments. */
+  private def maxAdjacent(stats: DataFrame): DataFrame =
+    stats.filter(col("t").isNotNull).select(col("signal_id"), col("t"))
+
+  /** THE pair generator: exact distances of a-side rows against b-side
+    * rows of the same signal, seg_a != seg_b (pass one frame twice for
+    * the symmetric enumeration — both orientations are then emitted).
+    *  - `None`: the keyed per-signal product;
+    *  - `Some(thresh)` (signal_id, t): the grid — cells are first-chunk-
+    *    sum buckets of width floor(2*sqrt(t)) + 1, the a-side exploded to
+    *    its 3 neighboring cells, and only pairs whose chunk-sum lower
+    *    bound is within 4t survive: every pair with d <= t, plus some.
+    * Output: signal_id, seg_a, seg_b, d.
+    */
+  private[graft] def pairs(a: DataFrame, b: DataFrame,
+                           thresh: Option[DataFrame]): DataFrame = {
+    def side(s: String): Seq[Column] =
+      Seq(col("signal_id"), col("seg").as(s"seg_$s"), col("qvals").as(s"q$s"))
+    val (joined, bound) = thresh match {
+      case None =>
+        (a.select(side("a"): _*).join(b.select(side("b"): _*), Seq("signal_id")),
+          lit(true))
+      case Some(t) =>
+        val withW = t.withColumn("w", gridWidth(col("t")))
+        def cells(df: DataFrame) =
+          withChunkSums(df).join(broadcast(withW), "signal_id")
+            .withColumn("cell", gridCell(col("s_0"), col("w")))
+        def sums(s: String) = (0 until nChunks).map(i => col(s"s_$i").as(s"s${s}_$i"))
+        val aRows = cells(a).select((side("a") :+ col("t")) ++ sums("a") :+
+          explode(array(col("cell") - 1, col("cell"), col("cell") + 1)).as("cell"): _*)
+        val bRows = cells(b).select((side("b") :+ col("cell")) ++ sums("b"): _*)
+        val lb = (0 until nChunks)
+          .map(i => (col(s"sa_$i") - col(s"sb_$i")) * (col(s"sa_$i") - col(s"sb_$i")))
+          .reduce(_ + _)
+        (aRows.join(bRows, Seq("signal_id", "cell")), lb <= lit(4L) * col("t"))
+    }
+    joined.where(col("seg_a") =!= col("seg_b") && bound)
       .select(col("signal_id"), col("seg_a"), col("seg_b"),
         sqDistQ(col("qa"), col("qb")).as("d"))
   }
+
+  /** THE min-fold: a union of (signal_id, seg, d) contributions, one
+    * nearest-neighbor distance per segment. Output: signal_id, seg, nnd_q.
+    */
+  private def nnd(contributions: DataFrame*): DataFrame =
+    contributions.reduce(_ unionByName _)
+      .groupBy(col("signal_id"), col("seg")).agg(min(col("d")).as("nnd_q"))
+
+  /** A pair frame's contribution to its a-end (resp. b-end) segments. */
+  private def toA(p: DataFrame): DataFrame =
+    p.select(col("signal_id"), col("seg_a").as("seg"), col("d"))
+  private def toB(p: DataFrame): DataFrame =
+    p.select(col("signal_id"), col("seg_b").as("seg"), col("d"))
+  /** Segments whose nnd is 0 outright (an identical twin exists). */
+  private def zeros(segs: DataFrame): DataFrame =
+    segs.select(col("signal_id"), col("seg"), lit(0L).as("d"))
 
   /** Duplicate-group view: `grk` ranks each segment inside its
     * (signal, qvals) group by seg, `gcnt` is the group size. This is the
@@ -127,6 +190,11 @@ object MotifDiscord {
       .withColumn("gcnt", count(lit(1)).over(g))
   }
 
+  /** The representatives (one per distinct vector) of a ranked frame. */
+  private def reps(ranked: DataFrame): DataFrame =
+    ranked.filter(col("grk") === 1)
+      .select(col("signal_id"), col("seg"), col("qvals"))
+
   /** Route threshold: with every signal's segment count m <= this, the
     * direct per-signal self-join (<= ~64k pairs per signal, one keyed
     * join, no extra passes) beats the pruned path's constant overhead
@@ -138,42 +206,33 @@ object MotifDiscord {
     */
   val PruneAbove = 256
 
-  /** All-pairs exact distances within each signal (both orientations) —
-    * the direct route for short histories.
-    */
-  private def naivePairs(segs: DataFrame): DataFrame = {
-    val a = segs.select(col("signal_id"), col("seg").as("seg_a"),
-      col("qvals").as("qa"))
-    val b = segs.select(col("signal_id"), col("seg").as("seg_b"),
-      col("qvals").as("qb"))
-    a.join(b, Seq("signal_id"))
-      .where(col("seg_a") =!= col("seg_b"))
-      .select(col("signal_id"), col("seg_a"), col("seg_b"),
-        sqDistQ(col("qa"), col("qb")).as("d"))
-  }
-
   private def maxSegments(sc: DataFrame): Long = {
     val row = sc.groupBy(col("signal_id")).agg(count(lit(1)).as("m"))
       .agg(max(col("m"))).first()
     if (row.isNullAt(0)) 0L else row.getLong(0)
   }
 
-  private def winners(pairs: DataFrame, forDiscord: Boolean): DataFrame =
-    if (forDiscord) {
-      val nnd = pairs.groupBy(col("signal_id"), col("seg_a"))
-        .agg(min(col("d")).as("nnd_q"))
-      val w = Window.partitionBy(col("signal_id"))
-        .orderBy(col("nnd_q").desc, col("seg_a"))
-      nnd.withColumn("rnk", row_number().over(w)).filter(col("rnk") === 1)
-        .select(col("signal_id"), col("seg_a").as("seg"), col("nnd_q"))
-    } else {
-      val w = Window.partitionBy(col("signal_id"))
-        .orderBy(col("d").asc, col("seg_a"), col("seg_b"))
-      pairs.where(col("seg_a") < col("seg_b"))
-        .withColumn("rnk", row_number().over(w)).filter(col("rnk") === 1)
-        .select(col("signal_id"), col("seg_a"), col("seg_b"),
-          col("d").as("dist_q"))
-    }
+  /** Per signal, the k closest pairs among `pairs` (seg_a < seg_b),
+    * ranked by (d, seg_a, seg_b). Output: signal_id, seg_a, seg_b,
+    * dist_q, rnk.
+    */
+  private def winners(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("signal_id"))
+      .orderBy(col("d").asc, col("seg_a"), col("seg_b"))
+    pairs.where(col("seg_a") < col("seg_b"))
+      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+      .select(col("signal_id"), col("seg_a"), col("seg_b"),
+        col("d").as("dist_q"), col("rnk"))
+  }
+
+  /** Per signal, the k profile rows with the largest nnd_q (ties by seg),
+    * ranked in `rnk`.
+    */
+  private def mostAnomalous(prof: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("signal_id"))
+      .orderBy(col("nnd_q").desc, col("seg"))
+    prof.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+  }
 
   /** The (squared-L2) MATRIX PROFILE of each signal: every complete
     * segment's exact nearest-neighbor distance among the signal's other
@@ -188,209 +247,139 @@ object MotifDiscord {
   def profile(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame = {
     val sc = Materialize.checkpoint(segs)
     if (maxSegments(sc) <= pruneAbove) directProfile(sc)
-    else prunedProfile(sc)
+    else prunedProfile(Materialize.checkpoint(withGroupRank(sc)),
+      maxAdjacent(signalStats(sc)))
   }
 
-  /** The direct route: per-signal all-pairs self-join, min per segment. */
+  /** The direct route: every per-signal pair, folded. */
   private def directProfile(sc: DataFrame): DataFrame =
-    naivePairs(sc).groupBy(col("signal_id"), col("seg_a"))
-      .agg(min(col("d")).as("nnd_q"))
-      .select(col("signal_id"), col("seg_a").as("seg"), col("nnd_q"))
+    nnd(toA(pairs(sc, sc, None)))
 
-  /** The pruned route with duplicate collapse (see withGroupRank):
-    * dup-group members have nnd_q = 0 outright; only SINGLETON segments
-    * need enumeration, and they enumerate against the distinct
-    * representatives (a singleton's nearest neighbor is some group, and
-    * its distance to the group equals its distance to the
+  /** The pruned route over a RANKED frame (withGroupRank columns) with
+    * duplicate collapse: dup-group members have nnd_q = 0 outright; only
+    * SINGLETON segments enumerate, through the grid, against the
+    * distinct representatives (a singleton's nearest neighbor is some
+    * group, and its distance to the group equals its distance to the
     * representative). The adjacent-pair threshold over the ORIGINAL
-    * segments still bounds every singleton's nnd, so the grid's
-    * exactness argument is unchanged.
+    * segments still bounds every singleton's nnd, so the grid's exactness
+    * argument is unchanged. `thresh` may cover extra signals (it joins by
+    * signal_id; unmatched signals contribute no pairs).
     */
-  private def prunedProfile(sc: DataFrame): DataFrame =
-    prunedProfileFrom(Materialize.checkpoint(withGroupRank(sc)),
-      adjacentPairs(sc).groupBy(col("signal_id"))
-        .agg(max(col("adj_d")).as("t")))
-
-  /** The pruned route over a PRE-RANKED frame (withGroupRank columns) and
-    * a per-signal adjacent-pair threshold — shared with [[profileAuto]],
-    * which already holds both from its route-plan computation (r15: the
-    * auto path used to re-rank and re-derive adjacent pairs over its
-    * pruned split, duplicating two window passes the plan had just run).
-    * `thresh` may cover extra signals (it joins by signal_id; unmatched
-    * signals contribute no pairs), and per-signal values are unchanged
-    * under whole-signal filtering, so results are identical.
-    */
-  private def prunedProfileFrom(ranked: DataFrame,
-                                thresh: DataFrame): DataFrame = {
-    val dupRows = ranked.filter(col("gcnt") >= 2)
-      .select(col("signal_id"), col("seg"), lit(0L).as("nnd_q"))
-    val reps = ranked.filter(col("grk") === 1)
-      .select(col("signal_id"), col("seg"), col("qvals"))
+  private def prunedProfile(ranked: DataFrame, thresh: DataFrame): DataFrame = {
     val singles = ranked.filter(col("gcnt") === 1)
       .select(col("signal_id"), col("seg"), col("qvals"))
-    candidatePairs(singles, reps, thresh)
-      .groupBy(col("signal_id"), col("seg_a"))
-      .agg(min(col("d")).as("nnd_q"))
-      .select(col("signal_id"), col("seg_a").as("seg"), col("nnd_q"))
-      .unionByName(dupRows)
+    nnd(toA(pairs(singles, reps(ranked), Some(thresh))),
+      zeros(ranked.filter(col("gcnt") >= 2)))
+  }
+
+  /** What an increment pairs: the (signal_id, seg, d) contributions that
+    * a batch of new segments makes, given (existing, new) segments.
+    */
+  private type Generator = (DataFrame, DataFrame) => Seq[DataFrame]
+
+  /** One increment: the prior profile rows plus `gen`'s contributions,
+    * min-folded. Output: signal_id, seg, nnd_q.
+    */
+  private def increment(existing: DataFrame, profile: DataFrame,
+                        fresh: DataFrame, gen: Generator): DataFrame =
+    nnd(profile.select(col("signal_id"), col("seg"), col("nnd_q").as("d")) +:
+      gen(existing, fresh): _*)
+
+  /** The member generator: every existing x new pair, credited to both
+    * ends, and every pair among the new segments — bounded by the
+    * router's per-signal segment cap.
+    */
+  private val member: Generator = (e, n) => {
+    val cross = pairs(e, n, None)
+    Seq(toA(cross), toB(cross), toA(pairs(n, n, None)))
+  }
+
+  /** The rep generator, for long/degenerate histories: the member
+    * generator over distinct representatives. Every segment that still
+    * NEEDS a cross/within minimum is a representative —
+    *  - an existing member of a duplicate group already carries
+    *    nnd_q = 0 in the old profile (its twin was among the existing),
+    *  - a new member of a duplicate group has an in-batch twin (d = 0),
+    * so duplicate mass — a flatlined sensor feeding identical segments
+    * forever — costs one rank window per side and zero fan-out joins.
+    * Equal vectors across the sides meet as d = 0, and for reps
+    * seg_a != seg_b is exactly qa != qb.
+    *
+    * With a per-signal threshold (`thresh`: signal_id, t — the routed
+    * caller's folded max-adjacent t) the history is first cut to the new
+    * segments' cell neighborhoods ([[gridPruneHistory]]) and both
+    * products go through the grid: a pair with chunk-sum lower bound
+    * > 4t has d > t >= every final minimum this fold can emit (an exact
+    * signal's nnd and old profile values are <= t; a once-sampled
+    * signal's rows only need to stay valid upper bounds), so pruning it
+    * changes nothing.
+    */
+  private def rep(thresh: Option[DataFrame]): Generator = (e, n) => {
+    // the new-batch ranked frame is checkpointed: it feeds three legs,
+    // and without the cut each re-executes the array-keyed sort window.
+    // The history side's reps feed only the cross product, so a
+    // checkpoint there would be a pure per-batch O(m) write
+    val eReps = reps(withGroupRank(thresh.fold(e)(gridPruneHistory(e, n, _))))
+    val nRanked = Materialize.checkpoint(withGroupRank(n))
+    val nReps = reps(nRanked)
+    val cross = pairs(eReps, nReps, thresh)
+    Seq(toA(cross), toB(cross), toA(pairs(nReps, nReps, thresh)),
+      zeros(nRanked.filter(col("gcnt") >= 2)))
+  }
+
+  /** The sampled generator — the streaming fold of [[profileSampled]].
+    * Per batch it pays
+    *  - existing x new-references (O(m·δ/mod) keyed pairs), and
+    *  - new x all-references (O(δ·(m+δ)/mod)),
+    * never the full m·(m/mod) recompute. Because the reference rule is
+    * append-stable (hash residues are per-segment; the two forced refs
+    * are the per-signal LOWEST seg ids and seg ids only grow), the
+    * union's reference set is exactly existing-refs ∪ new-refs — so the
+    * fold equals [[profileSampled]] over the combined segments whenever
+    * every prior batch took this path AND batches arrive in per-signal
+    * seg-id order (segmentStream guarantees it; out-of-order appends
+    * still fold a valid upper bound — the forced-ref election just stops
+    * matching the batch rule, so equality degrades to >= truth).
+    * A signal that transitions exact→sampled folds its EXACT prior nnd
+    * instead: the result is then a tighter-or-equal valid upper bound.
+    */
+  private def sampled(mod: Int): Generator = (e, n) => {
+    // new ids sort after existing ones, so the new references are the
+    // union's references among the new segments. nRefs is δ-sized and
+    // feeds two legs, so it is checkpointed; the history side is a
+    // parquet-backed store or an already-materialized frame, and
+    // re-scanning it beats a per-batch O(m) checkpoint
+    val nRefs = Materialize.checkpoint(sampledRefs(n, mod,
+      Some(e.groupBy(col("signal_id")).agg(count(lit(1)).as("before")))))
+    Seq(toA(pairs(n, sampledRefs(e, mod).unionByName(nRefs), None)),
+      toA(pairs(e, nRefs, None)))
   }
 
   /** INCREMENTAL matrix-profile maintenance (the STAMPI idea at segment
     * granularity): given the persisted profile of the existing segments
     * and a batch of newly sealed segments, the updated profile needs only
-    *  - cross distances existing x new within each signal (O(m * delta)
-    *    keyed join, never the O((m+delta)^2) recompute),
-    *  - all-pairs among the delta new segments (O(delta^2), delta = one
-    *    ingest batch),
-    * folded as mins into the old nnd values: new-batch rows get
-    * min(cross, within-new); existing rows keep min(old nnd, cross).
-    * Exactly equals the batch profile over the combined segment set —
-    * MotifDiscordSpec proves it, and the seg_profile_inc query carries
-    * the full-recompute oracle.
+    * the cross distances existing x new within each signal (O(m * delta),
+    * never the O((m+delta)^2) recompute) and the pairs among the new
+    * batch, folded as mins into the old nnd values. Exactly equals the
+    * batch profile over the combined segment set — MotifDiscordSpec
+    * proves it, and the seg_profile_inc query carries the full-recompute
+    * oracle.
     *
     * Size-routed like [[profile]]: with every signal's segment count (on
-    * either side) at most pruneAbove, the member-level cross join is
-    * bounded (<= pruneAbove·δ pairs per signal) and its lean 3-exchange
-    * plan wins — the rep-level collapse costs ~1 s of constant overhead
-    * (two array-keyed rank windows + checkpoints) at sf0.1, the r10
-    * sweep's self-adjudication caught exactly that. Past the threshold
-    * the duplicate collapse takes over so a flatlined sensor streaming
+    * either side) at most pruneAbove, the [[member]] generator is bounded
+    * (<= pruneAbove·δ pairs per signal) and its lean 3-exchange plan wins
+    * — the rep-level collapse costs ~1 s of constant overhead (two
+    * array-keyed rank windows + checkpoints) at sf0.1. Past the threshold
+    * the [[rep]] generator takes over so a flatlined sensor streaming
     * identical segments forever costs rep pairs, not m·δ distances.
-    * Both routes are exact (MotifDiscordSpec proves each against the
-    * full recompute).
     */
   def profileIncrement(existingSegs: DataFrame, existingProfile: DataFrame,
                        newSegs: DataFrame,
                        pruneAbove: Int = PruneAbove): DataFrame = {
-    val maxM = existingSegs.select(col("signal_id"))
-      .unionByName(newSegs.select(col("signal_id")))
-      .groupBy(col("signal_id")).agg(count(lit(1)).as("m"))
-      .agg(max(col("m"))).collect()
-      .headOption.filterNot(_.isNullAt(0)).map(_.getLong(0)).getOrElse(0L)
-    profileIncrementWithMax(existingSegs, existingProfile, newSegs,
-      pruneAbove, maxM)
-  }
-
-  /** [[profileIncrement]] with the member/rep routing decided by a
-    * caller-supplied max per-signal segment count — the routed streaming
-    * path already holds it in its folded state and skips the extra
-    * history aggregation.
-    */
-  private def profileIncrementWithMax(existingSegs: DataFrame,
-                                      existingProfile: DataFrame,
-                                      newSegs: DataFrame,
-                                      pruneAbove: Int, maxM: Long,
-                                      thresh: Option[DataFrame] = None)
-      : DataFrame =
-    if (maxM <= pruneAbove)
-      memberIncrement(existingSegs, existingProfile, newSegs)
-    else repIncrement(existingSegs, existingProfile, newSegs, thresh)
-
-  /** The direct incremental route: member-level existing x new cross
-    * join plus all-pairs among the batch — bounded by the router's
-    * per-signal segment cap.
-    */
-  private def memberIncrement(existingSegs: DataFrame,
-                              existingProfile: DataFrame,
-                              newSegs: DataFrame): DataFrame = {
-    val e = existingSegs.select(col("signal_id"), col("seg").as("seg_a"),
-      col("qvals").as("qa"))
-    val n = newSegs.select(col("signal_id"), col("seg").as("seg_b"),
-      col("qvals").as("qb"))
-    val cross = e.join(n, Seq("signal_id"))
-      .select(col("signal_id"), col("seg_a"), col("seg_b"),
-        sqDistQ(col("qa"), col("qb")).as("d"))
-    // both endpoints of every cross pair receive the distance
-    val crossBoth = cross.select(col("signal_id"), col("seg_a").as("seg"), col("d"))
-      .unionByName(cross.select(col("signal_id"), col("seg_b").as("seg"), col("d")))
-    val withinNew = naivePairs(newSegs)
-      .select(col("signal_id"), col("seg_a").as("seg"), col("d"))
-    val oldRows = existingProfile
-      .select(col("signal_id"), col("seg"), col("nnd_q").as("d"))
-    oldRows.unionByName(crossBoth).unionByName(withinNew)
-      .groupBy(col("signal_id"), col("seg"))
-      .agg(min(col("d")).as("nnd_q"))
-  }
-
-  /** The collapsed incremental route for long/degenerate histories.
-    * Rep-level (same argument as [[profile]]'s), keyed by the
-    * REPRESENTATIVE's seg so the minima land without any member-level
-    * array-keyed join: every segment that still NEEDS a cross/within
-    * minimum is a representative —
-    *  - an existing member of a duplicate group already carries
-    *    nnd_q = 0 in the old profile (its twin was among existingSegs),
-    *  - a new member of a duplicate group has an in-batch twin (d = 0),
-    * so duplicate mass — the streaming degenerate case of a flatlined
-    * sensor feeding identical segments forever — costs one rank window
-    * per side and zero fan-out joins.
-    */
-  private def repIncrement(existingSegs: DataFrame,
-                           existingProfile: DataFrame,
-                           newSegs: DataFrame,
-                           thresh: Option[DataFrame] = None): DataFrame = {
-    // the new-batch ranked frame is checkpointed (the [[profile]]
-    // pattern): nReps feeds three branches below, and without the cut
-    // every reference re-executes the array-keyed sort window. The
-    // HISTORY side's reps feed only the cross join, so a checkpoint
-    // there would be a pure per-batch O(m) materialization cost
-    val eReps = withGroupRank(existingSegs).filter(col("grk") === 1)
-      .select(col("signal_id"), col("seg"), col("qvals"))
-    val n = Materialize.checkpoint(withGroupRank(newSegs))
-    val nReps = n.filter(col("grk") === 1)
-      .select(col("signal_id"), col("seg"), col("qvals"))
-    // rep-level cross distances (equal vectors across sides meet as
-    // d = 0); each side's reps take their min keyed by their own seg.
-    // With a per-signal threshold available (the routed caller's folded
-    // max-adjacent t), the enumeration goes through the GRID instead of
-    // the full e x n / n x n products: a pair with chunk-sum lower
-    // bound > 4t has d > t >= every final minimum this fold can emit
-    // (an exact signal's nnd and old profile values are <= t; a
-    // once-sampled signal's rows only need to stay valid upper bounds),
-    // so pruning it changes nothing — the same argument, candidate
-    // superset and integer cell arithmetic as the batch pruned route.
-    // Without a threshold (the stateless profileIncrement API) the
-    // naive products stand.
-    val cross = thresh match {
-      case Some(t) => candidatePairs(eReps, nReps, t)
-      case None => eReps
-        .select(col("signal_id"), col("seg").as("seg_a"), col("qvals").as("qa"))
-        .join(nReps.select(col("signal_id"), col("seg").as("seg_b"),
-            col("qvals").as("qb")),
-          Seq("signal_id"))
-        .select(col("signal_id"), col("seg_a"), col("seg_b"),
-          sqDistQ(col("qa"), col("qb")).as("d"))
-    }
-    val crossE = cross.groupBy(col("signal_id"), col("seg_a"))
-      .agg(min(col("d")).as("d"))
-      .select(col("signal_id"), col("seg_a").as("seg"), col("d"))
-    val crossN = cross.groupBy(col("signal_id"), col("seg_b"))
-      .agg(min(col("d")).as("d"))
-      .select(col("signal_id"), col("seg_b").as("seg"), col("d"))
-    // within the new batch: every member of a duplicate group (rep
-    // included) has an identical twin (d = 0); reps additionally take
-    // the min over the OTHER new reps, keyed by their own seg — the
-    // O(δ²)-per-signal product that the grid bounds for bulk batches
-    val dupZero = n.filter(col("gcnt") >= 2)
-      .select(col("signal_id"), col("seg"), lit(0L).as("d"))
-    val withinNew = thresh match {
-      case Some(t) => candidatePairs(nReps, nReps, t)
-        .groupBy(col("signal_id"), col("seg_a"))
-        .agg(min(col("d")).as("d"))
-        .select(col("signal_id"), col("seg_a").as("seg"), col("d"))
-      case None => nReps
-        .select(col("signal_id"), col("seg"), col("qvals").as("qa"))
-        .join(nReps.select(col("signal_id"), col("qvals").as("qb")),
-          Seq("signal_id"))
-        .where(col("qa") =!= col("qb"))
-        .groupBy(col("signal_id"), col("seg"))
-        .agg(min(sqDistQ(col("qa"), col("qb"))).as("d"))
-    }
-    val oldRows = existingProfile
-      .select(col("signal_id"), col("seg"), col("nnd_q").as("d"))
-    oldRows.unionByName(crossE).unionByName(crossN)
-      .unionByName(dupZero).unionByName(withinNew)
-      .groupBy(col("signal_id"), col("seg"))
-      .agg(min(col("d")).as("nnd_q"))
+    val maxM = maxSegments(existingSegs.select(col("signal_id"))
+      .unionByName(newSegs.select(col("signal_id"))))
+    increment(existingSegs, existingProfile, newSegs,
+      if (maxM <= pruneAbove) member else rep(None))
   }
 
   /** SAMPLED matrix profile — the escape hatch for the inherently dense
@@ -414,118 +403,321 @@ object MotifDiscord {
     *  - seg ids are per-signal monotone (Segments/segmentStream), so the
     *    two lowest NEVER change as batches append — the reference set of
     *    the union is the union of each batch's new references, which is
-    *    what makes [[sampledIncrement]] fold to EXACTLY this batch
+    *    what makes the [[sampled]] generator fold to EXACTLY this batch
     *    result (a min-hash rule would re-elect its forced ref across
     *    batches and break that equality).
     * Output: signal_id, seg, nnd_ub_q.
     */
-  def profileSampled(segs: DataFrame, mod: Int = 4): DataFrame = {
-    val refs = sampledRefs(segs, mod)
-      .select(col("signal_id"), col("seg").as("seg_b"),
-        col("qvals").as("qb"))
-    segs.select(col("signal_id"), col("seg"), col("qvals").as("qa"))
-      .join(refs, Seq("signal_id"))
-      .where(col("seg") =!= col("seg_b"))
-      .groupBy(col("signal_id"), col("seg"))
-      .agg(min(sqDistQ(col("qa"), col("qb"))).as("nnd_ub_q"))
-  }
+  def profileSampled(segs: DataFrame, mod: Int = 4): DataFrame =
+    sampledProfile(segs, mod).withColumnRenamed("nnd_q", "nnd_ub_q")
+
+  private def sampledProfile(segs: DataFrame, mod: Int): DataFrame =
+    nnd(toA(pairs(segs, sampledRefs(segs, mod), None)))
 
   /** The sampled route's deterministic reference subset: hash residue
     * zero (fnv32("ps:signal:seg") % mod == 0) plus the per-signal two
     * lowest seg ids (see [[profileSampled]] for why two and why lowest).
     * Pure function of (signal_id, seg) — both engines and the streaming
-    * increment derive the same set.
+    * increment derive the same set. With `before` (signal_id, before:
+    * the count of each signal's segments that precede `segs`), a
+    * segment's rank counts those too: the references `segs` adds to the
+    * union.
     */
-  private def sampledRefs(segs: DataFrame, mod: Int): DataFrame =
-    segs
-      .withColumn("h", refHash)
+  private def sampledRefs(segs: DataFrame, mod: Int,
+                          before: Option[DataFrame] = None): DataFrame = {
+    val ranked = segs.withColumn("h", refHash)
       .withColumn("srk", row_number().over(
         Window.partitionBy(col("signal_id")).orderBy(col("seg"))))
-      .filter(col("h") % mod === 0 || col("srk") <= 2)
-      .drop("h", "srk")
+    before.fold(ranked.withColumn("before", lit(0L)))(
+        ranked.join(_, Seq("signal_id"), "left"))
+      .filter(col("h") % mod === 0 ||
+        col("srk") + coalesce(col("before"), lit(0L)) <= 2)
+      .select(col("signal_id"), col("seg"), col("qvals"))
+  }
 
   private def refHash: Column =
     graft.functions.VectorFunctions.fnv32(
       concat(lit("ps:"), col("signal_id").cast("string"), lit(":"),
         col("seg").cast("string")), lit(2166136261L))
 
-  /** INCREMENTAL sampled upper bound — the streaming fold of
-    * [[profileSampled]]. Per batch it pays
-    *  - existing x new-references (O(m·δ/mod) keyed pairs), folded as
-    *    mins into the persisted bounds, and
-    *  - new x all-references (O(δ·(m+δ)/mod)),
-    * never the full m·(m/mod) recompute. Because the reference rule is
-    * append-stable (hash residues are per-segment; the two forced refs
-    * are the per-signal LOWEST seg ids and seg ids only grow), the
-    * union's reference set is exactly existing-refs ∪ new-refs — so the
-    * fold equals [[profileSampled]] over the combined segments whenever
-    * every prior batch took this path AND batches arrive in per-signal
-    * seg-id order (segmentStream guarantees it; out-of-order appends
-    * still fold a valid upper bound — the forced-ref election just stops
-    * matching the batch rule, so equality degrades to >= truth).
-    * MotifDiscordSpec proves the
-    * 3-batch chain. A signal that transitions exact→sampled folds its
-    * EXACT prior nnd instead: the result is then a tighter-or-equal
-    * valid upper bound (min of an exact prefix profile and sampled cross
-    * distances ≥ the true union nnd).
+  /** Per-signal pair budget above which [[profileAuto]] abandons the
+    * exact pruned route for the sampled upper bound: the cost-based
+    * analogue of [[PruneAbove]]'s size routing. 2M candidate rows per
+    * signal keeps a single signal's grid join under one executor-task's
+    * comfortable workload even when skew concentrates it.
     */
-  private[graft] def sampledIncrement(existingSegs: DataFrame,
-                                      existingBounds: DataFrame,
-                                      newSegs: DataFrame,
-                                      mod: Int = 4): DataFrame = {
-    // no internal checkpoints of the history side: callers hand in either
-    // a parquet-backed store (profileStream — re-scan beats a per-batch
-    // O(m) checkpoint write) or an already-materialized frame (specs);
-    // the δ-derived nRefs below stays checkpointed because it is small
-    // and feeds two joins
-    val e = existingSegs
-    val n = newSegs
-    val eRefs = sampledRefs(e, mod)
-    // a new segment is a forced reference of the UNION iff its union
-    // rank (existing count + in-batch rank; new ids sort after existing)
-    // is <= 2 — i.e. only for signals with fewer than 2 prior segments
-    val eCnt = e.groupBy(col("signal_id")).agg(count(lit(1)).as("ce"))
-    val nRefs = Materialize.checkpoint(n
-      .withColumn("h", refHash)
-      .withColumn("srk", row_number().over(
-        Window.partitionBy(col("signal_id")).orderBy(col("seg"))))
-      .join(eCnt, Seq("signal_id"), "left")
-      .filter(col("h") % mod === 0 ||
-        col("srk") + coalesce(col("ce"), lit(0L)) <= 2)
-      .select(col("signal_id"), col("seg"), col("qvals")))
-    def minDists(a: DataFrame, refs: DataFrame): DataFrame =
-      a.select(col("signal_id"), col("seg"), col("qvals").as("qa"))
-        .join(refs.select(col("signal_id"), col("seg").as("seg_b"),
-            col("qvals").as("qb")),
-          Seq("signal_id"))
-        .where(col("seg") =!= col("seg_b"))
-        .groupBy(col("signal_id"), col("seg"))
-        .agg(min(sqDistQ(col("qa"), col("qb"))).as("d"))
-    val newRows = minDists(n, eRefs.unionByName(nRefs))
-    val oldFold = minDists(e, nRefs)
-    existingBounds.select(col("signal_id"), col("seg"), col("nnd_q").as("d"))
-      .unionByName(newRows).unionByName(oldFold)
-      .groupBy(col("signal_id"), col("seg"))
-      .agg(min(col("d")).as("nnd_q"))
+  val RouteBudget: Long = 2L * 1000 * 1000
+
+  /** THE route decision. `sig` holds per-signal (m, t) — m complete
+    * segments, t the max adjacent distance (null below 2 segments) — and
+    * any columns to pass through; `grp` holds one row per distinct
+    * vector of a signal: cnt (group size) and s0 (its first-chunk sum).
+    *  - grid_pairs: the EXACT pre-filter cardinality of the pruned route's
+    *    grid join — Σ over cells of (3-exploded singleton count) ×
+    *    (representative count) — computed from per-cell COUNTS in one
+    *    exploded pass (a group adds cb = 1 at its own cell and, when it
+    *    is a singleton, ca = 1 at its three neighbor cells), never by
+    *    materializing the pairs; counted only where `gridOn` holds (null
+    *    elsewhere);
+    *  - route: 'direct' (m <= pruneAbove — the self-join is cheapest),
+    *    'pruned' (grid_pairs within budget — exact, sub-quadratic), else
+    *    'sampled' (inherently dense: near-identical yet distinct
+    *    segments, where no exact index can prune). Meaningful where
+    *    `gridOn` holds or m <= pruneAbove.
+    * Group identity is the caller's: the batch plan groups by exact qvals,
+    * the streaming state by a salted hash ([[groupHash]]).
+    */
+  private def route(sig: DataFrame, grp: DataFrame, budget: Long,
+                    pruneAbove: Int, gridOn: Column = lit(true)): DataFrame = {
+    val withW = sig.filter(gridOn && col("t").isNotNull)
+      .select(col("signal_id"), gridWidth(col("t")).as("w"))
+    val cellStruct = "array<struct<cell:bigint,ca:bigint,cb:bigint>>"
+    def at(cell: Column, ca: Long, cb: Long) =
+      struct(cell.as("cell"), lit(ca).as("ca"), lit(cb).as("cb"))
+    val grid = grp.join(broadcast(withW), Seq("signal_id"))
+      .withColumn("cell", gridCell(col("s0"), col("w")))
+      .select(col("signal_id"), explode(concat(
+        array(at(col("cell"), 0L, 1L)),
+        when(col("cnt") === 1, array(at(col("cell") - 1, 1L, 0L),
+            at(col("cell"), 1L, 0L), at(col("cell") + 1, 1L, 0L)))
+          .otherwise(array().cast(cellStruct)))).as("c"))
+      .groupBy(col("signal_id"), col("c.cell"))
+      .agg(sum(col("c.ca")).as("ca"), sum(col("c.cb")).as("cb"))
+      .groupBy(col("signal_id"))
+      .agg(sum(col("ca") * col("cb")).as("gp"))
+    sig.join(grid, Seq("signal_id"), "left")
+      .withColumn("grid_pairs", when(gridOn, coalesce(col("gp"), lit(0L))))
+      .withColumn("route",
+        when(col("m") <= pruneAbove, lit("direct"))
+          .when(col("grid_pairs") <= budget, lit("pruned"))
+          .otherwise(lit("sampled")))
+      .drop("gp")
   }
 
+  /** Cost-based ROUTING PLAN for the matrix profile — the optimizer-
+    * style step that makes the dense regime a measured decision instead
+    * of a wall-clock surprise. Per signal it reports m (complete
+    * segments), n_dup (duplicate-group members), n_reps (distinct
+    * quantized vectors), and [[route]]'s grid_pairs and route over exact
+    * vector groups. Every number is a pure integer function of the
+    * data, so the DuckDB oracle recomputes the whole plan exactly.
+    * Output: signal_id, m, n_dup, n_reps, grid_pairs, route.
+    */
+  def routePlan(segs: DataFrame, budget: Long = RouteBudget,
+                pruneAbove: Int = PruneAbove): DataFrame = {
+    val sc = Materialize.checkpoint(segs)
+    val ranked = withGroupRank(sc)
+    val counts = ranked.groupBy(col("signal_id"))
+      .agg(sum(when(col("gcnt") >= 2, 1L).otherwise(0L)).as("n_dup"),
+        sum(when(col("grk") === 1, 1L).otherwise(0L)).as("n_reps"))
+    // both sides hold every signal of sc
+    batchRoute(ranked, signalStats(sc), budget, pruneAbove)
+      .join(counts, Seq("signal_id"), "left")
+      .select(col("signal_id"), col("m"), col("n_dup"), col("n_reps"),
+        col("grid_pairs"), col("route"))
+  }
+
+  /** [[route]] over a ranked frame (withGroupRank columns: its exact
+    * vector groups) and its [[signalStats]] — shared by [[routePlan]]
+    * and [[profileAuto]], which builds both once and reuses them for the
+    * pruned branch. Output: signal_id, m, t, grid_pairs, route.
+    */
+  private def batchRoute(ranked: DataFrame, stats: DataFrame,
+                         budget: Long, pruneAbove: Int): DataFrame =
+    route(stats.select(col("signal_id"), col("m"), col("t")),
+      ranked.filter(col("grk") === 1).select(col("signal_id"),
+        col("gcnt").as("cnt"), chunk0Sum(col("qvals")).as("s0")),
+      budget, pruneAbove)
+
+  /** ROUTED matrix profile: applies [[routePlan]] per signal — exact
+    * (direct or pruned) wherever the plan's measured candidate count
+    * allows, the sampled upper bound only where the data is inherently
+    * dense — instead of [[profile]]'s global size routing. The `exact`
+    * column carries the per-row truth status, so downstream consumers
+    * (and the oracle) know which rows are the true profile and which are
+    * the anytime bound. Output: signal_id, seg, nnd_q, exact.
+    */
+  def profileAuto(segs: DataFrame, budget: Long = RouteBudget,
+                  mod: Int = 4,
+                  pruneAbove: Int = PruneAbove): DataFrame = {
+    val sc = Materialize.checkpoint(segs)
+    // materialize the rank window, the per-signal threshold and the tiny
+    // route table ONCE: the three route branches below each reference
+    // them (plus discordAuto's window on top); without the checkpoints
+    // the whole plan DAG was re-inlined under every branch of the union
+    // (measured r15: a 278-Exchange physical plan for seg_profile_auto)
+    val ranked = Materialize.checkpoint(withGroupRank(sc))
+    val stats = Materialize.checkpoint(signalStats(sc)
+      .select(col("signal_id"), col("m"), col("t")))
+    val routes = Materialize.checkpoint(batchRoute(ranked, stats, budget, pruneAbove)
+      .select(col("signal_id"), col("route")))
+    def side(df: DataFrame, r: String) =
+      df.join(broadcast(routes), "signal_id").filter(col("route") === r).drop("route")
+    directProfile(side(sc, "direct"))
+      .unionByName(prunedProfile(side(ranked, "pruned"), maxAdjacent(stats)))
+      .withColumn("exact", lit(true))
+      .unionByName(sampledProfile(side(sc, "sampled"), mod)
+        .withColumn("exact", lit(false)))
+  }
+
+  /** ROUTED discord: per-signal argmax of [[profileAuto]], carrying the
+    * exact flag — the routed serving shape of the reference's ingest-time
+    * outlier question ("which segment is most anomalous") for fleets
+    * whose histories may be inherently dense. A sampled-route signal's
+    * discord ranks upper bounds (nnd_ub >= nnd, same hash-chosen
+    * reference set on both engines), still a deterministic anomaly
+    * ranking; `exact = false` flags those rows so consumers know the
+    * verdict is the anytime bound, not the proven maximum.
+    * Output: signal_id, seg, nnd_q, exact.
+    */
+  def discordAuto(segs: DataFrame, budget: Long = RouteBudget,
+                  mod: Int = 4,
+                  pruneAbove: Int = PruneAbove): DataFrame =
+    mostAnomalous(profileAuto(segs, budget, mod, pruneAbove), 1).drop("rnk")
+
+  /** Top-k discords per signal (HOT SAX's actual use case reports the k
+    * most anomalous subsequences, not one): rank the profile by
+    * (nnd_q DESC, seg). Output adds the rank column.
+    */
+  def discordTopK(segs: DataFrame, k: Int,
+                  pruneAbove: Int = PruneAbove): DataFrame =
+    mostAnomalous(profile(segs, pruneAbove), k)
+
+  /** Per signal, the complete segment whose exact nearest-neighbor
+    * distance (integer squared L2 over qvals) is largest.
+    * Output: signal_id, seg, nnd_q — identical to the all-pairs join.
+    * Derived from [[profile]] (its argmax with the same tie-break), so it
+    * inherits the duplicate collapse and the size routing.
+    */
+  def discord(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame =
+    mostAnomalous(profile(segs, pruneAbove), 1)
+      .select(col("signal_id"), col("seg"), col("nnd_q"))
+
+  /** Top-k closest pairs per signal (ranked by (dist, seg_a, seg_b)) —
+    * the k-motif result shape. Exactness of the pruned route needs a
+    * threshold covering the k-th closest pair: the k smallest ADJACENT
+    * distances are themselves k valid pairs, so the true k-th closest
+    * pair distance is <= the k-th smallest adjacent distance — that
+    * order statistic (one small per-signal window over the O(m) adjacent
+    * pairs) is the per-signal T. Output adds the rank column.
+    */
+  def motifTopK(segs: DataFrame, k: Int,
+                pruneAbove: Int = PruneAbove): DataFrame = {
+    val sc = Materialize.checkpoint(segs)
+    if (maxSegments(sc) <= pruneAbove) winners(pairs(sc, sc, None), k)
+    else {
+      // Duplicate collapse for the pair ranking. The k smallest pairs
+      // per signal (ordered by (d, seg_a, seg_b)) only ever touch each
+      // group's k+1 SMALLEST members: a pair whose endpoint ranks j-th
+      // (j > k+1) inside its group is lexicographically preceded by the
+      // >= k pairs that swap that endpoint for each smaller group
+      // member (same distance, strictly smaller key) — so it cannot be
+      // in the top k. Hence:
+      //  - zero-distance pairs = all pairs among each dup group's k+1
+      //    smallest members (<= C(k+1,2) per group);
+      //  - positive pairs = grid-enumerated REPRESENTATIVE pairs fanned
+      //    back out to the k+1 smallest members of each endpoint's
+      //    group (<= (k+1)^2 per rep pair).
+      // A constant 10^4-segment signal thus contributes C(k+1,2) rows
+      // instead of 10^8.
+      val ranked = Materialize.checkpoint(withGroupRank(sc))
+      val capped = ranked.filter(col("grk") <= k + 1)
+      val cz = capped.select(col("signal_id"), col("qvals"), col("seg"))
+      val zeroPairs = cz
+        .join(cz.withColumnRenamed("seg", "seg_b"), Seq("signal_id", "qvals"))
+        .where(col("seg") < col("seg_b"))
+        .select(col("signal_id"), col("seg").as("seg_a"), col("seg_b"),
+          lit(0L).as("d"))
+      val wAdj = Window.partitionBy(col("signal_id"))
+        .orderBy(col("adj_d").asc)
+      // a signal with FEWER than k adjacent pairs (m <= k) has no valid
+      // k-th-order bound — keep all its pairs via an effectively
+      // infinite threshold (MaxValue/8 so the 4*t comparison cannot
+      // overflow); such signals have at most k*(k+1)/2 pairs total
+      val thresh = adjacentPairs(sc)
+        .withColumn("arnk", row_number().over(wAdj))
+        .filter(col("arnk") <= k)
+        .groupBy(col("signal_id"))
+        .agg(max(col("adj_d")).as("tk"), count(lit(1)).as("na"))
+        .select(col("signal_id"),
+          when(col("na") < k, lit(Long.MaxValue / 8))
+            .otherwise(col("tk")).as("t"))
+      val rs = reps(ranked)
+      val repPairs = pairs(rs, rs, Some(thresh))
+        .where(col("seg_a") < col("seg_b"))
+      // fan each rep pair to the capped members of both groups
+      val mem = capped.select(col("signal_id"), col("qvals"),
+        col("seg").as("m"))
+      val fanned = repPairs
+        .join(rs.select(col("signal_id"), col("seg").as("seg_a"),
+          col("qvals").as("qv_a")), Seq("signal_id", "seg_a"))
+        .join(rs.select(col("signal_id"), col("seg").as("seg_b"),
+          col("qvals").as("qv_b")), Seq("signal_id", "seg_b"))
+        .join(mem.select(col("signal_id"), col("qvals").as("qv_a"),
+          col("m").as("ma")), Seq("signal_id", "qv_a"))
+        .join(mem.select(col("signal_id"), col("qvals").as("qv_b"),
+          col("m").as("mb")), Seq("signal_id", "qv_b"))
+        .select(col("signal_id"), least(col("ma"), col("mb")).as("seg_a"),
+          greatest(col("ma"), col("mb")).as("seg_b"), col("d"))
+      winners(zeroPairs.unionByName(fanned), k)
+    }
+  }
+
+  /** Per signal, the exactly-closest pair of complete segments (ties
+    * broken by (seg_a, seg_b)). Output: signal_id, seg_a, seg_b, dist_q —
+    * identical to the all-pairs join. Pruned route: a signal with any
+    * duplicate group wins with its lexicographically-smallest
+    * zero-distance pair (distinct qvals have d >= 1, so d = 0 always
+    * wins); only duplicate-free signals run the grid enumeration.
+    */
+  def motif(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame = {
+    val sc = Materialize.checkpoint(segs)
+    val top =
+      if (maxSegments(sc) <= pruneAbove) winners(pairs(sc, sc, None), 1)
+      else {
+        val ranked = Materialize.checkpoint(withGroupRank(sc))
+        // per dup group, its minimal pair = the two smallest members; the
+        // signal's winner among zero pairs is the (seg_a, seg_b) minimum
+        val zp = ranked.filter(col("grk") <= 2 && col("gcnt") >= 2)
+          .groupBy(col("signal_id"), col("qvals"))
+          .agg(min(col("seg")).as("seg_a"),
+            max(when(col("grk") === 2, col("seg"))).as("seg_b"))
+          .withColumn("d", lit(0L))
+        val zeroWinners = winners(zp, 1)
+        val noDup = Materialize.checkpoint(
+          sc.join(zeroWinners.select(col("signal_id")), Seq("signal_id"), "left_anti"))
+        val thresh = adjacentPairs(noDup).groupBy(col("signal_id"))
+          .agg(min(col("adj_d")).as("t"))
+        winners(pairs(noDup, noDup, Some(thresh)), 1).unionByName(zeroWinners)
+      }
+    top.drop("rnk")
+  }
+
+  // ---- the folded route state of the streaming profile ----
+
   /** Driver-side scalars read off a MATERIALIZED route-state frame in one
-    * aggregation pass ([[probeRouteState]]): they let the profile builder
-    * skip whole sides (no dense signal → the history store is never
-    * scanned for the sampled fold), pick the member/rep route without
-    * another history aggregation, and surface order violations without
-    * an extra job.
+    * aggregation pass ([[probeRouteState]], or observed on the state
+    * write): they let the profile fold skip whole sides (no dense signal
+    * → the history store is never scanned for the sampled fold), pick
+    * the member/rep generator without another history aggregation, and
+    * surface order violations without an extra job. `allExact` is the
+    * min exact flag over EVERY signal of the state, touched or not.
     */
   final case class RoutePlanProbe(touched: Long, dense: Long,
                                   unordered: Long, untouched: Long,
-                                  maxMExact: Long, allExact: Boolean,
-                                  maxMTouched: Long)
+                                  maxMExact: Long, maxMTouched: Long,
+                                  allExact: Boolean)
 
-  /** First-chunk integer sum of a qvals array — the only chunk statistic
-    * the routing grid keys on (cells bucket s_0 alone; see routePlanOf).
-    */
-  private def chunk0Sum(qvals: Column): Column =
-    aggregate(slice(qvals, 1, ChunkRows), lit(0L), (acc, x) => acc + x)
+  object RoutePlanProbe {
+    /** The probe a caller proves on the driver without folding the
+      * state: `touched` signals, none of which can reach more than `maxM`
+      * segments, and every signal exact. It does not know the order or
+      * untouched counts (0); the fold reads neither on that route.
+      */
+    def certified(touched: Long, maxM: Long): RoutePlanProbe =
+      RoutePlanProbe(touched, dense = 0L, unordered = 0L, untouched = 0L,
+        maxMExact = maxM, maxMTouched = maxM, allExact = true)
+  }
 
   /** Route-state frames are ONE kind-tagged table (so the streaming path
     * persists and re-reads a single file per batch): `kind = 'sig'` rows
@@ -552,32 +744,40 @@ object MotifDiscord {
 
   private def tagState(sig: DataFrame, grp: DataFrame,
                        salt: Long): DataFrame = {
-    val sigRows = sig
-      .withColumn("kind", lit("sig"))
-      .withColumn("h", lit(null).cast("long"))
-      .withColumn("cnt", lit(null).cast("long"))
-      .withColumn("s0", lit(null).cast("long"))
-      .withColumn("salt", lit(salt))
-    val grpRows = grp
-      .withColumn("kind", lit("grp"))
-      .withColumn("m", lit(null).cast("long"))
-      .withColumn("t", lit(null).cast("long"))
-      .withColumn("last_seg", lit(null).cast("long"))
-      .withColumn("last_qvals", lit(null).cast("array<bigint>"))
-      .withColumn("exact", lit(null).cast("boolean"))
-      .withColumn("ordered", lit(null).cast("boolean"))
-      .withColumn("touched", lit(null).cast("boolean"))
-      .withColumn("dense", lit(null).cast("boolean"))
-      .withColumn("grid_pairs", lit(null).cast("long"))
-      .withColumn("salt", lit(salt))
-    sigRows.select(StateCols.map(col): _*)
-      .unionByName(grpRows.select(StateCols.map(col): _*))
+    def tagged(df: DataFrame, kind: String, cols: Map[String, String]) =
+      cols.foldLeft(df.withColumn("kind", lit(kind)).withColumn("salt", lit(salt))) {
+        case (d, (c, t)) => d.withColumn(c, lit(null).cast(t))
+      }.select(StateCols.map(col): _*)
+    tagged(sig, "sig", Map("h" -> "long", "cnt" -> "long", "s0" -> "long"))
+      .unionByName(tagged(grp, "grp", Map("m" -> "long", "t" -> "long",
+        "last_seg" -> "long", "last_qvals" -> "array<bigint>",
+        "exact" -> "boolean", "ordered" -> "boolean", "touched" -> "boolean",
+        "dense" -> "boolean", "grid_pairs" -> "long")))
+  }
+
+  /** Per-signal and per-group statistics of a set of segments in ONE
+    * exchange: the lead window gives adjacent distances (rank-consecutive
+    * == seg-consecutive under the per-signal sort), and both the
+    * per-signal scalar agg and the per-group agg cluster on supersets of
+    * the window's signal partitioning, so neither re-shuffles.
+    *  - sig: signal_id, m, t (max adjacent distance), first_seg,
+    *    last_seg, first_qvals, last_qvals;
+    *  - grp: signal_id, h (hashFn(salt, qvals)), cnt, s0.
+    */
+  private def segStats(segs: DataFrame, salt: Long,
+                       hashFn: (Long, Column) => Column): (DataFrame, DataFrame) = {
+    val base = segs.select(col("signal_id"), col("seg"), col("qvals"))
+      .repartition(col("signal_id"))
+    val grp = base
+      .groupBy(col("signal_id"), hashFn(salt, col("qvals")).as("h"))
+      .agg(count(lit(1)).as("cnt"), min(chunk0Sum(col("qvals"))).as("s0"))
+    (signalStats(base), grp)
   }
 
   /** ROUTE STATE derived from scratch (one batch pass over `segs`) — the
     * associative per-signal / per-distinct-vector statistics from which
-    * [[routePlan]]'s numbers can be folded incrementally instead of
-    * recomputed over the full history every micro-batch:
+    * [[route]]'s numbers fold incrementally instead of being recomputed
+    * over the full history every micro-batch:
     *
     *  - sig state (one row per signal): `m` (segment count), `t` (max
     *    adjacent distance — the grid threshold; null below 2 segments),
@@ -586,10 +786,14 @@ object MotifDiscord {
     *    history), `exact` (AND over the prior profile's flags), and
     *    `ordered` (false once an append violated per-signal seg order —
     *    the precondition under which the folds equal their batch twins);
-    *  - grp state (one row per distinct vector): `h` = xxhash64(qvals),
-    *    `cnt` (group size — `cnt == 1` is routePlan's singleton a-side,
-    *    every group is one rep on the b-side), `s0` (the group's shared
-    *    first-chunk sum, from which grid cells re-derive under any `w`).
+    *  - grp state (one row per distinct vector): `h` = groupHash(salt,
+    *    qvals), `cnt` (group size), `s0` (the group's shared first-chunk
+    *    sum, from which grid cells re-derive under any `w`).
+    *
+    * This is not the fold of `segs` into an empty state: it carries the
+    * profile's exact flags (a once-sampled signal stays exact = false
+    * through a rebuild, where an empty state would reset it) and marks
+    * every signal untouched, computing no grid.
     *
     * All of these fold associatively under append (counts add, maxes
     * fold, group counts merge by hash), which is what makes the
@@ -601,33 +805,23 @@ object MotifDiscord {
     * where a collision is recomputed (and so re-perturbed) per run, a
     * collision in the PERSISTED state is sticky: once two distinct
     * vectors of one signal merge under a hash, the merged group keeps
-    * cnt >= 2 (no singleton status) and min(s0) for every later batch,
-    * so the fold-vs-batch route-count equality silently weakens forever
-    * for that signal. Still routing-only — grid_pairs/dense shift, the
-    * folded profile values don't.
+    * cnt >= 2 and min(s0) for every later batch. Still routing-only.
     *
-    * HEALING (r13 verdict #3): the stickiness is bounded by the salted
-    * hash + periodic rebuild. The landed segment store retains full
-    * vector fidelity, so recomputing this state from it under a FRESH
-    * `salt` ([[groupHash]]) re-keys every group identity — a pair that
-    * collided under the old salt separates under the new one, and the
-    * rebuilt state equals the batch-derived truth again. profileStream
-    * does this every `rebuildEvery` micro-batches (also clearing any
-    * latched `ordered` flag: the landed store is re-sorted exactly, so
-    * the rebuilt threshold t is the true max adjacent distance even
-    * after an out-of-order append perturbed the folded one).
+    * HEALING: the landed segment store retains full vector fidelity, so
+    * recomputing this state from it under a FRESH `salt` re-keys every
+    * group identity — a pair that collided under the old salt separates
+    * under the new one, and the rebuilt state equals the batch-derived
+    * truth again. profileStream does this every `rebuildEvery`
+    * micro-batches (also clearing any latched `ordered` flag).
     */
   private[graft] def routeStateOf(segs: DataFrame,
                                   profile: DataFrame,
                                   salt: Long = 0L,
                                   hashFn: (Long, Column) => Column = groupHash)
       : DataFrame = {
-    val t = adjacentPairs(segs).groupBy(col("signal_id"))
-      .agg(max(col("adj_d")).as("t"))
-    val sig = segs.groupBy(col("signal_id"))
-      .agg(count(lit(1)).as("m"), max(col("seg")).as("last_seg"),
-        max_by(col("qvals"), col("seg")).as("last_qvals"))
-      .join(t, Seq("signal_id"), "left")
+    val (stats, grp) = segStats(segs, salt, hashFn)
+    val sig = stats
+      .select(col("signal_id"), col("m"), col("t"), col("last_seg"), col("last_qvals"))
       .join(profile.groupBy(col("signal_id"))
           .agg((min(col("exact").cast("int")) === 1).as("exact")),
         Seq("signal_id"), "left")
@@ -636,9 +830,6 @@ object MotifDiscord {
       .withColumn("touched", lit(false))
       .withColumn("dense", lit(null).cast("boolean"))
       .withColumn("grid_pairs", lit(null).cast("long"))
-    val grp = segs
-      .groupBy(col("signal_id"), hashFn(salt, col("qvals")).as("h"))
-      .agg(count(lit(1)).as("cnt"), min(chunk0Sum(col("qvals"))).as("s0"))
     tagState(sig, grp, salt)
   }
 
@@ -646,17 +837,16 @@ object MotifDiscord {
     * route flags for the touched signals — ONE lazy frame the caller
     * materializes once per batch (parquet snapshot in profileStream, a
     * localCheckpoint in [[profileIncrementAuto]]). Array work touches
-    * ONLY δ: its group hashes/chunk sums, its internal adjacent pairs,
-    * and one boundary distance per signal against the persisted
-    * last_qvals — never a rank window, chunk-sum pass, or adjacency join
-    * over history, which is what made the r11 streaming version pay
-    * O(m_total) plan recompute per micro-batch. Counts add, thresholds
-    * max (the boundary pair = persisted last segment vs δ's first), the
-    * last segment advances, order violations latch; the grid re-derives
-    * from the folded (cnt, s0) group scalars under the folded threshold
-    * — routePlan's exact arithmetic, with no history arrays in the plan.
-    * Untouched signals pass through with their flags nulled (touched =
-    * false): a batch cannot change a signal it does not touch.
+    * ONLY δ ([[segStats]] of δ, plus one boundary distance per signal
+    * against the persisted last_qvals) — never a rank window, chunk-sum
+    * pass, or adjacency join over history. Counts add, thresholds max
+    * (the boundary pair = persisted last segment vs δ's first), the last
+    * segment advances, order violations latch; [[route]] re-derives the
+    * grid from the folded (cnt, s0) group scalars under the folded
+    * threshold, for touched signals above pruneAbove only (below it the
+    * route is direct whatever the grid says). Untouched signals pass
+    * through with their flags nulled (touched = false): a batch cannot
+    * change a signal it does not touch.
     *
     * The fold-vs-batch route equality assumes per-signal seg-ordered
     * appends (segmentStream guarantees it) — a violated append is
@@ -667,14 +857,12 @@ object MotifDiscord {
     *
     * `skipGrid = true` is the caller's PROOF that no touched signal's
     * folded m can exceed pruneAbove this batch (e.g. prior global max m
-    * + δ row count <= pruneAbove, both driver-held scalars): the grid
-    * only runs for signals above the threshold, so under that bound it
-    * would fold an empty frame anyway — skipping it removes its whole
-    * subplan (broadcast build, cell explode, two aggregations, the join
-    * back onto the sig rows) plus the shared-frame checkpoints, which at
-    * tiny δ are a fixed multi-stage scheduling premium paid for nothing.
-    * The output is bit-identical to the unskipped fold under the bound;
-    * an unsound hint would only mis-route (cost, not correctness).
+    * + δ's per-signal max <= pruneAbove, both driver-held scalars): the
+    * grid is then switched off, which the optimizer prunes to nothing,
+    * and the shared frames are not checkpointed — at tiny δ those are a
+    * fixed multi-stage premium paid for nothing. The output is identical
+    * to the unskipped fold under the bound; an unsound hint would only
+    * mis-route (cost and the exact flag, never a value's validity).
     */
   private[graft] def foldRouteState(state: DataFrame, newSegs: DataFrame,
                                     budget: Long = RouteBudget,
@@ -684,35 +872,12 @@ object MotifDiscord {
                                     hashFn: (Long, Column) => Column = groupHash)
       : DataFrame = {
     val sigState = state.filter(col("kind") === "sig")
-      .select(col("signal_id"), col("m"), col("t"), col("last_seg"),
-        col("last_qvals"), col("exact"), col("ordered"))
     val grpState = state.filter(col("kind") === "grp")
       .select(col("signal_id"), col("h"), col("cnt"), col("s0"))
-    // δ-side statistics in ONE exchange: the lead window gives adjacent
-    // distances (rank-consecutive == seg-consecutive under the per-signal
-    // sort), and both the per-signal scalar agg and the per-group agg
-    // cluster on supersets of the window's signal partitioning, so
-    // neither re-shuffles and the δ scan's exchange is reused across them
-    val wSeg = Window.partitionBy(col("signal_id")).orderBy(col("seg"))
-    val nBase = newSegs
-      .select(col("signal_id"), col("seg"), col("qvals"))
-      .repartition(col("signal_id"))
-    val nSig = nBase
-      .withColumn("nq", lead(col("qvals"), 1).over(wSeg))
-      .groupBy(col("signal_id")).agg(
-        count(lit(1)).as("dm"), min(col("seg")).as("first_seg"),
-        max(col("seg")).as("dlast_seg"),
-        min_by(col("qvals"), col("seg")).as("first_qvals"),
-        max_by(col("qvals"), col("seg")).as("dlast_qvals"),
-        max(sqDistQ(col("qvals"), col("nq"))).as("dt"))
     // δ vectors hash under the CALLER-SUPPLIED salt, which must be the
-    // one the persisted state was built with — a mismatched salt would
-    // file every δ occurrence under a key its own group can't match
-    // (profileStream persists the salt in the state and recovers it at
-    // restart, so the contract is structural there)
-    val dGrp = nBase
-      .groupBy(col("signal_id"), hashFn(salt, col("qvals")).as("h"))
-      .agg(count(lit(1)).as("cnt"), min(chunk0Sum(col("qvals"))).as("s0"))
+    // one the persisted state was built with (profileStream persists the
+    // salt in the state and recovers it at restart)
+    val (nSig, dGrp) = segStats(newSegs, salt, hashFn)
     // the per-signal fold is a UNION + one hash aggregation, not an
     // outer join: a full-outer SMJ would exchange AND sort both sides
     // (AQE cannot broadcast a full outer), while each folded column here
@@ -720,6 +885,7 @@ object MotifDiscord {
     // aggregates reassemble the pair exactly
     val nullLong = lit(null).cast("long")
     val nullArr = lit(null).cast("array<bigint>")
+    val nullBool = lit(null).cast("boolean")
     val sigSrc = sigState.select(col("signal_id"),
       col("m").as("m0"), col("t").as("t0"), col("last_seg").as("ls0"),
       col("last_qvals").as("lq0"), col("exact").as("ex0"),
@@ -728,10 +894,10 @@ object MotifDiscord {
       nullLong.as("dt"))
     val deltaSrc = nSig.select(col("signal_id"),
       nullLong.as("m0"), nullLong.as("t0"), nullLong.as("ls0"),
-      nullArr.as("lq0"), lit(null).cast("boolean").as("ex0"),
-      lit(null).cast("boolean").as("od0"), col("dm"),
-      col("first_seg").as("fs"), col("first_qvals").as("fq"),
-      col("dlast_seg").as("dls"), col("dlast_qvals").as("dlq"), col("dt"))
+      nullArr.as("lq0"), nullBool.as("ex0"), nullBool.as("od0"),
+      col("m").as("dm"), col("first_seg").as("fs"),
+      col("first_qvals").as("fq"), col("last_seg").as("dls"),
+      col("last_qvals").as("dlq"), col("t").as("dt"))
     val sigMergedPlan = sigSrc.unionByName(deltaSrc)
       .groupBy(col("signal_id"))
       .agg(max(col("m0")).as("m0"), max(col("dm")).as("dm"),
@@ -754,88 +920,46 @@ object MotifDiscord {
           (col("ls0").isNull || col("fs").isNull ||
             col("ls0") < col("fs"))).as("ordered"),
         coalesce(col("exi") === 1, lit(true)).as("exact_prior"))
-    // LAZY local checkpoints on the two shared frames — but only when
-    // the grid runs: the grid's broadcast thresholds and the output rows
-    // both consume sigMerged, the grid and the output grp rows both
-    // consume grpNew, and lazy materialization dedupes each without the
-    // extra eager job an eager checkpoint would cost. Under skipGrid
-    // each frame has exactly one consumer, so a checkpoint would be a
-    // pure block-write premium.
-    val sigMerged =
-      if (skipGrid) sigMergedPlan else Materialize.checkpoint(sigMergedPlan, eager = false)
     // ONE signal-hash exchange feeds the group fold and the whole grid:
-    // every grouping key downstream is a superset of signal_id, so
-    // Catalyst adds no further shuffles past this repartition
+    // every grouping key downstream is a superset of signal_id
     val grpNewPlan = grpState.unionByName(dGrp)
       .repartition(col("signal_id"))
       .groupBy(col("signal_id"), col("h"))
       .agg(sum(col("cnt")).as("cnt"), min(col("s0")).as("s0"))
-    val grpNew =
-      if (skipGrid) grpNewPlan else Materialize.checkpoint(grpNewPlan, eager = false)
-    if (skipGrid) {
-      // the caller certified no touched m can exceed pruneAbove: the
-      // grid would fold an empty frame, so its flag columns are the
-      // literals the empty join would produce — bit-identical output
-      val sigNew = sigMerged
-        .withColumn("grid_pairs", nullLong)
-        .withColumn("dense", when(col("touched"), lit(false)))
-        .withColumn("exact", col("exact_prior"))
-      return tagState(sigNew, grpNew, salt)
-    }
-    // routePlan's grid over the folded state, touched signals only: same
-    // cell arithmetic as candidatePairs, but from (cnt, s0) pairs, and
-    // with BOTH sides of the per-cell product emitted in one exploded
-    // pass — a group row contributes (cb = 1) at its own cell and, when
-    // it is a singleton, (ca = 1) at its three neighbor cells — so the
-    // grid needs one aggregation chain, not an aCells × bCells join
-    // the grid only runs for signals ABOVE the size threshold: below it
-    // the route is exact regardless of grid_pairs (dense requires
-    // m > pruneAbove), so sub-threshold signals skip the cell pass and
-    // their persisted grid_pairs stays null ("not computed below the
-    // routing threshold") — on a fleet of ordinary signals the grid
-    // branch therefore folds an empty frame
-    val withW = sigMerged.filter(col("touched") && col("t").isNotNull &&
-        col("m") > pruneAbove)
-      .select(col("signal_id"), gridWidth(col("t")).as("w"))
-    val cellStruct = "array<struct<cell:bigint,ca:bigint,cb:bigint>>"
-    val grid = grpNew.join(broadcast(withW), Seq("signal_id"))
-      .withColumn("cell", gridCell(col("s0"), col("w")))
-      .select(col("signal_id"), explode(concat(
-        array(struct(col("cell").as("cell"), lit(0L).as("ca"),
-          lit(1L).as("cb"))),
-        when(col("cnt") === 1, array(
-          struct((col("cell") - 1).as("cell"), lit(1L).as("ca"),
-            lit(0L).as("cb")),
-          struct(col("cell").as("cell"), lit(1L).as("ca"),
-            lit(0L).as("cb")),
-          struct((col("cell") + 1).as("cell"), lit(1L).as("ca"),
-            lit(0L).as("cb"))))
-          .otherwise(array().cast(cellStruct)))).as("c"))
-      .groupBy(col("signal_id"), col("c.cell"))
-      .agg(sum(col("c.ca")).as("ca"), sum(col("c.cb")).as("cb"))
-      .groupBy(col("signal_id"))
-      .agg(sum(col("ca") * col("cb")).as("gp"))
-    val sigNew = sigMerged.join(grid, Seq("signal_id"), "left")
-      .withColumn("grid_pairs",
-        when(col("touched") && col("m") > pruneAbove,
-          coalesce(col("gp"), lit(0L))))
-      .withColumn("dense", when(col("touched"),
-        col("m") > pruneAbove &&
-          coalesce(col("grid_pairs"), lit(0L)) > budget))
+    // LAZY local checkpoints on the two shared frames — but only when the
+    // grid runs: the grid and the output rows both consume each of them,
+    // and lazy materialization dedupes each without the extra eager job
+    // an eager checkpoint would cost. Without the grid each frame has
+    // exactly one consumer, so a checkpoint would be a pure block-write
+    // premium
+    def shared(df: DataFrame) =
+      if (skipGrid) df else Materialize.checkpoint(df, eager = false)
+    val grpNew = shared(grpNewPlan)
+    val gridOn =
+      if (skipGrid) lit(false) else col("touched") && col("m") > pruneAbove
+    val sigNew = route(shared(sigMergedPlan), grpNew, budget, pruneAbove, gridOn)
+      .withColumn("dense", when(col("touched"), col("route") === "sampled"))
       .withColumn("exact",
         when(col("touched"), col("exact_prior") && !col("dense"))
           .otherwise(col("exact_prior")))
     tagState(sigNew, grpNew, salt)
   }
 
+  /** The threshold (signal_id, t) of a folded state's touched signals —
+    * the rep generator's grid threshold past the member cap.
+    */
+  private[graft] def touchedThreshold(state: DataFrame): DataFrame =
+    state.filter(col("kind") === "sig" && col("touched") && col("t").isNotNull)
+      .select(col("signal_id"), col("t"))
+
   /** The probe's aggregate expressions with the `kind = 'sig'` restriction
     * folded in, so they can ride ANY action over the full kind-tagged
     * state frame via `Dataset.observe` (the streaming path attaches them
     * to the state-snapshot write — the probe then costs zero extra jobs)
-    * as well as the standalone [[probeRouteState]] aggregation. The extra
-    * `all_exact_all` metric (min exact over ALL sig rows, not just the
-    * touched ones) is what lets the streaming caller certify its
-    * literal-exact fast lane for the NEXT batch without another pass.
+    * as well as the standalone [[probeRouteState]] aggregation. The
+    * `all_exact` metric (min exact over ALL sig rows) is also what lets
+    * the streaming caller certify its fast lane for the NEXT batch
+    * without another pass.
     */
   private[graft] def probeMetricCols: Seq[Column] = {
     val sig = col("kind") === "sig"
@@ -848,65 +972,39 @@ object MotifDiscord {
       sum(when(sig && !col("touched"), 1L).otherwise(0L)).as("untouched"),
       max(when(sig && col("touched") && !col("dense"), col("m")))
         .as("max_m_exact"),
-      min(when(sig && col("touched"), col("exact").cast("long")))
-        .as("all_exact_touched"),
       max(when(sig && col("touched"), col("m"))).as("max_m_touched"),
-      min(when(sig, col("exact").cast("long"))).as("all_exact_all"))
+      min(when(sig, col("exact").cast("long"))).as("all_exact"))
   }
 
-  /** Rebuild ([[RoutePlanProbe]], all-sig-rows-exact) from the named
-    * metric map an observed action produced (see [[probeMetricCols]]).
+  /** Rebuild a [[RoutePlanProbe]] from the named metric map an observed
+    * action produced (see [[probeMetricCols]]).
     */
-  private[graft] def probeFromMetrics(m: Map[String, Any])
-      : (RoutePlanProbe, Boolean) = {
+  private[graft] def probeFromMetrics(m: Map[String, Any]): RoutePlanProbe = {
     def l(k: String): Long = m.get(k) match {
-      case Some(v: Long) => v
       case Some(v: Number) => v.longValue
       case _ => 0L
     }
-    def allExact(k: String): Boolean = m.get(k) match {
-      case Some(v: Number) => v.longValue == 1L
-      case _ => true // no sig rows at all => vacuously exact
-    }
-    (RoutePlanProbe(touched = l("touched"), dense = l("dense"),
+    RoutePlanProbe(touched = l("touched"), dense = l("dense"),
       unordered = l("unordered"), untouched = l("untouched"),
-      maxMExact = l("max_m_exact"), allExact = allExact("all_exact_touched"),
-      maxMTouched = l("max_m_touched")), allExact("all_exact_all"))
+      maxMExact = l("max_m_exact"), maxMTouched = l("max_m_touched"),
+      // no sig rows at all => vacuously exact
+      allExact = m.get("all_exact").forall { case v: Number => v.longValue == 1L; case _ => true })
   }
 
   /** One aggregation pass over a MATERIALIZED route-state frame →
-    * [[RoutePlanProbe]]. Bounded driver fetch (a handful of scalars),
-    * same class as the member/rep router's max-count probe.
+    * [[RoutePlanProbe]]. Bounded driver fetch (a handful of scalars).
     */
   private[graft] def probeRouteState(state: DataFrame): RoutePlanProbe = {
     val r = state.agg(probeMetricCols.head, probeMetricCols.tail: _*).first()
     probeFromMetrics(r.schema.fieldNames.zipWithIndex.map { case (n, i) =>
       n -> (if (r.isNullAt(i)) null else r.get(i))
-    }.toMap)._1
+    }.toMap)
   }
 
-  /** The member-route exact incremental fold, exposed for a caller that
-    * has CERTIFIED the routing on the driver (the streaming fast lane:
-    * skipGrid's `prior max m + δ's per-signal max <= pruneAbove` bound
-    * proves every touched signal stays on the member route, and the
-    * carried all-sig-rows-exact flag makes the output's `exact` column a
-    * literal). Untouched signals' profile rows pass through the min-fold
-    * unchanged (they contribute no cross/within rows), so the caller may
-    * hand the FULL history/profile without the per-signal flag joins
-    * [[routedProfileFrom]] needs in the general case.
-    * Output: signal_id, seg, nnd_q (caller stamps `exact`).
-    */
-  private[graft] def memberProfileIncrement(existingSegs: DataFrame,
-                                            existingProfile: DataFrame,
-                                            newSegs: DataFrame): DataFrame =
-    memberIncrement(existingSegs, existingProfile, newSegs)
-
   /** Prune the HISTORY side of the exact incremental fold to δ's grid-cell
-    * neighborhoods under the persisted per-signal threshold — the cut
-    * that makes exact streaming maintenance O(local·δ) distances per
-    * batch instead of O(m·δ): without it, every micro-batch cross-joins
-    * the FULL landed segment history against δ even when δ lands far
-    * from almost all of it.
+    * neighborhoods under the folded per-signal threshold (`thresh`:
+    * signal_id, t) — the cut that makes exact streaming maintenance
+    * O(local·δ) distances per batch instead of O(m·δ).
     *
     * Exactness (the class doc's cell arithmetic, applied incrementally):
     * under seg-ordered appends the folded `t` is the union's max
@@ -918,24 +1016,22 @@ object MotifDiscord {
     * segment b whose true nearest neighbor a* lies in history has
     * d(b,a*) <= t => |s0_b - s0_a*| <= 2·sqrt(t) < w — a* sits in b's
     * own 3-cell neighborhood and survives. Duplicate groups prune
-    * atomically (identical vectors share s0), so the rep fold's
+    * atomically (identical vectors share s0), so the rep generator's
     * group-rank election is unperturbed. For signals whose prior rows
     * are sampled bounds (possibly > t) or whose appends were unordered,
     * pruning only REMOVES candidates from a min-fold, so those rows stay
-    * the valid upper bounds they already were — the same contract the
-    * unpruned fold gives them.
+    * the valid upper bounds they already were.
     *
-    * The caller keeps the FULL existingProfile as the fold's
-    * pass-through rows; only the distance fan-out side shrinks. The hot
+    * The caller keeps the FULL existing profile as the fold's
+    * pass-through rows; only the distance fan-out side shrinks, to the
+    * touched signals' hot cells. The hot
     * cell set is δ-derived (<= 3·δ rows after distinct) and broadcast,
     * so history filters map-side — no history-wide shuffle is added.
     */
   private[graft] def gridPruneHistory(existingSegs: DataFrame,
                                       newSegs: DataFrame,
-                                      state: DataFrame): DataFrame = {
-    val withW = state
-      .filter(col("kind") === "sig" && col("touched") && col("t").isNotNull)
-      .select(col("signal_id"), gridWidth(col("t")).as("w"))
+                                      thresh: DataFrame): DataFrame = {
+    val withW = thresh.select(col("signal_id"), gridWidth(col("t")).as("w"))
     val hot = newSegs.join(broadcast(withW), Seq("signal_id"))
       .select(col("signal_id"),
         gridCell(chunk0Sum(col("qvals")), col("w")).as("cell"))
@@ -943,85 +1039,59 @@ object MotifDiscord {
         explode(array(col("cell") - 1, col("cell"), col("cell") + 1))
           .as("cell"))
       .distinct()
-    existingSegs.join(broadcast(withW), Seq("signal_id"), "left")
-      .withColumn("cell",
-        when(col("w").isNotNull, gridCell(chunk0Sum(col("qvals")), col("w"))))
-      .join(broadcast(hot.withColumn("hit", lit(true))),
-        Seq("signal_id", "cell"), "left")
-      // a touched signal with t null has no history rows (t is non-null
-      // the moment a boundary pair exists); the w-null branch keeps any
-      // unforeseen remainder unpruned rather than silently dropping it
-      .filter(col("w").isNull || col("hit").isNotNull)
+    // a signal without a threshold has no pair with δ to offer: it is
+    // untouched (no δ rows), or touched with no history (t is non-null
+    // the moment a boundary pair exists)
+    existingSegs.join(broadcast(withW), Seq("signal_id"))
+      .withColumn("cell", gridCell(chunk0Sum(col("qvals")), col("w")))
+      .join(broadcast(hot), Seq("signal_id", "cell"), "left_semi")
       .select(col("signal_id"), col("seg"), col("qvals"))
   }
 
-  /** The routed profile fold over a MATERIALIZED route state + its probe:
-    * the exact incremental fold ([[profileIncrement]]) on the
-    * exact-routed side, the sampled fold ([[sampledIncrement]]) on the
-    * dense side — each skipped entirely when its side is empty, so the
-    * history store is never scanned for a side that would filter to
-    * nothing — and untouched signals' prior profile rows passed through
-    * unchanged (skipped when every signal is touched). Exactness and the
-    * `exact` flag behave as documented on [[profileIncrementAuto]].
+  /** THE stream batch's profile fold, over a route `state` and its
+    * `probe`: the exact increment (member generator below the size cap,
+    * rep generator through the folded grid past it) on the exact-routed
+    * side, the sampled increment on the dense side — each skipped when
+    * its side is empty, so the history store is never scanned for a side
+    * that would filter to nothing — and untouched signals' prior profile
+    * rows passed through unchanged.
+    *
+    * When no touched signal is dense and every signal is exact, the fold
+    * needs no per-signal flag joins at all and the exact column is a
+    * literal; on the member route it then never reads `state` (passed by
+    * name), which is what lets profileStream run it on a probe it
+    * certified on the driver ([[RoutePlanProbe.certified]]) while the
+    * state is still being written. Exactness and the `exact` flag behave
+    * as documented on [[profileIncrementAuto]].
     * Output: signal_id, seg, nnd_q, exact.
     */
   private[graft] def routedProfileFrom(existingSegs: DataFrame,
                                        existingProfile: DataFrame,
-                                       newSegs: DataFrame, state: DataFrame,
+                                       newSegs: DataFrame, state: => DataFrame,
                                        probe: RoutePlanProbe, mod: Int = 4,
                                        pruneAbove: Int = PruneAbove): DataFrame = {
     val outProfile = existingProfile.select(col("signal_id"), col("seg"),
       col("nnd_q"), col("exact"))
     if (probe.touched == 0) return outProfile
-    // grid-prune the exact side's history fan-out only past the member
-    // route's size cap: below it the cross join is already bounded at
-    // <= pruneAbove·δ pairs per signal and the prune's extra joins would
-    // be pure per-batch latency; past it the rep route would otherwise
-    // pay O(m·δ) rep distances AND an O(m log m) group-rank window over
-    // the full history every batch — pruning first cuts both to δ's
-    // cell neighborhoods (see [[gridPruneHistory]] for exactness)
-    def eForCross(e: DataFrame, n: DataFrame): DataFrame =
-      if (probe.maxMExact > pruneAbove) gridPruneHistory(e, n, state) else e
-    // the folded per-signal threshold also routes the rep fold's pair
-    // enumeration through the grid (see repIncrement) past the member
-    // cap — the within-batch δ² product and the e x n rep cross both
-    // become candidate-bounded
-    val repThresh: Option[DataFrame] =
-      if (probe.maxMExact > pruneAbove)
-        Some(state.filter(col("kind") === "sig" && col("touched") &&
-            col("t").isNotNull)
-          .select(col("signal_id"), col("t")))
-      else None
-    // FAST PATH — every signal touched, exact-routed, and historically
-    // exact (the budget-clean steady state): the fold needs no per-signal
-    // flag joins at all, and the exact column is a literal
-    if (probe.dense == 0 && probe.untouched == 0 && probe.allExact)
-      return profileIncrementWithMax(eForCross(existingSegs, newSegs),
-        existingProfile.select(col("signal_id"), col("seg"), col("nnd_q")),
-        newSegs, pruneAbove, probe.maxMExact, repThresh)
+    lazy val st = state
+    val exactPairs =
+      if (probe.maxMExact <= pruneAbove) member else rep(Some(touchedThreshold(st)))
+    val prof = existingProfile.select(col("signal_id"), col("seg"), col("nnd_q"))
+    if (probe.dense == 0 && probe.allExact)
+      return increment(existingSegs, prof, newSegs, exactPairs)
         .withColumn("exact", lit(true))
-    val flags = broadcast(state
+    val flags = broadcast(st
       .filter(col("kind") === "sig" && col("touched"))
       .select(col("signal_id"), col("dense"), col("exact")))
     def side(df: DataFrame, dense: Boolean): DataFrame =
       df.join(flags.select(col("signal_id"), col("dense")), Seq("signal_id"))
         .filter(col("dense") === dense).drop("dense")
-    val prof = existingProfile.select(col("signal_id"), col("seg"),
-      col("nnd_q"))
-    val exactPart =
-      if (probe.touched > probe.dense) {
-        val nExact = side(newSegs, dense = false)
-        Some(profileIncrementWithMax(
-          eForCross(side(existingSegs, dense = false), nExact),
-          side(prof, dense = false), nExact, pruneAbove, probe.maxMExact,
-          repThresh))
-      } else None
-    val densePart =
-      if (probe.dense > 0) Some(sampledIncrement(
-        side(existingSegs, dense = true), side(prof, dense = true),
-        side(newSegs, dense = true), mod))
-      else None
-    val incremented = (exactPart.toSeq ++ densePart.toSeq)
+    def part(dense: Boolean, gen: Generator) =
+      increment(side(existingSegs, dense), side(prof, dense),
+        side(newSegs, dense), gen)
+    val incremented = (
+      (if (probe.touched > probe.dense) Seq(part(dense = false, exactPairs)) else Nil) ++
+        (if (probe.dense > 0) Seq(part(dense = true, sampled(mod))) else Nil))
       .reduce(_ unionByName _)
       .join(flags.select(col("signal_id"), col("exact")), Seq("signal_id"))
     if (probe.untouched == 0) incremented
@@ -1032,21 +1102,20 @@ object MotifDiscord {
 
   /** ROUTED incremental maintenance — [[profileIncrement]] with the
     * dense-regime escape hatch of [[profileAuto]]: per batch, the route
-    * plan (re-derived here from [[routeStateOf]] over the existing
+    * state (derived here with [[routeStateOf]] over the existing
     * segments — callers with a persisted state fold it via
-    * [[foldRouteState]] directly and never pay this batch pass)
-    * decides per signal whether the exact incremental fold stays within
-    * the pair budget; signals routed 'sampled' fold the incremental
-    * sampled bound instead, so an inherently dense signal
-    * (near-identical yet distinct segments forever) costs O(m·δ/mod) per
-    * batch instead of near-rep-level m·δ cross distances. The `exact`
-    * column carries the per-signal truth status into the persisted
-    * snapshot, and it stays truthful across route transitions in BOTH
-    * directions: once a signal has folded a sampled bound, later
-    * exact-routed batches still fold over that bound, so
-    * exact = routed-exact AND all-prior-exact. Signals untouched by the
-    * batch pass their profile rows through unchanged.
-    * Output: signal_id, seg, nnd_q, exact.
+    * [[foldRouteState]] directly and never pay this batch pass) decides
+    * per signal whether the exact incremental fold stays within the pair
+    * budget; signals routed 'sampled' fold the incremental sampled bound
+    * instead, so an inherently dense signal (near-identical yet distinct
+    * segments forever) costs O(m·δ/mod) per batch instead of
+    * near-rep-level m·δ cross distances. The `exact` column carries the
+    * per-signal truth status into the persisted snapshot, and it stays
+    * truthful across route transitions in BOTH directions: once a signal
+    * has folded a sampled bound, later exact-routed batches still fold
+    * over that bound, so exact = routed-exact AND all-prior-exact.
+    * Signals untouched by the batch pass their profile rows through
+    * unchanged. Output: signal_id, seg, nnd_q, exact.
     */
   def profileIncrementAuto(existingSegs: DataFrame, existingProfile: DataFrame,
                            newSegs: DataFrame,
@@ -1057,273 +1126,5 @@ object MotifDiscord {
     val p = Materialize.checkpoint(existingProfile)
     val st = Materialize.checkpoint(foldRouteState(routeStateOf(e, p), n, budget, pruneAbove))
     routedProfileFrom(e, p, n, st, probeRouteState(st), mod, pruneAbove)
-  }
-
-  /** Per-signal pair budget above which [[profileAuto]] abandons the
-    * exact pruned route for the sampled upper bound: the cost-based
-    * analogue of [[PruneAbove]]'s size routing. 2M candidate rows per
-    * signal keeps a single signal's grid join under one executor-task's
-    * comfortable workload even when skew concentrates it.
-    */
-  val RouteBudget: Long = 2L * 1000 * 1000
-
-  /** Cost-based ROUTING PLAN for the matrix profile — the optimizer-
-    * style step that makes the dense regime a measured decision instead
-    * of a wall-clock surprise. Per signal it reports
-    *  - m (complete segments), n_dup (duplicate-group members),
-    *    n_reps (distinct quantized vectors), and
-    *  - grid_pairs: the EXACT pre-filter cardinality of the pruned
-    *    route's grid equi-join (Σ over cells of 3-exploded-singleton
-    *    count × representative count) — computed from per-cell COUNTS,
-    *    never by materializing the pairs, so the plan itself is O(m),
-    * and routes: 'direct' (m <= pruneAbove — the self-join is cheapest),
-    * 'pruned' (grid_pairs within budget — exact, sub-quadratic), else
-    * 'sampled' (inherently dense: near-identical yet distinct segments,
-    * where no exact index can prune — take the anytime upper bound).
-    * Every number is a pure integer function of the data, so the DuckDB
-    * oracle recomputes the whole plan exactly.
-    * Output: signal_id, m, n_dup, n_reps, grid_pairs, route.
-    */
-  def routePlan(segs: DataFrame, budget: Long = RouteBudget,
-                pruneAbove: Int = PruneAbove): DataFrame =
-    routePlanOf(Materialize.checkpoint(segs), budget, pruneAbove)
-
-  private def routePlanOf(sc: DataFrame, budget: Long,
-                          pruneAbove: Int): DataFrame =
-    routePlanFrom(withGroupRank(sc),
-      adjacentPairs(sc).groupBy(col("signal_id"))
-        .agg(max(col("adj_d")).as("t")),
-      budget, pruneAbove)
-
-  /** [[routePlanOf]] over pre-computed ranked/threshold frames — shared
-    * with [[profileAuto]] so the rank window and the adjacent-pair pass
-    * are built once and reused by both the plan and the pruned branch.
-    */
-  private def routePlanFrom(ranked: DataFrame, thresh: DataFrame,
-                            budget: Long, pruneAbove: Int): DataFrame = {
-    val counts = ranked.groupBy(col("signal_id"))
-      .agg(count(lit(1)).as("m"),
-        sum(when(col("gcnt") >= 2, 1L).otherwise(0L)).as("n_dup"),
-        sum(when(col("grk") === 1, 1L).otherwise(0L)).as("n_reps"))
-    val withW = thresh.withColumn("w", gridWidth(col("t")))
-    // same cell arithmetic as candidatePairs, but folded to counts
-    def cells(df: DataFrame) =
-      withChunkSums(df).join(broadcast(withW), "signal_id")
-        .withColumn("cell", gridCell(col("s_0"), col("w")))
-    val aCells = cells(ranked.filter(col("gcnt") === 1))
-      .select(col("signal_id"),
-        explode(array(col("cell") - 1, col("cell"), col("cell") + 1))
-          .as("cell"))
-      .groupBy(col("signal_id"), col("cell"))
-      .agg(count(lit(1)).as("ca"))
-    val bCells = cells(ranked.filter(col("grk") === 1))
-      .groupBy(col("signal_id"), col("cell"))
-      .agg(count(lit(1)).as("cb"))
-    val grid = aCells.join(bCells, Seq("signal_id", "cell"))
-      .groupBy(col("signal_id"))
-      .agg(sum(col("ca") * col("cb")).as("grid_pairs"))
-    counts.join(grid, Seq("signal_id"), "left")
-      .withColumn("grid_pairs", coalesce(col("grid_pairs"), lit(0L)))
-      .withColumn("route",
-        when(col("m") <= pruneAbove, lit("direct"))
-          .when(col("grid_pairs") <= budget, lit("pruned"))
-          .otherwise(lit("sampled")))
-      .select(col("signal_id"), col("m"), col("n_dup"), col("n_reps"),
-        col("grid_pairs"), col("route"))
-  }
-
-  /** ROUTED matrix profile: applies [[routePlan]] per signal — exact
-    * (direct or pruned) wherever the plan's measured candidate count
-    * allows, the sampled upper bound only where the data is inherently
-    * dense — instead of [[profile]]'s global size routing. The `exact`
-    * column carries the per-row truth status, so downstream consumers
-    * (and the oracle) know which rows are the true profile and which are
-    * the anytime bound. Output: signal_id, seg, nnd_q, exact.
-    */
-  def profileAuto(segs: DataFrame, budget: Long = RouteBudget,
-                  mod: Int = 4,
-                  pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = Materialize.checkpoint(segs)
-    // materialize the rank window, the per-signal threshold and the tiny
-    // route table ONCE: the three route branches below each reference
-    // them (plus discordAuto's window on top), and without the
-    // checkpoints the whole routePlanOf DAG — rank windows + adjacent
-    // pairs + grid-cell counts, ~8 exchanges — was re-inlined under
-    // every branch of the union (measured r15: 278-Exchange / 4.7k-line
-    // physical plan for seg_profile_auto), and the pruned branch re-ran
-    // the same two window passes over its split
-    val ranked = Materialize.checkpoint(withGroupRank(sc))
-    val thresh = Materialize.checkpoint(adjacentPairs(sc).groupBy(col("signal_id"))
-      .agg(max(col("adj_d")).as("t")))
-    val routes = Materialize.checkpoint(routePlanFrom(ranked, thresh, budget, pruneAbove)
-      .select(col("signal_id"), col("route")))
-    val routed = sc.join(broadcast(routes), "signal_id")
-    def side(r: String) = routed.filter(col("route") === r).drop("route")
-    val prunedRanked = ranked.join(broadcast(routes), "signal_id")
-      .filter(col("route") === "pruned").drop("route")
-    directProfile(side("direct"))
-      .unionByName(prunedProfileFrom(prunedRanked, thresh))
-      .withColumn("exact", lit(true))
-      .unionByName(
-        profileSampled(side("sampled"), mod)
-          .withColumnRenamed("nnd_ub_q", "nnd_q")
-          .withColumn("exact", lit(false)))
-  }
-
-  /** ROUTED discord: per-signal argmax of [[profileAuto]], carrying the
-    * exact flag — the routed serving shape of the reference's ingest-time
-    * outlier question ("which segment is most anomalous") for fleets
-    * whose histories may be inherently dense. A sampled-route signal's
-    * discord ranks upper bounds (nnd_ub >= nnd, same hash-chosen
-    * reference set on both engines), still a deterministic anomaly
-    * ranking; `exact = false` flags those rows so consumers know the
-    * verdict is the anytime bound, not the proven maximum.
-    * Output: signal_id, seg, nnd_q, exact.
-    */
-  def discordAuto(segs: DataFrame, budget: Long = RouteBudget,
-                  mod: Int = 4,
-                  pruneAbove: Int = PruneAbove): DataFrame = {
-    val w = Window.partitionBy(col("signal_id"))
-      .orderBy(col("nnd_q").desc, col("seg"))
-    profileAuto(segs, budget, mod, pruneAbove)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .drop("rn")
-  }
-
-  /** Top-k discords per signal (HOT SAX's actual use case reports the k
-    * most anomalous subsequences, not one): rank the profile by
-    * (nnd_q DESC, seg). Output adds the rank column.
-    */
-  def discordTopK(segs: DataFrame, k: Int,
-                  pruneAbove: Int = PruneAbove): DataFrame = {
-    val w = Window.partitionBy(col("signal_id"))
-      .orderBy(col("nnd_q").desc, col("seg"))
-    profile(segs, pruneAbove)
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-  }
-
-  /** Per signal, the complete segment whose exact nearest-neighbor
-    * distance (integer squared L2 over qvals) is largest.
-    * Output: signal_id, seg, nnd_q — identical to the all-pairs join.
-    * Derived from [[profile]] (its argmax with the same tie-break), so it
-    * inherits the duplicate collapse and the size routing.
-    */
-  def discord(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame = {
-    val w = Window.partitionBy(col("signal_id"))
-      .orderBy(col("nnd_q").desc, col("seg"))
-    profile(segs, pruneAbove)
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") === 1)
-      .select(col("signal_id"), col("seg"), col("nnd_q"))
-  }
-
-  /** Top-k closest pairs per signal (ranked by (dist, seg_a, seg_b)) —
-    * the k-motif result shape. Exactness of the pruned route needs a
-    * threshold covering the k-th closest pair: the k smallest ADJACENT
-    * distances are themselves k valid pairs, so the true k-th closest
-    * pair distance is <= the k-th smallest adjacent distance — that
-    * order statistic (one small per-signal window over the O(m) adjacent
-    * pairs) is the per-signal T. Output adds the rank column.
-    */
-  def motifTopK(segs: DataFrame, k: Int,
-                pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = Materialize.checkpoint(segs)
-    val pairs =
-      if (maxSegments(sc) <= pruneAbove) naivePairs(sc)
-      else {
-        // Duplicate collapse for the pair ranking. The k smallest pairs
-        // per signal (ordered by (d, seg_a, seg_b)) only ever touch each
-        // group's k+1 SMALLEST members: a pair whose endpoint ranks j-th
-        // (j > k+1) inside its group is lexicographically preceded by the
-        // >= k pairs that swap that endpoint for each smaller group
-        // member (same distance, strictly smaller key) — so it cannot be
-        // in the top k. Hence:
-        //  - zero-distance pairs = all pairs among each dup group's k+1
-        //    smallest members (<= C(k+1,2) per group);
-        //  - positive pairs = grid-enumerated REPRESENTATIVE pairs fanned
-        //    back out to the k+1 smallest members of each endpoint's
-        //    group (<= (k+1)^2 per rep pair).
-        // A constant 10^4-segment signal thus contributes C(k+1,2) rows
-        // instead of 10^8.
-        val ranked = Materialize.checkpoint(withGroupRank(sc))
-        val capped = ranked.filter(col("grk") <= k + 1)
-        val cz = capped.select(col("signal_id"), col("qvals"), col("seg"))
-        val zeroPairs = cz
-          .join(cz.withColumnRenamed("seg", "seg_b"), Seq("signal_id", "qvals"))
-          .where(col("seg") < col("seg_b"))
-          .select(col("signal_id"), col("seg").as("seg_a"), col("seg_b"),
-            lit(0L).as("d"))
-        val wAdj = Window.partitionBy(col("signal_id"))
-          .orderBy(col("adj_d").asc)
-        // a signal with FEWER than k adjacent pairs (m <= k) has no valid
-        // k-th-order bound — keep all its pairs via an effectively
-        // infinite threshold (MaxValue/8 so the 4*t comparison cannot
-        // overflow); such signals have at most k*(k+1)/2 pairs total
-        val thresh = adjacentPairs(sc)
-          .withColumn("arnk", row_number().over(wAdj))
-          .filter(col("arnk") <= k)
-          .groupBy(col("signal_id"))
-          .agg(max(col("adj_d")).as("tk"), count(lit(1)).as("na"))
-          .select(col("signal_id"),
-            when(col("na") < k, lit(Long.MaxValue / 8))
-              .otherwise(col("tk")).as("t"))
-        val reps = ranked.filter(col("grk") === 1)
-          .select(col("signal_id"), col("seg"), col("qvals"))
-        val repPairs = candidatePairs(reps, reps, thresh)
-          .where(col("seg_a") < col("seg_b"))
-        // fan each rep pair to the capped members of both groups
-        val mem = capped.select(col("signal_id"), col("qvals"),
-          col("seg").as("m"))
-        val fanned = repPairs
-          .join(reps.select(col("signal_id"), col("seg").as("seg_a"),
-            col("qvals").as("qv_a")), Seq("signal_id", "seg_a"))
-          .join(reps.select(col("signal_id"), col("seg").as("seg_b"),
-            col("qvals").as("qv_b")), Seq("signal_id", "seg_b"))
-          .join(mem.select(col("signal_id"), col("qvals").as("qv_a"),
-            col("m").as("ma")), Seq("signal_id", "qv_a"))
-          .join(mem.select(col("signal_id"), col("qvals").as("qv_b"),
-            col("m").as("mb")), Seq("signal_id", "qv_b"))
-          .select(col("signal_id"), least(col("ma"), col("mb")).as("seg_a"),
-            greatest(col("ma"), col("mb")).as("seg_b"), col("d"))
-        zeroPairs.unionByName(fanned)
-      }
-    val w = Window.partitionBy(col("signal_id"))
-      .orderBy(col("d").asc, col("seg_a"), col("seg_b"))
-    pairs.where(col("seg_a") < col("seg_b"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
-      .select(col("signal_id"), col("seg_a"), col("seg_b"),
-        col("d").as("dist_q"), col("rnk"))
-  }
-
-  /** Per signal, the exactly-closest pair of complete segments (ties
-    * broken by (seg_a, seg_b)). Output: signal_id, seg_a, seg_b, dist_q —
-    * identical to the all-pairs join. Pruned route: a signal with any
-    * duplicate group wins with its lexicographically-smallest
-    * zero-distance pair (distinct qvals have d >= 1, so d = 0 always
-    * wins); only duplicate-free signals run the grid enumeration.
-    */
-  def motif(segs: DataFrame, pruneAbove: Int = PruneAbove): DataFrame = {
-    val sc = Materialize.checkpoint(segs)
-    if (maxSegments(sc) <= pruneAbove) winners(naivePairs(sc), forDiscord = false)
-    else {
-      val ranked = Materialize.checkpoint(withGroupRank(sc))
-      // per dup group, its minimal pair = the two smallest members; the
-      // signal's winner among zero pairs is the (seg_a, seg_b) minimum
-      val zp = ranked.filter(col("grk") <= 2 && col("gcnt") >= 2)
-        .groupBy(col("signal_id"), col("qvals"))
-        .agg(min(col("seg")).as("seg_a"),
-          max(when(col("grk") === 2, col("seg"))).as("seg_b"))
-      val wz = Window.partitionBy(col("signal_id"))
-        .orderBy(col("seg_a"), col("seg_b"))
-      val zeroWinners = zp.withColumn("rnk", row_number().over(wz))
-        .filter(col("rnk") === 1)
-        .select(col("signal_id"), col("seg_a"), col("seg_b"),
-          lit(0L).as("dist_q"))
-      val dupSignals = zeroWinners.select(col("signal_id"))
-      val noDup = Materialize.checkpoint(sc.join(dupSignals, Seq("signal_id"), "left_anti"))
-      val thresh = adjacentPairs(noDup).groupBy(col("signal_id"))
-        .agg(min(col("adj_d")).as("t"))
-      winners(candidatePairs(noDup, noDup, thresh), forDiscord = false)
-        .unionByName(zeroWinners)
-    }
   }
 }

@@ -378,8 +378,7 @@ object TierQueries {
     // oracle proves the rewrite is lossless (file counts are asserted in
     // CompactorSpec; this query verifies the data contract)
     "storage_compact" -> ((s, d) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-compact").toString + "/store"
+      val base = Materialize.scratchDir("compact") + "/store"
       r(s, d).repartition(48).write.mode("overwrite").parquet(base)
       graft.sources.Compactor.compact(s, base, targetBytes = 4L << 20,
         sortCols = Seq("signal_id", "seq_no"))
@@ -396,8 +395,7 @@ object TierQueries {
     // sig_bucket partitions rewrite; TierManagerSpec asserts the
     // bounded-rewrite, stats-patch, and idempotence invariants.
     "storage_upsert" -> ((s, d) => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-upsert-q").toString
+      val root = Materialize.scratchDir("upsert-q")
       val tm = new TierManager(s, root)
       // one seq_no derivation: rr feeds the tier0 land (data + stats
       // passes) and the correction batch — unmaterialized, the

@@ -55,7 +55,7 @@ object CodecStore {
   private def matrix(readings: DataFrame)(implicit ec: ExecutionContext): DataFrame = {
     val spark = readings.sparkSession
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-codec")
+    val base = java.nio.file.Paths.get(Materialize.scratchDir("codec"))
     // materialized once: the readings feed ~8 independent measurement
     // jobs (3 representations x 4 codecs, the segment encoders, the
     // plane layouts, the base-min scalar) — unmaterialized, each write

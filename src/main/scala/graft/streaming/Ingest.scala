@@ -213,8 +213,16 @@ object Ingest {
     *     the operator's output, same semantics as the batch path's
     *     nearDupBySets confirm (StreamingSpec pins cross-batch pair
     *     equality);
-    *  4. the batch's bands and element sets APPEND to their stores — the
+    *  4. the batch's bands and element sets land in their stores — the
     *     stores grow by O(batch), never rewritten.
+    *
+    * Replay-safe under foreachBatch's at-least-once delivery: every store
+    * is partitioned by `batch_id` and written with a dynamic-partition
+    * OVERWRITE (tier0Writer's discipline), and the probe reads only
+    * `batch_id < ` the current batch. A batch replayed after a crash
+    * between its writes and the checkpoint commit replaces its own
+    * partitions and never probes its own bands (StreamingSpec drops a
+    * commit entry, restarts, and compares every store to a clean run).
     *
     * Per-batch counts are logged (`[dedup-grow]` stderr lines). Returns
     * the started query; per-batch cost lives in `recentProgress`
@@ -230,6 +238,9 @@ object Ingest {
     val bandDir = s"$storeDir/bands"
     val setsDir = s"$storeDir/sets"
     val pairsDir = s"$storeDir/pairs"
+    def land(df: DataFrame, dir: String): Unit =
+      df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id").parquet(dir)
     docs.writeStream.outputMode("append")
       .option("checkpointLocation", s"$storeDir/_chk")
       .trigger(Trigger.AvailableNow())
@@ -250,7 +261,9 @@ object Ingest {
         val bands = Materialize.cache(graft.operators.Dedup.bandsOfSignatures(sigs))
         val hasStore = new java.io.File(bandDir).isDirectory
         if (hasStore) {
-          val cand = sp.read.parquet(bandDir)
+          def landed(dir: String) =
+            sp.read.parquet(dir).filter(col("batch_id") < batchId)
+          val cand = landed(bandDir)
             .select(col("doc_id").as("dup_of"), col("band"), col("bh"))
             .join(broadcast(bands.withColumnRenamed("doc_id", "new_id")),
               Seq("band", "bh"))
@@ -260,7 +273,7 @@ object Ingest {
           // own sets broadcast, same size-ratio prune + one-pass
           // Jaccard as the batch confirm
           val confirmed = Materialize.cache(cand
-            .join(sp.read.parquet(setsDir)
+            .join(landed(setsDir)
                 .select(col("doc_id").as("dup_of"), col("sh").as("shb")),
               Seq("dup_of"))
             .join(broadcast(batchSets.withColumnRenamed("doc_id", "new_id")),
@@ -274,15 +287,15 @@ object Ingest {
             .select(col("new_id").as("doc_id"), col("dup_of"), col("jac"),
               lit(batchId).as("batch_id")))
           val nConfirmed = confirmed.count()
-          confirmed.write.mode("append").parquet(pairsDir)
+          land(confirmed, pairsDir)
           System.err.println(s"[dedup-grow] batch=$batchId " +
             s"confirmed_pairs=$nConfirmed")
         } else {
           System.err.println(s"[dedup-grow] batch=$batchId store empty")
         }
-        bands.select(col("doc_id"), col("band"), col("bh"))
-          .write.mode("append").parquet(bandDir)
-        batchSets.write.mode("append").parquet(setsDir)
+        land(bands.select(col("doc_id"), col("band"), col("bh"))
+          .withColumn("batch_id", lit(batchId)), bandDir)
+        land(batchSets.withColumn("batch_id", lit(batchId)), setsDir)
       }}
       .start()
   }
@@ -551,11 +564,11 @@ object Ingest {
 
   /** Streaming MATRIX-PROFILE maintenance — STAMPI at segment granularity
     * folded into the ingest path: every micro-batch of newly sealed
-    * segments updates a PERSISTED per-signal profile via
-    * MotifDiscord.profileIncrementAuto (cost-routed per signal: exact
+    * segments updates a PERSISTED per-signal profile through ONE fold,
+    * MotifDiscord.routedProfileFrom (cost-routed per signal: exact
     * incremental fold — O(m·δ) cross distances + O(δ²) within-batch for
     * short histories, duplicate-collapsed rep pairs past the size
-    * threshold — wherever the routePlan pair budget allows; the
+    * threshold — wherever the route function's pair budget allows; the
     * incremental SAMPLED upper bound, O(m·δ/mod) per batch, for signals
     * whose histories are inherently dense, with the per-signal `exact`
     * flag carried into the snapshot), so discord/motif serving reads a
@@ -609,15 +622,20 @@ object Ingest {
     * both partition-parallel; profile snapshots are one row per segment
     * (compact); nothing collects on the driver.
     *
-    * Per-batch job ladder (r16): δ materializes once (JOB 1, the only
-    * action on the stream-side lineage) + one tiny δ sizing agg; the
-    * route-state fold writes its snapshot DIRECTLY to parquet with the
-    * probe aggregates riding the write via observe() — no state
-    * localCheckpoint (nothing data-sized pinned in executor storage) and
-    * no separate probe job; and when the carried driver scalars certify
-    * the fast lane (skipGrid + all sig rows exact), the profile fold
-    * provably needs neither the folded state nor the probe and runs
-    * CONCURRENTLY with the state write. Snapshot ids and the certificate
+    * Per-batch job ladder: δ materializes once (JOB 1, the only action
+    * on the stream-side lineage) + one tiny δ sizing agg, and the segment
+    * store append runs concurrently with the rest; the route-state fold
+    * writes its snapshot DIRECTLY to parquet with the probe aggregates
+    * riding the write via observe() — no state localCheckpoint (nothing
+    * data-sized pinned in executor storage) and no separate probe job;
+    * then the batch's profile snapshot is written by the one fold entry
+    * point. Its probe comes from one of two lanes: when the carried
+    * driver scalars certify the fast lane (skipGrid + all sig rows
+    * exact), a certified probe on which the fold reads neither the
+    * folded state nor the observed probe, so it runs CONCURRENTLY with
+    * the state write; otherwise the observed probe, after the state
+    * write lands. StreamingSpec pins one batch's jobs and tasks on each
+    * lane. Snapshot ids and the certificate
     * scalars are carried in-memory across contiguous batches (listed /
     * recovered once per JVM; every carried value advances only after the
     * batch's writes commit, so same-JVM replays and fresh-JVM restarts
@@ -695,17 +713,6 @@ object Ingest {
         val s = spark
         import s.implicits._
         import graft.operators.MotifDiscord
-        // per-phase wall-clock attribution, stderr-only and off by
-        // default: the per-batch cost at tiny δ is stage-count-bound,
-        // and optimizing it blind is guesswork
-        val dbg = sys.env.contains("SPARK_GRAFT_PROFILE_DEBUG")
-        var t0 = System.nanoTime()
-        def lap(phase: String): Unit = if (dbg) {
-          val t1 = System.nanoTime()
-          System.err.println(
-            f"[profileStream] batch $batchId $phase ${(t1 - t0) / 1e9}%.3fs")
-          t0 = t1
-        }
         // JOB 1 — materialize δ (same fixed-point mapping as the batch
         // Segments.completeQuantized). The localCheckpoint is the ONLY
         // action on the stream-side lineage, so the stateful
@@ -720,19 +727,20 @@ object Ingest {
           .select(col("signal_id"), col("seg"), col("qvals")))
         val newSegs =
           s.createDataFrame(newSegsClone.rdd, newSegsClone.schema)
-        lap("delta-ckpt")
-        // one tiny agg over the checkpointed δ blocks feeds two driver
-        // decisions: the per-SIGNAL max count certifies the skipGrid
-        // hint below, and the total row count sizes the landing write —
+        // one tiny agg over the checkpointed δ blocks feeds the driver
+        // decisions: the per-SIGNAL max count and the touched-signal count
+        // certify the fast lane below, and the total row count sizes the
+        // landing write —
         // a tiny δ written at the stream's full shuffle width lands 32
         // near-empty files per batch dir and every later batch re-pays
         // their listing+footer cost when it re-reads history, while a
         // bulk δ keeps its width (≈64k segment rows ≈ 10 MB per file)
         val dRow = newSegs.groupBy(col("signal_id"))
           .agg(count(lit(1)).as("c"))
-          .agg(max(col("c")), sum(col("c"))).first()
+          .agg(max(col("c")), sum(col("c")), count(lit(1))).first()
         val maxDeltaPerSig = if (dRow.isNullAt(0)) 0L else dRow.getLong(0)
         val deltaRows = if (dRow.isNullAt(1)) 0L else dRow.getLong(1)
+        val deltaSignals = dRow.getLong(2)
         val segFiles = math.max(1L, math.min(
           newSegsClone.rdd.getNumPartitions.toLong,
           (deltaRows + 65535L) / 65536L)).toInt
@@ -833,9 +841,6 @@ object Ingest {
             st
           case _ =>
             stateSalt = batchId
-            if (dbg && doRebuild) System.err.println(
-              s"[profileStream] batch $batchId: periodic route-state " +
-                s"rebuild from landed segments (salt=$stateSalt)")
             val derived = MotifDiscord.routeStateOf(existingSegs,
               existingProfile, stateSalt)
             if (maxMAll < 0L) {
@@ -848,7 +853,6 @@ object Ingest {
             }
             derived
         }
-        lap("snapshot-setup")
         val stateOut = s"$stateDir/batch=$batchId"
         val obs = org.apache.spark.sql.Observation(
           s"profile-probe-$batchId-${System.nanoTime()}")
@@ -861,29 +865,24 @@ object Ingest {
           // FAST-LANE certificate, decided entirely on the driver from
           // carried scalars: skipGrid proves every touched signal's
           // folded m stays on the member route (<= PruneAbove => the fold
-          // sets dense=false, no rep threshold applies), and allExactAll
-          // (min exact over ALL sig rows, observed off the previous state
-          // write) makes the output's exact column the literal true —
-          // exactly the conditions routedProfileFrom's probe-fast path
-          // would derive AFTER the fold. Under the certificate the
-          // profile fold provably reads neither the folded state nor its
+          // sets dense=false), and allExactAll (min exact over ALL sig
+          // rows, observed off the previous state write) makes the
+          // output's exact column the literal true — exactly the probe
+          // the fold would produce on this route. Under the certificate
+          // the profile fold reads neither the folded state nor its
           // probe, so it runs CONCURRENTLY with the state write instead
           // of behind it; any batch that can't certify (first contact
           // with a dense signal, a sampled-history signal, a restart
-          // before recovery) takes the general probe-gated path below.
+          // before recovery) waits for the state and reads its probe.
           val fastLane = skipGrid && allExactAll
-          if (dbg) System.err.println(s"[profileStream] batch $batchId " +
-            s"skipGrid=$skipGrid fastLane=$fastLane maxMAll=$maxMAll " +
-            s"maxDeltaPerSig=$maxDeltaPerSig")
           // JOB 2 — fold δ into the route state and write the snapshot
-          // DIRECTLY to parquet: one job instead of the former eager
-          // localCheckpoint + async copy-out pair, and no data-sized
-          // blocks pinned in non-replicated executor storage (the
-          // 100 TB-safe shape — same discipline as Materialize.shared's
-          // staged path). The probe aggregates ride the write via
-          // observe(), so the probe costs zero extra jobs; consumers
-          // that need the materialized state re-read the just-written
-          // snapshot (one small file at steady state).
+          // DIRECTLY to parquet: no data-sized blocks pinned in
+          // non-replicated executor storage (the 100 TB-safe shape —
+          // same discipline as Materialize.shared's staged path). The
+          // probe aggregates ride the write via observe(), so the probe
+          // costs zero extra jobs; a fold that needs the materialized
+          // state re-reads the just-written snapshot (one small file at
+          // steady state).
           val statePlan = MotifDiscord.foldRouteState(priorState, newSegs,
             budget, MotifDiscord.PruneAbove, skipGrid, stateSalt)
           val probeCols = MotifDiscord.probeMetricCols
@@ -892,25 +891,17 @@ object Ingest {
               .write.mode("overwrite").parquet(stateOut)
           }
           inFlight += stateWrite
-          val profilePlan =
-            if (fastLane)
-              MotifDiscord.memberProfileIncrement(existingSegs,
-                existingProfile.select(col("signal_id"), col("seg"),
-                  col("nnd_q")),
-                newSegs).withColumn("exact", lit(true))
+          val probe =
+            if (fastLane) MotifDiscord.RoutePlanProbe.certified(deltaSignals,
+              maxMAll + maxDeltaPerSig)
             else {
-              // general path: the fold must land first — the probe and
-              // the per-signal flag joins read the materialized state
               Await.result(stateWrite, Duration.Inf)
-              lap("state-fold")
-              val (probe, _) = MotifDiscord.probeFromMetrics(obs.get)
-              val stateM = s.read.schema(RouteStateSchema).parquet(stateOut)
-              MotifDiscord.routedProfileFrom(existingSegs, existingProfile,
-                newSegs, stateM, probe, mod)
+              MotifDiscord.probeFromMetrics(obs.get)
             }
-          profilePlan.write.mode("overwrite")
-            .parquet(s"$profDir/batch=$batchId")
-          lap("profile-fold-write")
+          MotifDiscord.routedProfileFrom(existingSegs, existingProfile,
+              newSegs, s.read.schema(RouteStateSchema).parquet(stateOut),
+              probe, mod)
+            .write.mode("overwrite").parquet(s"$profDir/batch=$batchId")
         } catch { case t: Throwable =>
           inFlight.toList.foreach(f =>
             scala.util.Try(Await.result(f, Duration.Inf)))
@@ -920,10 +911,9 @@ object Ingest {
         // the observed probe is final once the state write landed:
         // refresh the carried certificate scalars and surface order
         // violations (the general path already read the same metrics)
-        val (probeFinal, exactAllNext) =
-          MotifDiscord.probeFromMetrics(obs.get)
+        val probeFinal = MotifDiscord.probeFromMetrics(obs.get)
         maxMAll = math.max(maxMAll, probeFinal.maxMTouched)
-        allExactAll = exactAllNext
+        allExactAll = probeFinal.allExact
         if (probeFinal.unordered > 0)
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
             s"profileStream batch $batchId: out-of-order append detected; " +
@@ -957,7 +947,6 @@ object Ingest {
                   "query); retrying next batch", e)
             }
         }
-        lap("await-bg-writes")
       }}
       .start()
   }

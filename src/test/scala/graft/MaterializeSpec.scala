@@ -118,6 +118,23 @@ class MaterializeSpec extends AnyFunSuite with SparkTest {
     assert((stagedDirs intersect dirs).isEmpty)
   }
 
+  test("a query's scratch store ends with its scope") {
+    val before = Materialize.stored(spark)
+    // the shape of a store-writing query: write a store, read it back,
+    // hand the consumer a frame over it, consume it inside the scope
+    val (dir, n) = Materialize.scoped {
+      val dir = Materialize.scratchDir("spec-store")
+      assert(stagedDirs.contains(new java.io.File(dir).getName),
+        s"$dir is not named under the staged prefix")
+      fixture.write.parquet(s"$dir/store")
+      val q = spark.read.parquet(s"$dir/store").groupBy(col("signal_id")).count()
+      (dir, q.collect().length)
+    }
+    assert(n == 7)
+    assert(!new java.io.File(dir).exists, s"$dir outlived its scope")
+    assert(before.added(Materialize.stored(spark)).isEmpty)
+  }
+
   test("a scope releases what it materialized when its body throws") {
     var made: Option[(Int, org.apache.spark.sql.DataFrame, Set[String])] = None
     intercept[IllegalStateException] {

@@ -78,11 +78,11 @@ class MotifDiscordSpec extends AnyFunSuite with SparkTest {
     // orientations, so the naive count would be m*(m-1) = 39800
     val thrD = MotifDiscord.adjacentPairs(segs)
       .groupBy(col("signal_id")).agg(max(col("adj_d")).as("t"))
-    val nD = MotifDiscord.candidatePairs(segs, segs, thrD).count()
+    val nD = MotifDiscord.pairs(segs, segs, Some(thrD)).count()
     assert(nD < 10L * 200, s"discord candidates not linear: $nD")
     val thrM = MotifDiscord.adjacentPairs(segs)
       .groupBy(col("signal_id")).agg(min(col("adj_d")).as("t"))
-    val nM = MotifDiscord.candidatePairs(segs, segs, thrM).count()
+    val nM = MotifDiscord.pairs(segs, segs, Some(thrM)).count()
     assert(nM < 10L * 200, s"motif candidates not linear: $nM")
     // and the pruned results still equal brute force on the fixture
     assert(sorted(MotifDiscord.discord(segs, pruneAbove = 0)) ==
@@ -277,16 +277,16 @@ class MotifDiscordSpec extends AnyFunSuite with SparkTest {
     val segs = spreadFixture(50)
     val thresh = MotifDiscord.adjacentPairs(segs)
       .groupBy(col("signal_id")).agg(max(col("adj_d")).as("t"))
-    // candidatePairs is construction-lazy (unlike the routed entry
-    // points, which checkpoint) — its plan is assertable directly:
+    // the grid pair generator is construction-lazy (unlike the routed
+    // entry points, which checkpoint) — its plan is assertable directly:
     // the grid join must be a hash/sort-merge equi-join on
     // (signal_id, cell) and the threshold side must broadcast
-    val p = MotifDiscord.candidatePairs(segs, segs, thresh)
+    val p = MotifDiscord.pairs(segs, segs, Some(thresh))
       .queryExecution.executedPlan
     assert(helper.collect(p) { case c: CartesianProductExec => c }.isEmpty,
-      "candidatePairs plans a CartesianProduct")
+      "the grid pair generator plans a CartesianProduct")
     assert(helper.collect(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
-      "candidatePairs plans a BroadcastNestedLoopJoin")
+      "the grid pair generator plans a BroadcastNestedLoopJoin")
     assert(helper.collect(p) { case b: BroadcastHashJoinExec => b }.nonEmpty,
       "per-signal thresholds lost their broadcast")
     val pa = MotifDiscord.adjacentPairs(segs).queryExecution.executedPlan
@@ -542,7 +542,8 @@ class MotifDiscordSpec extends AnyFunSuite with SparkTest {
     // spread), and duplicate groups survive or prune atomically
     val st = MotifDiscord.foldRouteState(
       MotifDiscord.routeStateOf(histSegs, p0), delta).localCheckpoint()
-    val kept = MotifDiscord.gridPruneHistory(histSegs, delta, st)
+    val kept = MotifDiscord.gridPruneHistory(histSegs, delta,
+        MotifDiscord.touchedThreshold(st))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kept.size < 80,
       s"prune kept ${kept.size}/1200 history rows — not a local cut")

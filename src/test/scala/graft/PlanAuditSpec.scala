@@ -73,7 +73,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTest
   // ml_iforest_psi fits at construction like the rest of the ml_* family;
   // seg_profile_route / seg_profile_auto / seg_discord_auto
   // localCheckpoint at construction like the rest of the profile family
-  // (their keyed-join discipline is asserted on candidatePairs in
+  // (their keyed-join discipline is asserted on the grid pair generator in
   // MotifDiscordSpec's plan-shape test)
   // round-9 exclusions, same rationales: seg_knn_fft(_agree) rank the
   // bounded broadcast probe set like seg_knn; buff_range_outlier /

@@ -276,16 +276,15 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       s"rebuild run's profile (${streamed.size}) != batch (${batch.size})")
   }
 
-  test("streamed profile on a dense signal under a tight budget equals the batch-routed profileAuto") {
-    import graft.operators.MotifDiscord
+  /** 600 DISTINCT near-identical segments of one signal (one position
+    * bumped by an exactly-representable 0.25 step), staged as two
+    * 300-segment files: over any 10k pair budget from the FIRST
+    * micro-batch (300 segments > pruneAbove, one grid cell). Returns the
+    * input dir and the raw events.
+    */
+  private def stageDense(): (String, org.apache.spark.sql.DataFrame) = {
     import spark.implicits._
     val segRows = Readings.SegmentRows.toInt
-    // 600 DISTINCT near-identical segments (one position bumped by an
-    // exactly-representable 0.25 step): over any 10k pair budget from the
-    // FIRST micro-batch (300 segments > pruneAbove, one grid cell), so
-    // every batch folds the incremental sampled bound and the final
-    // snapshot must EQUAL the batch profileAuto — the append-stable
-    // reference rule is what makes this an equality, not just a bound
     val nSegs = 600
     val raw = (0 until nSegs * segRows).map { i =>
       val k = i / segRows; val j = i % segRows
@@ -307,6 +306,16 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         Files.move(part.toPath, dst)
         dst.toFile.setLastModified(1700000000000L + t * 60000L)
     }
+    (in, raw)
+  }
+
+  test("streamed profile on a dense signal under a tight budget equals the batch-routed profileAuto") {
+    import graft.operators.MotifDiscord
+    val segRows = Readings.SegmentRows.toInt
+    // every batch folds the incremental sampled bound and the final
+    // snapshot must EQUAL the batch profileAuto — the append-stable
+    // reference rule is what makes this an equality, not just a bound
+    val (in, raw) = stageDense()
     val work = Files.createTempDirectory("graft-dense-work").toString
     val q = Ingest.profileStream(spark, in, work, segRows,
       maxFilesPerTrigger = 1, budget = 10000L)
@@ -331,6 +340,54 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         ((r.getLong(2), r.getBoolean(3)))).toMap
     assert(streamed == batch,
       s"streamed dense profile (${streamed.size}) != batch profileAuto (${batch.size})")
+  }
+
+  /** Work counters of ONE profileStream micro-batch: the stream runs
+    * over every staged file but the last, then restarts on the same work
+    * dir with the last file added, and only that restart is measured.
+    * Returns the counters and the batch's profile snapshot.
+    */
+  private def oneBatch(in: String, budget: Long)
+      : (Map[String, Long], Array[org.apache.spark.sql.Row]) = {
+    val parts = new java.io.File(in).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val held = Files.createTempDirectory("graft-stream-held")
+    val last = parts.last
+    val mtime = last.lastModified()
+    Files.move(last.toPath, held.resolve(last.getName))
+    val work = Files.createTempDirectory("graft-mp-one").toString
+    def run(): Unit = Ingest.profileStream(spark, in, work,
+      Readings.SegmentRows.toInt, maxFilesPerTrigger = 1, budget = budget)
+      .awaitTermination()
+    run()
+    val back = Files.move(held.resolve(last.getName), last.toPath)
+    back.toFile.setLastModified(mtime)
+    val c = counters(run())
+    val snap = spark.read.parquet(s"$work/profile/batch=${parts.length - 1}")
+      .collect()
+    (c, snap)
+  }
+
+  /** One batch's jobs and tasks on each lane, measured before the
+    * matrix-profile kernel became one pair generator, min-fold and route
+    * function: the bounds that keep later changes from adding work unseen.
+    */
+  private val FastLaneJobs = 19L
+  private val FastLaneTasks = 50L
+  private val GatedJobs = 37L
+  private val GatedTasks = 70L
+
+  test("one profileStream batch runs no more jobs or tasks than pinned, on the fast lane and on the probe-gated path") {
+    val (fast, fastSnap) = oneBatch(stageTiles(), graft.operators.MotifDiscord.RouteBudget)
+    assert(fastSnap.forall(_.getBoolean(3)), "the fast-lane batch must stay exact")
+    assert(fast("jobs") <= FastLaneJobs && fast("tasks") <= FastLaneTasks,
+      s"fast-lane batch: $fast")
+    // the dense signal: 300 prior + 300 new segments cannot certify the
+    // member route, so the batch waits for the folded state and its probe
+    val (gated, gatedSnap) = oneBatch(stageDense()._1, 10000L)
+    assert(gatedSnap.forall(!_.getBoolean(3)), "the dense batch must fold the sampled bound")
+    assert(gated("jobs") <= GatedJobs && gated("tasks") <= GatedTasks,
+      s"probe-gated batch: $gated")
   }
 
   test("streamed iforest scores against a frozen model equal the batch scores") {
@@ -741,15 +798,25 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(got.nonEmpty, "fixture must actually contain cross-split near-dups")
   }
 
-  test("dedup growth stream: each batch probes the landed store, then lands") {
-    import spark.implicits._
-    // three staged batch files: batch 1 near-dups batch 0 (salt prefix),
-    // batch 2 is unrelated text — its probe must flag nothing
-    val base = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+  private type Doc = (Long, String, String, String, Long)
+
+  /** 60 documents of the test corpus: (doc_id, text, lang, source, n_chars). */
+  private def baseDocs(): Seq[Doc] =
+    graft.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars")).limit(60).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4))).toSeq
+
+  /** Near-duplicates of `b0` (a salt prefix), under fresh doc ids. */
+  private def salted(b0: Seq[Doc]): Seq[Doc] =
+    b0.map { case (id, t, l, s, n) => (id + 1000000L, "growsalt " + t, l, s, n + 9L) }
+
+  /** Stages one parquet file per batch, in arrival order. */
+  private def stageDocs(batches: Seq[Doc]*): String = {
+    import spark.implicits._
     val in = Files.createTempDirectory("graft-dg-in").toString
-    def stage(k: Int, rows: Seq[(Long, String, String, String, Long)]): Unit = {
+    batches.zipWithIndex.foreach { case (rows, k) =>
       val tmp = Files.createTempDirectory(s"graft-dg-tmp$k").toString
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -759,12 +826,15 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       java.nio.file.Files.copy(part.toPath, dst.toPath)
       dst.setLastModified(1700000000000L + k * 60000L)
     }
-    val b0 = base.map(r => (r.getLong(0), r.getString(1), r.getString(2),
-      r.getString(3), r.getLong(4))).toSeq
-    stage(0, b0)
-    stage(1, b0.map { case (id, t, l, s, n) =>
-      (id + 1000000L, "growsalt " + t, l, s, n + 9L) })
-    stage(2, b0.map { case (id, _, l, s, _) =>
+    in
+  }
+
+  test("dedup growth stream: each batch probes the landed store, then lands") {
+    import spark.implicits._
+    // three staged batch files: batch 1 near-dups batch 0 (salt prefix),
+    // batch 2 is unrelated text — its probe must flag nothing
+    val b0 = baseDocs()
+    val in = stageDocs(b0, salted(b0), b0.map { case (id, _, l, s, _) =>
       (id + 2000000L, s"totally unrelated content block number $id " +
         s"with nothing shared across any shingle window $id $id", l, s, 0L) })
     val work = Files.createTempDirectory("graft-dg-store").toString
@@ -781,8 +851,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // flags new-vs-landed) must equal the landed pairs store exactly —
     // candidate generation uses the same per-doc band hashes and the
     // confirm the same exact Jaccard
-    val b1 = b0.map { case (id, t, l, s, n) =>
-      (id + 1000000L, "growsalt " + t, l, s, n + 9L) }
+    val b1 = salted(b0)
     val batchPairs = graft.operators.Dedup.minhashNearDup(
       (b0 ++ b1).toDF("doc_id", "text", "lang", "source", "n_chars"), 0.5)
       .where(col("doc_a") < 1000000L && col("doc_b") >= 1000000L)
@@ -798,5 +867,34 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     // batch 2 (unrelated text) must confirm nothing
     assert(!landedPairs.exists(_._1 >= 2000000L),
       "unrelated batch must not confirm any pair")
+  }
+
+  test("dedup growth stream: a batch replayed after a lost commit leaves every store equal to an uninterrupted run") {
+    val b0 = baseDocs()
+    val in = stageDocs(b0, salted(b0))
+    val work = Files.createTempDirectory("graft-dg-replay").toString
+    def run(store: String): Unit = Ingest.dedupGrowStream(spark, in,
+      s"$work/$store", threshold = 0.5, maxFilesPerTrigger = 1).awaitTermination()
+    run("clean")
+    run("crashed")
+    // a crash after batch 1's writes and before Spark commits it leaves
+    // the writes and no commit entry; the restart replays batch 1
+    val commits = new java.io.File(s"$work/crashed/_chk/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
+      .maxBy(_.toLong)
+    assert(last == "1", s"expected two committed batches, newest $last")
+    assert(new java.io.File(commits, last).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    run("crashed")
+    def rows(store: String, sub: String): Seq[String] =
+      spark.read.parquet(s"$work/$store/$sub").collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted
+    for (sub <- Seq("bands", "sets", "pairs")) {
+      val (replayed, clean) = (rows("crashed", sub), rows("clean", sub))
+      val same = replayed == clean
+      assert(same, s"$sub after the replay (${replayed.size} rows) differs " +
+        s"from the uninterrupted run (${clean.size} rows)")
+    }
+    assert(rows("clean", "pairs").nonEmpty, "fixture must confirm near-dups")
   }
 }
