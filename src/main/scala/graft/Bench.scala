@@ -74,14 +74,18 @@ object Bench {
   }
 
   /** What makes two runs' counters comparable. `action` is what each row
-    * does with its frame.
+    * does with its frame; `extensions` is the session's
+    * `spark.sql.extensions`, which decides whether the zone-map rule and
+    * the as-of strategy plan the rows.
     */
-  case class Key(sf: String, cpus: Int, shufflePartitions: Int, action: String) {
+  case class Key(sf: String, cpus: Int, shufflePartitions: Int, action: String,
+      extensions: String) {
     override def toString: String =
-      s"sf=$sf cpus=$cpus shuffle_partitions=$shufflePartitions action=$action"
+      s"sf=$sf cpus=$cpus shuffle_partitions=$shufflePartitions action=$action extensions=$extensions"
   }
 
-  private val mapper = new ObjectMapper()
+  /** Reads the prior store; writes it, the error strings and Verify's JSON. */
+  val mapper = new ObjectMapper()
 
   /** The store's entries, one per key; a missing or pre-key file has none. */
   def entries(path: String): Seq[JsonNode] =
@@ -114,12 +118,6 @@ object Bench {
   private def ms(p: org.apache.spark.sql.streaming.StreamingQueryProgress, k: String): Long =
     Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
   private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => " "
-    case c => c.toString
-  }
 
   def main(args: Array[String]): Unit = args match {
     case Array() => sweep()
@@ -133,31 +131,14 @@ object Bench {
   }
 
   private val Growth = "spark.sql.streaming.numRecentProgressUpdates" -> "10000"
-  /** The local session every mode runs on: SPARK_GRAFT_CPUS cores and as
-    * many shuffle partitions.
+  /** The session every mode runs on: [[Session.local]] with
+    * SPARK_GRAFT_CPUS cores (default 32).
     */
   private def session(conf: (String, String)*): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    conf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, conf: _*)
     spark.sparkContext.setLogLevel("WARN")
-    quietCheckpointRelease()
     spark
   }
-
-  /** Silences the WARN `RDD.unpersist` logs for every local checkpoint
-    * (a `MapPartitionsRDD`, logging under its own class name): each
-    * [[Materialize]] scope releases its checkpoints on exit, which is
-    * their intended end, not a lost lineage.
-    */
-  def quietCheckpointRelease(): Unit =
-    org.apache.logging.log4j.core.config.Configurator
-      .setLevel("org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
 
   /** Prints a growth curve: per micro-batch the size folded into before it
     * (`sizeField`, advanced by `grow(rowsIn)`), its input rows, `extra`
@@ -547,7 +528,8 @@ object Bench {
     })
 
     val key = Key(sfDir, spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, action)
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, action,
+      spark.sparkContext.getConf.get("spark.sql.extensions", "none"))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
     val prior: Map[String, Row] = loadPrior(outPath, key)
     if (prior.isEmpty) System.err.println(
@@ -628,7 +610,7 @@ object Bench {
     // the stdout line must survive a bounded tail capture, so it carries
     // totals and a headline subset; the COMPLETE entry goes to the keyed
     // store that the line points at via "queries_file".
-    def errJson(r: QRes): String = s"""{"err":"${esc(r.err.getOrElse("").take(200))}"}"""
+    def errJson(r: QRes): String = s"""{"err":${mapper.writeValueAsString(r.err.getOrElse("").take(200))}}"""
     // a row keeps the counters its reps repeated under "work" and the
     // [min, max] of the others under "varied"
     def rowJson(r: QRes): String = r.row.fold(errJson(r)) { w =>

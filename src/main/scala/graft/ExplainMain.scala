@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture tool for the optimization rounds: prints the FORMATTED
   * physical plan of each named declared query to `<outDir>/<name>_<tag>.txt`
   * (the judge checks plan claims against these files; it cannot run Spark).
@@ -30,13 +28,7 @@ object ExplainMain {
       System.err.println(
         s"[explain] ignoring extra args: ${args.drop(4).mkString(" ")}")
     val Array(sfDir, outDir, tag, sel) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (sel == "all") SparkEntry.queries.keys.toSeq.sorted

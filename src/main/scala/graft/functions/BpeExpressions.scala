@@ -11,10 +11,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * al., ACL 2016 — public algorithm), closing the two 100 TB residues the
   * interpreted formulation carried:
   *
-  *  - [[CharPairs]] replaces the `charPairsRaw` UDF — the pair-candidate
-  *    stream of every training round — with one compiled pass inside
-  *    whole-stage codegen (no UDF encoder boundary on the hottest
-  *    per-round loop);
+  *  - `graft_char_pairs` ([[NativeFunctions.CharPairs]], a static call of
+  *    [[BpeOps.charPairs]]) replaces the `charPairsRaw` UDF — the
+  *    pair-candidate stream of every training round — with one compiled
+  *    pass inside whole-stage codegen (no UDF encoder boundary on the
+  *    hottest per-round loop);
   *  - [[BpeApply]] applies an ENTIRE merge table to a word inside one
   *    expression. The previous formulation chained one `replace()` node
   *    per merge, an N-deep expression tree that is codegen-hostile past a
@@ -60,30 +61,6 @@ object BpeOps {
     }
     UTF8String.fromString(s)
   }
-}
-
-/** `array<string>` of adjacent char pairs (with multiplicity) of a string
-  * column — see [[BpeOps.charPairs]].
-  */
-case class CharPairs(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_char_pairs"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    BpeOps.charPairs(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeOps.charPairs($c)")
-
-  override protected def withNewChildInternal(c: Expression): CharPairs =
-    copy(child = c)
 }
 
 /** Apply a BPE merge table (`from(i)` -> `to(i)`, in order) to a string

@@ -1,12 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
-/** Per-segment value codecs as native Catalyst expressions — the two big
+/** Per-segment value codecs as native SQL functions — the two big
   * per-value codecs of the reference's inventory (SURVEY §2.2)
   * re-implemented from their PUBLIC papers, over the segment-array data
   * model (`Segments.of`: one row per (signal, segment) with an ordered
@@ -31,11 +27,11 @@ import org.apache.spark.sql.types._
   * only), which is exactly the reference's behavior for these methods.
   *
   * Execution shape: the byte-twiddling loops live in static helpers
-  * (`GorillaCodec` / `SprintzCodec`); interpreted eval and generated code
-  * both call them, so the expressions stay inside whole-stage codegen
-  * (one static call, no virtual dispatch, no UDF serialization) while
-  * the bit logic remains ordinary tested Scala. Map-only per row — no
-  * shuffle, no state; scales with the segment store.
+  * (`GorillaCodec` / `SprintzCodec`); each SQL function is one row of
+  * [[NativeFunctions]], a `StaticInvoke` of its helper, so the call stays
+  * inside whole-stage codegen (one static call, no virtual dispatch, no
+  * UDF serialization) while the bit logic remains ordinary tested Scala.
+  * Map-only per row — no shuffle, no state; scales with the segment store.
   *
   * Wire format (ours; length-prefixed so decode needs no side channel):
   * 4-byte big-endian count, then the paper's bit stream.
@@ -517,232 +513,23 @@ object FcmCodec {
   def max(bytes: Array[Byte]): Long = fold(bytes, Long.MinValue)((m, v, _) => math.max(m, v))
 }
 
-/** Expression plumbing shared by the codec expressions: unary, static
-  * helper call in both interpreted and generated paths.
-  */
-abstract class CodecExpression extends UnaryExpression {
-  protected def helperCall: String // e.g. "graft.functions.GorillaCodec.encode"
-  protected def acceptsInput(dt: DataType): Boolean
-  protected def inputTypeName: String
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (acceptsInput(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires $inputTypeName, got ${child.dataType.catalogString}")
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"$helperCall($a)")
-}
-
-case class GorillaEncode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_gorilla_encode"
-  override def dataType: DataType = BinaryType
-  override protected def acceptsInput(dt: DataType): Boolean = dt match {
-    case ArrayType(DoubleType, _) => true; case _ => false }
-  override protected def inputTypeName: String = "array<double>"
-  override protected def helperCall: String = "graft.functions.GorillaCodec.encode"
-  override def nullSafeEval(v: Any): Any = GorillaCodec.encode(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): GorillaEncode = copy(child = c)
-}
-
-case class GorillaDecode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_gorilla_decode"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.GorillaCodec.decode"
-  override def nullSafeEval(v: Any): Any = GorillaCodec.decode(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): GorillaDecode = copy(child = c)
-}
-
-/** Compressed-domain max (gorilla.rs:321 `max`): one sequential pass,
-  * no array materialization. Empty input yields -Infinity (fold identity).
-  */
-case class GorillaMax(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_gorilla_max"
-  override def dataType: DataType = DoubleType
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.GorillaCodec.max"
-  override def nullSafeEval(v: Any): Any = GorillaCodec.max(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): GorillaMax = copy(child = c)
-}
-
-case class SprintzEncode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_sprintz_encode"
-  override def dataType: DataType = BinaryType
-  override protected def acceptsInput(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true; case _ => false }
-  override protected def inputTypeName: String = "array<bigint>"
-  override protected def helperCall: String = "graft.functions.SprintzCodec.encode"
-  override def nullSafeEval(v: Any): Any = SprintzCodec.encode(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): SprintzEncode = copy(child = c)
-}
-
-case class SprintzDecode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_sprintz_decode"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.SprintzCodec.decode"
-  override def nullSafeEval(v: Any): Any = SprintzCodec.decode(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): SprintzDecode = copy(child = c)
-}
-
-/** Compressed-domain exact sum (sprintz.rs:132): integer math over the
-  * fixed-point domain, so it equals sum(value_q) with no FP drift.
-  */
-case class SprintzSum(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_sprintz_sum"
-  override def dataType: DataType = LongType
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.SprintzCodec.sum"
-  override def nullSafeEval(v: Any): Any = SprintzCodec.sum(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): SprintzSum = copy(child = c)
-}
-
-case class FcmEncode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_fcm_encode"
-  override def dataType: DataType = BinaryType
-  override protected def acceptsInput(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true; case _ => false }
-  override protected def inputTypeName: String = "array<bigint>"
-  override protected def helperCall: String = "graft.functions.FcmCodec.encode"
-  override def nullSafeEval(v: Any): Any = FcmCodec.encode(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): FcmEncode = copy(child = c)
-}
-
-case class FcmDecode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_fcm_decode"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.FcmCodec.decode"
-  override def nullSafeEval(v: Any): Any = FcmCodec.decode(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): FcmDecode = copy(child = c)
-}
-
-case class FcmSum(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_fcm_sum"
-  override def dataType: DataType = LongType
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.FcmCodec.sum"
-  override def nullSafeEval(v: Any): Any = FcmCodec.sum(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): FcmSum = copy(child = c)
-}
-
-case class FcmMax(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_fcm_max"
-  override def dataType: DataType = LongType
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.FcmCodec.max"
-  override def nullSafeEval(v: Any): Any = FcmCodec.max(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): FcmMax = copy(child = c)
-}
-
-case class BpEncode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_bp_encode"
-  override def dataType: DataType = BinaryType
-  override protected def acceptsInput(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true; case _ => false }
-  override protected def inputTypeName: String = "array<bigint>"
-  override protected def helperCall: String = "graft.functions.BpCodec.encode"
-  override def nullSafeEval(v: Any): Any = BpCodec.encode(v.asInstanceOf[ArrayData])
-  override protected def withNewChildInternal(c: Expression): BpEncode = copy(child = c)
-}
-
-case class BpDecode(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_bp_decode"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.BpCodec.decode"
-  override def nullSafeEval(v: Any): Any = BpCodec.decode(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): BpDecode = copy(child = c)
-}
-
-case class BpSum(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_bp_sum"
-  override def dataType: DataType = LongType
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.BpCodec.sum"
-  override def nullSafeEval(v: Any): Any = BpCodec.sum(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): BpSum = copy(child = c)
-}
-
-case class BpMax(child: Expression) extends CodecExpression {
-  override def prettyName: String = "graft_bp_max"
-  override def dataType: DataType = LongType
-  override protected def acceptsInput(dt: DataType): Boolean = dt == BinaryType
-  override protected def inputTypeName: String = "binary"
-  override protected def helperCall: String = "graft.functions.BpCodec.max"
-  override def nullSafeEval(v: Any): Any = BpCodec.max(v.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): BpMax = copy(child = c)
-}
-
+/** Column builders for the codecs; each is one row of [[NativeFunctions]]. */
 object CodecFunctions {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+  import NativeFunctions._
 
-  def fcmEncode(values: Column): Column = column(FcmEncode(expression(values)))
-  def fcmDecode(bin: Column): Column = column(FcmDecode(expression(bin)))
-  def fcmSum(bin: Column): Column = column(FcmSum(expression(bin)))
-  def fcmMax(bin: Column): Column = column(FcmMax(expression(bin)))
-  def bpEncode(values: Column): Column = column(BpEncode(expression(values)))
-  def bpDecode(bin: Column): Column = column(BpDecode(expression(bin)))
-  def bpSum(bin: Column): Column = column(BpSum(expression(bin)))
-  def bpMax(bin: Column): Column = column(BpMax(expression(bin)))
-  def gorillaEncode(values: Column): Column = column(GorillaEncode(expression(values)))
-  def gorillaDecode(bin: Column): Column = column(GorillaDecode(expression(bin)))
-  def gorillaMax(bin: Column): Column = column(GorillaMax(expression(bin)))
-  def sprintzEncode(values: Column): Column = column(SprintzEncode(expression(values)))
-  def sprintzDecode(bin: Column): Column = column(SprintzDecode(expression(bin)))
-  def sprintzSum(bin: Column): Column = column(SprintzSum(expression(bin)))
-
-  val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("graft_fcm_encode",
-      new ExpressionInfo(classOf[FcmEncode].getName, "graft_fcm_encode"),
-      (args: Seq[Expression]) => FcmEncode(args(0))),
-    ("graft_fcm_decode",
-      new ExpressionInfo(classOf[FcmDecode].getName, "graft_fcm_decode"),
-      (args: Seq[Expression]) => FcmDecode(args(0))),
-    ("graft_fcm_sum",
-      new ExpressionInfo(classOf[FcmSum].getName, "graft_fcm_sum"),
-      (args: Seq[Expression]) => FcmSum(args(0))),
-    ("graft_fcm_max",
-      new ExpressionInfo(classOf[FcmMax].getName, "graft_fcm_max"),
-      (args: Seq[Expression]) => FcmMax(args(0))),
-    ("graft_bp_encode",
-      new ExpressionInfo(classOf[BpEncode].getName, "graft_bp_encode"),
-      (args: Seq[Expression]) => BpEncode(args(0))),
-    ("graft_bp_decode",
-      new ExpressionInfo(classOf[BpDecode].getName, "graft_bp_decode"),
-      (args: Seq[Expression]) => BpDecode(args(0))),
-    ("graft_bp_sum",
-      new ExpressionInfo(classOf[BpSum].getName, "graft_bp_sum"),
-      (args: Seq[Expression]) => BpSum(args(0))),
-    ("graft_bp_max",
-      new ExpressionInfo(classOf[BpMax].getName, "graft_bp_max"),
-      (args: Seq[Expression]) => BpMax(args(0))),
-    ("graft_gorilla_encode",
-      new ExpressionInfo(classOf[GorillaEncode].getName, "graft_gorilla_encode"),
-      (args: Seq[Expression]) => GorillaEncode(args(0))),
-    ("graft_gorilla_decode",
-      new ExpressionInfo(classOf[GorillaDecode].getName, "graft_gorilla_decode"),
-      (args: Seq[Expression]) => GorillaDecode(args(0))),
-    ("graft_gorilla_max",
-      new ExpressionInfo(classOf[GorillaMax].getName, "graft_gorilla_max"),
-      (args: Seq[Expression]) => GorillaMax(args(0))),
-    ("graft_sprintz_encode",
-      new ExpressionInfo(classOf[SprintzEncode].getName, "graft_sprintz_encode"),
-      (args: Seq[Expression]) => SprintzEncode(args(0))),
-    ("graft_sprintz_decode",
-      new ExpressionInfo(classOf[SprintzDecode].getName, "graft_sprintz_decode"),
-      (args: Seq[Expression]) => SprintzDecode(args(0))),
-    ("graft_sprintz_sum",
-      new ExpressionInfo(classOf[SprintzSum].getName, "graft_sprintz_sum"),
-      (args: Seq[Expression]) => SprintzSum(args(0))))
+  def fcmEncode(values: Column): Column = FcmEncode(values)
+  def fcmDecode(bin: Column): Column = FcmDecode(bin)
+  def fcmSum(bin: Column): Column = FcmSum(bin)
+  def fcmMax(bin: Column): Column = FcmMax(bin)
+  def bpEncode(values: Column): Column = BpEncode(values)
+  def bpDecode(bin: Column): Column = BpDecode(bin)
+  def bpSum(bin: Column): Column = BpSum(bin)
+  def bpMax(bin: Column): Column = BpMax(bin)
+  def gorillaEncode(values: Column): Column = GorillaEncode(values)
+  def gorillaDecode(bin: Column): Column = GorillaDecode(bin)
+  def gorillaMax(bin: Column): Column = GorillaMax(bin)
+  def sprintzEncode(values: Column): Column = SprintzEncode(values)
+  def sprintzDecode(bin: Column): Column = SprintzDecode(bin)
+  def sprintzSum(bin: Column): Column = SprintzSum(bin)
 }

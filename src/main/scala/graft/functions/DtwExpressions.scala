@@ -1,12 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** Banded Dynamic Time Warping over fixed-point (quantized) segments.
   *
@@ -126,122 +121,15 @@ object Dtw {
   }
 }
 
-/** dtw_band(a, b): exact banded DTW distance (fixed band per instance). */
-case class DtwBand(left: Expression, right: Expression, band: Int)
-    extends BinaryExpression {
-  override def prettyName: String = "graft_dtw_band"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> arguments, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    Dtw.distance(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], band)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Dtw.distance($a, $b, $band)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DtwBand =
-    copy(left = l, right = r)
-}
-
-/** dtw_envelope(v): band max (upper=true) or min envelope as array<bigint>. */
-case class DtwEnvelope(child: Expression, band: Int, upper: Boolean)
-    extends UnaryExpression {
-  override def prettyName: String = "graft_dtw_envelope"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint>, got ${child.dataType.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Dtw.envelope(v.asInstanceOf[ArrayData], band, upper)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      v => s"graft.functions.Dtw.envelope($v, $band, $upper)")
-
-  override protected def withNewChildInternal(c: Expression): DtwEnvelope =
-    copy(child = c)
-}
-
-/** lb_keogh(a, up, dn): the admissible DTW lower bound (codegen'd — this
-  * IS the pair hot path, evaluated for every (test, train) candidate).
+/** Column builders for the DTW functions; each is one row of
+  * [[NativeFunctions]].
   */
-case class LbKeogh(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def prettyName: String = "graft_lb_keogh"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    Seq(first, second, third).map(_.dataType) match {
-      case Seq(ArrayType(LongType, _), ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires three array<bigint> arguments, got " +
-          other.map(_.catalogString).mkString(", "))
-    }
-
-  override def nullSafeEval(a: Any, u: Any, d: Any): Any =
-    Dtw.lbKeogh(a.asInstanceOf[ArrayData], u.asInstanceOf[ArrayData],
-      d.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, u, d) => s"graft.functions.Dtw.lbKeogh($a, $u, $d)")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): LbKeogh =
-    copy(first = f, second = s, third = t)
-}
-
-/** sqdist_q(a, b): exact integer squared L2 over quantized segments. */
-case class VecSqDistQ(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "graft_sqdist_q"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> arguments, got " +
-          s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    Dtw.sqDistQ(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Dtw.sqDistQ($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecSqDistQ =
-    copy(left = l, right = r)
-}
-
 object DtwFunctions {
-  def dtwBand(a: Column, b: Column, band: Int): Column =
-    column(DtwBand(expression(a), expression(b), band))
-  def sqDistQ(a: Column, b: Column): Column =
-    column(VecSqDistQ(expression(a), expression(b)))
-  def dtwEnvUp(v: Column, band: Int): Column =
-    column(DtwEnvelope(expression(v), band, upper = true))
-  def dtwEnvDn(v: Column, band: Int): Column =
-    column(DtwEnvelope(expression(v), band, upper = false))
-  def lbKeogh(a: Column, up: Column, dn: Column): Column =
-    column(LbKeogh(expression(a), expression(up), expression(dn)))
+  import NativeFunctions.{DtwBand, DtwEnvelope, LbKeogh, SqDistQ}
+
+  def dtwBand(a: Column, b: Column, band: Int): Column = DtwBand.call(Seq(a, b), band)
+  def sqDistQ(a: Column, b: Column): Column = SqDistQ(a, b)
+  def dtwEnvUp(v: Column, band: Int): Column = DtwEnvelope.call(Seq(v), band, true)
+  def dtwEnvDn(v: Column, band: Int): Column = DtwEnvelope.call(Seq(v), band, false)
+  def lbKeogh(a: Column, up: Column, dn: Column): Column = LbKeogh(a, up, dn)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -305,164 +302,4 @@ object TextHash {
     new GenericArrayData(
       if (nOut == out.length) out else java.util.Arrays.copyOf(out, nOut))
   }
-}
-
-/** `array<bigint>` of distinct 3-token-shingle xxhash64s of a text
-  * column — see [[TextHash.shingleHashes3]]. The generated code is one
-  * static call (the tokenizer loop itself lives in compiled Scala, not
-  * interpreted expression trees), so the whole dedup scan stage stays
-  * inside whole-stage codegen.
-  */
-case class ShingleHashes3(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_shingle_hashes3"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TextHash.shingleHashes3(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.shingleHashes3($c)")
-
-  override protected def withNewChildInternal(c: Expression): ShingleHashes3 =
-    copy(child = c)
-}
-
-/** `array<bigint>` of winnowing fingerprints of a text column — see
-  * [[TextHash.winnowFingerprints]].
-  */
-case class WinnowFingerprints(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_winnow_fingerprints"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TextHash.winnowFingerprints(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.winnowFingerprints($c)")
-
-  override protected def withNewChildInternal(c: Expression): WinnowFingerprints =
-    copy(child = c)
-}
-
-/** `array<bigint>` of distinct byte-n-gram xxhash64s of a BINARY column —
-  * see [[TextHash.byteGramHashes]].
-  */
-case class ByteGramHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"gram size must be positive: $n")
-  override def prettyName: String = "graft_byte_gram_hashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${t.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TextHash.byteGramHashes(v.asInstanceOf[Array[Byte]], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.byteGramHashes($c, $n)")
-
-  override protected def withNewChildInternal(c: Expression): ByteGramHashes =
-    copy(child = c)
-}
-
-/** `array<bigint>` of winnowed byte fingerprints of a BINARY column —
-  * see [[TextHash.byteWinnowHashes]].
-  */
-case class ByteWinnowHashes(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
-  require(n >= 1, s"gram size must be positive: $n")
-  require(w >= 1, s"winnow window must be positive: $w")
-  override def prettyName: String = "graft_byte_winnow_hashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, got ${t.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TextHash.byteWinnowHashes(v.asInstanceOf[Array[Byte]], n, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.byteWinnowHashes($c, $n, $w)")
-
-  override protected def withNewChildInternal(c: Expression): ByteWinnowHashes =
-    copy(child = c)
-}
-
-/** `array<bigint>` of distinct character-n-gram xxhash64s of a text
-  * column — see [[TextHash.charGramHashes]].
-  */
-case class CharGramHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"gram size must be positive: $n")
-  override def prettyName: String = "graft_char_gram_hashes"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${t.catalogString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TextHash.charGramHashes(v.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.charGramHashes($c, $n)")
-
-  override protected def withNewChildInternal(c: Expression): CharGramHashes =
-    copy(child = c)
-}
-
-/** `double` Jaccard similarity of two distinct-element `array<bigint>`
-  * columns — see [[TextHash.jaccardDistinct]]. The near-dedup confirm
-  * join's hot expression: one compiled set-probe pass per candidate pair
-  * instead of `array_intersect` + `array_union` (two set builds + two
-  * materialized arrays whose only use is `size()`).
-  */
-case class JaccardLongSets(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def prettyName: String = "graft_jaccard_long_sets"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<bigint>), " +
-          s"got (${l.catalogString}, ${r.catalogString})")
-    }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.jaccardDistinct(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.TextHash.jaccardDistinct($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): JaccardLongSets = copy(left = l, right = r)
 }

@@ -45,18 +45,16 @@ object TextOps {
     * coalesce preserves the retired UDFs' null-text semantics (empty
     * set, not NULL) so no consumer's output shape changed.
     */
-  def shingleHashes3(text: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    coalesce(column(ShingleHashes3(expression(text))), lit(Array.empty[Long]))
-  }
+  def shingleHashes3(text: Column): Column =
+    coalesce(NativeFunctions.ShingleHashes3(text), lit(Array.empty[Long]))
 
   /** Distinct char-n-gram xxhash64s straight from the text — native
     * twin of `xxhash64` over [[charGrams]] elements (null-text -> empty
     * set, the UDF convention).
     */
   def charGramHashes(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    coalesce(column(CharGramHashes(expression(text), n)), lit(Array.empty[Long]))
+    require(n >= 1, s"gram size must be positive: $n")
+    coalesce(NativeFunctions.CharGramHashes.call(Seq(text), n), lit(Array.empty[Long]))
   }
 
   /** Distinct byte-n-gram xxhash64s of a BINARY payload — the byte-domain
@@ -64,28 +62,27 @@ object TextOps {
     * set, the family convention).
     */
   def byteGramHashes(payload: Column, n: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    coalesce(column(ByteGramHashes(expression(payload), n)), lit(Array.empty[Long]))
+    require(n >= 1, s"gram size must be positive: $n")
+    coalesce(NativeFunctions.ByteGramHashes.call(Seq(payload), n), lit(Array.empty[Long]))
   }
 
   /** Winnowed byte fingerprints of a BINARY payload — the
     * bounded-cardinality fingerprint rung above [[byteGramHashes]]
-    * (~|blob|/w fingerprints; see [[ByteWinnowHashes]]). Null payload ->
-    * empty set, the family convention.
+    * (~|blob|/w fingerprints; see [[TextHash.byteWinnowHashes]]). Null
+    * payload -> empty set, the family convention.
     */
   def byteWinnowHashes(payload: Column, n: Int, w: Int): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    coalesce(column(ByteWinnowHashes(expression(payload), n, w)),
+    require(n >= 1, s"gram size must be positive: $n")
+    require(w >= 1, s"winnow window must be positive: $w")
+    coalesce(NativeFunctions.ByteWinnowHashes.call(Seq(payload), n, w),
       lit(Array.empty[Long]))
   }
 
   /** One-pass Jaccard of two distinct-element long-array columns — the
-    * near-dedup confirm expression (see [[JaccardLongSets]]).
+    * near-dedup confirm expression (see [[TextHash.jaccardDistinct]]).
     */
-  def jaccardLongSets(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    column(JaccardLongSets(expression(a), expression(b)))
-  }
+  def jaccardLongSets(a: Column, b: Column): Column =
+    NativeFunctions.JaccardLongSets(a, b)
 
   /** Adjacent character pairs WITH multiplicity over the RAW string (no
     * tokenization) — the pair-count step of every BPE round, where merged
@@ -94,10 +91,8 @@ object TextOps {
     * (the coalesce preserves the retired UDF's null -> empty-array
     * convention; BpeSpec pins value equality against the baseline).
     */
-  def charPairsRaw(w: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    coalesce(column(CharPairs(expression(w))), lit(Array.empty[String]))
-  }
+  def charPairsRaw(w: Column): Column =
+    coalesce(NativeFunctions.CharPairs(w), lit(Array.empty[String]))
 
 
   /** Standard pre-tokenization normalization: lowercase, strip
@@ -262,10 +257,8 @@ object TextOps {
     * TextHashSpec asserts equality against [[fingerprintsUdfBaseline]]);
     * fnv32 keeps it oracle-expressible.
     */
-  def fingerprints(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+  def fingerprints(c: Column): Column =
     // null-text -> empty set: the retired UDF's convention, so
     // text_fingerprint's output shape is unchanged on null input
-    coalesce(column(WinnowFingerprints(expression(c))), lit(Array.empty[Long]))
-  }
+    coalesce(NativeFunctions.WinnowFingerprints(c), lit(Array.empty[Long]))
 }

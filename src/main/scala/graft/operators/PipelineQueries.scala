@@ -96,7 +96,7 @@ object PipelineQueries {
     // char-pair counts with multiplicity within word tokens, top-K — the
     // subword sequel to pipe_vocab's word-level table. Two explodes + one
     // keyed agg + TakeOrderedAndProject, all inside whole-stage codegen
-    // (native CharPairs, no UDF); map-side combine keeps the shuffle at
+    // (native graft_char_pairs, no UDF); map-side combine keeps the shuffle at
     // |pair alphabet| * partitions, corpus-size-independent
     "pipe_bpe_pairs" -> ((s, d) => {
       import org.apache.spark.sql.functions._

@@ -162,7 +162,11 @@ object AsOfJoinStrategy extends SparkStrategy {
   */
 object NativeAsOf {
 
-  /** Idempotent programmatic strategy registration. */
+  /** Idempotent programmatic strategy registration. Every session this
+    * repo builds (`graft.Session.local`) already has the strategy through
+    * `graft.GraftExtensions`; this covers a session built elsewhere, such
+    * as one that calls `SparkEntry` without loading the extension.
+    */
   def ensureRegistered(spark: SparkSession): Unit = synchronized {
     val e = spark.experimental
     if (!e.extraStrategies.contains(AsOfJoinStrategy))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.functions.Quantize
@@ -90,6 +90,18 @@ object Ingest {
           .as("value"))
       .withColumn("value_q", Quantize.quantize(col("value"), 2))
 
+  /** Micro-batch `batchId`'s rows, tagged `batch_id` and set up as a
+    * dynamic-partition overwrite keyed by it (then by `partitions`): a
+    * batch that foreachBatch replays after a crash replaces its own
+    * partitions instead of appending duplicates. The caller adds options
+    * and the sink.
+    */
+  def batchWriter(df: DataFrame, batchId: Long, partitions: String*): DataFrameWriter[Row] =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id" +: partitions: _*)
+
   /** S3 — tier-0 writer: land micro-batches as Parquet partitioned by
     * (batch_id, signal bucket). When `statsDir` is set, each batch ALSO
     * lands its partial per-(signal, day) zone-map stats — the incremental
@@ -119,18 +131,11 @@ object Ingest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
+        batchWriter(batch, batchId, "sig_bucket")
           .options(graft.sources.Pages.WriterOptions)
-          .partitionBy("batch_id", "sig_bucket")
           .parquet(tier0Dir)
         statsDir.foreach { sd =>
-          graft.plans.ZoneMap.timeStats(batch.drop("sig_bucket"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
+          batchWriter(graft.plans.ZoneMap.timeStats(batch.drop("sig_bucket")), batchId)
             .parquet(sd)
         }
         // percentile-sketch maintenance: per-batch partial value_q cells
@@ -138,11 +143,7 @@ object Ingest {
         // ZoneMap.foldHistogram merges partials exactly at read time, so
         // the persisted sketch serves percentiles with no raw-data scan
         histDir.foreach { hd =>
-          graft.plans.ZoneMap.timeHistogram(batch.drop("sig_bucket"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
+          batchWriter(graft.plans.ZoneMap.timeHistogram(batch.drop("sig_bucket")), batchId)
             .parquet(hd)
         }
       }
@@ -238,9 +239,6 @@ object Ingest {
     val bandDir = s"$storeDir/bands"
     val setsDir = s"$storeDir/sets"
     val pairsDir = s"$storeDir/pairs"
-    def land(df: DataFrame, dir: String): Unit =
-      df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
     docs.writeStream.outputMode("append")
       .option("checkpointLocation", s"$storeDir/_chk")
       .trigger(Trigger.AvailableNow())
@@ -284,18 +282,17 @@ object Ingest {
             .withColumn("jac",
               graft.functions.TextOps.jaccardLongSets(col("sh"), col("shb")))
             .filter(col("jac") >= threshold)
-            .select(col("new_id").as("doc_id"), col("dup_of"), col("jac"),
-              lit(batchId).as("batch_id")))
+            .select(col("new_id").as("doc_id"), col("dup_of"), col("jac")))
           val nConfirmed = confirmed.count()
-          land(confirmed, pairsDir)
+          batchWriter(confirmed, batchId).parquet(pairsDir)
           System.err.println(s"[dedup-grow] batch=$batchId " +
             s"confirmed_pairs=$nConfirmed")
         } else {
           System.err.println(s"[dedup-grow] batch=$batchId store empty")
         }
-        land(bands.select(col("doc_id"), col("band"), col("bh"))
-          .withColumn("batch_id", lit(batchId)), bandDir)
-        land(batchSets.withColumn("batch_id", lit(batchId)), setsDir)
+        batchWriter(bands.select(col("doc_id"), col("band"), col("bh")), batchId)
+          .parquet(bandDir)
+        batchWriter(batchSets, batchId).parquet(setsDir)
       }}
       .start()
   }
@@ -1064,16 +1061,12 @@ object Ingest {
               graft.ml.Bandit.policyStep(q, step, rewards, arms)
             (r.getLong(0), r.getLong(1), step, arm, explored, rew, qAfter)
           }
-          decided.toSeq
+          batchWriter(decided.toSeq
             .toDF("signal_id", "seg", "step", "codec", "explored",
               "reward_raw", "q_raw")
             .select(col("signal_id"), col("seg"), col("step"), col("codec"),
               col("explored"), round(col("reward_raw"), 6).as("reward"),
-              round(col("q_raw"), 6).as("q_after"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
+              round(col("q_raw"), 6).as("q_after")), batchId)
             .parquet(decisionsDir)
           Seq((batchId, q.toSeq, step)).toDF("batch_id", "q", "step")
             .write.mode("append").parquet(stateDir)

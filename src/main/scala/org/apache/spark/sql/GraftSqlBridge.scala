@@ -11,9 +11,10 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Expression -> Column, for native expressions that carry non-expression
-    * constructor parameters (a codebook reference) and therefore cannot be
-    * registered through the name-based FunctionRegistry builders.
+  /** Expression -> Column: how the Column builders of the native functions
+    * (the `NativeFunctions` rows and the vector expressions, some of which
+    * carry a codebook or centroids as plan constants) reach the DataFrame
+    * API without a name lookup, so no session needs them registered.
     */
   def column(e: catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)

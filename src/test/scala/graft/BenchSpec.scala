@@ -123,7 +123,7 @@ class BenchSpec extends AnyFunSuite with SparkTest {
   }
   private def storeWith(entries: String*): String =
     file(entries.mkString("""{"entries":[""", ",", "]}"))
-  private val k4 = Bench.Key("/data/sf0.1", 4, 4, "count")
+  private val k4 = Bench.Key("/data/sf0.1", 4, 4, "count", "graft.GraftExtensions")
   private def entry(key: Bench.Key, t: Double): String =
     s"""{"key":"$key","queries":{"q":{"t":$t,"cpu_s":0.5,""" +
       """"work":{"jobs":3,"tasks":12}},"bad":{"err":"x"}}}"""
@@ -153,6 +153,15 @@ class BenchSpec extends AnyFunSuite with SparkTest {
       assert(Bench.loadPrior(path, other).isEmpty, other)
     val preKey = file("""{"sf":"/data/sf0.1","queries":{"q":{"t":1.0}}}""")
     assert(Bench.loadPrior(preKey, k4).isEmpty)
+  }
+
+  test("an extensions mismatch, or an entry keyed before extensions, yields no priors") {
+    val path = storeWith(entry(k4, 1.0))
+    assert(Bench.loadPrior(path, k4.copy(extensions = "none")).isEmpty)
+    val beforeExtensions = entry(k4, 1.0)
+      .replace(s"$k4", "sf=/data/sf0.1 cpus=4 shuffle_partitions=4 action=count")
+    assert(!beforeExtensions.contains("extensions"))
+    assert(Bench.loadPrior(storeWith(beforeExtensions), k4).isEmpty)
   }
 
   test("a full sweep replaces only its own key's entry; an ONLY run never replaces") {

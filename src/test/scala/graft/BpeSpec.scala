@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{BpeApply, TextOps}
 import graft.operators.PipelineOps
 
-/** The native BPE scan stage (r14 verdict #2/#4): CharPairs must equal the
-  * retired UDF element-for-element, BpeApply must equal the chained
+/** The native BPE scan stage (r14 verdict #2/#4): `graft_char_pairs` (the
+  * `NativeFunctions.CharPairs` row) must equal the retired UDF
+  * element-for-element, BpeApply must equal the chained
   * `replace()` fold through a DEEP (>= 1000 entries) merge table while
   * staying inside whole-stage codegen, and the weighted-vocabulary trainer
   * must count pairs exactly as the corpus-stream formulation did.

@@ -203,4 +203,53 @@ class CodecSpec extends AnyFunSuite with SparkTest {
     assert(row.getDouble(1) == 9.25)
     assert(row.getSeq[Double](2) == Seq(4.5, 4.5))
   }
+
+  test("codec and DTW functions give equal results generated and interpreted") {
+    import spark.implicits._
+    import graft.functions.DtwFunctions._
+    import graft.functions.NativeFunctions._
+    // seeded segments, a sixth of them NULL; q and r share each length
+    val rnd = new scala.util.Random(500)
+    def maybe[T](t: T): Option[T] = if (rnd.nextInt(6) == 0) None else Some(t)
+    val dir = java.nio.file.Files.createTempDirectory("graft-codec-native").toString + "/in"
+    (0 until 500).map { i =>
+      val n = 1 + rnd.nextInt(24)
+      def longs = Seq.fill(n)(rnd.nextLong() % 100000L)
+      (i.toLong, maybe(Seq.fill(n)(rnd.nextGaussian() * 100)), maybe(longs), maybe(longs))
+    }.toDF("id", "d", "q", "r").write.parquet(dir)
+    val (d, q, r) = (col("d"), col("q"), col("r"))
+    // read back from files: a local relation's projection would be
+    // evaluated while optimizing, in neither mode under test
+    def frame = spark.read.parquet(dir).select(col("id"), d, q,
+      GorillaEncode(d), GorillaDecode(GorillaEncode(d)), GorillaMax(GorillaEncode(d)),
+      SprintzEncode(q), SprintzDecode(SprintzEncode(q)), SprintzSum(SprintzEncode(q)),
+      FcmEncode(q), FcmDecode(FcmEncode(q)), FcmSum(FcmEncode(q)), FcmMax(FcmEncode(q)),
+      BpEncode(q), BpDecode(BpEncode(q)), BpSum(BpEncode(q)), BpMax(BpEncode(q)),
+      dtwBand(q, r, 4), sqDistQ(q, r), dtwEnvUp(q, 4), dtwEnvDn(q, 4),
+      lbKeogh(q, dtwEnvUp(r, 4), dtwEnvDn(r, 4))).orderBy("id")
+    val (generated, interpreted) = generatedAndInterpreted(frame)
+    assert(generated.size == 500 && generated.exists(_.contains(null)))
+    assert(generated.exists(!_.contains(null)))
+    assert(generated == interpreted)
+    // null in, null out; the decoders return what was encoded
+    for (row <- generated) {
+      assert((row(1) == null) == (row(3) == null))
+      assert((row(2) == null) == (row(6) == null))
+      assert(row(4) == row(1))
+      for (i <- Seq(7, 10, 14)) assert(row(i) == row(2))
+    }
+  }
+
+  test("a codec aggregate runs its helper call inside whole-stage codegen") {
+    import graft.functions.CodecFunctions._
+    val df = graft.operators.Segments.of(
+      graft.operators.Readings.of(spark, "/root/testdata/sf0.001"))
+      .select(col("signal_id"), gorillaEncode(col("values")).as("enc"))
+      .groupBy(col("signal_id")).agg(max(gorillaMax(col("enc"))).as("vmax"))
+    assert(df.collect().nonEmpty)
+    val code = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+    assert(code.exists(_.contains("graft.functions.GorillaCodec.max(")),
+      "gorilla max is not called from whole-stage generated code")
+  }
 }

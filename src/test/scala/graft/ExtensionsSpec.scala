@@ -44,4 +44,56 @@ class ExtensionsSpec extends AnyFunSuite with SparkTest
       assert(out.toSeq == Seq("a", "b"))
     } finally spark.experimental.extraStrategies = saved
   }
+
+  test("each injected function resolves by name and equals its Column builder") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.GraftSqlBridge.{column, expression}
+    import graft.functions.{VecQuantize, VectorFunctions}
+    import graft.functions.CodecFunctions._
+    import graft.operators.Similarity
+    val s2 = spark.newSession()
+    val in = s2.createDataFrame(Seq((Seq(1.5, -2.25, 9.0, 9.0), Seq(3L, -1L, 40L, 40L), "key")))
+      .toDF("v", "q", "k")
+    val (v, q) = (col("v"), col("q"))
+    val cases: Seq[(String, Column)] = Seq(
+      "graft_dot(v, v)" -> Similarity.dot(v, v),
+      "graft_sqdist(v, v)" -> Similarity.sqDist(v, v),
+      "graft_quantize(v, 64.0D)" -> column(VecQuantize(expression(v), expression(lit(64.0)))),
+      "graft_fnv32(k, 7L)" -> VectorFunctions.fnv32(col("k"), lit(7L)),
+      "graft_gorilla_encode(v)" -> gorillaEncode(v),
+      "graft_gorilla_decode(graft_gorilla_encode(v))" -> gorillaDecode(gorillaEncode(v)),
+      "graft_gorilla_max(graft_gorilla_encode(v))" -> gorillaMax(gorillaEncode(v)),
+      "graft_sprintz_encode(q)" -> sprintzEncode(q),
+      "graft_sprintz_decode(graft_sprintz_encode(q))" -> sprintzDecode(sprintzEncode(q)),
+      "graft_sprintz_sum(graft_sprintz_encode(q))" -> sprintzSum(sprintzEncode(q)),
+      "graft_fcm_encode(q)" -> fcmEncode(q),
+      "graft_fcm_decode(graft_fcm_encode(q))" -> fcmDecode(fcmEncode(q)),
+      "graft_fcm_sum(graft_fcm_encode(q))" -> fcmSum(fcmEncode(q)),
+      "graft_fcm_max(graft_fcm_encode(q))" -> fcmMax(fcmEncode(q)),
+      "graft_bp_encode(q)" -> bpEncode(q),
+      "graft_bp_decode(graft_bp_encode(q))" -> bpDecode(bpEncode(q)),
+      "graft_bp_sum(graft_bp_encode(q))" -> bpSum(bpEncode(q)),
+      "graft_bp_max(graft_bp_encode(q))" -> bpMax(bpEncode(q)))
+    // the cases cover exactly the names the session registry holds
+    val injected = s2.catalog.listFunctions().collect().map(_.name).filter(_.startsWith("graft_"))
+    assert(injected.length == 18)
+    assert(cases.map(_._1.takeWhile(_ != '(')).toSet == injected.toSet)
+    for ((sql, builder) <- cases) {
+      val bySql = in.selectExpr(sql)
+      val byBuilder = in.select(builder)
+      assert(cells(bySql) == cells(byBuilder), sql)
+      assert(bySql.columns.toSeq == byBuilder.columns.toSeq, sql)
+    }
+  }
+
+  test("a wrong-type call fails analysis naming the function") {
+    val s2 = spark.newSession()
+    for ((call, msg) <- Seq(
+        "graft_sprintz_encode(array(1, 2, 3))" ->
+          "graft_sprintz_encode requires array<bigint>, got array<int>",
+        "graft_gorilla_decode('x')" -> "graft_gorilla_decode requires binary, got string")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](s2.sql(s"SELECT $call").collect())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
 }

@@ -1,25 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local SparkSession for specs. */
 trait SparkTest extends BeforeAndAfterAll { self: Suite =>
-  lazy val spark: SparkSession =
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      // the cluster-deployment wiring: every suite runs through the
-      // extensions path (functions + zone-map rule + as-of strategy),
-      // exactly as a 1000-executor session would (ExtensionsSpec asserts
-      // the injections took)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+  // the deployment shape (Session.local): every suite runs through the
+  // extensions path (functions + zone-map rule + as-of strategy), exactly
+  // as a 1000-executor session would (ExtensionsSpec asserts the
+  // injections took)
+  lazy val spark: SparkSession = Session.local(4,
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 
   /** The work counters (jobs, tasks, input records, ...) of running `f`. */
   def counters(f: => Unit): Map[String, Long] = {
@@ -27,6 +20,25 @@ trait SparkTest extends BeforeAndAfterAll { self: Suite =>
     spark.sparkContext.addSparkListener(l)
     try Work.measure(spark, l)(f).counters
     finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The rows of `df`, binary cells as byte sequences so rows compare by
+    * value.
+    */
+  def cells(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case x => x
+  })
+
+  /** [[cells]] of `df` under the default codegen, then with whole-stage
+    * codegen off and expressions interpreted (each run plans `df` anew).
+    */
+  def generatedAndInterpreted(df: => DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    val generated = cells(df)
+    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    off.foreach { case (k, v) => spark.conf.set(k, v) }
+    try (generated, cells(df)) finally off.foreach { case (k, _) => spark.conf.unset(k) }
   }
 
   override def afterAll(): Unit = {

@@ -122,4 +122,28 @@ class TextHashSpec extends AnyFunSuite with SparkTest {
       assert(out.map(_.getSeq[Long](0).size).min == 0)
     }
   }
+
+  test("text hash and char-pair functions give equal results generated and interpreted") {
+    import graft.functions.NativeFunctions._
+    // the corpus plus NULL text; the payload is the text's UTF-8 bytes
+    val dir = java.nio.file.Files.createTempDirectory("graft-text-native").toString + "/in"
+    docs.select(col("doc_id"), when(col("doc_id") % 7 === 3, lit(null)).otherwise(col("text")).as("text"))
+      .withColumn("payload", col("text").cast("binary"))
+      .write.parquet(dir)
+    val (t, b) = (col("text"), col("payload"))
+    def frame = spark.read.parquet(dir).select(col("doc_id"),
+      ShingleHashes3(t), WinnowFingerprints(t), CharGramHashes.call(Seq(t), 4),
+      ByteGramHashes.call(Seq(b), 8), ByteWinnowHashes.call(Seq(b), 8, 4),
+      JaccardLongSets(ShingleHashes3(t), CharGramHashes.call(Seq(t), 4)),
+      CharPairs(t)).orderBy("doc_id")
+    val (generated, interpreted) = generatedAndInterpreted(frame)
+    assert(generated.exists(_.contains(null)) && generated.exists(!_.contains(null)))
+    assert(generated == interpreted)
+    // the literal parameters do not name the output column
+    assert(frame.columns.toSeq.tail == Seq("graft_shingle_hashes3(text)",
+      "graft_winnow_fingerprints(text)", "graft_char_gram_hashes(text)",
+      "graft_byte_gram_hashes(payload)", "graft_byte_winnow_hashes(payload)",
+      "graft_jaccard_long_sets(graft_shingle_hashes3(text), graft_char_gram_hashes(text))",
+      "graft_char_pairs(text)"))
+  }
 }

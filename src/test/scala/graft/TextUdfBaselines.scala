@@ -39,7 +39,7 @@ object TextUdfBaselines {
   def charGrams(c: Column, n: Int): Column = charGramsUdf(n)(c)
 
   /** Adjacent char pairs with multiplicity over the raw string — baseline
-    * for the native CharPairs expression.
+    * for the native `graft_char_pairs` function.
     */
   val charPairsRaw = udf((w: String) => {
     if (w == null || w.length < 2) Array.empty[String]
@@ -47,7 +47,7 @@ object TextUdfBaselines {
   })
 
   /** Winnowing fingerprints via the retired UDF fold — baseline for the
-    * native WinnowFingerprints expression.
+    * native `graft_winnow_fingerprints` function.
     */
   val fingerprints = udf((text: String) => {
     if (text == null) Array.empty[Long]

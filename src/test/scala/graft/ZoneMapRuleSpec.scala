@@ -187,4 +187,15 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
     assert(roots(grouped) == Seq(s"$base/stats"))
     assert(grouped.collect().isEmpty && fromData(grouped).isEmpty)
   }
+
+  test("the registered storage_upsert query is answered from its tier's stats") {
+    // the Verify and bench session shape (graft.Session.local) carries the
+    // extension, so a registered query's plan is where the rule shows
+    graft.operators.Materialize.scoped {
+      val q = SparkEntry.queries("storage_upsert")(spark, "/root/testdata/sf0.001")
+      val read = roots(q)
+      assert(read.nonEmpty && read.forall(_.endsWith(".stats")), q.queryExecution.optimizedPlan)
+      assert(q.count() > 0)
+    }
+  }
 }
