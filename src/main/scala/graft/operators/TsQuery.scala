@@ -7,8 +7,10 @@ import org.apache.spark.sql.functions._
 /** The reference's relational operator surface (SURVEY §2.1, O1–O7)
   * re-expressed as declarative DataFrame transforms so Catalyst plans them:
   * filters push to the Parquet scan, aggregates get partial (map-side)
-  * combine, the tag join broadcasts its small side, and everything stays
-  * inside whole-stage codegen. No collect(), no driver-side loops.
+  * combine, the tag join broadcasts its small side and pushes its keys
+  * into the fact scan, and everything stays inside whole-stage codegen.
+  * The driver collects only the percentile route's one count and the tag
+  * join's key list; no driver-side loops.
   */
 object TsQuery {
 
@@ -131,7 +133,16 @@ object TsQuery {
 
   /** O7 — tag equi-join: restrict readings to signals whose dimension row
     * matches a predicate. `tags` is broadcast (small dimension side).
+    * The series resolve before any reading is read (TSBS `last_loc`):
+    * the tag side's `signal_id`s are collected first, one job over the
+    * side Spark collects whole for the broadcast anyway, and `r` is
+    * filtered on them. A `signal_id` filter passes windows partitioned by
+    * it ([[lastPerSignal]]), so it reaches the scan as a pushed `In` and
+    * the page index skips the other signals. Nulls match nothing in the
+    * join, so they are dropped from the keys.
     */
-  def tagJoin(r: DataFrame, tags: DataFrame): DataFrame =
-    r.join(broadcast(tags), "signal_id")
+  def tagJoin(r: DataFrame, tags: DataFrame): DataFrame = {
+    val keys = tags.select(col("signal_id")).collect().map(_.get(0)).filter(_ != null).distinct
+    r.filter(col("signal_id").isin(keys.toIndexedSeq: _*)).join(broadcast(tags), "signal_id")
+  }
 }

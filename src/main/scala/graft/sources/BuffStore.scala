@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
@@ -53,14 +54,15 @@ import org.apache.spark.sql.types.IntegerType
   * job. On a bare store, [[maxWithArgmax]] settles the top plane from the
   * row-group max of `p0` in the footers (the reference's first refinement
   * step) and folds only the rows that hold it, in the files and pages
-  * whose `p0` stats admit that byte.
+  * whose `p0` stats admit that byte. Each max reads its rows once: the
+  * max and its positions are the rank-1 rows of one global window.
   *
   * 100 TB shape: decomposition and reconstruction are map-only column
   * expressions (codegen'd shifts/masks, no UDF); the range filter is
   * scan+filter+union (no shuffle, no join); the sum is one partial+final
-  * aggregation. Nothing here collects or breaks partition parallelism;
-  * the footer reads are metadata reads in the calling JVM, bounded by
-  * Spark's own parallel-listing threshold.
+  * aggregation; the max ships each task's own top ties to one partition.
+  * Nothing here collects; the footer reads are metadata reads in the
+  * calling JVM, bounded by Spark's own parallel-listing threshold.
   */
 object BuffStore {
 
@@ -154,13 +156,10 @@ object BuffStore {
   /** Progressive max with argmax positions (buff_simd.rs:2444-2862: track
     * the running max byte per plane, keep the bitmap of positions
     * attaining it, refine on lower planes). Plan-level equivalent: the
-    * max is folded plane-major — max(p0), then max(p1) among p0-maximal
-    * rows, ... — so each refinement level is a scalar aggregate over a
-    * scan that needs ONE more plane than the last, and the final
-    * position list (the argmax "bitmap") is a filter on the per-level
-    * maxima — expressed as a broadcast semi-join against the one-row
-    * maximum, so the whole thing is declarative: no driver loop, no
-    * collect.
+    * plane-major refinement — max(p0), then max(p1) among p0-maximal
+    * rows, ... — is the lexicographic order of struct(p0, p1, ..), and
+    * the positions attaining the max (the argmax "bitmap") are the rows
+    * that rank first in it ([[topTies]]), so the rows are read once.
     *
     * The first level is decided from the footers when `planesDf` is a
     * bare scan of the store ([[topPlaneMax]]): the fold then runs over the
@@ -169,18 +168,18 @@ object BuffStore {
     * planes computed from readings) the fold runs over every row.
     */
   def maxWithArgmax(planesDf: DataFrame, base: Long, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{max => fmax}
     val rows = topPlaneMax(planesDf).fold(planesDf)(m0 => planesDf.filter(col("p0") === lit(m0)))
-    // per-level maxima as a chain of conditional aggregates: m0 = max(p0),
-    // m1 = max(p1 | p0 = m0), ... — computed in ONE aggregation pass by
-    // folding lexicographically: max(struct(p0, p1, ..)) is exactly the
-    // plane-major byte refinement (struct ordering = lexicographic)
-    val packed = struct((0 until n).map(i => col(s"p$i")): _*)
-    val top = rows.agg(fmax(packed).as("m"))
-    rows.join(broadcast(top), packed === col("m"))
-      .select(col("signal_id"), col("seq_no"),
-        reconstruct(base, n).as("value_q"))
+    topTies(rows, struct((0 until n).map(i => col(s"p$i")): _*))
+      .select(col("signal_id"), col("seq_no"), reconstruct(base, n).as("value_q"))
   }
+
+  /** The rows of `rows` whose `key` is the largest, ties included: rank 1
+    * of one window ordered by `key` descending. Spark's
+    * `InferWindowGroupLimit` puts a partial `WindowGroupLimit` under the
+    * single-partition exchange, so each task ships only its own top ties.
+    */
+  private def topTies(rows: DataFrame, key: Column): DataFrame =
+    rows.withColumn("rk", rank().over(Window.orderBy(key.desc))).filter(col("rk") === 1)
 
   /** The largest `p0` of a bare plane store, from the row-group stats in
     * its footers. None (read every row) when the frame is not a bare scan
@@ -234,7 +233,6 @@ object BuffStore {
     * aggregation pass computes every plane's mode — no per-plane scans.
     */
   def outlierEncode(planesDf: DataFrame, n: Int): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
     val counts = planesDf
       .select(col("signal_id"),
         posexplode(array((0 until n).map(i => col(s"p$i")): _*))
@@ -302,24 +300,20 @@ object BuffStore {
   /** Progressive max + argmax DIRECTLY on the outlier-coded store — the
     * reference's majority-path max (buff_simd.rs:2863: a plane's
     * candidate byte is max(majority byte, max exception byte), then
-    * refine). On the coded Parquet layout the same plane-major fold is
-    * ONE lexicographic aggregate over coalesce(exception, majority): the
-    * scan reads exception bytes plus ~1-bit definition levels — majority
-    * rows' bytes are never materialized, so there is no restore
-    * projection and the I/O is exception-mass only, exactly the
-    * reference's majority shortcut in columnar terms. The argmax
-    * position list is the same broadcast semi-join as [[maxWithArgmax]];
-    * completes the compressed-domain query family (range/sum/max) on the
-    * coded form.
+    * refine). On the coded Parquet layout the same plane-major fold ranks
+    * coalesce(exception, majority): the scan reads exception bytes plus
+    * ~1-bit definition levels — majority rows' bytes are never
+    * materialized, so there is no restore projection and the I/O is
+    * exception-mass only, exactly the reference's majority shortcut in
+    * columnar terms. The argmax positions are the same rank-1 rows as in
+    * [[maxWithArgmax]]; completes the compressed-domain query family
+    * (range/sum/max) on the coded form.
     */
   def maxFromOutlierPlanes(data: DataFrame, majorities: DataFrame,
                            base: Long, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{max => fmax}
     def eff(i: Int): Column = coalesce(col(s"p$i"), col(s"maj_$i"))
-    val joined = data.join(broadcast(majorities), "signal_id")
-    val packed = struct((0 until n).map(i => eff(i).as(s"e$i")): _*)
-    val top = joined.agg(fmax(packed).as("m"))
-    joined.join(broadcast(top), packed === col("m"))
+    topTies(data.join(broadcast(majorities), "signal_id"),
+        struct((0 until n).map(i => eff(i).as(s"e$i")): _*))
       .select(col("signal_id"), col("seq_no"),
         ((0 until n).map(i =>
           shiftleft(eff(i).cast("long"), shiftBits(n, i)))

@@ -1017,7 +1017,8 @@ object Ingest {
     *    post-batch Q state appends second, keyed by batch_id. A crash
     *    between the two replays the batch from the pre-batch Q and
     *    rewrites identical decisions; a crash after both replays the
-    *    batch as a no-op (its state row already exists).
+    *    batch without deciding (its state row already exists), running
+    *    it into a noop sink so its upstream state commits.
     */
   def policyStream(spark: SparkSession, srcDir: String, segRows: Int,
                    decisionsDir: String, checkpointDir: String,
@@ -1071,6 +1072,11 @@ object Ingest {
           Seq((batchId, q.toSeq, step)).toDF("batch_id", "q", "step")
             .write.mode("append").parquet(stateDir)
           lastBatch = batchId
+        } else {
+          // a replay of a batch whose state is already landed still runs
+          // the batch: the stateful segmentation upstream must commit it,
+          // or Spark refuses the restart
+          batch.write.format("noop").mode("overwrite").save()
         }
       }
       .start()

@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Readings
@@ -12,7 +18,7 @@ import graft.sources.BuffStore
   * scan reads only the top plane) and pushdown (both legs' top-plane
   * predicates reach the Parquet scan).
   */
-class BuffStoreSpec extends AnyFunSuite with SparkTest {
+class BuffStoreSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
   private val N = 3
 
@@ -305,7 +311,7 @@ class BuffStoreSpec extends AnyFunSuite with SparkTest {
     // the fold as maxWithArgmax builds it, with no narrowing filter
     def fold(pl: DataFrame): DataFrame = {
       val packed = struct((0 until N).map(i => col(s"p$i")): _*)
-      pl.join(broadcast(pl.agg(max(packed).as("m"))), packed === col("m"))
+      pl.withColumn("rk", rank().over(Window.orderBy(packed.desc))).filter(col("rk") === 1)
         .select(col("signal_id"), col("seq_no"), BuffStore.reconstruct(base, N).as("value_q"))
     }
     def samePlan(a: DataFrame, b: DataFrame) =
@@ -322,5 +328,31 @@ class BuffStoreSpec extends AnyFunSuite with SparkTest {
     // the bare store's plan narrows, to the same answer
     assert(!samePlan(BuffStore.maxWithArgmax(pl, base, N), fold(pl)))
     assert(BuffStore.maxWithArgmax(pl, base, N).collect().toSet == fold(pl).collect().toSet)
+  }
+
+  test("each max reads its rows once: a partial group limit under the exchange, no join") {
+    def shape(what: String, q: DataFrame, joins: Int): Unit = {
+      val plan = q.queryExecution.executedPlan
+      val toOne = collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition => e
+      }
+      assert(toOne.size == 1, s"$what: ${toOne.size} single-partition exchanges")
+      assert(toOne.head.exists {
+        case l: WindowGroupLimitExec => l.mode == Partial
+        case _ => false
+      }, s"$what: no partial WindowGroupLimit below the exchange\n$plan")
+      val bhj = collect(plan) { case j: BroadcastHashJoinExec => j }
+      assert(bhj.size == joins, s"$what: ${bhj.size} broadcast joins\n$plan")
+    }
+    val pl = BuffStore.read(spark, storePath)
+    shape("bare store", BuffStore.maxWithArgmax(pl, base, N), 0)
+    shape("derived frame", BuffStore.maxWithArgmax(BuffStore.planes(readings, base, N), base, N), 0)
+    // the coded store's one join is its dictionary's
+    val root = Files.createTempDirectory("graft-buff-once").toString
+    val (enc, maj) = BuffStore.outlierEncode(pl, N)
+    BuffStore.write(enc, s"$root/planes")
+    BuffStore.write(maj, s"$root/dict")
+    shape("outlier-coded", BuffStore.maxFromOutlierPlanes(BuffStore.read(spark, s"$root/planes"),
+      BuffStore.read(spark, s"$root/dict"), base, N), 1)
   }
 }

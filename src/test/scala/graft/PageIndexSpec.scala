@@ -161,9 +161,9 @@ class PageIndexSpec extends AnyFunSuite with SparkTest {
     val m0 = ((want.head._3 - base) >> (8 * (n - 1))).toInt
     val (got, read) = maxRead(planesDir, base, n)
     assert(got == want)
-    val bound = 2L * rowsInPagesHolding(planesDir, "p0", m0)
-    assert(read <= bound, s"read $read records; pages holding p0 = $m0 hold ${bound / 2} rows")
-    assert(bound < 2L * Signals * RowsPerSignal, "every page holds the top byte")
+    val bound = 1L * rowsInPagesHolding(planesDir, "p0", m0)
+    assert(read <= bound, s"read $read records; pages holding p0 = $m0 hold $bound rows")
+    assert(bound < 1L * Signals * RowsPerSignal, "every page holds the top byte")
   }
 
   test("maxWithArgmax reads only the top plane's pages when the maximum ties across two files") {
@@ -183,8 +183,8 @@ class PageIndexSpec extends AnyFunSuite with SparkTest {
 
     val (got, read) = maxRead(dir, b, k)
     assert(got == Set((0L, 100L, top), (1L, 4000L, top)))
-    val bound = 2L * rowsInPagesHolding(dir, "p0", ((top - b) >> (8 * (k - 1))).toInt)
-    assert(read <= bound, s"read $read records; the top byte's pages hold ${bound / 2} rows")
-    assert(bound <= 4L * Pages.Rows, s"the top byte's pages hold ${bound / 2} rows")
+    val bound = 1L * rowsInPagesHolding(dir, "p0", ((top - b) >> (8 * (k - 1))).toInt)
+    assert(read <= bound, s"read $read records; the top byte's pages hold $bound rows")
+    assert(bound <= 2L * Pages.Rows, s"the top byte's pages hold $bound rows")
   }
 }

@@ -22,7 +22,9 @@ class PlanAuditSpec extends AnyFunSuite with SparkTest
   private def plan(name: String): SparkPlan =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
 
-  // every non-ML query whose construction does not itself run jobs;
+  // every non-ML query whose construction runs no jobs beyond a bounded
+  // key collect: tsbs_last_loc and tsbs_high_load collect their tag
+  // side's signal ids at build time (one job over the broadcast side).
   // ML fits and dictionary-collecting kernels are excluded because
   // building their DataFrame already executes Spark jobs
   private val auditable = Seq(

@@ -897,4 +897,45 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     }
     assert(rows("clean", "pairs").nonEmpty, "fixture must confirm near-dups")
   }
+
+  test("policy stream: a batch replayed after a lost commit restarts, and decisions and Q state equal an uninterrupted run") {
+    // the events as three files, one micro-batch each, in arrival order
+    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
+    val in = Files.createTempDirectory("graft-policy-replay-in").toString
+    for (k <- 0 until 3) {
+      val tmp = Files.createTempDirectory(s"graft-policy-replay-tmp$k").toString
+      raw.filter(col("event_id") % 3 === k).coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(in, s"part$k.parquet")
+      Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(1700000000000L + k * 60000L)
+    }
+    val work = Files.createTempDirectory("graft-policy-replay").toString
+    def run(store: String): Unit = Ingest.policyStream(spark, in,
+      Readings.SegmentRows.toInt, s"$work/$store/decisions", s"$work/$store/_chk")
+      .awaitTermination()
+    run("clean")
+    run("crashed")
+    // a crash after batch 2's decisions and Q state land and before Spark
+    // commits it leaves the writes and no commit entry; the restart
+    // replays batch 2 with its state row already present
+    val commits = new java.io.File(s"$work/crashed/_chk/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
+      .maxBy(_.toLong)
+    assert(last == "2", s"expected three committed batches, newest $last")
+    assert(new java.io.File(commits, last).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    run("crashed")
+    assert(new java.io.File(commits, last).exists(), "the replayed batch was not committed")
+    def rows(store: String, sub: String): Seq[String] =
+      spark.read.parquet(s"$work/$store/$sub").collect()
+        .map(_.toSeq.mkString("|")).toSeq.sorted
+    for (sub <- Seq("decisions", "decisions.qstate")) {
+      val (replayed, clean) = (rows("crashed", sub), rows("clean", sub))
+      assert(replayed == clean, s"$sub after the replay (${replayed.size} rows) differs " +
+        s"from the uninterrupted run (${clean.size} rows)")
+    }
+    assert(rows("clean", "decisions.qstate").size == 3, "expected one Q state row per batch")
+    assert(rows("clean", "decisions").nonEmpty, "fixture must decide segments")
+  }
 }

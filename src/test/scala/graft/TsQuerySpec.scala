@@ -70,6 +70,46 @@ class TsQuerySpec extends AnyFunSuite with SparkTest {
       Seq((1L, 1.0), (2L, 6.0)))
   }
 
+  test("tagJoin equals the plain broadcast join") {
+    import spark.implicits._
+    // signals 2 and 3 have no tag, signal 9's tag has no reading, signal 1
+    // has two tag rows, and both sides hold a null signal_id
+    val r = Seq((Some(1L), 10L), (Some(1L), 11L), (Some(2L), 20L), (Some(3L), 30L),
+      (None, 40L)).toDF("signal_id", "v")
+    val tags = Seq((Some(1L), "a"), (Some(1L), "b"), (Some(9L), "c"), (None, "d"))
+      .toDF("signal_id", "tag")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((what, t) <- Seq("tags" -> tags, "empty tags" -> tags.filter(lit(false)))) {
+      val (got, want) = (TsQuery.tagJoin(r, t), r.join(broadcast(t), "signal_id"))
+      assert(got.schema == want.schema, what)
+      assert(rows(got) == rows(want), what)
+    }
+    assert(rows(TsQuery.tagJoin(r, tags)).size == 2 * 2, "row multiplicity lost")
+  }
+
+  test("tagJoin reads only the tagged signals' rows of a tier store") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tag-join").toString + "/tier"
+    val perSignal = 3000L
+    val readings = spark.range(0L, 8L * perSignal, 1L, 4).select(
+      (col("id") / perSignal).cast("long").as("signal_id"),
+      timestamp_seconds(col("id") % perSignal).as("ts"),
+      (col("id") % perSignal + 1).as("seq_no"),
+      (col("id") % 97).cast("double").as("value"))
+    graft.operators.Tiers.writeTier(readings, dir)
+    import spark.implicits._
+    val tags = Seq(1L, 4L, 6L).toDF("signal_id")
+    val store = spark.read.parquet(dir)
+    var got = Set.empty[(Long, Double)]
+    val read = counters {
+      got = TsQuery.tagJoin(TsQuery.lastPerSignal(store), tags).collect()
+        .map(x => (x.getLong(0), x.getDouble(1))).toSet
+    }("input_records")
+    assert(got == TsQuery.lastPerSignal(store).join(broadcast(tags), "signal_id").collect()
+      .map(x => (x.getLong(0), x.getDouble(1))).toSet)
+    assert(got.size == 3)
+    assert(read == 3L * perSignal, s"read $read records for 3 tagged signals")
+  }
+
   test("posWindow handles partial trailing windows") {
     val w = fixture.select(col("seq_no"),
       Readings.posWindow(col("seq_no"), 0, 16).as("win"))
