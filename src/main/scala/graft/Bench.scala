@@ -14,7 +14,7 @@ import graft.sources.IvfStore
   *   stages, tasks, shuffle bytes, input records, executor CPU) plus the
   *   bench thread's own CPU.
   * - Each row is checked against the prior taken under the same [[Key]]
-  *   (see [[regressions]]); wall time (`t`, the median, with mean/sd) is
+  *   (see [[moves]]); wall time (`t`, the median, with mean/sd) is
   *   evidence, never the gate. Priors live in the keyed store
   *   SPARK_GRAFT_BENCH_OUT (default BENCH_QUERIES.json) — see [[merge]].
   * - `*_tier` variants read the PERSISTED ingest tier (seq_no/value_q
@@ -44,18 +44,25 @@ object Bench {
         .collect { case (k, Seq(v)) => k -> v }.toMap)
   }
 
-  /** Why `cur` regressed against its same-key `prior`; empty when it did
-    * not. A gated counter that repeated in both runs and now differs flags
-    * in either direction (the prior no longer describes the row), and so
-    * does CPU above 2 x prior + 0.25 s, the trip line the wall-clock gate
-    * used. Wall time never flags: host noise moves it 1.5-3x.
+  /** One flag of a row against its prior: what moved, from and to, and
+    * whether it rose (a regression) or fell (a gain).
     */
-  def regressions(cur: Row, prior: Row): Seq[String] =
+  case class Move(what: String, from: String, to: String, rose: Boolean) {
+    override def toString: String = s"$what $from->$to ${if (rose) "rose" else "fell"}"
+  }
+
+  /** How `cur` moved against its same-key `prior`; empty when it did not.
+    * A gated counter that repeated in both runs and now differs flags in
+    * either direction (the prior no longer describes the row), and CPU
+    * above 2 x prior + 0.25 s, the trip line the wall-clock gate used,
+    * flags as a rise. Wall time never flags: host noise moves it 1.5-3x.
+    */
+  def moves(cur: Row, prior: Row): Seq[Move] =
     Gated.flatMap(k => (cur.counters.get(k), prior.counters.get(k)) match {
-      case (Some(a), Some(b)) if a != b => Some(s"$k $b->$a")
+      case (Some(a), Some(b)) if a != b => Some(Move(k, b.toString, a.toString, a > b))
       case _ => None
     }) ++ (if (cur.cpuS <= 2 * prior.cpuS + 0.25) Nil
-           else Seq(s"cpu_s ${f3(prior.cpuS)}->${f3(cur.cpuS)}"))
+           else Seq(Move("cpu_s", f3(prior.cpuS), f3(cur.cpuS), rose = true)))
 
   /** One rep of a row: `work` is what `run` did, measured inside its own
     * materialization scope, or why it threw; `leak` names the storage the
@@ -538,8 +545,9 @@ object Bench {
     spark.sparkContext.addSparkListener(listener)
     case class QRes(name: String, reps: Seq[Work], err: Option[String]) {
       val row: Option[Row] = if (reps.isEmpty) None else Some(Bench.row(reps))
-      val flags: Seq[String] = (for (c <- row; p <- prior.get(name))
-        yield regressions(c, p)).getOrElse(Nil)
+      val flags: Seq[Move] = (for (c <- row; p <- prior.get(name))
+        yield moves(c, p)).getOrElse(Nil)
+      val regressed: Boolean = flags.exists(_.rose)
     }
     // a row errs when every rep threw, or when any rep left storage
     def timeQuery(name: String, run: () => Unit): QRes = {
@@ -557,11 +565,13 @@ object Bench {
             (Gated.map(k => k -> r.reps.map(_.counters(k).toString)) :+
               ("cpu_s" -> r.reps.map(x => f3(x.cpuS)))).map { case (k, vs) =>
               s"$k=${vs.mkString("/")}" }.mkString(" ") +
-            (if (r.flags.isEmpty) "" else s" REGRESSED ${r.flags.mkString(", ")}")
+            (if (r.flags.isEmpty) ""
+             else s" ${if (r.regressed) "REGRESSED" else "IMPROVED"} ${r.flags.mkString(", ")}")
         })
         r
       }
-    val regressed = results.filter(_.flags.nonEmpty)
+    // a row with any rise is regressed; one whose every move fell improved
+    val (regressed, improved) = results.filter(_.flags.nonEmpty).partition(_.regressed)
     val nCompared = results.count(r => r.row.isDefined && prior.contains(r.name))
     // wall-clock evidence for the reader: how fast this host ran the scan
     // canary against the prior's
@@ -642,14 +652,14 @@ object Bench {
         ingestPps.map(v => s""""ingest_pts_per_sec":${f3(v)},"ingest_cfg":"$ingestCfg",""")
           .getOrElse("") +
         hostRatio.map(h => s""""host_ratio":${f3(h)},""").getOrElse("") +
-        s""""n_compared":$nCompared,"n_regressed":${regressed.size},""" +
+        s""""n_compared":$nCompared,"n_regressed":${regressed.size},"n_improved":${improved.size},""" +
         s""""value":${f3(ok.map(_.t).sum)},"n_ok":${ok.size},"n_err":${results.size - ok.size}"""
     val prefix = s""""metric":"total","unit":"sec","reps":$reps,"sf":"$sfDir","key":"$key""""
-    val regressedField = regressed.map(r => s""""${r.name}":""" +
-      r.flags.map(f => s""""$f"""").mkString("[", ",", "]")).mkString(""""regressed":{""", ",", "},")
+    def flagsField(field: String, rs: Seq[QRes]): String = rs.map(r => s""""${r.name}":""" +
+      r.flags.map(f => s""""$f"""").mkString("[", ",", "]")).mkString(s""""$field":{""", ",", "},")
     val entry = s"""{$prefix,"queries":""" +
       results.map(r => s""""${r.name}":${rowJson(r)}""").mkString("{", ",", "}") +
-      s""",$regressedField$summary}"""
+      s""",${flagsField("regressed", regressed)}${flagsField("improved", improved)}$summary}"""
     val wrote =
       try {
         val store = merge(entries(outPath), entry, fullSweep = only.isEmpty)

@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import graft.functions.TextOps
 
 /** Deduplication operators for the document pipeline. All candidate
@@ -74,13 +73,6 @@ object Dedup {
     docs.select(col("doc_id"), TextOps.charGramHashes(col("text"), n).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** MinHash signature aggregator: one pass over (doc, element-hash) rows,
-    * buffer = 128 running minima of cheap splitmix64 re-mixes. A typed
-    * Aggregator (SURVEY §2.4) instead of 128 aggregate expressions — the
-    * expression form exceeds Spark's codegen field limit and falls back to
-    * interpreted evaluation (~50x slower); the aggregator is one tight
-    * loop with map-side partial merge.
-    */
   /** splitmix64 (Steele et al., public domain) of b + i*golden — the
     * family of NumHashes permutation surrogates. Shared by the batch
     * aggregator and the per-row streaming signature so both paths hash
@@ -113,6 +105,13 @@ object Dedup {
     buf.toSeq
   }
 
+  /** MinHash signature aggregator: one pass over (doc, element-hash) rows,
+    * buffer = 128 running minima of cheap splitmix64 re-mixes. A typed
+    * Aggregator (SURVEY §2.4) instead of 128 aggregate expressions — the
+    * expression form exceeds Spark's codegen field limit and falls back to
+    * interpreted evaluation (~50x slower); the aggregator is one tight
+    * loop with map-side partial merge.
+    */
   object MinHashAgg extends Aggregator[Long, Array[Long], Seq[Long]] {
     def zero: Array[Long] = Array.fill(NumHashes)(Long.MaxValue)
     def reduce(buf: Array[Long], b: Long): Array[Long] = {
@@ -370,152 +369,68 @@ object Dedup {
   /** Connected components over duplicate pairs — the dedup capstone:
     * near-dup PAIRS must become CLUSTERS before one canonical keeper per
     * cluster can be chosen (A~B and B~C pull A,B,C together even when
-    * A~C was never emitted). Iterative min-label propagation: each pass
-    * is one keyed join + one keyed min-aggregation (hash shuffles only),
-    * and the iteration count is bounded by the component DIAMETER — for
-    * dup clusters, a handful. This is the plain-propagation skeleton of
-    * the large-star/small-star algorithm (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond"); at 1e9+ vertices swap in the
-    * star steps, same join shape. Output: every doc that appears in a
-    * pair, its component id (= min doc_id reachable), and the keeper
-    * flag — deterministic at any parallelism.
-    */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val edges = Materialize.checkpoint(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct())
-    // `held` is the checkpoint `labels` reads; each pass supersedes it
-    var held = Materialize.checkpoint(edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id")))
-    var labels = held
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = edges.join(labels, edges("dst") === labels("doc_id"))
-        .select(col("src").as("doc_id"), col("component"))
-      // the convergence check FOLDS INTO the propagation aggregation:
-      // each doc's old label rides the union (prop rows carry a sentinel
-      // that min() ignores), so the one materialized frame yields both
-      // the new labels and the changed-count — one job per pass, instead
-      // of a separate join-and-count that doubled the per-pass work.
-      // localCheckpoint (not cache) because each pass's plan embeds the
-      // previous pass's: lineage grows 2^diameter without truncation,
-      // which overflows the driver on long chains even though the DATA
-      // is tiny — the star variant below shares the same discipline
-      val next = Materialize.checkpoint(labels.select(col("doc_id"), col("component"),
-          col("component").as("old"))
-        .unionByName(prop.withColumn("old", lit(Long.MaxValue)))
-        .groupBy(col("doc_id"))
-        .agg(min(col("component")).as("component"), min(col("old")).as("old")))
-      val changed = next.filter(col("component") =!= col("old")).count()
-      Materialize.release(held)
-      held = next
-      labels = next.select(col("doc_id"), col("component"))
-      converged = changed == 0
-      i += 1
-    }
-    // an unconverged run would silently mis-label long chains (non-minimal
-    // docs flagged keepers, diverging from the transitive-closure oracle):
-    // fail loudly instead — callers raise maxIter, which only long
-    // templated-doc chains beyond the expected dup-cluster diameter need
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter passes; " +
-        "raise maxIter (component diameter exceeds the dup-cluster assumption)")
-    Materialize.release(edges)
-    labels.select(col("doc_id"), col("component"),
-      (col("doc_id") === col("component")).as("keeper"))
-  }
-
-  /** Large-star/small-star connected components (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-    * 1e9+-vertex path `connectedComponents`' scaladoc promises.
+    * A~C was never emitted). Large-star/small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014): the
+    * round count does not grow with component DIAMETER, so a long chain
+    * costs a few rounds where label propagation needs one per hop.
     *
-    * Plain propagation converges in DIAMETER passes, each shuffling the
-    * full edge set — fine for dup clusters (diameter ~ a few), fatal for
-    * web-scale graphs with long chains. The star steps converge in
-    * O(log² n) rounds REGARDLESS of diameter by rewiring edges toward
-    * component minima:
-    *  - large-star: for each node u, hang every LARGER neighbor off
-    *    min(N(u) ∪ u) — keyed groupBy(u) + min + re-emit;
-    *  - small-star: normalize to (big, small) and hang every smaller
-    *    neighbor (and u itself) off the minimum — same shape.
-    * Both are one hash-partitioned aggregation + one keyed join per
-    * round, no broadcast of anything unbounded, the same shuffle shape
-    * as the propagation loop. Fixpoint = the edge set stops changing:
-    * both rounds' frames are distinct checkpointed sets, so
-    * |next| == |edges| plus one-direction containment (next ⊆ edges via
-    * a single exceptAll) is set equality — one cheap count over
-    * checkpointed blocks replaces the second anti-join per round.
+    * Edges are canonical (src > dst, distinct, self-free). Each round
+    * rewires them toward component minima with two windows and one
+    * aggregation, no join:
+    *  - large-star: over both edge directions, m = least(min(v), u) per
+    *    node u; every larger neighbor v > u hangs off m, emitting (v, m);
+    *  - small-star: on those edges, m = min(dst) per src; src and every
+    *    dst other than m hang off m;
+    *  - the new edges (tagged n) and the old ones (tagged o) meet in one
+    *    group-by on the edge, checkpointed once per round: a row with
+    *    n != o is an edge the round changed, so counting them is the
+    *    fixpoint test, and the n rows are the next round's edges.
+    * At the fixpoint every edge is (member, component minimum).
     *
-    * Output contract is identical to `connectedComponents` (doc_id,
-    * component = reachable min, keeper) — `DedupSpec` asserts equality
-    * on chains, stars, and the real LSH pair set.
+    * Output: every doc that appears in a pair, its component id (= the
+    * min doc_id reachable), and the keeper flag — deterministic at any
+    * parallelism. A graph that has not converged after [[MaxRounds]]
+    * throws instead of returning mislabelled components.
     */
-  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    // canonical undirected edges u>v as (big=src, small=dst), self-free.
-    // Each round REWRITES the edge set through joins, so plan lineage
-    // grows multiplicatively — a checkpoint (lineage truncation, kept in
-    // executor storage) after every round is what makes the iteration
-    // viable; each round's checkpoint is released once the next one
-    // supersedes it
-    var edges = Materialize.checkpoint(pairs
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    // each round's plan embeds the previous one, so the lineage is cut
+    // (a checkpoint in executor storage) once per round and the
+    // superseded round released
+    var held = Materialize.checkpoint(pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("src"),
         least(col("doc_a"), col("doc_b")).as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    var edgeCount = edges.count()
-    var converged = false
+    var edges = held
+    var changed = 1L
     var round = 0
-    while (!converged && round < maxRounds) {
-      // the per-node minima (at most 2 |edges| rows of two longs) join
-      // back to the edges. Below the session's broadcast bound, sized from
-      // the exact edge count, they broadcast by plan: left to adaptive
-      // execution, both sides of each join are small stages finishing
-      // concurrently, and which side it broadcast — and with it how many
-      // jobs the round ran — depended on which stage finished first
-      val small = 32L * edgeCount <= SQLConf.get.autoBroadcastJoinThreshold
-      def perNode(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-      // large-star: group by u over BOTH directions; m = min(N(u) ∪ u);
-      // emit (v, m) for neighbors v > u
+    while (changed > 0 && round < MaxRounds) {
       val nbrs = edges.select(col("src").as("u"), col("dst").as("v"))
         .union(edges.select(col("dst").as("u"), col("src").as("v")))
-      val mins = nbrs.groupBy(col("u"))
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val large = nbrs.join(perNode(mins), "u")
+      val large = nbrs
+        .withColumn("m", least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
         .filter(col("v") > col("u"))
         .select(col("v").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-      // small-star on the (big, small) orientation: m = min(N_small(u) ∪ u);
-      // emit (v, m) for v ∈ N_small(u) ∪ {u}, v ≠ m
-      val smins = large.groupBy(col("src"))
-        .agg(min(col("dst")).as("m"))
-      val smallNbrs = large.join(perNode(smins), "src")
-        .select(col("src"), col("dst").as("v"), col("m"))
-      val hangSelf = smallNbrs.select(col("src").as("v2"), col("m")).distinct()
-        .filter(col("v2") =!= col("m"))
-        .select(col("v2").as("src"), col("m").as("dst"))
-      val hangNbrs = smallNbrs.filter(col("v") =!= col("m"))
-        .select(col("v").as("src"), col("m").as("dst"))
-      val next = Materialize.checkpoint(hangNbrs.union(hangSelf)
-        .filter(col("src") =!= col("dst")).distinct())
-      // fixpoint check: both frames are distinct sets (the .distinct()
-      // above), so |next| = |edges| plus next ⊆ edges is set equality —
-      // |edges| is carried from the previous round's count, and the
-      // containment check counts the whole anti-join (a fixed job count,
-      // unlike an incremental isEmpty scan)
-      val nextCount = next.count()
-      converged = nextCount == edgeCount && next.exceptAll(edges).count() == 0L
-      Materialize.release(edges)
-      edges = next
-      edgeCount = nextCount
+      val small = large
+        .withColumn("m", min(col("dst")).over(Window.partitionBy(col("src"))))
+        .select(explode(array(
+          struct(col("dst").as("src"), col("m").as("dst")),
+          struct(col("src"), col("m").as("dst")))).as("e"))
+        .select(col("e.src"), col("e.dst"))
+        .filter(col("src") =!= col("dst"))
+      val tagged = Materialize.checkpoint(
+        small.select(col("src"), col("dst"), lit(1).as("n"), lit(0).as("o"))
+          .union(edges.select(col("src"), col("dst"), lit(0).as("n"), lit(1).as("o")))
+          .groupBy(col("src"), col("dst"))
+          .agg(max(col("n")).as("n"), max(col("o")).as("o")))
+      changed = tagged.filter(col("n") =!= col("o")).count()
+      Materialize.release(held)
+      held = tagged
+      edges = tagged.filter(col("n") === 1).select(col("src"), col("dst"))
       round += 1
     }
-    if (!converged)
+    if (changed > 0)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge within $maxRounds rounds")
-    // at fixpoint every edge is (member, component-min)
+        s"connectedComponents did not converge within $MaxRounds rounds")
     val members = edges.select(col("src").as("doc_id"), col("dst").as("component"))
     val roots = edges.select(col("dst").as("doc_id")).distinct()
       .withColumn("component", col("doc_id"))
@@ -524,18 +439,19 @@ object Dedup {
         (col("doc_id") === col("component")).as("keeper"))
   }
 
-  /** Driver union-find for SMALL pair sets — the third routing tier.
-    * Every distributed CC pass costs a fixed scheduler/shuffle overhead
-    * per iteration regardless of data size; below ~1e5 edges that
-    * overhead IS the cost (a 2k-edge dup graph pays 4 multi-job passes
-    * to move kilobytes). Union-find over one bounded collect computes
-    * the identical min-label components in milliseconds. The collect is
-    * gated by the caller's exact edge COUNT (never a guess), so at
-    * 100 TB — where near-dup pair sets are billions — the router sends
-    * the graph to propagation/star and this path is never entered:
-    * the same bounded-route discipline as TsQuery.percentileAuto.
-    * Union-by-min-root = component id is the min reachable doc id,
-    * byte-identical to the distributed routes (DedupSpec asserts).
+  /** The round cap of [[connectedComponents]]: a random-order chain of
+    * 30,000 nodes converges in 13 rounds, and near-dup clusters in a few.
+    */
+  private val MaxRounds = 32
+
+  /** Driver union-find for SMALL pair sets. Every distributed round costs
+    * a fixed scheduler/shuffle overhead regardless of data size; below
+    * [[LocalEdges]] that overhead IS the cost (a 2k-edge dup graph pays
+    * several multi-job rounds to move kilobytes). Union-find over one
+    * bounded collect computes the identical min-label components in
+    * milliseconds. Union-by-min-root = component id is the min reachable
+    * doc id, byte-identical to [[connectedComponents]] (DedupSpec
+    * asserts).
     *
     * `private[graft]`: only [[connectedComponentsAuto]] may call this —
     * it gates the collect by the measured edge count, and a direct
@@ -564,32 +480,25 @@ object Dedup {
       .withColumn("keeper", col("doc_id") === col("component"))
   }
 
-  /** Size-routed components: driver union-find below `localThreshold`
-    * edges (fixed per-pass scheduler overhead dominates there), plain
-    * propagation up to `starThreshold` (diameter-bounded dup clusters —
-    * fewer jobs), star steps above (diameter-independent O(log² n)
-    * rounds). The routing counts are a single scalar aggregate over the
-    * pair set — routing happens IN CODE on measured size, never by
-    * configuration faith.
+  /** The most edges [[connectedComponentsAuto]] collects to the driver. */
+  private val LocalEdges = 100000L
+
+  /** Size-routed components: the driver union-find at or below
+    * [[LocalEdges]] edges, [[connectedComponents]] above. The edge count
+    * is one scalar aggregate over the pairs, so the route is decided on
+    * the measured size (at 100 TB near-dup pair sets are billions and
+    * never take the local route). The choice is printed as
+    * `[cc-route] edges=N route=local|star` (tools/run_scale100.sh keeps
+    * it per decade).
     */
-  def connectedComponentsAuto(pairs: DataFrame,
-                              starThreshold: Long = 10000000L,
-                              localThreshold: Long = 100000L): DataFrame = {
+  def connectedComponentsAuto(pairs: DataFrame): DataFrame = {
     val cached = Materialize.cache(pairs)
     val edgeCount = cached.count()
-    // name and implementation decided together — one three-way branch
-    // (the choice is part of the scale evidence: SCALE100 captures the
-    // stderr line per decade)
-    val (route, impl) =
-      if (edgeCount >= starThreshold)
-        ("star", () => connectedComponentsStar(cached))
-      else if (edgeCount <= localThreshold)
-        ("local", () => connectedComponentsLocal(cached))
-      else ("propagation", () => connectedComponents(cached))
-    System.err.println(s"[cc-route] edges=$edgeCount route=$route")
-    // every route consumes the pairs eagerly (a collect or a first
+    val local = edgeCount <= LocalEdges
+    System.err.println(s"[cc-route] edges=$edgeCount route=${if (local) "local" else "star"}")
+    // both routes consume the pairs eagerly (a collect or the first
     // checkpoint), so the result no longer reads them
-    val out = impl()
+    val out = if (local) connectedComponentsLocal(cached) else connectedComponents(cached)
     Materialize.release(cached)
     out
   }

@@ -21,21 +21,22 @@ object TextQueries {
     "dedup_minhash" -> ((s, d) => Dedup.minhashNearDup(docs(s, d), 0.5)),
 
     // the dedup capstone: pairs -> clusters -> canonical keeper per
-    // cluster, via distributed min-label propagation
+    // cluster, via the distributed large-star/small-star kernel (the
+    // sweep's measure of it; the pipelines below route small graphs to
+    // the driver)
     "dedup_components" -> ((s, d) =>
       Dedup.connectedComponents(Dedup.minhashNearDup(docs(s, d), 0.5))),
 
-    // the same clusters via the large-star/small-star rounds (Kiveris et
-    // al.) — the diameter-independent path for 1e9+-vertex graphs; SAME
-    // oracle as dedup_components because the algorithms must agree
+    // the kernel's second registered row (the registered set and its
+    // oracles are fixed); SAME oracle as dedup_components
     "dedup_components_star" -> ((s, d) =>
-      Dedup.connectedComponentsStar(Dedup.minhashNearDup(docs(s, d), 0.5))),
+      Dedup.connectedComponents(Dedup.minhashNearDup(docs(s, d), 0.5))),
 
     // the near-dedup corpus pass a training pipeline actually ships:
     // every non-keeper cluster member is dropped (anti join on the
     // component labels), singletons and keepers survive. Components run
-    // through the size router (propagation for bounded-diameter dup
-    // clusters, star rounds for huge graphs — one scalar count decides)
+    // through the size router (driver union-find up to 1e5 edges, the
+    // distributed kernel above — one scalar count decides)
     "pipe_near_dedup" -> ((s, d) => {
       val dd = docs(s, d)
       val losers = Dedup.connectedComponentsAuto(Dedup.minhashNearDup(dd, 0.5))
@@ -444,7 +445,7 @@ object TextQueries {
          |       (id = min(r)) AS keeper
          |FROM reach GROUP BY id""".stripMargin,
 
-    // identical closure oracle: star rounds and propagation must agree
+    // identical closure oracle: both rows run the same kernel
     "dedup_components_star" ->
       s"""${ShingleCte.replaceFirst("WITH", "WITH RECURSIVE")}, pr AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b

@@ -48,23 +48,32 @@ class BenchSpec extends AnyFunSuite with SparkTest {
     val prior = measured(agg)
     val cur = measured(agg)
     assert(Bench.Gated.forall(prior.counters.contains), prior)
-    assert(Bench.regressions(cur, prior).isEmpty)
+    assert(Bench.moves(cur, prior).isEmpty)
   }
 
   test("an injected extra exchange is flagged on its counters") {
     val prior = measured(agg)
     val cur = measured { facts.repartition(8).groupBy("k").agg(sum("v")).count(); () }
-    val flags = Bench.regressions(cur, prior)
-    assert(flags.exists(_.startsWith("stages")), flags)
-    assert(flags.exists(_.startsWith("tasks")), flags)
+    val flags = Bench.moves(cur, prior)
+    assert(flags.exists(_.what == "stages"), flags)
+    assert(flags.exists(_.what == "tasks"), flags)
+    assert(flags.forall(_.rose), flags)
+  }
+
+  test("a removed exchange is flagged as a fall, not as a regression") {
+    val prior = measured { facts.repartition(8).groupBy("k").agg(sum("v")).count(); () }
+    val cur = measured(agg)
+    val flags = Bench.moves(cur, prior)
+    assert(flags.exists(_.what == "stages") && flags.exists(_.what == "tasks"), flags)
+    assert(flags.forall(f => !f.rose && f.toString.endsWith(" fell")), flags)
   }
 
   test("a dropped broadcast is flagged on its counters") {
     val prior = measured(join)
     val cur = withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(measured(join))
-    assert(Bench.regressions(prior, measured(join)).isEmpty)
-    val flags = Bench.regressions(cur, prior)
-    assert(flags.exists(_.startsWith("stages")), flags)
+    assert(Bench.moves(prior, measured(join)).isEmpty)
+    val flags = Bench.moves(cur, prior)
+    assert(flags.exists(_.what == "stages"), flags)
   }
 
   test("an expression slowdown past the trip line is flagged on CPU time alone") {
@@ -79,8 +88,8 @@ class BenchSpec extends AnyFunSuite with SparkTest {
     val prior = measured { facts.select(max(col("v") + 1)).collect(); () }
     val cur = measured { facts.select(max(spin(col("v")))).collect(); () }
     assert(cur.cpuS > 2 * prior.cpuS + 0.25, (cur, prior))
-    val flags = Bench.regressions(cur, prior)
-    assert(flags.nonEmpty && flags.forall(_.startsWith("cpu_s")), flags)
+    val flags = Bench.moves(cur, prior)
+    assert(flags.nonEmpty && flags.forall(f => f.what == "cpu_s" && f.rose), flags)
   }
 
   test("a row that leaves storage behind fails its rep") {

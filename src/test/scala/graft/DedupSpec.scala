@@ -172,41 +172,56 @@ class DedupSpec extends AnyFunSuite with SparkTest {
     assert(out(1L)._2 && out(10L)._2 && out(20L)._2)
   }
 
-  test("large-star/small-star components equal plain propagation") {
+  private def norm(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Boolean)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+
+  // graph shapes that stress different convergence behavior: a long
+  // chain (diameter 15), a star, dense triangles, singleton pairs, and
+  // ids arriving in arbitrary order
+  private lazy val shapes = {
     import spark.implicits._
-    def norm(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Boolean)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    // graph shapes that stress different convergence behavior: a long
-    // chain (diameter 15 — where propagation needs 15 passes but the
-    // star steps stay logarithmic), a star, dense triangles, singleton
-    // pairs, and ids arriving in arbitrary order
-    val chain = (1L to 15L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val star = (2L to 9L).map(i => (1L, i)).toDF("doc_a", "doc_b")
-    val mixed = Seq((5L, 3L), (3L, 9L), (9L, 5L), (100L, 90L),
-      (40L, 41L), (90L, 80L)).toDF("doc_a", "doc_b")
-    for (pairs <- Seq(chain, star, mixed))
-      assert(norm(Dedup.connectedComponentsStar(pairs)) ==
-        norm(Dedup.connectedComponents(pairs)))
-    // and on the real LSH candidate pairs from the documents table
+    Seq(
+      "chain" -> (1L to 15L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
+      "star" -> (2L to 9L).map(i => (1L, i)).toDF("doc_a", "doc_b"),
+      "mixed" -> Seq((5L, 3L), (3L, 9L), (9L, 5L), (100L, 90L),
+        (40L, 41L), (90L, 80L)).toDF("doc_a", "doc_b"))
+  }
+
+  test("the components kernel equals the driver union-find") {
+    // every shape, and the real LSH candidate pairs of the documents table
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val lsh = Dedup.minhashNearDup(docs, 0.5)
-    assert(norm(Dedup.connectedComponentsStar(lsh)) ==
-      norm(Dedup.connectedComponents(lsh)))
-    // the size router picks propagation below threshold, star above
-    assert(norm(Dedup.connectedComponentsAuto(mixed, starThreshold = 1L)) ==
-      norm(Dedup.connectedComponents(mixed)))
-    // the driver union-find route equals both distributed routes on
-    // every stress shape and on the real LSH pairs (it is the route the
-    // auto router takes below localThreshold)
-    for (pairs <- Seq(chain, star, mixed, lsh))
-      assert(norm(Dedup.connectedComponentsLocal(pairs)) ==
-        norm(Dedup.connectedComponentsStar(pairs)))
-    // router boundary: mixed (6 edges) <= localThreshold=10 actually
-    // TAKES the local tier through the router (a 0 threshold would fall
-    // through to propagation and vacuously pass on output equality)
-    assert(norm(Dedup.connectedComponentsAuto(mixed,
-        starThreshold = 1000L, localThreshold = 10L)) ==
-      norm(Dedup.connectedComponentsLocal(mixed)))
+    for ((name, pairs) <- shapes :+ ("lsh" -> Dedup.minhashNearDup(docs, 0.5)))
+      assert(norm(Dedup.connectedComponents(pairs)) ==
+        norm(Dedup.connectedComponentsLocal(pairs)), name)
+  }
+
+  test("the components kernel labels a 300-node chain given in random order") {
+    import spark.implicits._
+    // diameter 299: one pass per hop would need 299, the star rounds a few
+    val order = new scala.util.Random(7).shuffle((0L until 300L).toVector)
+    val pairs = order.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("doc_a", "doc_b")
+    val out = norm(Dedup.connectedComponents(pairs))
+    assert(out == norm(Dedup.connectedComponentsLocal(pairs)))
+    assert(out == (0L until 300L).map(d => (d, 0L, d == 0L)).toSet)
+  }
+
+  test("the size router takes the driver up to 1e5 edges and the kernel above") {
+    val mixed = shapes.toMap.apply("mixed")
+    var routed = Set.empty[(Long, Long, Boolean)]
+    val local = counters { routed = norm(Dedup.connectedComponentsAuto(mixed)) }
+    assert(routed == norm(Dedup.connectedComponentsLocal(mixed)))
+    // a star of 100,001 edges around its minimum is already the kernel's
+    // fixpoint, so it runs one round
+    val star = spark.range(2L, 100003L).select(lit(1L).as("doc_a"), col("id").as("doc_b"))
+    val kernel = counters {
+      val out = Dedup.connectedComponentsAuto(star).collect()
+      assert(out.length == 100002 &&
+        out.forall(r => r.getLong(1) == 1L && r.getBoolean(2) == (r.getLong(0) == 1L)))
+    }
+    // local: the edge count and the collect. Kernel: the edge count, the
+    // canonical edges, one round's checkpoint and changed count, and the
+    // output; each further round adds its own jobs
+    assert((local("jobs"), kernel("jobs")) == ((4L, 13L)), (local, kernel))
   }
 
   test("quality-aware dedup keeps the longest cluster member, not the min id") {

@@ -32,6 +32,8 @@ class EdgeCaseSpec extends AnyFunSuite with SparkTest {
     assert(Dedup.simhashPairs(emptyDocs).count() == 0)
     assert(Dedup.connectedComponents(
       Dedup.minhashNearDup(emptyDocs, 0.5)).count() == 0)
+    assert(Dedup.connectedComponentsAuto(
+      Dedup.minhashNearDup(emptyDocs, 0.5)).count() == 0)
     assert(PipelineOps.globalShuffle(emptyDocs).count() == 0)
     assert(PipelineOps.sampleSplit(emptyDocs).count() == 0)
     assert(PipelineOps.packSequences(emptyDocs, 512L).count() == 0)

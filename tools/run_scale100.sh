@@ -20,8 +20,9 @@ WORK=${2:-/tmp/graft_scale100}
 # pipe_near_dedup/pipe_dedup_quality/text_bm25 (r13 verdict #5) are the
 # text/dedup workhorses a 100 TB curation run actually spends time in:
 # near-dup adds CC + the keeper window over the banded pairs, and the
-# bench stderr's [cc-route] lines record which component tier the router
-# chose per decade (captured into the artifact below).
+# bench stderr's [cc-route] lines record per decade whether the router
+# took the driver union-find (route=local, up to 1e5 edges) or the
+# distributed kernel (route=star) (captured into the artifact below).
 # mm_near_dup (r14 verdict #3): blob near-dedup must show banded (output-
 # bound), not all-pairs, growth across decades, like dedup_minhash.
 # mm_near_dup_winnow (r15): the bounded-fingerprint rung — same decades,
