@@ -30,8 +30,8 @@ object IvfStore {
     * sidecar — underscore-prefixed, so store scans ignore it): an IVF
     * index without its codebook is not self-contained, and a serving
     * path that re-derives the centroids pays a full corpus-scan collect
-    * per probe session (measured r16: the ann_ivf_probe row spent a
-    * corpus scan on 16 rows the store already knew).
+    * per probe session (the ann_ivf_probe row once spent a corpus scan
+    * on 16 rows the store already knew).
     */
   def write(vecs: DataFrame, idCol: String, vecCol: String,
             centroids: Seq[(Int, Seq[Double])], path: String,
@@ -63,11 +63,11 @@ object IvfStore {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq)).toSeq
 
   /** Streaming index maintenance: each micro-batch of vectors lands in
-    * the store under (batch_id, cell) — batch_id makes the at-least-once
-    * foreachBatch replay idempotent (dynamic-partition overwrite replaces
-    * the batch's own partitions), cell keeps probe-time partition pruning
-    * (the cell filter prunes inside every batch directory). The serving
-    * path is unchanged: [[topK]] reads the same layout.
+    * the store as one batch of a [[BatchStore]], partitioned by cell
+    * beneath `batch_id`. A batch that foreachBatch replays after a lost
+    * commit replaces its own rows; the cell keeps probe-time partition
+    * pruning (the cell filter prunes inside every batch directory). The
+    * serving path is unchanged: [[topK]] reads the same layout.
     */
   def appendStream(vecs: DataFrame, idCol: String, vecCol: String,
                    centroids: Seq[(Int, Seq[Double])],
@@ -76,17 +76,13 @@ object IvfStore {
                    codebook: Option[Array[Array[Array[Double]]]] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val index = Ivf(centroids, planes, codebook)
+    val store = new BatchStore(vecs.sparkSession, path)
     vecs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.assign(batch, idCol, vecCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell")
-          .parquet(path)
+        store.write(index.assign(batch, idCol, vecCol), batchId, "cell")
       }
       .start()
   }

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.functions.Quantize
 import graft.operators.Materialize
+import graft.sources.BatchStore
 
 /** Structured Streaming ingestion — the Spark shape of the reference's
   * client -> BufferedSignal -> CompressionDaemon pipeline
@@ -43,12 +44,10 @@ object Ingest {
     StructField("touched", BooleanType), StructField("dense", BooleanType),
     StructField("grid_pairs", LongType), StructField("h", LongType),
     StructField("cnt", LongType), StructField("s0", LongType),
-    // group-hash salt (MotifDiscord.groupHash): pre-salt snapshots read
-    // it as null -> recovered as 0, the historical unsalted hash
+    // group-hash salt (MotifDiscord.groupHash)
     StructField("salt", LongType)))
   /** policyStream's persisted Q state: one row per decided micro-batch. */
   private val QStateSchema = StructType(Seq(
-    StructField("batch_id", LongType),
     StructField("q", ArrayType(DoubleType)), StructField("step", LongType)))
 
   /** Normalized streaming readings from raw event files (schema must be
@@ -90,18 +89,6 @@ object Ingest {
           .as("value"))
       .withColumn("value_q", Quantize.quantize(col("value"), 2))
 
-  /** Micro-batch `batchId`'s rows, tagged `batch_id` and set up as a
-    * dynamic-partition overwrite keyed by it (then by `partitions`): a
-    * batch that foreachBatch replays after a crash replaces its own
-    * partitions instead of appending duplicates. The caller adds options
-    * and the sink.
-    */
-  def batchWriter(df: DataFrame, batchId: Long, partitions: String*): DataFrameWriter[Row] =
-    df.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id" +: partitions: _*)
-
   /** S3 — tier-0 writer: land micro-batches as Parquet partitioned by
     * (batch_id, signal bucket). When `statsDir` is set, each batch ALSO
     * lands its partial per-(signal, day) zone-map stats — the incremental
@@ -110,20 +97,22 @@ object Ingest {
     * stat is associative (ZoneMap.foldTimeStats). Stats cost one extra
     * keyed aggregation per micro-batch over that batch only.
     *
-    * Both writes are IDEMPOTENT under foreachBatch's at-least-once
-    * replay: the write is a dynamic-partition OVERWRITE keyed by the
-    * micro-batch id, so a batch replayed after a crash between the data
-    * write and the checkpoint commit replaces its own partitions instead
-    * of appending duplicates (which would double-count cnt/sum in the
-    * folded stats and duplicate tier-0 rows).
-    *
-    * The tier-0 files are written with pages capped at `Pages.Rows` rows
-    * (the layout `Tiers.writeTier` gives every tier), so pushed
-    * predicates over the landing skip 1,024-row pages, not only files.
+    * Every store is a [[graft.sources.BatchStore]], so each write is
+    * IDEMPOTENT under foreachBatch's at-least-once replay: a batch
+    * replayed after a crash between its writes and the checkpoint commit
+    * replaces its own rows instead of appending duplicates (which would
+    * double-count cnt/sum in the folded stats and duplicate tier-0 rows).
+    * The store's 1,024-row pages are the layout `Tiers.writeTier` gives
+    * every tier, so pushed predicates over the landing skip pages, not
+    * only files.
     */
   def tier0Writer(readings: DataFrame, tier0Dir: String, checkpointDir: String,
                   buckets: Int = 32, statsDir: Option[String] = None,
-                  histDir: Option[String] = None): StreamingQuery =
+                  histDir: Option[String] = None): StreamingQuery = {
+    val spark = readings.sparkSession
+    val tier0 = new BatchStore(spark, tier0Dir)
+    val stats = statsDir.map(new BatchStore(spark, _))
+    val hist = histDir.map(new BatchStore(spark, _))
     readings
       .withColumn("sig_bucket", pmod(col("signal_id"), lit(buckets)))
       .writeStream
@@ -131,23 +120,16 @@ object Ingest {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batchWriter(batch, batchId, "sig_bucket")
-          .options(graft.sources.Pages.WriterOptions)
-          .parquet(tier0Dir)
-        statsDir.foreach { sd =>
-          batchWriter(graft.plans.ZoneMap.timeStats(batch.drop("sig_bucket")), batchId)
-            .parquet(sd)
-        }
+        tier0.write(batch, batchId, "sig_bucket")
+        stats.foreach(_.write(graft.plans.ZoneMap.timeStats(batch.drop("sig_bucket")), batchId))
         // percentile-sketch maintenance: per-batch partial value_q cells
-        // (signal, day, value_q) — same idempotent overwrite discipline;
-        // ZoneMap.foldHistogram merges partials exactly at read time, so
-        // the persisted sketch serves percentiles with no raw-data scan
-        histDir.foreach { hd =>
-          batchWriter(graft.plans.ZoneMap.timeHistogram(batch.drop("sig_bucket")), batchId)
-            .parquet(hd)
-        }
+        // (signal, day, value_q); ZoneMap.foldHistogram merges partials
+        // exactly at read time, so the persisted sketch serves
+        // percentiles with no raw-data scan
+        hist.foreach(_.write(graft.plans.ZoneMap.timeHistogram(batch.drop("sig_bucket")), batchId))
       }
       .start()
+  }
 
   /** Event-time windowed aggregation with watermark over the stream —
     * the streaming flavor of O6 (idiomatic Spark; positional windows are a
@@ -218,12 +200,11 @@ object Ingest {
     *     stores grow by O(batch), never rewritten.
     *
     * Replay-safe under foreachBatch's at-least-once delivery: every store
-    * is partitioned by `batch_id` and written with a dynamic-partition
-    * OVERWRITE (tier0Writer's discipline), and the probe reads only
-    * `batch_id < ` the current batch. A batch replayed after a crash
-    * between its writes and the checkpoint commit replaces its own
-    * partitions and never probes its own bands (StreamingSpec drops a
-    * commit entry, restarts, and compares every store to a clean run).
+    * is a [[graft.sources.BatchStore]], and the probe reads only the
+    * batches before the current one. A batch replayed after a crash
+    * between its writes and the checkpoint commit replaces its own rows
+    * and never probes its own bands (StreamingSpec drops a commit entry,
+    * restarts, and compares every store to a clean run).
     *
     * Per-batch counts are logged (`[dedup-grow]` stderr lines). Returns
     * the started query; per-batch cost lives in `recentProgress`
@@ -236,9 +217,9 @@ object Ingest {
     val docs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-    val bandDir = s"$storeDir/bands"
-    val setsDir = s"$storeDir/sets"
-    val pairsDir = s"$storeDir/pairs"
+    val bandStore = new BatchStore(spark, s"$storeDir/bands")
+    val setStore = new BatchStore(spark, s"$storeDir/sets")
+    val pairStore = new BatchStore(spark, s"$storeDir/pairs")
     docs.writeStream.outputMode("append")
       .option("checkpointLocation", s"$storeDir/_chk")
       .trigger(Trigger.AvailableNow())
@@ -257,11 +238,10 @@ object Ingest {
           .toDF("doc_id", "sig")
         // probe + append both consume the band rows; compute them once
         val bands = Materialize.cache(graft.operators.Dedup.bandsOfSignatures(sigs))
-        val hasStore = new java.io.File(bandDir).isDirectory
-        if (hasStore) {
-          def landed(dir: String) =
-            sp.read.parquet(dir).filter(col("batch_id") < batchId)
-          val cand = landed(bandDir)
+        def landed(store: BatchStore, like: DataFrame) =
+          store.read(store.ids.rangeUntil(batchId).toSeq, like.schema)
+        if (bandStore.ids.exists(_ < batchId)) {
+          val cand = landed(bandStore, bands)
             .select(col("doc_id").as("dup_of"), col("band"), col("bh"))
             .join(broadcast(bands.withColumnRenamed("doc_id", "new_id")),
               Seq("band", "bh"))
@@ -271,7 +251,7 @@ object Ingest {
           // own sets broadcast, same size-ratio prune + one-pass
           // Jaccard as the batch confirm
           val confirmed = Materialize.cache(cand
-            .join(landed(setsDir)
+            .join(landed(setStore, batchSets)
                 .select(col("doc_id").as("dup_of"), col("sh").as("shb")),
               Seq("dup_of"))
             .join(broadcast(batchSets.withColumnRenamed("doc_id", "new_id")),
@@ -284,15 +264,14 @@ object Ingest {
             .filter(col("jac") >= threshold)
             .select(col("new_id").as("doc_id"), col("dup_of"), col("jac")))
           val nConfirmed = confirmed.count()
-          batchWriter(confirmed, batchId).parquet(pairsDir)
-          System.err.println(s"[dedup-grow] batch=$batchId " +
+          pairStore.write(confirmed, batchId)
+          System.err.println(s"[dedup-grow] batch_id=$batchId " +
             s"confirmed_pairs=$nConfirmed")
         } else {
-          System.err.println(s"[dedup-grow] batch=$batchId store empty")
+          System.err.println(s"[dedup-grow] batch_id=$batchId store empty")
         }
-        batchWriter(bands.select(col("doc_id"), col("band"), col("bh")), batchId)
-          .parquet(bandDir)
-        batchWriter(batchSets, batchId).parquet(setsDir)
+        bandStore.write(bands, batchId)
+        setStore.write(batchSets, batchId)
       }}
       .start()
   }
@@ -576,35 +555,35 @@ object Ingest {
     * outlier/mod.rs) served continuously, the way iforestStream serves
     * the frozen forest.
     *
-    * Persistence layout under `workDir`:
-    *  - `segs/batch=<id>/`    — sealed segments (qvals), partitioned by
-    *    micro-batch; dynamic-partition overwrite keyed by batch id, so a
-    *    replayed batch replaces its own rows (tier0Writer's idempotence
-    *    discipline);
-    *  - `profile/batch=<id>/` — the FULL updated profile after batch
-    *    <id> (signal_id, seg, nnd_q, exact); each batch writes its own
-    *    versioned snapshot, so readers
-    *    ([[readProfile]]) always see a consistent profile and a replayed
-    *    batch rewrites an identical snapshot. Prior state is the newest
-    *    snapshot with id < current, so a crash between the two writes
-    *    replays cleanly;
-    *  - `state/batch=<id>/` — the folded ROUTE-PLAN state (one
+    * Persistence under `workDir`: three [[graft.sources.BatchStore]]s,
+    * each partitioned by `batch_id` alone, so a visible batch directory
+    * is a committed one.
+    *  - `segs` — sealed segments (signal_id, seg, qvals), one batch per
+    *    micro-batch. It is the data, not a derived view, and is never
+    *    pruned;
+    *  - `profile` — the FULL profile after each batch (signal_id, seg,
+    *    nnd_q, exact). [[readProfile]] serves the newest one;
+    *  - `state` — the folded ROUTE-PLAN state after each batch (one
     *    kind-tagged table: per-signal m/t/last-segment/exact/ordered +
     *    this batch's route flags; per-distinct-vector hash group counts
-    *    + first-chunk sums), same versioning discipline. This is what
-    *    makes the per-batch plan O(δ + |state|): the route decision
-    *    folds from it instead of re-deriving rank windows / adjacency
-    *    joins / chunk sums over the full history every micro-batch (the
-    *    r11 scale defect). A work dir from before this layout falls back
-    *    to a one-time batch derivation from the landed segments.
+    *    + first-chunk sums). This is what makes the per-batch plan
+    *    O(δ + |state|): the route decision folds from it instead of
+    *    re-deriving rank windows / adjacency joins / chunk sums over the
+    *    full history every micro-batch.
+    * Batch N reads the segments of every batch before N and the newest
+    * profile and state before N, and writes its own batch in each store.
+    * A batch replayed after a crash therefore re-reads what it read the
+    * first time and rewrites identical rows (StreamingSpec drops a commit
+    * entry, restarts, and compares every store to a clean run). A work dir
+    * written before the stores were keyed by `batch_id` fails at the
+    * first listing instead of restarting the profile from empty.
     *
-    * Profile and state snapshots older than `retainSnapshots` batches
-    * are deleted after each batch's writes commit (retention >= 1 keeps
-    * the replay invariant: prior = newest snapshot < batchId) — a
-    * long-lived stream would otherwise leak one O(m)-sized snapshot
-    * directory per micro-batch forever. The segment store is never
-    * pruned; it is the data, not a derived view. retainSnapshots <= 0
-    * disables pruning.
+    * Retention: after each batch's writes return, profile and state
+    * batches older than the newest `retainSnapshots` are pruned
+    * (`BatchStore.prune`; a failed delete is logged and retried after the
+    * next batch). Retention >= 1 keeps what a replay of the current batch
+    * reads; a long-lived stream would otherwise leak one O(m)-sized
+    * snapshot per micro-batch. retainSnapshots <= 0 keeps all.
     *
     * Exactness: profileIncrement over disjoint batches equals the batch
     * profile over the union (MotifDiscordSpec); segment ids from
@@ -632,15 +611,15 @@ object Ingest {
     * folded state nor the observed probe, so it runs CONCURRENTLY with
     * the state write; otherwise the observed probe, after the state
     * write lands. StreamingSpec pins one batch's jobs and tasks on each
-    * lane. Snapshot ids and the certificate
-    * scalars are carried in-memory across contiguous batches (listed /
-    * recovered once per JVM; every carried value advances only after the
-    * batch's writes commit, so same-JVM replays and fresh-JVM restarts
-    * both re-derive from the persisted truth).
+    * lane. The stores list their ids once per query and the certificate
+    * scalars are recovered once per query, then both are carried across
+    * contiguous batches; every carried value advances only after the
+    * batch's writes return, so a replay or a restart re-derives from the
+    * persisted stores.
     *
     * Every `rebuildEvery` micro-batches the route state is NOT folded
     * but rebuilt from the landed segment store under a fresh group-hash
-    * salt (MotifDiscord.routeStateOf; r13 verdict #3): the landed
+    * salt (MotifDiscord.routeStateOf): the landed
     * segments retain full vector fidelity, so the rebuild discards any
     * drift the folded state accumulated — a sticky 64-bit hash collision
     * (re-keyed by the new salt), a latched `ordered` flag after an
@@ -658,9 +637,9 @@ object Ingest {
                     mod: Int = 4,
                     retainSnapshots: Int = 8,
                     rebuildEvery: Int = 64): StreamingQuery = {
-    val segsDir = s"$workDir/segs"
-    val profDir = s"$workDir/profile"
-    val stateDir = s"$workDir/state"
+    val segs = new BatchStore(spark, s"$workDir/segs")
+    val profiles = new BatchStore(spark, s"$workDir/profile")
+    val states = new BatchStore(spark, s"$workDir/state")
     // query-lifetime upper bound on the per-signal segment count (m),
     // carried across micro-batches so each batch can certify the
     // foldRouteState skipGrid hint (prior max m + δ rows <= PruneAbove
@@ -670,8 +649,7 @@ object Ingest {
     // which is conservative (the grid runs when it might not need to).
     var maxMAll = -1L
     // group-hash salt of the persisted route state (MotifDiscord
-    // .groupHash): -1 = recover from the prior snapshot at (re)start
-    // (null column on a pre-salt snapshot -> 0, the unsalted hash).
+    // .groupHash): -1 = recover from the prior state at (re)start.
     // Advanced to the batch id whenever the state is rebuilt from the
     // landed segments, so rebuilt group identities are freshly keyed.
     var stateSalt = -1L
@@ -680,18 +658,6 @@ object Ingest {
     // Meaningful only once maxMAll >= 0; maintained from the state
     // write's observed metrics, recovered alongside maxMAll at (re)start.
     var allExactAll = true
-    // landed/persisted snapshot ids, listed ONCE per JVM and maintained
-    // incrementally — a long-lived stream otherwise pays 3 directory
-    // listings per micro-batch (pure driver latency locally, multi-RPC
-    // latency on an object store). Updated only AFTER a batch's writes
-    // commit, so a same-JVM replay of batch N still selects batch N-1's
-    // snapshots; a fresh JVM re-lists.
-    var knownSegs: Option[scala.collection.mutable.TreeSet[Long]] = None
-    var knownProf: Option[scala.collection.mutable.TreeSet[Long]] = None
-    var knownState: Option[scala.collection.mutable.TreeSet[Long]] = None
-    // snapshot deletes that failed over the query's lifetime (each is
-    // retried next batch); reported by every failure's WARN line
-    var pruneFailures = 0L
     segmentStream(spark, srcDir, segRows, maxFilesPerTrigger)
       .writeStream
       .outputMode(OutputMode.Append)
@@ -708,7 +674,6 @@ object Ingest {
         // on the clone when JOB 1 below lands δ; everything downstream
         // re-reads that landed parquet through the outer session.
         val s = spark
-        import s.implicits._
         import graft.operators.MotifDiscord
         // JOB 1 — materialize δ (same fixed-point mapping as the batch
         // Segments.completeQuantized). The localCheckpoint is the ONLY
@@ -741,77 +706,36 @@ object Ingest {
         val segFiles = math.max(1L, math.min(
           newSegsClone.rdd.getNumPartitions.toLong,
           (deltaRows + 65535L) / 65536L)).toInt
+        // the history this batch folds onto, fixed before its own
+        // segments start landing
+        val priorSegs = segs.ids.rangeUntil(batchId).toSeq
         import scala.concurrent.{Await, ExecutionContext, Future}
         import scala.concurrent.duration.Duration
         implicit val ec: ExecutionContext = Materialize.inScope(ExecutionContext.global)
-        val segsWrite = Future {
-          newSegs.coalesce(segFiles).withColumn("batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(segsDir)
-        }
+        val segsWrite = Future(segs.write(newSegs.coalesce(segFiles), batchId))
         // every background write below is tracked here and awaited before
         // the batch function returns OR rethrows: if the profile fold or
         // write throws while a future is still writing, foreachBatch
         // would otherwise propagate immediately and an in-JVM restart's
-        // replay could overwrite segs/state/batch=<id> WHILE the zombie
-        // write is still appending to the same directory — a mixed
-        // snapshot. On a failure path the futures' own errors are
-        // swallowed (the primary failure propagates); on the success path
-        // a failed future fails the batch.
-        val inFlight = scala.collection.mutable.ListBuffer[Future[Unit]](
-          segsWrite.map(_ => ()))
-        // resolve the FS from the workDir path itself — FileSystem.get
-        // returns the DEFAULT fs, which is the wrong one whenever the
-        // workDir's scheme differs (e.g. local workDir under an HDFS
-        // default), silently treating prior snapshots as absent
-        val fs = new org.apache.hadoop.fs.Path(workDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        def snapshots(dir: String): Seq[Long] = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          if (!fs.exists(p)) Seq.empty
-          else fs.listStatus(p).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("batch="))
-            .map(_.stripPrefix("batch=").toLong)
-        }
-        import scala.collection.mutable.TreeSet
-        if (knownSegs.isEmpty) knownSegs = Some(TreeSet(snapshots(segsDir): _*))
-        if (knownProf.isEmpty) knownProf = Some(TreeSet(snapshots(profDir): _*))
-        if (knownState.isEmpty)
-          knownState = Some(TreeSet(snapshots(stateDir): _*))
-        // all snapshot reads use the KNOWN static schemas — a per-batch
+        // replay could overwrite the batch's segs or state WHILE the
+        // zombie write is still writing it — a mixed snapshot. On a
+        // failure path the futures' own errors are swallowed (the primary
+        // failure propagates); on the success path a failed future fails
+        // the batch.
+        val inFlight = scala.collection.mutable.ListBuffer[Future[Unit]](segsWrite)
+        // every read uses the KNOWN static schemas — a per-batch
         // footer/schema-inference pass per directory is pure driver
         // latency the fold doesn't need
-        val prior = knownProf.get.filter(_ < batchId).toSeq
-        // a work dir written before the routed increment carries
-        // 3-column snapshots (no exact flag): the static schema reads the
-        // missing column as null, and those folds were all exact
-        val existingProfile = prior.sorted.lastOption match {
-          case Some(pb) => s.read.schema(ProfSnapshotSchema)
-            .parquet(s"$profDir/batch=$pb")
-            .withColumn("exact", coalesce(col("exact"), lit(true)))
-          case None => Seq.empty[(Long, Long, Long, Boolean)]
-            .toDF("signal_id", "seg", "nnd_q", "exact")
-        }
-        // read history from the PRIOR batch dirs listed explicitly: the
-        // whole-directory read would list segsDir while the concurrent
-        // δ append is mid-write
-        val priorSegDirs = knownSegs.get.filter(_ < batchId).toSeq.sorted
-          .map(b => s"$segsDir/batch=$b")
-        val existingSegs =
-          if (priorSegDirs.nonEmpty)
-            s.read.schema(SegSnapshotSchema).parquet(priorSegDirs: _*)
-          else Seq.empty[(Long, Long, Seq[Long])]
-            .toDF("signal_id", "seg", "qvals")
-        // prior route state (newest snapshot before this batch); absent —
-        // first batch, or a pre-routed-state work dir — derive it from
-        // the landed history once. Every rebuildEvery batches the fold
-        // is bypassed deliberately: rebuild from the landed segments
-        // under a FRESH salt (see the class doc's healing paragraph).
-        // Replay-safe: a replayed rebuild batch re-derives the same
-        // salt (= batchId), so the rewritten snapshot is identical.
-        val statePrior = knownState.get.filter(_ < batchId).toSeq
+        val existingProfile =
+          profiles.read(profiles.newestBefore(batchId).toSeq, ProfSnapshotSchema)
+        val existingSegs = segs.read(priorSegs, SegSnapshotSchema)
+        // prior route state (newest before this batch); absent on the
+        // first batch — derive it from the landed history once. Every
+        // rebuildEvery batches the fold is bypassed deliberately: rebuild
+        // from the landed segments under a FRESH salt (see the class
+        // doc's healing paragraph). Replay-safe: a replayed rebuild batch
+        // re-derives the same salt (= batchId), so the rewritten
+        // snapshot is identical.
         val doRebuild = rebuildEvery > 0 && batchId > 0 &&
           batchId % rebuildEvery == 0
         // one recovery aggregation per (re)start when a prior state
@@ -830,10 +754,9 @@ object Ingest {
             maxMAll = if (r.isNullAt(1)) 0L else r.getLong(1)
             allExactAll = r.isNullAt(2) || r.getLong(2) == 1L
           }
-        val priorState = statePrior.sorted.lastOption match {
+        val priorState = states.newestBefore(batchId) match {
           case Some(pb) if !doRebuild =>
-            val st = s.read.schema(RouteStateSchema)
-              .parquet(s"$stateDir/batch=$pb")
+            val st = states.read(Seq(pb), RouteStateSchema)
             recoverScalars(st)
             st
           case _ =>
@@ -845,12 +768,11 @@ object Ingest {
               // first batch): with no landed history the scalars are the
               // empty-state literals; otherwise pay the recovery agg on
               // the derived frame (rare — once per JVM at most)
-              if (priorSegDirs.isEmpty) { maxMAll = 0L; allExactAll = true }
+              if (priorSegs.isEmpty) { maxMAll = 0L; allExactAll = true }
               else recoverScalars(derived)
             }
             derived
         }
-        val stateOut = s"$stateDir/batch=$batchId"
         val obs = org.apache.spark.sql.Observation(
           s"profile-probe-$batchId-${System.nanoTime()}")
         try {
@@ -883,10 +805,8 @@ object Ingest {
           val statePlan = MotifDiscord.foldRouteState(priorState, newSegs,
             budget, MotifDiscord.PruneAbove, skipGrid, stateSalt)
           val probeCols = MotifDiscord.probeMetricCols
-          val stateWrite = Future {
-            statePlan.observe(obs, probeCols.head, probeCols.tail: _*)
-              .write.mode("overwrite").parquet(stateOut)
-          }
+          val stateWrite = Future(states.write(
+            statePlan.observe(obs, probeCols.head, probeCols.tail: _*), batchId))
           inFlight += stateWrite
           val probe =
             if (fastLane) MotifDiscord.RoutePlanProbe.certified(deltaSignals,
@@ -895,10 +815,9 @@ object Ingest {
               Await.result(stateWrite, Duration.Inf)
               MotifDiscord.probeFromMetrics(obs.get)
             }
-          MotifDiscord.routedProfileFrom(existingSegs, existingProfile,
-              newSegs, s.read.schema(RouteStateSchema).parquet(stateOut),
-              probe, mod)
-            .write.mode("overwrite").parquet(s"$profDir/batch=$batchId")
+          profiles.write(MotifDiscord.routedProfileFrom(existingSegs,
+            existingProfile, newSegs, states.read(Seq(batchId), RouteStateSchema),
+            probe, mod), batchId)
         } catch { case t: Throwable =>
           inFlight.toList.foreach(f =>
             scala.util.Try(Await.result(f, Duration.Inf)))
@@ -916,56 +835,22 @@ object Ingest {
             s"profileStream batch $batchId: out-of-order append detected; " +
               "routed profile equality degrades to an upper bound " +
               "for the affected signals")
-        knownSegs.foreach(_ += batchId)
-        knownProf.foreach(_ += batchId)
-        knownState.foreach(_ += batchId)
-        // bounded snapshot RETENTION: profile/state are full snapshots
-        // per batch, so without pruning a long-lived stream leaks one
-        // O(m)-sized directory per micro-batch forever. Only snapshots
-        // older than (current - retainSnapshots) go — replay needs the
-        // newest snapshot < batchId, which retention >= 1 preserves, and
-        // the prune runs strictly AFTER this batch's writes committed,
-        // so a crash mid-prune replays against intact newer snapshots.
-        // The segment store is NOT pruned: it is the data, not a view.
-        if (retainSnapshots > 0) {
-          val cutoff = batchId - retainSnapshots.toLong
-          for ((dir, known) <- Seq(profDir -> knownProf,
-                 stateDir -> knownState);
-               set <- known; b <- set.toSeq if b < cutoff)
-            try {
-              fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batch=$b"), true)
-              set -= b
-            } catch { case scala.util.control.NonFatal(e) =>
-              // retry next batch: the snapshot stays in `set`
-              pruneFailures += 1
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"profileStream batch $batchId: could not prune snapshot " +
-                  s"$dir/batch=$b (prune failure $pruneFailures of this " +
-                  "query); retrying next batch", e)
-            }
-        }
+        profiles.prune(batchId, retainSnapshots)
+        states.prune(batchId, retainSnapshots)
       }}
       .start()
   }
 
-  /** The newest COMMITTED profile snapshot written by [[profileStream]].
-    * Only batch dirs whose job commit marker (_SUCCESS) exists qualify:
-    * a continuous deployment may call this while the stream is mid-write
-    * of batch=N, and selecting that dir would read a partial (or
-    * unreadable) snapshot. The FS is resolved from the workDir path, not
-    * the default filesystem, so mixed-scheme deployments list correctly.
+  /** The newest profile snapshot written by [[profileStream]] under
+    * `workDir`. Its store is partitioned by `batch_id` alone, so the
+    * newest visible batch is a committed one, also while the stream is
+    * writing the next.
     */
   def readProfile(spark: SparkSession, workDir: String): DataFrame = {
-    val profDir = s"$workDir/profile"
-    val fs = new org.apache.hadoop.fs.Path(workDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = fs.listStatus(new org.apache.hadoop.fs.Path(profDir)).toSeq
-      .map(_.getPath)
-      .filter(d => d.getName.startsWith("batch=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-      .map(_.getName.stripPrefix("batch=").toLong)
-    require(ids.nonEmpty, s"no committed profile snapshots under $profDir")
-    spark.read.parquet(s"$profDir/batch=${ids.max}")
+    val profiles = new BatchStore(spark, s"$workDir/profile")
+    val newest = profiles.ids.lastOption
+    require(newest.nonEmpty, s"no profile snapshots under ${profiles.dir}")
+    profiles.read(newest.toSeq, ProfSnapshotSchema)
   }
 
   /** Streaming twin of the recoding bandit's reward job
@@ -1012,72 +897,64 @@ object Ingest {
     *  - the per-batch fold materializes only the MICRO-BATCH's reward
     *    rows on the driver (bounded by maxFilesPerTrigger), never the
     *    stream;
-    *  - crash safety: decisions write first (dynamic-partition overwrite
-    *    keyed by batch_id — replays overwrite, never duplicate), the
-    *    post-batch Q state appends second, keyed by batch_id. A crash
-    *    between the two replays the batch from the pre-batch Q and
-    *    rewrites identical decisions; a crash after both replays the
-    *    batch without deciding (its state row already exists), running
-    *    it into a noop sink so its upstream state commits.
+    *  - crash safety: the decisions and the Q state are two
+    *    [[graft.sources.BatchStore]]s (`decisionsDir` and
+    *    `<decisionsDir>.qstate`, one Q row per batch). Batch N starts
+    *    from the Q of the newest state batch before N (Q0 when there is
+    *    none), writes its decisions, then its own Q. A replayed batch
+    *    therefore re-decides the same rows from the same Q and overwrites
+    *    its own decisions and Q, whether the crash came between the two
+    *    writes or after both. A state directory in another layout (a
+    *    stray file, or the Q rows appended before the state was keyed by
+    *    batch) fails the first batch before any decision is written,
+    *    instead of restarting the walk from Q0.
     */
   def policyStream(spark: SparkSession, srcDir: String, segRows: Int,
                    decisionsDir: String, checkpointDir: String,
                    maxFilesPerTrigger: Int = 1): StreamingQuery = {
     import spark.implicits._
     val arms = graft.ml.Bandit.RecodeArms
-    val stateDir = s"$decisionsDir.qstate"
-    // restore the newest persisted state (restart continues the walk).
-    // Only a MISSING state directory means "first run"; a directory that
-    // exists but cannot be read fails the start rather than silently
-    // restarting the walk from Q0. The fixed schema reads a directory
-    // with no committed state file (a crash inside the first append) as
-    // empty, and needs no footer-inference job.
-    val statePath = new org.apache.hadoop.fs.Path(stateDir)
-    val stateRows =
-      if (!statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(statePath)) Array.empty[org.apache.spark.sql.Row]
-      else spark.read.schema(QStateSchema).parquet(stateDir)
-        .orderBy(col("batch_id").desc).limit(1).collect()
-    var (lastBatch, q, step) =
-      if (stateRows.isEmpty)
-        (-1L, Array.fill(arms.length)(graft.ml.Bandit.Q0), 0L)
-      else (stateRows(0).getAs[Long]("batch_id"),
-        stateRows(0).getAs[Seq[Double]]("q").toArray,
-        stateRows(0).getAs[Long]("step"))
+    val decisions = new BatchStore(spark, decisionsDir)
+    val qStates = new BatchStore(spark, s"$decisionsDir.qstate")
+    def q0 = (Array.fill(arms.length)(graft.ml.Bandit.Q0), 0L)
+    // the Q and step after the batch it names (None: before any batch),
+    // carried so that a contiguous batch reads no state from disk
+    var carried = (Option.empty[Long], q0)
     rewardStream(spark, srcDir, segRows, maxFilesPerTrigger)
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatch) {
-          // bounded by the micro-batch (trigger-capped), not the stream
-          val rows = batch.orderBy("signal_id", "seg").collect()
-          val decided = rows.map { r =>
-            step += 1
-            val rewards = Array(r.getDouble(2), r.getDouble(3),
-              r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7),
-              r.getDouble(8))
-            val (arm, explored, rew, qAfter) =
-              graft.ml.Bandit.policyStep(q, step, rewards, arms)
-            (r.getLong(0), r.getLong(1), step, arm, explored, rew, qAfter)
+        val prior = qStates.newestBefore(batchId)
+        // a copy: policyStep updates Q in place, and the carried Q
+        // advances only once this batch's writes have returned
+        val (q, start) =
+          if (prior == carried._1) (carried._2._1.clone(), carried._2._2)
+          else prior.fold(q0) { _ =>
+            val r = qStates.read(prior.toSeq, QStateSchema).head()
+            (r.getSeq[Double](0).toArray, r.getLong(1))
           }
-          batchWriter(decided.toSeq
-            .toDF("signal_id", "seg", "step", "codec", "explored",
-              "reward_raw", "q_raw")
-            .select(col("signal_id"), col("seg"), col("step"), col("codec"),
-              col("explored"), round(col("reward_raw"), 6).as("reward"),
-              round(col("q_raw"), 6).as("q_after")), batchId)
-            .parquet(decisionsDir)
-          Seq((batchId, q.toSeq, step)).toDF("batch_id", "q", "step")
-            .write.mode("append").parquet(stateDir)
-          lastBatch = batchId
-        } else {
-          // a replay of a batch whose state is already landed still runs
-          // the batch: the stateful segmentation upstream must commit it,
-          // or Spark refuses the restart
-          batch.write.format("noop").mode("overwrite").save()
+        var step = start
+        // bounded by the micro-batch (trigger-capped), not the stream
+        val rows = batch.orderBy("signal_id", "seg").collect()
+        val decided = rows.map { r =>
+          step += 1
+          val rewards = Array(r.getDouble(2), r.getDouble(3),
+            r.getDouble(4), r.getDouble(5), r.getDouble(6), r.getDouble(7),
+            r.getDouble(8))
+          val (arm, explored, rew, qAfter) =
+            graft.ml.Bandit.policyStep(q, step, rewards, arms)
+          (r.getLong(0), r.getLong(1), step, arm, explored, rew, qAfter)
         }
+        decisions.write(decided.toSeq
+          .toDF("signal_id", "seg", "step", "codec", "explored",
+            "reward_raw", "q_raw")
+          .select(col("signal_id"), col("seg"), col("step"), col("codec"),
+            col("explored"), round(col("reward_raw"), 6).as("reward"),
+            round(col("q_raw"), 6).as("q_after")), batchId)
+        qStates.write(Seq((q.toSeq, step)).toDF("q", "step"), batchId)
+        carried = (Some(batchId), (q, step))
       }
       .start()
   }

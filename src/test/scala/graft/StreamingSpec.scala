@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Ingest
@@ -162,18 +163,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val tiled = raw.withColumn("tile",
       ntile(4).over(org.apache.spark.sql.expressions.Window
         .orderBy(col("ts"), col("event_id"))))
-    val in = Files.createTempDirectory("graft-stream-mp").toString
-    (1 to 4).foreach { t =>
-      val tmp = Files.createTempDirectory(s"graft-mp$t").toString
-      tiled.filter(col("tile") === t).drop("tile")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = Paths.get(in, s"part$t.parquet")
-      Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(1700000000000L + t * 60000L)
-    }
-    in
+    stageFiles((1 to 4).map(t => tiled.filter(col("tile") === t).drop("tile")))
   }
 
   test("streamed incremental matrix profile equals the batch profile") {
@@ -185,7 +175,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     q.awaitTermination()
     // >= 2 snapshots: the incremental path (not a single full build) ran
     val snaps = new java.io.File(s"$work/profile").listFiles()
-      .filter(_.getName.startsWith("batch="))
+      .filter(_.getName.startsWith("batch_id="))
     assert(snaps.length >= 2, s"expected multiple micro-batches, got ${snaps.length}")
     val snap = Ingest.readProfile(spark, work).collect()
     // budget-clean data: every signal routes exact, and the snapshot says so
@@ -208,12 +198,12 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       retainSnapshots = 1)
     q.awaitTermination()
     // 4 micro-batches, retain=1: after batch 3 the cutoff is 2, so only
-    // snapshot dirs batch=2 and batch=3 may remain for profile AND
+    // snapshot dirs batch_id=2 and batch_id=3 may remain for profile AND
     // state; the segment store keeps ALL batch dirs (it is the data)
     def ids(sub: String): Set[Long] =
       new java.io.File(s"$work/$sub").listFiles()
-        .filter(_.getName.startsWith("batch="))
-        .map(_.getName.stripPrefix("batch=").toLong).toSet
+        .filter(_.getName.startsWith("batch_id="))
+        .map(_.getName.stripPrefix("batch_id=").toLong).toSet
     assert(ids("profile") == Set(2L, 3L),
       s"profile snapshots not pruned to the retention window: ${ids("profile")}")
     assert(ids("state") == Set(2L, 3L),
@@ -230,6 +220,29 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       s"retained snapshot (${streamed.size}) != batch profile (${batch.size})")
   }
 
+  test("a profileStream batch that seals no segment lands no segment batch, and the next batch folds on") {
+    import graft.operators.MotifDiscord
+    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
+    val halves = raw.withColumn("half", ntile(2).over(
+      org.apache.spark.sql.expressions.Window.orderBy(col("ts"), col("event_id"))))
+    // three readings of a signal the events do not hold: a segment seals
+    // at 16, so the middle batch lands no segment
+    val stray = raw.limit(3).withColumn("user_id", lit(-1L).cast(raw.schema("user_id").dataType))
+    val in = stageFiles(Seq(halves.filter(col("half") === 1).drop("half"), stray,
+      halves.filter(col("half") === 2).drop("half")))
+    val work = Files.createTempDirectory("graft-mp-empty").toString
+    Ingest.profileStream(spark, in, work, Readings.SegmentRows.toInt,
+      maxFilesPerTrigger = 1).awaitTermination()
+    assert(new graft.sources.BatchStore(spark, s"$work/segs").ids.toSeq == Seq(0L, 2L))
+    val streamed = Ingest.readProfile(spark, work).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val batch = MotifDiscord.profile(
+        Segments.completeQuantized(Readings.of(spark, sf)))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(streamed == batch,
+      s"streamed profile (${streamed.size}) != batch profile (${batch.size})")
+  }
+
   test("periodic route-state rebuild fires mid-stream, re-salts the group identities, and the profile stays exact") {
     import graft.operators.MotifDiscord
     val in = stageTiles()
@@ -240,7 +253,7 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val q = Ingest.profileStream(spark, in, work,
       Readings.SegmentRows.toInt, maxFilesPerTrigger = 1, rebuildEvery = 2)
     q.awaitTermination()
-    val st = spark.read.parquet(s"$work/state/batch=3")
+    val st = spark.read.parquet(s"$work/state/batch_id=3")
     val salt = st.agg(max(col("salt"))).head().getLong(0)
     assert(salt == 2L, s"rebuild salt not persisted through the fold: $salt")
     // the re-salted state folded through batch 3 equals a fresh batch
@@ -293,19 +306,10 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
         new java.sql.Timestamp(1700000000000L + i.toLong),
         424242L, 42.0 + bump)
     }.toDF("event_id", "ts", "user_id", "value")
-    val in = Files.createTempDirectory("graft-stream-dense").toString
-    Seq((0, nSegs / 2), (nSegs / 2, nSegs)).zipWithIndex.foreach {
-      case ((lo, hi), t) =>
-        val tmp = Files.createTempDirectory(s"graft-dense$t").toString
-        raw.filter(col("event_id") >= 900000000L + lo * segRows &&
-            col("event_id") < 900000000L + hi * segRows)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dst = Paths.get(in, s"part$t.parquet")
-        Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(1700000000000L + t * 60000L)
-    }
+    val in = stageFiles(Seq((0, nSegs / 2), (nSegs / 2, nSegs)).map { case (lo, hi) =>
+      raw.filter(col("event_id") >= 900000000L + lo * segRows &&
+        col("event_id") < 900000000L + hi * segRows)
+    })
     (in, raw)
   }
 
@@ -363,19 +367,20 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     val back = Files.move(held.resolve(last.getName), last.toPath)
     back.toFile.setLastModified(mtime)
     val c = counters(run())
-    val snap = spark.read.parquet(s"$work/profile/batch=${parts.length - 1}")
+    val snap = spark.read.parquet(s"$work/profile/batch_id=${parts.length - 1}")
       .collect()
     (c, snap)
   }
 
-  /** One batch's jobs and tasks on each lane, measured before the
-    * matrix-profile kernel became one pair generator, min-fold and route
-    * function: the bounds that keep later changes from adding work unseen.
+  /** One batch's jobs and tasks on each lane, as measured (the same on
+    * three runs, 4 cores) once the profile, state and segment stores were
+    * micro-batch stores: the bounds that keep later changes from adding
+    * work unseen.
     */
-  private val FastLaneJobs = 19L
-  private val FastLaneTasks = 50L
-  private val GatedJobs = 37L
-  private val GatedTasks = 70L
+  private val FastLaneJobs = 18L
+  private val FastLaneTasks = 47L
+  private val GatedJobs = 35L
+  private val GatedTasks = 68L
 
   test("one profileStream batch runs no more jobs or tasks than pinned, on the fast lane and on the probe-gated path") {
     val (fast, fastSnap) = oneBatch(stageTiles(), graft.operators.MotifDiscord.RouteBudget)
@@ -869,73 +874,117 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
       "unrelated batch must not confirm any pair")
   }
 
-  test("dedup growth stream: a batch replayed after a lost commit leaves every store equal to an uninterrupted run") {
-    val b0 = baseDocs()
-    val in = stageDocs(b0, salted(b0))
-    val work = Files.createTempDirectory("graft-dg-replay").toString
-    def run(store: String): Unit = Ingest.dedupGrowStream(spark, in,
-      s"$work/$store", threshold = 0.5, maxFilesPerTrigger = 1).awaitTermination()
-    run("clean")
-    run("crashed")
-    // a crash after batch 1's writes and before Spark commits it leaves
-    // the writes and no commit entry; the restart replays batch 1
-    val commits = new java.io.File(s"$work/crashed/_chk/commits")
+  /** The lost-commit replay check every streaming sink passes. `run(root)`
+    * runs the sink to the end over input staged as at least two files
+    * (one micro-batch each), with its stores and its checkpoint
+    * (`root/<checkpoint>`) under `root`; `stores(root)` names the frames
+    * to compare. One root runs clean. The other runs, loses its newest
+    * commit entry (a crash after the batch's writes and before Spark
+    * commits it), and restarts in a fresh sink call: the replayed batch
+    * must commit, and every frame must equal the clean run's row for row.
+    */
+  private def assertReplaySafe(batches: Int, checkpoint: String = "_chk")(
+      run: String => Unit)(stores: String => Seq[(String, DataFrame)]): Unit = {
+    val work = Files.createTempDirectory("graft-replay").toString
+    val (clean, crashed) = (s"$work/clean", s"$work/crashed")
+    run(clean)
+    run(crashed)
+    val commits = new java.io.File(s"$crashed/$checkpoint/commits")
     val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
       .maxBy(_.toLong)
-    assert(last == "1", s"expected two committed batches, newest $last")
+    assert(last.toLong == batches - 1, s"expected $batches committed batches, newest $last")
     assert(new java.io.File(commits, last).delete())
     new java.io.File(commits, s".$last.crc").delete()
-    run("crashed")
-    def rows(store: String, sub: String): Seq[String] =
-      spark.read.parquet(s"$work/$store/$sub").collect()
-        .map(_.toSeq.mkString("|")).toSeq.sorted
-    for (sub <- Seq("bands", "sets", "pairs")) {
-      val (replayed, clean) = (rows("crashed", sub), rows("clean", sub))
-      val same = replayed == clean
-      assert(same, s"$sub after the replay (${replayed.size} rows) differs " +
-        s"from the uninterrupted run (${clean.size} rows)")
+    run(crashed)
+    assert(new java.io.File(commits, last).exists(), "the replayed batch was not committed")
+    def rows(df: DataFrame): Seq[String] = cells(df).map(_.mkString("|")).sorted
+    for (((name, a), (_, b)) <- stores(clean).zip(stores(crashed))) {
+      val (c, r) = (rows(a), rows(b))
+      assert(c.nonEmpty, s"the fixture must land $name rows")
+      assert(r == c, s"$name after the replay (${r.size} rows) differs " +
+        s"from the uninterrupted run (${c.size} rows)")
     }
-    assert(rows("clean", "pairs").nonEmpty, "fixture must confirm near-dups")
   }
 
-  test("policy stream: a batch replayed after a lost commit restarts, and decisions and Q state equal an uninterrupted run") {
-    // the events as three files, one micro-batch each, in arrival order
-    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
-    val in = Files.createTempDirectory("graft-policy-replay-in").toString
-    for (k <- 0 until 3) {
-      val tmp = Files.createTempDirectory(s"graft-policy-replay-tmp$k").toString
-      raw.filter(col("event_id") % 3 === k).coalesce(1).write.mode("overwrite").parquet(tmp)
+  /** Each frame as one parquet file under a fresh input dir, with
+    * ascending modification times: one micro-batch per frame, in order.
+    */
+  private def stageFiles(parts: Seq[DataFrame]): String = {
+    val in = Files.createTempDirectory("graft-stream-parts").toString
+    parts.zipWithIndex.foreach { case (df, k) =>
+      val tmp = Files.createTempDirectory(s"graft-stream-part$k").toString
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
       val dst = new java.io.File(in, s"part$k.parquet")
       Files.move(part.toPath, dst.toPath)
       dst.setLastModified(1700000000000L + k * 60000L)
     }
-    val work = Files.createTempDirectory("graft-policy-replay").toString
-    def run(store: String): Unit = Ingest.policyStream(spark, in,
-      Readings.SegmentRows.toInt, s"$work/$store/decisions", s"$work/$store/_chk")
-      .awaitTermination()
-    run("clean")
-    run("crashed")
-    // a crash after batch 2's decisions and Q state land and before Spark
-    // commits it leaves the writes and no commit entry; the restart
-    // replays batch 2 with its state row already present
-    val commits = new java.io.File(s"$work/crashed/_chk/commits")
-    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
-      .maxBy(_.toLong)
-    assert(last == "2", s"expected three committed batches, newest $last")
-    assert(new java.io.File(commits, last).delete())
-    new java.io.File(commits, s".$last.crc").delete()
-    run("crashed")
-    assert(new java.io.File(commits, last).exists(), "the replayed batch was not committed")
-    def rows(store: String, sub: String): Seq[String] =
-      spark.read.parquet(s"$work/$store/$sub").collect()
-        .map(_.toSeq.mkString("|")).toSeq.sorted
-    for (sub <- Seq("decisions", "decisions.qstate")) {
-      val (replayed, clean) = (rows("crashed", sub), rows("clean", sub))
-      assert(replayed == clean, s"$sub after the replay (${replayed.size} rows) differs " +
-        s"from the uninterrupted run (${clean.size} rows)")
+    in
+  }
+
+  private def parquetStores(names: String*)(root: String): Seq[(String, DataFrame)] =
+    names.map(n => n -> spark.read.parquet(s"$root/$n"))
+
+  test("dedup growth stream: a batch replayed after a lost commit leaves every store equal to an uninterrupted run") {
+    val b0 = baseDocs()
+    val in = stageDocs(b0, salted(b0))
+    assertReplaySafe(batches = 2)(root => Ingest.dedupGrowStream(spark, in, root,
+      threshold = 0.5, maxFilesPerTrigger = 1).awaitTermination())(
+      parquetStores("bands", "sets", "pairs"))
+  }
+
+  test("policy stream: a batch replayed after a lost commit restarts, and decisions and Q state equal an uninterrupted run") {
+    // the events as three files, one micro-batch each; the replayed batch
+    // finds its own decisions and Q state already landed
+    val raw = Tables.readEvents(spark, s"$sf/events.parquet")
+    val in = stageFiles((0 until 3).map(k => raw.filter(col("event_id") % 3 === k)))
+    assertReplaySafe(batches = 3)(root => Ingest.policyStream(spark, in,
+      Readings.SegmentRows.toInt, s"$root/decisions", s"$root/_chk").awaitTermination()) {
+      root =>
+        assert(spark.read.parquet(s"$root/decisions.qstate").count() == 3,
+          "expected one Q state row per batch")
+        parquetStores("decisions", "decisions.qstate")(root)
     }
-    assert(rows("clean", "decisions.qstate").size == 3, "expected one Q state row per batch")
-    assert(rows("clean", "decisions").nonEmpty, "fixture must decide segments")
+  }
+
+  test("tier-0 writer: a batch replayed after a lost commit leaves data, stats and histogram equal to an uninterrupted run") {
+    val in = stageTiles()
+    assertReplaySafe(batches = 4)(root => Ingest.tier0Writer(
+      Ingest.readingsStream(spark, in), s"$root/data", s"$root/_chk",
+      statsDir = Some(s"$root/stats"), histDir = Some(s"$root/hist")).awaitTermination())(
+      parquetStores("data", "stats", "hist"))
+  }
+
+  test("profile stream: a batch replayed after a lost commit leaves segments, profile, state and the served profile equal to an uninterrupted run") {
+    // the restart is a fresh profileStream call in this JVM, so it also
+    // re-derives the carried scalars (maxMAll, allExactAll, stateSalt)
+    // from the stores: this is the in-process failure case too
+    val in = stageTiles()
+    assertReplaySafe(batches = 4, checkpoint = "ckpt")(root => Ingest.profileStream(spark,
+      in, root, Readings.SegmentRows.toInt, maxFilesPerTrigger = 1).awaitTermination()) {
+      root =>
+        parquetStores("segs", "profile", "state")(root) :+
+          ("readProfile" -> Ingest.readProfile(spark, root))
+    }
+  }
+
+  test("IVF append stream: a batch replayed after a lost commit leaves the store and its top-k equal to an uninterrupted run") {
+    import graft.operators.Ivf
+    import graft.sources.IvfStore
+    val emb = Tables.embeddings(spark, sf)
+    val index = Ivf(emb.filter(col("vec_id") < 16).orderBy(col("vec_id"))
+      .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
+      .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toSeq)).toSeq)
+    val in = stageFiles(Seq(emb.filter(col("vec_id") % 2 === 0),
+      emb.filter(col("vec_id") % 2 =!= 0)))
+    val probes = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+    assertReplaySafe(batches = 2)(root => IvfStore.appendStream(
+      spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(in),
+      "vec_id", "embedding", index.centroids, s"$root/store", s"$root/_chk")
+      .awaitTermination()) { root =>
+      parquetStores("store")(root) :+
+        ("topK" -> IvfStore.topK(spark, s"$root/store", probes, 10, index.centroids, 4))
+    }
   }
 }
