@@ -51,7 +51,7 @@ class TierManager(spark: SparkSession, root: String) {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val tierStats = ZoneMap.segmentStats(readings)
+    val tierStats = ZoneMap.tierStats(readings)
     val statsW = Future {
       tierStats.write.mode("overwrite").parquet(stats(tier0))
     }
@@ -79,7 +79,7 @@ class TierManager(spark: SparkSession, root: String) {
     // consistent with data answers at this tier. (tier2/tier3 need no
     // zone map: chunk tiers ARE pre-aggregates; their stats query is a
     // plain fold, maxFromColdTier/maxFromTier3.)
-    val tierStats = ZoneMap.segmentStats(
+    val tierStats = ZoneMap.tierStats(
       out.withColumn("value", col("value_q").cast("double") / 100.0))
     tierStats.write.mode("overwrite").parquet(stats(tier1))
     ZoneMapRegistry.register(tier1, stats(tier1), tierStats.schema)
@@ -282,7 +282,7 @@ class TierManager(spark: SparkSession, root: String) {
       .partitionBy("sig_bucket").parquet(tier0)
     // patch the zone map: recompute only the affected signals' rows
     val affected = keyed.select(col("signal_id")).distinct()
-    val fresh = ZoneMap.segmentStats(
+    val fresh = ZoneMap.tierStats(
       spark.read.parquet(tier0).join(affected, Seq("signal_id")))
     val patched = Materialize.shared(spark.read.parquet(stats(tier0))
       .join(affected, Seq("signal_id"), "left_anti")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * combine, the tag join broadcasts its small side and pushes its keys
   * into the fact scan, and everything stays inside whole-stage codegen.
   * The driver collects only the percentile route's one count and the tag
-  * join's key list; no driver-side loops.
+  * join's tag rows; no driver-side loops.
   */
 object TsQuery {
 
@@ -121,28 +121,33 @@ object TsQuery {
 
   /** Latest reading per signal (TSBS "last point per tag": reference
     * benchmark/tsbs/mod.rs:28-48 walks each tag's column backwards).
-    * Window row_number over (signal) — no global sort, no dropDuplicates.
+    * One aggregate: the lexicographic max of (ts, seq_no, value) is the
+    * row a descending (ts, seq_no) order puts first — nulls sort lowest
+    * in a struct as they sort last in a descending order — so over a
+    * registered tier the zone map's per-segment last points answer it.
     */
-  def lastPerSignal(r: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("signal_id"))
-      .orderBy(col("ts").desc, col("seq_no").desc)
-    r.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("signal_id"), col("value").as("last_value"))
-  }
+  def lastPerSignal(r: DataFrame): DataFrame =
+    r.groupBy(col("signal_id"))
+      .agg(max(struct(col("ts"), col("seq_no"), col("value"))).as("m"))
+      .select(col("signal_id"), col("m.value").as("last_value"))
 
   /** O7 — tag equi-join: restrict readings to signals whose dimension row
-    * matches a predicate. `tags` is broadcast (small dimension side).
-    * The series resolve before any reading is read (TSBS `last_loc`):
-    * the tag side's `signal_id`s are collected first, one job over the
-    * side Spark collects whole for the broadcast anyway, and `r` is
-    * filtered on them. A `signal_id` filter passes windows partitioned by
-    * it ([[lastPerSignal]]), so it reaches the scan as a pushed `In` and
-    * the page index skips the other signals. Nulls match nothing in the
-    * join, so they are dropped from the keys.
+    * matches a predicate. The tag side is read once: its rows are
+    * collected (Spark collects the broadcast side whole anyway) and both
+    * the key list and the broadcast relation are built from them, so the
+    * series resolve before any reading is read (TSBS `last_loc`). `r` is
+    * filtered on the keys; a `signal_id` filter passes an aggregate or
+    * window keyed by it ([[lastPerSignal]]), so it reaches the scan as a
+    * pushed `In` (the page index skips the other signals) or the zone map.
+    * Nulls match nothing in the join, so they are dropped from the keys.
     */
   def tagJoin(r: DataFrame, tags: DataFrame): DataFrame = {
-    val keys = tags.select(col("signal_id")).collect().map(_.get(0)).filter(_ != null).distinct
-    r.filter(col("signal_id").isin(keys.toIndexedSeq: _*)).join(broadcast(tags), "signal_id")
+    val rows = tags.collect()
+    val i = tags.schema.fieldIndex("signal_id")
+    val keys = rows.map(_.get(i)).filter(_ != null).distinct
+    // one partition: the broadcast collects the local rows in one task
+    val local = r.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), tags.schema)
+      .coalesce(1)
+    r.filter(col("signal_id").isin(keys.toIndexedSeq: _*)).join(broadcast(local), "signal_id")
   }
 }

@@ -18,14 +18,31 @@ import graft.operators.Readings
   */
 object ZoneMap {
 
-  /** Build the per-(signal, segment) stats table from the readings view. */
-  def segmentStats(r: DataFrame): DataFrame =
+  /** The four AggStats of a group of readings. */
+  private def aggStats: Seq[Column] = Seq(
+    count(lit(1)).as("cnt"),
+    min(col("value")).as("vmin"),
+    max(col("value")).as("vmax"),
+    sum(col("value_q")).cast("long").as("sum_q"))
+
+  private def bySegment(r: DataFrame) =
     r.groupBy(col("signal_id"), Readings.segmentId(col("seq_no")).as("seg"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        min(col("value")).as("vmin"),
-        max(col("value")).as("vmax"),
-        sum(col("value_q")).cast("long").as("sum_q"))
+
+  /** Build the per-(signal, segment) stats table from the readings view. */
+  def segmentStats(r: DataFrame): DataFrame = bySegment(r).agg(aggStats.head, aggStats.tail: _*)
+
+  /** The zone map a tier keeps: [[segmentStats]] plus, in the same
+    * aggregation, each segment's first argmax `amax` =
+    * max(struct(value, -seq_no)) and its last point `last` =
+    * max(struct(ts, seq_no, value)). Both fold across segments by `max`
+    * again, so windowed max with its argmax and the latest reading per
+    * signal come from stats, not rows (the reference's AggStats serving,
+    * buffer_pool.rs:940-1101, and buff_max_range, buff_simd.rs:5096).
+    */
+  def tierStats(r: DataFrame): DataFrame =
+    bySegment(r).agg(aggStats.head, aggStats.tail ++ Seq(
+      max(struct(col("value"), (-col("seq_no")).as("neg_seq"))).as("amax"),
+      max(struct(col("ts"), col("seq_no"), col("value"))).as("last")): _*)
 
   /** Event-time flavor of [[segmentStats]]: stats per (signal, day) — the
     * key STREAMING ingest can maintain (positional seq_no needs the full

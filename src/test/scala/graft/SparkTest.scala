@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local SparkSession for specs. */
@@ -40,6 +41,29 @@ trait SparkTest extends BeforeAndAfterAll { self: Suite =>
     off.foreach { case (k, v) => spark.conf.set(k, v) }
     try (generated, cells(df)) finally off.foreach { case (k, _) => spark.conf.unset(k) }
   }
+
+  /** `q` answered from the data: built and optimized without the
+    * zone-map rule.
+    */
+  def fromData(q: => DataFrame): Set[Row] = {
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, classOf[graft.plans.ZoneMapRewrite].getName)
+    try {
+      val d = q
+      assert(!roots(d).exists(_.endsWith("stats")), "the rule was not excluded")
+      d.collect().toSet
+    } finally spark.conf.unset(key)
+  }
+
+  /** The root paths of the scans in `q`'s optimized plan. */
+  def roots(q: DataFrame): Seq[String] =
+    q.queryExecution.optimizedPlan.collectLeaves().flatMap {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
+        case _ => Nil
+      }
+      case _ => Nil
+    }
 
   override def afterAll(): Unit = {
     // shared across suites in one forked JVM; do not stop

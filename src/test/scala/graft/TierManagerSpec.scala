@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Readings, TierManager, Tiers}
+import org.apache.spark.sql.Row
+import graft.operators.{Readings, TierManager, Tiers, TsQuery}
 import graft.sources.CodecStore
 
 /** S6 — tier lifecycle: land -> age to quantized -> age to PAA, with the
@@ -199,6 +200,17 @@ class TierManagerSpec extends AnyFunSuite with SparkTest {
     val s1max = st.filter(col("signal_id") === 1L && col("seg") === 0L)
       .select(col("vmax")).collect()(0).getDouble(0)
     assert(s1max == 999.99, s"stats not patched: vmax $s1max")
+    // the correction is signal 1's new max and, at 2030, its last row: the
+    // argmax and the last point served from the patched stats see both
+    def t = spark.read.parquet(tm.tier0)
+    for (q <- Seq(() => TsQuery.windowMaxArgmax(t, 16L), () => TsQuery.lastPerSignal(t))) {
+      assert(roots(q()) == Seq(s"${tm.tier0}.stats"), q().queryExecution.optimizedPlan)
+      assert(q().collect().toSet == fromData(q()))
+    }
+    assert(TsQuery.windowMaxArgmax(t, 16L).filter(col("signal_id") === 1L && col("win") === 0L)
+      .select(col("wmax"), col("amax_seq")).collect().toSeq == Seq(Row(999.99, 1L)))
+    assert(TsQuery.lastPerSignal(t).filter(col("signal_id") === 1L)
+      .collect().toSeq == Seq(Row(1L, 999.99)))
 
     // idempotent: re-applying the same corrections changes nothing
     tm.upsertCorrections(corr)

@@ -87,6 +87,21 @@ class TsQuerySpec extends AnyFunSuite with SparkTest {
     assert(rows(TsQuery.tagJoin(r, tags)).size == 2 * 2, "row multiplicity lost")
   }
 
+  test("tagJoin reads its tag table once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-tag-once").toString + "/tags"
+    Seq((Some(1L), "a"), (Some(1L), "b"), (Some(9L), "c"), (None, "d"))
+      .toDF("signal_id", "tag").write.parquet(dir)
+    val r = Seq((1L, 10L), (2L, 20L), (9L, 90L)).toDF("signal_id", "v")
+    val tags = spark.read.parquet(dir)
+    var got = Seq.empty[String]
+    val read = counters {
+      got = TsQuery.tagJoin(r, tags).collect().map(_.toString).sorted.toSeq
+    }("input_records")
+    assert(read == 4L, s"read $read tag records for 4 tag rows")
+    assert(got == r.join(broadcast(tags), "signal_id").collect().map(_.toString).sorted.toSeq)
+  }
+
   test("tagJoin reads only the tagged signals' rows of a tier store") {
     val dir = java.nio.file.Files.createTempDirectory("graft-tag-join").toString + "/tier"
     val perSignal = 3000L

@@ -2,15 +2,18 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.expressions.Window
 import graft.operators.{Readings, TierManager, TsQuery}
 import graft.plans.{ZoneMap, ZoneMapRegistry, ZoneMapRewrite}
 
-/** O8 — the zone-map optimizer rule: count/min/max/sum over a registered
-  * tier, ungrouped or grouped by `signal_id`, must be answered from the
-  * stats table, with identical results.
+/** O8 — the zone-map optimizer rule: count/min/max/sum, the first argmax
+  * and the last point over a registered tier, grouped by nothing,
+  * `signal_id` and/or a segment-aligned positional window, filtered on
+  * `signal_id` or segment-aligned `seq_no` bounds, must be answered from
+  * the stats table, with identical results; anything else reads the tier.
   */
 class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
 
@@ -52,9 +55,10 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
   }
 
   test("a filtered aggregate is NOT rewritten") {
+    // a filter on a non-key column cuts segments; one on signal_id does not
     ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
     val filtered = spark.read.parquet(tierPath)
-      .filter(col("signal_id") === 1).agg(max(col("value")))
+      .filter(col("value") > 100.0).agg(max(col("value")))
     assert(filtered.queryExecution.executedPlan.toString.contains(tierPath))
   }
 
@@ -93,27 +97,6 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
       assert(q.collect()(0).getDouble(0) == direct)
     } finally ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
   }
-
-  /** `q` answered from the data: built and optimized without the rule. */
-  private def fromData(q: => DataFrame): Set[Row] = {
-    val key = "spark.sql.optimizer.excludedRules"
-    spark.conf.set(key, classOf[ZoneMapRewrite].getName)
-    try {
-      val d = q
-      assert(!roots(d).exists(_.endsWith("stats")), "the rule was not excluded")
-      d.collect().toSet
-    } finally spark.conf.unset(key)
-  }
-
-  /** The root paths of the scans in `q`'s optimized plan. */
-  private def roots(q: DataFrame): Seq[String] =
-    q.queryExecution.optimizedPlan.collectLeaves().flatMap {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
-        case _ => Nil
-      }
-      case _ => Nil
-    }
 
   test("a read of a registered directory together with another is not answered from its stats") {
     ZoneMapRegistry.register(tierPath, statsPath, statsSchema)
@@ -193,9 +176,142 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
     // extension, so a registered query's plan is where the rule shows
     graft.operators.Materialize.scoped {
       val q = SparkEntry.queries("storage_upsert")(spark, "/root/testdata/sf0.001")
-      val read = roots(q)
-      assert(read.nonEmpty && read.forall(_.endsWith(".stats")), q.queryExecution.optimizedPlan)
+      // the full frame, and the key-only aggregate the bench's count() leaves
+      for (f <- Seq(q, q.groupBy().count())) {
+        val read = roots(f)
+        assert(read.nonEmpty && read.forall(_.endsWith(".stats")), f.queryExecution.optimizedPlan)
+      }
       assert(q.count() > 0)
     }
+  }
+
+  /** `q` reads only `tier`'s stats and gives the rows the data gives. */
+  private def servedByStats(tier: String)(q: => DataFrame): Set[Row] = {
+    assert(roots(q) == Seq(s"$tier.stats"), q.queryExecution.optimizedPlan)
+    val got = q.collect().toSet
+    assert(got.nonEmpty && got == fromData(q), q.queryExecution.optimizedPlan)
+    got
+  }
+
+  /** `q` reads `tier` itself and gives the data's rows. */
+  private def readsTier(tier: String)(q: => DataFrame): Unit = {
+    assert(roots(q) == Seq(tier), q.queryExecution.optimizedPlan)
+    assert(q.collect().toSet == fromData(q))
+  }
+
+  test("segment-aligned windows and their argmax are answered from the stats") {
+    def t = spark.read.parquet(landed)
+    for (w <- Seq(16L, 32L)) {
+      servedByStats(landed)(TsQuery.windowMaxArgmax(t, w))
+      servedByStats(landed)(TsQuery.windowMaxPositional(t, 16L, 64L, w))
+      servedByStats(landed)(TsQuery.windowMaxPositional(t, 0L, Long.MaxValue, w))
+    }
+    // the same bounds written the other way round, and >= / < forms
+    servedByStats(landed)(t.filter(lit(16L) < col("seq_no") && col("seq_no") < 49L)
+      .groupBy(col("signal_id"), Readings.posWindow(col("seq_no"), 16L, 16L).as("win"))
+      .agg(max(col("value")), count(lit(1))))
+    servedByStats(landed)(t.filter(col("seq_no") >= 17L && lit(48L) >= col("seq_no"))
+      .groupBy(Readings.posWindow(col("seq_no"), 0L, 32L).as("win")).agg(sum(col("value_q"))))
+  }
+
+  test("unaligned window starts, widths and bounds are NOT rewritten") {
+    def t = spark.read.parquet(landed)
+    readsTier(landed)(TsQuery.windowMaxPositional(t, 8L, 64L, 16L))
+    readsTier(landed)(TsQuery.windowMaxPositional(t, 16L, 64L, 8L))
+    readsTier(landed)(TsQuery.windowMaxPositional(t, 16L, 64L, 24L))
+    readsTier(landed)(TsQuery.windowMaxPositional(t, 16L, 60L, 16L))
+    readsTier(landed)(TsQuery.windowMaxArgmax(t, 24L))
+    readsTier(landed)(TsQuery.windowMaxArgmax(t, 8L))
+    readsTier(landed)(t.filter(col("seq_no") >= 16L).groupBy(col("signal_id")).agg(max(col("value"))))
+  }
+
+  /** A hand-built tier: ties, nulls and partial trailing segments.
+    * Signal 1 has 40 rows (segment 2 is partial) and its max 9.0 at seq
+    * 16, 17 (either side of a segment boundary) and 33, and a null value
+    * at seq 5; its last row is seq 40 (5.0). Signal 2 has 20 rows of 1.0
+    * but 0.5 at seq 20, whose ts
+    * ties seq 19's, plus a row with no seq_no at that ts. Signal 3's
+    * latest row has no ts and its runner-up no value; signal 4's rows have
+    * no ts at all; two rows have no signal_id.
+    */
+  private lazy val edge: String = {
+    import spark.implicits._
+    def at(m: Int) = Some(new Timestamp(1704067200000L + m * 60000L))
+    val s1 = (1 to 40).map(i => (Option(1L), at(i), Option(i.toLong),
+      if (i == 5) None else Some(if (Set(16, 17, 33)(i)) 9.0 else (i % 7).toDouble)))
+    val s2 = (1 to 20).map(i => (Option(2L), at(math.min(i, 19)), Option(i.toLong),
+      Some(if (i == 20) 0.5 else 1.0))) :+ ((Option(2L), at(19), None, Some(3.0)))
+    val s3 = (1 to 5).map(i => (Option(3L), if (i == 5) None else at(i), Option(i.toLong),
+      if (i == 4) None else Some(i.toDouble)))
+    val s4 = (1 to 3).map(i => (Option(4L), None, Option(i.toLong), Some(i.toDouble)))
+    val s0 = (1 to 2).map(i => (Option.empty[Long], at(i), Option(i.toLong), Some(i.toDouble)))
+    val rows = (s1 ++ s2 ++ s3 ++ s4 ++ s0).toDF("signal_id", "ts", "seq_no", "value")
+      .withColumn("value_q", graft.functions.Quantize.quantize(col("value"), 2))
+    val tm = new TierManager(spark, Files.createTempDirectory("graft-zonemap-edge").toString)
+    tm.landTier0(rows)
+    tm.tier0
+  }
+
+  test("argmax ties: the smallest seq_no wins, across segments and in a partial one") {
+    def t = spark.read.parquet(edge)
+    val got = servedByStats(edge)(TsQuery.windowMaxArgmax(t, 32L))
+      .map(r => (Option(r.get(0)), Option(r.get(1)), r.get(2), r.get(3), r.getLong(4)))
+    assert(got.contains((Some(1L), Some(0L), 9.0, 16L, 32L)))
+    assert(got.contains((Some(1L), Some(1L), 9.0, 33L, 8L)))
+    assert(got.contains((Some(2L), Some(0L), 1.0, 1L, 20L)))
+    assert(got.contains((Some(2L), None, 3.0, null, 1L)))
+    servedByStats(edge)(TsQuery.windowMaxArgmax(t, 16L))
+  }
+
+  test("the last point per signal is answered from the stats, ties and nulls as the row_number window") {
+    def t = spark.read.parquet(edge)
+    val got = servedByStats(edge)(TsQuery.lastPerSignal(t))
+    val w = Window.partitionBy(col("signal_id")).orderBy(col("ts").desc, col("seq_no").desc)
+    val window = t.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("signal_id"), col("value").as("last_value")).collect().toSet
+    assert(got == window)
+    assert(got == Set(Row(1L, 5.0), Row(2L, 0.5), Row(3L, null), Row(4L, 3.0), Row(null, 2.0)))
+  }
+
+  test("a partial trailing segment is counted, not padded") {
+    def t = spark.read.parquet(edge)
+    val got = servedByStats(edge)(TsQuery.windowMaxPositional(t, 0L, Long.MaxValue, 16L))
+    assert(got.contains(Row(1L, 2L, 9.0, 8L)) && got.contains(Row(2L, 1L, 1.0, 4L)))
+    servedByStats(edge)(TsQuery.windowMaxPositional(t, 16L, 48L, 32L))
+    servedByStats(edge)(TsQuery.aggAll(t))
+  }
+
+  test("filters on signal_id (=, IN, a tag join's key set) are answered from the stats") {
+    def t = spark.read.parquet(landed)
+    servedByStats(landed)(t.filter(col("signal_id") === 3L).agg(max(col("value")), count(lit(1))))
+    servedByStats(landed)(t.filter(col("signal_id").isin(1L, 2L, 5L))
+      .groupBy(col("signal_id")).agg(max(col("value"))))
+    import spark.implicits._
+    // more than ten keys: the optimizer turns the IN into an INSET
+    val tags = (1L to 12L).map(i => (i, s"tag$i")).toDF("signal_id", "tag")
+    servedByStats(landed)(TsQuery.tagJoin(TsQuery.lastPerSignal(t), tags))
+    servedByStats(edge)(TsQuery.windowMaxArgmax(spark.read.parquet(edge)
+      .filter(col("signal_id").isin(1L, 2L)), 16L))
+  }
+
+  test("an aggregate with no aggregate function reads the stats keys") {
+    def t = spark.read.parquet(landed)
+    servedByStats(landed)(t.select(col("signal_id")).distinct())
+    servedByStats(landed)(t.select(col("signal_id"), Readings.segmentId(col("seq_no")).as("seg"))
+      .distinct())
+    // the bench sweep's count() prunes every aggregate of the inner query
+    servedByStats(landed)(TsQuery.windowMaxPositional(t, 0L, Long.MaxValue, 16L).groupBy().count())
+  }
+
+  test("a stats table registered with the old schema answers neither argmax nor the last point") {
+    val old = ZoneMap.segmentStats(spark.read.parquet(edge)).schema
+    val (path, current) = ZoneMapRegistry.lookup(edge).get
+    ZoneMapRegistry.register(edge, path, old)
+    try {
+      def t = spark.read.parquet(edge)
+      readsTier(edge)(TsQuery.windowMaxArgmax(t, 16L))
+      readsTier(edge)(TsQuery.lastPerSignal(t))
+      servedByStats(edge)(TsQuery.windowMaxPositional(t, 0L, Long.MaxValue, 16L))
+    } finally ZoneMapRegistry.register(edge, path, current)
   }
 }
