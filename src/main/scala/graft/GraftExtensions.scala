@@ -13,6 +13,8 @@ import graft.functions.{NativeFunctions, VectorFunctions}
   *    strings; DataFrame code uses the Column builders, which need no
   *    registration);
   *  - the zone-map rewrite rule (graft.plans.ZoneMapRewrite);
+  *  - the one-split aggregate rule (graft.plans.SingleSplitAggregate),
+  *    after the zone-map rule so its stats scans qualify;
   *  - the as-of join strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -22,6 +24,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ext.injectFunction((FunctionIdentifier(name), info, builder))
       }
     ext.injectOptimizerRule(session => graft.plans.ZoneMapRewrite(session))
+    ext.injectOptimizerRule(session => graft.plans.SingleSplitAggregate(session))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

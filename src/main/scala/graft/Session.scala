@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * `ExplainMain` and the test suites): `cpus` cores and as many shuffle
   * partitions, UTC, no UI, and the deployment's extensions
   * (`graft.GraftExtensions`: the native functions by name, the zone-map
-  * rule and the as-of strategy). `conf` adds settings or overrides these.
+  * and one-split rules and the as-of strategy). `conf` adds settings or
+  * overrides these.
   */
 object Session {
   def local(cpus: Int, conf: (String, String)*): SparkSession = {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.sql.extensions=graft.GraftExtensions` (the config every executor
   * of a 1000-node cluster would carry — see SparkTest); this spec asserts
   * the injections actually took: native vector functions resolve in pure
-  * SQL and the injected planner strategy alone plans the native as-of join.
+  * SQL, the injected planner strategy alone plans the native as-of join,
+  * and the injected one-split rule drops a tiny aggregate's exchange.
   */
 class ExtensionsSpec extends AnyFunSuite with SparkTest
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
@@ -43,6 +45,19 @@ class ExtensionsSpec extends AnyFunSuite with SparkTest
       val out = joined.orderBy(col("t")).collect().map(_.getString(2))
       assert(out.toSeq == Seq("a", "b"))
     } finally spark.experimental.extraStrategies = saved
+  }
+
+  test("injected optimizer rule aggregates a one-split input without an exchange") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ext-one").toString + "/t"
+    spark.range(0, 100).coalesce(1).write.parquet(dir)
+    // a fresh session: the rule can only come from the injection, and
+    // excluding it by name brings the exchange back
+    val s2 = spark.newSession()
+    def exchanges(): Int = collect(s2.read.parquet(dir).groupBy((col("id") % 3).as("k")).count()
+      .queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+    assert(exchanges() == 0)
+    s2.conf.set("spark.sql.optimizer.excludedRules", classOf[graft.plans.SingleSplitAggregate].getName)
+    assert(exchanges() == 1)
   }
 
   test("each injected function resolves by name and equals its Column builder") {

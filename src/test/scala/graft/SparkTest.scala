@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local SparkSession for specs. */
 trait SparkTest extends BeforeAndAfterAll { self: Suite =>
   // the deployment shape (Session.local): every suite runs through the
-  // extensions path (functions + zone-map rule + as-of strategy), exactly
-  // as a 1000-executor session would (ExtensionsSpec asserts the
-  // injections took)
+  // extensions path (functions + zone-map and one-split rules + as-of
+  // strategy), exactly as a 1000-executor session would (ExtensionsSpec
+  // asserts the injections took)
   lazy val spark: SparkSession = Session.local(4,
     "spark.app.name" -> "graft-test",
     "spark.sql.warehouse.dir" ->
@@ -31,29 +34,53 @@ trait SparkTest extends BeforeAndAfterAll { self: Suite =>
     case x => x
   })
 
+  /** `f` run with the session settings `kv`, each restored afterwards. */
+  def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** `f` with every input file of more than 2 KiB read as several splits:
+    * the shape of a scaled-up input, which the one-split rule
+    * (graft.plans.SingleSplitAggregate) leaves alone.
+    */
+  def multiSplit[T](f: => T): T = withConf("spark.sql.files.maxPartitionBytes" -> "2k")(f)
+
+  /** `plan` reads one split per scan and plans no exchange, so its output
+    * has as many partitions as its input: one.
+    */
+  def assertOneSplit(what: String, plan: SparkPlan): Unit = {
+    val scans = Aqe.collect(plan) { case s: FileSourceScanExec => s.inputRDD.getNumPartitions }
+    assert(scans.nonEmpty && scans.forall(_ == 1), s"$what: scan partitions $scans")
+    val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.isEmpty, s"$what: ${exchanges.size} exchanges\n$plan")
+    assert(plan.execute().getNumPartitions == 1, s"$what: output partitions")
+  }
+
+  private object Aqe extends AdaptiveSparkPlanHelper
+
   /** [[cells]] of `df` under the default codegen, then with whole-stage
     * codegen off and expressions interpreted (each run plans `df` anew).
     */
   def generatedAndInterpreted(df: => DataFrame): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
     val generated = cells(df)
-    val off = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    off.foreach { case (k, v) => spark.conf.set(k, v) }
-    try (generated, cells(df)) finally off.foreach { case (k, _) => spark.conf.unset(k) }
+    (generated, withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(cells(df)))
   }
 
   /** `q` answered from the data: built and optimized without the
     * zone-map rule.
     */
-  def fromData(q: => DataFrame): Set[Row] = {
-    val key = "spark.sql.optimizer.excludedRules"
-    spark.conf.set(key, classOf[graft.plans.ZoneMapRewrite].getName)
-    try {
+  def fromData(q: => DataFrame): Set[Row] =
+    withConf("spark.sql.optimizer.excludedRules" -> classOf[graft.plans.ZoneMapRewrite].getName) {
       val d = q
       assert(!roots(d).exists(_.endsWith("stats")), "the rule was not excluded")
       d.collect().toSet
-    } finally spark.conf.unset(key)
-  }
+    }
 
   /** The root paths of the scans in `q`'s optimized plan. */
   def roots(q: DataFrame): Seq[String] =

@@ -393,6 +393,8 @@ class StreamingSpec extends AnyFunSuite with SparkTest {
     assert(gatedSnap.forall(!_.getBoolean(3)), "the dense batch must fold the sampled bound")
     assert(gated("jobs") <= GatedJobs && gated("tasks") <= GatedTasks,
       s"probe-gated batch: $gated")
+    info(s"fast lane ${fast("jobs")} jobs / ${fast("tasks")} tasks, " +
+      s"probe-gated ${gated("jobs")} jobs / ${gated("tasks")} tasks")
   }
 
   test("streamed iforest scores against a frozen model equal the batch scores") {
