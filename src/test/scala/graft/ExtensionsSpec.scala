@@ -58,6 +58,10 @@ class ExtensionsSpec extends AnyFunSuite with SparkTest
     assert(exchanges() == 0)
     s2.conf.set("spark.sql.optimizer.excludedRules", classOf[graft.plans.SingleSplitAggregate].getName)
     assert(exchanges() == 1)
+    // a pre-CBO rule, run once after the fixed point the zone-map rule is in
+    val opt = s2.sessionState.optimizer
+    def named(rules: Seq[_]) = rules.exists(_.isInstanceOf[graft.plans.SingleSplitAggregate])
+    assert(named(opt.preCBORules) && !named(opt.extendedOperatorOptimizationRules))
   }
 
   test("each injected function resolves by name and equals its Column builder") {

@@ -63,27 +63,27 @@ class PlanAuditSpec extends AnyFunSuite with SparkTest
     // (the by-design nested-loop baseline) — excluded like seg_knn
     "text_langid_confusion", "ts_forecast_backtest",
     "asof_native_tolerance", "emb_project", "pipe_chunk",
-    // the blob-dedup rungs build lazily (banded /
+    // round-15 additions: the blob-dedup rungs build lazily (banded /
     // prefix-filtered postings candidate joins + confirm)
     "mm_dedup_exact", "mm_near_dup", "mm_near_dup_winnow")
   // ann_rp / ann_rp_rerank / ann_rp_*_recall are excluded like ann_quant:
   // the reduced-space pass ranks a bounded broadcast probe set against the
   // corpus by design (the JL shortlist baseline), and the recall rows
   // embed the brute-force exact baseline
-  // same rationales: buff_max_outlier fetches the
+  // round-10 exclusions, same rationales: buff_max_outlier fetches the
   // scalar base offset at build time like the other buff_* rows;
   // ml_iforest_psi fits at construction like the rest of the ml_* family;
   // seg_profile_route / seg_profile_auto / seg_discord_auto
   // localCheckpoint at construction like the rest of the profile family
   // (their keyed-join discipline is asserted on the grid pair generator in
   // MotifDiscordSpec's plan-shape test)
-  // same rationales: seg_knn_fft(_agree) rank the
+  // round-9 exclusions, same rationales: seg_knn_fft(_agree) rank the
   // bounded broadcast probe set like seg_knn; buff_range_outlier /
   // buff_sum_outlier fetch the scalar base offset at build time like the
   // other buff_* rows; tier_lru_plan localCheckpoints its range-
   // partitioned stats at build time (the two-phase prefix sum's pid
   // consistency requires one materialization)
-  // same construction-runs-jobs rationale:
+  // round-8 exclusions, same construction-runs-jobs rationale:
   // text_bm25/text_xent/pipe_quality_filter/pipe_bpe_round2 fetch bounded
   // corpus scalars at build time, ml_dbscan/dedup_semantic run the CC
   // loop; their plan invariants are asserted in RelevanceSpec /
@@ -129,55 +129,40 @@ class PlanAuditSpec extends AnyFunSuite with SparkTest
   test("LSH dedup shuffles only on keys, never funnels the corpus") {
     // every exchange must be hash-partitioned (keyed); a RoundRobin or
     // single-partition exchange in the pair-generation path would mean
-    // the corpus is being funneled, not bucketed; asserted on a
-    // multi-split read, the shape of a scaled-up corpus
-    val names = Seq("dedup_minhash", "dedup_ngram", "simhash_pairs", "ann_lsh")
-    multiSplit {
-      for (name <- names) {
-        val exs = collect(plan(name)) { case e: ShuffleExchangeExec => e }
-        assert(exs.nonEmpty, s"$name: expected keyed shuffles")
-        exs.foreach { e =>
-          val part = e.outputPartitioning.getClass.getSimpleName
-          assert(part.contains("HashPartitioning"),
-            s"$name shuffles with $part instead of hash partitioning")
-        }
+    // the corpus is being funneled, not bucketed
+    for (name <- Seq("dedup_minhash", "dedup_ngram", "simhash_pairs", "ann_lsh")) {
+      val exs = collect(plan(name)) { case e: ShuffleExchangeExec => e }
+      assert(exs.nonEmpty, s"$name: expected keyed shuffles")
+      exs.foreach { e =>
+        val part = e.outputPartitioning.getClass.getSimpleName
+        assert(part.contains("HashPartitioning"),
+          s"$name shuffles with $part instead of hash partitioning")
       }
     }
-    // the fixture's corpus is one split: the join-free pair generators
-    // shuffle nothing at all (simhash_pairs band-joins its checkpointed
-    // signatures and ann_lsh joins probes to candidates: keyed joins)
-    for (name <- Seq("dedup_minhash", "dedup_ngram")) assertOneSplit(name, plan(name))
   }
 
   test("bandit reward aggregations shuffle keyed only") {
     // the distributed half of the bandit (per-segment rewards) must stay
     // a keyed aggregation: hash-partitioned exchanges, no funneling
-    // a multi-split read is the shape of scaled-up readings
-    def inputs() = {
-      val r = graft.operators.Readings.of(spark, sf)
-      Seq("compress" -> graft.ml.Bandit.rewardInputs(r),
-        "recode" -> graft.ml.Bandit.recodeRewardInputs(r))
-    }
-    multiSplit {
-      for ((nm, df) <- inputs()) {
-        val p = df.queryExecution.executedPlan
-        assert(collect(p) { case c: CartesianProductExec => c }.isEmpty,
-          s"bandit $nm plans a CartesianProduct")
-        val exs = collect(p) { case e: ShuffleExchangeExec => e }
-        assert(exs.nonEmpty, s"bandit $nm: expected keyed shuffles")
-        exs.foreach { e =>
-          val part = e.outputPartitioning.getClass.getSimpleName
-          assert(part.contains("HashPartitioning"),
-            s"bandit $nm shuffles with $part instead of hash partitioning")
-        }
+    val r = graft.operators.Readings.of(spark, sf)
+    for ((nm, df) <- Seq(
+        "compress" -> graft.ml.Bandit.rewardInputs(r),
+        "recode" -> graft.ml.Bandit.recodeRewardInputs(r))) {
+      val p = df.queryExecution.executedPlan
+      assert(collect(p) { case c: CartesianProductExec => c }.isEmpty,
+        s"bandit $nm plans a CartesianProduct")
+      val exs = collect(p) { case e: ShuffleExchangeExec => e }
+      assert(exs.nonEmpty, s"bandit $nm: expected keyed shuffles")
+      exs.foreach { e =>
+        val part = e.outputPartitioning.getClass.getSimpleName
+        assert(part.contains("HashPartitioning"),
+          s"bandit $nm shuffles with $part instead of hash partitioning")
       }
     }
-    // the fixture's readings are one split: no shuffle at all
-    for ((nm, df) <- inputs()) assertOneSplit(s"bandit $nm", df.queryExecution.executedPlan)
   }
 
   test("bandit replay never materializes the full reward stream on the driver") {
-    // the scale-killer: the policy walk must CONSUME the
+    // the r5 verdict's one scale-killer: the policy walk must CONSUME the
     // ordered reward stream (toLocalIterator, one partition at a time),
     // never .collect() it whole. Source-level guard: a reintroduced
     // full-stream collect in the bandit module fails here.

@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** O9 — an aggregate or window over a one-split file input plans no
-  * exchange and runs as one job, with the results of the same rows
-  * written as two files; any other input keeps its exchange.
+/** O9 — an aggregate over a one-split file input, through projections
+  * and filters only, plans no exchange and runs as one job, with the
+  * results of the same rows written as two files; any other input or
+  * shape keeps its exchange.
   */
 class SingleSplitAggregateSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
@@ -35,16 +36,10 @@ class SingleSplitAggregateSpec extends AnyFunSuite with SparkTest with AdaptiveS
   private val shapes: Seq[(String, DataFrame => DataFrame)] = Seq(
     "aggregate" -> (_.agg(count(lit(1)), sum("v"), max("v"))),
     "grouped aggregate" -> (_.groupBy("k").agg(sum("v"), min("seq"))),
-    "window" -> (_.withColumn("r",
-      row_number().over(Window.partitionBy("k").orderBy(desc("v"), col("seq"))))),
-    // the percentile-from-histogram shape: window, explode, filter, group
-    "window under an aggregate" -> (_.select(col("k"), col("v"),
-        sum("v").over(Window.partitionBy("k").orderBy("seq")).as("cume"))
-      .withColumn("p", explode(array(lit(1), lit(2))))
-      .filter(col("cume") % col("p") === 0)
-      .groupBy("k", "p").agg(max("v"), count(lit(1)))))
+    "aggregate over a filter and a projection" -> (_.filter(col("seq") % 3 =!= 0)
+      .select(col("k"), (col("v") * 2).as("w")).groupBy("k").agg(max("w"), count(lit(1)))))
 
-  test("an aggregate or window over one split plans no exchange and runs as one job") {
+  test("an aggregate over one split plans no exchange and runs as one job") {
     for ((what, shape) <- shapes) {
       val q = shape(spark.read.parquet(oneFile))
       val plan = q.queryExecution.executedPlan
@@ -56,12 +51,10 @@ class SingleSplitAggregateSpec extends AnyFunSuite with SparkTest with AdaptiveS
     }
   }
 
-  test("exactly one coalesce under each operator the rule touched, stable under the optimizer") {
+  test("exactly one coalesce under each aggregate the rule touched, stable under the optimizer") {
     for ((what, shape) <- shapes) {
       val q = shape(spark.read.parquet(oneFile))
       val optimized = q.queryExecution.optimizedPlan
-      // the window of the percentile shape is touched; the aggregate over
-      // it reads the window's single partition
       assert(placed(optimized).size == 1, s"$what:\n$optimized")
       assert(coalesces(q.queryExecution.executedPlan).size == 1, what)
       assert(placed(spark.sessionState.optimizer.execute(optimized)).size == 1, s"$what: not stable")
@@ -90,6 +83,23 @@ class SingleSplitAggregateSpec extends AnyFunSuite with SparkTest with AdaptiveS
     keepsExchange("repartition(4)", byKey(one.repartition(4)), byKey(one))
     val dims = spark.read.parquet(twoFiles).select("k").distinct()
     keepsExchange("join side", byKey(one.join(dims, "k")), byKey(one))
+  }
+
+  test("a window, and an aggregate over a window or a generator, keep their exchange") {
+    val window = (df: DataFrame) => df.withColumn("r",
+      row_number().over(Window.partitionBy("k").orderBy(desc("v"), col("seq"))))
+    // the percentile-from-histogram shape: window, explode, filter, group
+    val overWindow = (df: DataFrame) => df.select(col("k"), col("v"),
+        sum("v").over(Window.partitionBy("k").orderBy("seq")).as("cume"))
+      .withColumn("p", explode(array(lit(1), lit(2))))
+      .filter(col("cume") % col("p") === 0)
+      .groupBy("k", "p").agg(max("v"), count(lit(1)))
+    val overGenerator = (df: DataFrame) => df
+      .withColumn("p", explode(array(lit(1), lit(2), lit(3))))
+      .groupBy("k", "p").agg(sum("v"))
+    for ((what, shape) <- Seq("window" -> window, "aggregate over a window" -> overWindow,
+        "aggregate over a generator" -> overGenerator))
+      keepsExchange(what, shape(spark.read.parquet(oneFile)), shape(spark.read.parquet(twoFiles)))
   }
 
   test("a streaming aggregate keeps its exchange") {

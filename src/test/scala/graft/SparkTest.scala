@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** Shared local SparkSession for specs. */
@@ -43,25 +40,6 @@ trait SparkTest extends BeforeAndAfterAll { self: Suite =>
       case (k, None) => spark.conf.unset(k)
     }
   }
-
-  /** `f` with every input file of more than 2 KiB read as several splits:
-    * the shape of a scaled-up input, which the one-split rule
-    * (graft.plans.SingleSplitAggregate) leaves alone.
-    */
-  def multiSplit[T](f: => T): T = withConf("spark.sql.files.maxPartitionBytes" -> "2k")(f)
-
-  /** `plan` reads one split per scan and plans no exchange, so its output
-    * has as many partitions as its input: one.
-    */
-  def assertOneSplit(what: String, plan: SparkPlan): Unit = {
-    val scans = Aqe.collect(plan) { case s: FileSourceScanExec => s.inputRDD.getNumPartitions }
-    assert(scans.nonEmpty && scans.forall(_ == 1), s"$what: scan partitions $scans")
-    val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeExec => e }
-    assert(exchanges.isEmpty, s"$what: ${exchanges.size} exchanges\n$plan")
-    assert(plan.execute().getNumPartitions == 1, s"$what: output partitions")
-  }
-
-  private object Aqe extends AdaptiveSparkPlanHelper
 
   /** [[cells]] of `df` under the default codegen, then with whole-stage
     * codegen off and expressions interpreted (each run plans `df` anew).

@@ -5,6 +5,9 @@ import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.CoalesceExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{Readings, TierManager, TsQuery}
 import graft.plans.{ZoneMap, ZoneMapRegistry, ZoneMapRewrite}
@@ -15,7 +18,7 @@ import graft.plans.{ZoneMap, ZoneMapRegistry, ZoneMapRewrite}
   * `signal_id` or segment-aligned `seq_no` bounds, must be answered from
   * the stats table, with identical results; anything else reads the tier.
   */
-class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
+class ZoneMapRuleSpec extends AnyFunSuite with SparkTest with AdaptiveSparkPlanHelper {
 
   private lazy val (tierPath, statsPath, statsSchema) = {
     val base = Files.createTempDirectory("graft-zonemap").toString
@@ -223,6 +226,27 @@ class ZoneMapRuleSpec extends AnyFunSuite with SparkTest {
     readsTier(landed)(TsQuery.windowMaxArgmax(t, 24L))
     readsTier(landed)(TsQuery.windowMaxArgmax(t, 8L))
     readsTier(landed)(t.filter(col("seq_no") >= 16L).groupBy(col("signal_id")).agg(max(col("value"))))
+  }
+
+  test("over a one-file tier the stats still answer, and the one-split rule then drops the exchange") {
+    // one signal lands as one bucket of one file, the shape the one-split
+    // rule coalesces; that rule runs after the zone-map rule's fixed
+    // point, so its coalesce never hides the tier from the zone map
+    val r = spark.read.parquet(tierPath)
+    val sig = r.agg(min(col("signal_id"))).first().getLong(0)
+    val tm = new TierManager(spark, Files.createTempDirectory("graft-zonemap-one").toString)
+    tm.landTier0(r.filter(col("signal_id") === sig).coalesce(1))
+    def files(dir: String) = Files.walk(java.nio.file.Paths.get(dir)).toArray
+      .count(_.toString.endsWith(".parquet"))
+    assert(files(tm.tier0) == 1 && files(s"${tm.tier0}.stats") == 1)
+    def t = spark.read.parquet(tm.tier0)
+    for (q <- Seq[DataFrame => DataFrame](TsQuery.aggAll, TsQuery.windowMaxArgmax(_, 16L),
+        TsQuery.lastPerSignal)) {
+      servedByStats(tm.tier0)(q(t))
+      val plan = q(t).queryExecution.executedPlan
+      assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty &&
+        collect(plan) { case c: CoalesceExec => c }.size == 1, plan)
+    }
   }
 
   /** A hand-built tier: ties, nulls and partial trailing segments.
