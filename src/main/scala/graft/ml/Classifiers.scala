@@ -1,7 +1,7 @@
 package graft.ml
 
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, LinearSVC, NaiveBayes, RandomForestClassifier}
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -53,11 +53,18 @@ object Classifiers {
     df.select(min(array_min(vector_to_array(col("features")))))
       .collect()(0).getDouble(0)
 
+  /** The one KMeans fit (20 iterations) over a `features` column; the
+    * defaults are the embeddings model that `emb_kmeans`, its `_check`
+    * and [[kmeansPurity]] all fit.
+    */
+  def kmeans(data: DataFrame, k: Int = 10, seed: Long = 42L): KMeansModel =
+    new KMeans().setK(k).setSeed(seed).setMaxIter(20).fit(data)
+
   /** KMeans clustering with purity against known labels (the reference's
     * recoding-fidelity style metric: label agreement after lossy steps).
     */
   def kmeansPurity(data: DataFrame, k: Int, seed: Long = 42L): DataFrame = {
-    val m = new KMeans().setK(k).setSeed(seed).setMaxIter(20).fit(data)
+    val m = kmeans(data, k, seed)
     val assigned = m.transform(data)
     val spark = data.sparkSession
     import spark.implicits._

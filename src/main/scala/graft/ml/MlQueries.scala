@@ -20,8 +20,7 @@ object MlQueries {
     // scale checker can verify the reported accuracy IS the prediction
     // dump's hit rate — the ML fit stays engine-specific, its accounting
     // does not (ScaleInvariants)
-    "ml_classifiers" -> ((s, d) => FitCache.putDf(s, s"classifiersDump:$d")(
-      classifiersDump(s, d))),
+    "ml_classifiers" -> ((s, d) => classifiersDump(s, d)),
 
     // hash-exact companion to ml_classifiers: the Spark side recomputes
     // the dump's accounting invariants as a violations table (the fit
@@ -29,15 +28,9 @@ object MlQueries {
     // Every violation is an exact-integer comparison: dt accuracy is an
     // integer-count ratio, so equality against the recomputed hit rate
     // holds bitwise or not at all.
-    // reuses ml_classifiers' published dump when that query already ran
-    // this session (FitCache) — a full sweep pays the classifier
-    // training once, not once per companion. So the bench row's work
-    // depends on sweep order (sf0.1, local[4]: 11 jobs after
-    // ml_classifiers, 40 run alone); its prior only holds for a full sweep.
     "ml_classifiers_check" -> ((s, d) => {
       import s.implicits._
-      val dump = FitCache.getOrFitDf(s, s"classifiersDump:$d")(
-        classifiersDump(s, d))
+      val dump = classifiersDump(s, d)
       val acc = dump.where(col("kind") === "acc").select("model", "accuracy")
       val unit = acc
         .agg(sum(when(col("accuracy") < 0.0 || col("accuracy") > 1.0, 1L)
@@ -78,10 +71,7 @@ object MlQueries {
       unit.unionByName(dtMatch).unionByName(present).unionByName(coverage)
     }),
 
-    "ml_kmeans_purity" -> ((s, d) => FitCache.putDf(s, s"kmeansPurity:$d")(
-      Classifiers.kmeansPurity(
-        Classifiers.featuresFrame(Tables.embeddings(s, d), "embedding", "label"),
-        k = 10))),
+    "ml_kmeans_purity" -> ((s, d) => embeddingsPurity(s, d)),
 
     // hash-exact companion to ml_kmeans_purity: purity is structurally
     // >= the global majority-label share and <= 1. The Spark side
@@ -90,14 +80,7 @@ object MlQueries {
     // IEEE division of the same two integers on both sides).
     "ml_kmeans_purity_check" -> ((s, d) => {
       import s.implicits._
-      // reuses ml_kmeans_purity's published fit when it ran this session,
-      // so the bench row's work depends on sweep order (sf0.1, local[4]:
-      // 6 jobs after ml_kmeans_purity, 42 run alone)
-      val purity = FitCache.getOrFitDf(s, s"kmeansPurity:$d")(
-        Classifiers.kmeansPurity(
-          Classifiers.featuresFrame(Tables.embeddings(s, d),
-            "embedding", "label"),
-          k = 10)).collect()(0).getDouble(2)
+      val purity = embeddingsPurity(s, d).collect()(0).getDouble(2)
       val share = Tables.embeddings(s, d)
         .groupBy(col("label")).agg(count(lit(1)).as("c"))
         .agg((max(col("c")).cast("double") / sum(col("c")).cast("double"))
@@ -144,19 +127,8 @@ object MlQueries {
       val test = blobs.where(pmod(hash(col("features")), lit(5)) === 0)
       val accs = Classifiers.trainEval(train, test).collect()
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
-      // the purity term is EXACTLY ml_kmeans_purity's published artifact
-      // (same featuresFrame + seeded k=10 fit), so the gate reuses it
-      // through the FitCache companion mechanism when that query already
-      // ran this session, and refits identically when standalone — a
-      // full sweep pays the embeddings KMeans once, not three times
-      // (purity + its _check + this gate). So the bench row's work depends
-      // on sweep order (sf0.1, local[4]: 29 jobs after ml_kmeans_purity,
-      // 65 run alone); its prior only holds for a full sweep.
-      val purity = FitCache.getOrFitDf(s, s"kmeansPurity:$d")(
-        Classifiers.kmeansPurity(
-          Classifiers.featuresFrame(Tables.embeddings(s, d),
-            "embedding", "label"),
-          k = 10)).collect()(0).getDouble(2)
+      // the purity term is ml_kmeans_purity's value, fitted here
+      val purity = embeddingsPurity(s, d).collect()(0).getDouble(2)
       Seq((accs("decision_tree") >= 0.9, accs("random_forest") >= 0.9,
         purity >= 0.12)).toDF("dt_ok", "rf_ok", "purity_ok")
     }),
@@ -272,13 +244,23 @@ object MlQueries {
     })
   )
 
+  /** The embeddings k-means purity row of `ml_kmeans_purity`, which its
+    * `_check` and `ml_quality_gate` bound and gate.
+    */
+  private def embeddingsPurity(s: SparkSession, d: String): DataFrame =
+    Classifiers.kmeansPurity(
+      Classifiers.featuresFrame(Tables.embeddings(s, d), "embedding", "label"),
+      k = 10)
+
   /** Shared builder for ml_classifiers and its _check companion: the
     * accuracy summary rows (kind='acc') plus the decision tree's
     * per-test-point predictions (kind='pred'). The decision tree is
     * fitted ONCE: its accuracy row is computed FROM the prediction dump
     * (not by a second independent fit), so the acc==hit-rate invariant
     * holds by construction and the query doesn't pay a redundant full DT
-    * training pass.
+    * training pass. The dump is collected into a local frame: the
+    * companion reads it three times, and each read of a lazy dump would
+    * score the test split again.
     */
   private def classifiersDump(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.ml.classification.DecisionTreeClassifier
@@ -309,7 +291,8 @@ object MlQueries {
       .select(lit("pred").as("kind"), lit("decision_tree").as("model"),
         lit(null).cast("double").as("accuracy"),
         col("vec_id"), col("prediction"), col("label"))
-    accs.unionByName(dtAcc).unionByName(preds)
+    val dump = accs.unionByName(dtAcc).unionByName(preds)
+    s.createDataFrame(java.util.Arrays.asList(dump.collect(): _*), dump.schema)
   }
 
   // the outlier fixture's mixer is plain 63-bit-safe integer arithmetic

@@ -110,8 +110,8 @@ object AnnQueries {
     * can time the partition-pruned serve apart from the one-time build —
     * at 100 TB the index is built once by the ingest pipeline and
     * amortized over every query, so BUILD+PROBE as one number
-    * misattributes the scale cost (SCALE100 r12: 119 s at x100 for a
-    * fixed 100-row answer, unattributed).
+    * misattributes the scale cost (119 s at x100 for a fixed 100-row
+    * answer, unattributed).
     */
   private[graft] def buildStore(s: SparkSession, d: String, path: String,
                                 index: Ivf): Unit =
@@ -183,7 +183,7 @@ object AnnQueries {
       // the brute baseline is the REFERENCE, not the knob under sweep:
       // materialize its tiny result (|probes|·TopK rows) once instead of
       // re-inlining the full exact-scan subtree under all four union
-      // branches (r15: 4x brute executions for identical rows). Each
+      // branches (4x brute executions for identical rows). Each
       // knob's ivfTopK serve stays fully self-contained. The codebook
       // collect is knob-independent — hoisted out of the loop.
       val brute = Materialize.checkpoint(Similarity.bruteTopK(probes(s, d), corpus(s, d), TopK)
@@ -263,8 +263,8 @@ object AnnQueries {
     // the persisted IVF-PQ index: cell-partitioned codes on disk (no
     // floats), probes read only their cells — same arithmetic as
     // ann_ivfpq, so the same oracle checks it. Centroids collected once
-    // (they fed the codebook derivation, the store write AND the probe
-    // — three identical collect jobs per construction before r16)
+    // (they feed the codebook derivation, the store write AND the probe,
+    // which would otherwise be three identical collect jobs)
     "ann_ivfpq_store" -> ((s, d) => {
       val path = Materialize.scratchDir("ivfpq-store")
       val index = pqIndex(s, d)
@@ -343,7 +343,7 @@ object AnnQueries {
         .select(col("probe_id"), col("cand_id")),
       Seq("probe_id", "cand_id"))),
 
-    // the serving-knob curve for the reduced tier (r13 verdict #8):
+    // the serving-knob curve for the reduced tier:
     // recall@TopK vs nProbe at the deployed shortlist — committed
     // evidence that recall is monotone in probe width and the default
     // operating point (NProbe = 4) is not a cliff edge. Mirrors
@@ -371,7 +371,7 @@ object AnnQueries {
       }.reduce(_ unionByName _)
     }),
 
-    // the OTHER serving knob of the reduced tier (r14 verdict #6):
+    // the OTHER serving knob of the reduced tier:
     // recall@TopK vs SHORTLIST at the deployed nProbe — together with
     // ann_rp_ivf_curve this maps both axes of the (nProbe, shortlist)
     // operating point. Same honesty note as the nprobe curve: the oracle
@@ -472,21 +472,11 @@ object AnnQueries {
     // every column, and an ndarray cell is unsortable/unhashable there;
     // the invariant SQL parses the string back losslessly.
     "emb_kmeans" -> ((s, d) => {
-      import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       import s.implicits._
       val feat = emb(s, d).select(col("vec_id"), col("label"),
         array_to_vector(col("embedding").cast("array<double>")).as("features"))
-      // publishes the fit for emb_kmeans_check (FitCache): the companion
-      // verifies THIS model's invariants without re-training it. The
-      // published copy is SUMMARY-FREE: the fitted model's training
-      // summary holds a predictions DataFrame that strongly references
-      // the owning SparkSession, and a WeakHashMap value that references
-      // its key pins the entry forever — the copy keeps uid, params and
-      // cluster centers (all the companion reads) and drops the summary
-      val model = graft.ml.FitCache.put(s, s"embKmeans:$d")(
-        new KMeans().setK(10).setSeed(42L).setMaxIter(20).fit(feat)
-          .copy(org.apache.spark.ml.param.ParamMap.empty))
+      val model = graft.ml.Classifiers.kmeans(feat)
       val pts = model.transform(feat)
         .select(lit("pt").as("kind"), col("vec_id").as("id"),
           col("prediction").cast("long").as("cluster"),
@@ -505,17 +495,12 @@ object AnnQueries {
     // inside the driver's exact-hash contract — the fit breaking any
     // invariant flips a violations cell and fails the hash.
     "emb_kmeans_check" -> ((s, d) => {
-      import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       import s.implicits._
       val e = emb(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("embv"))
       val feat = e.select(col("vec_id"), array_to_vector(col("embv")).as("features"))
-      // reuses emb_kmeans' published fit when it ran this session, so the
-      // bench row's work depends on sweep order (sf0.1, local[4]: 8 jobs
-      // after emb_kmeans, 39 run alone)
-      val model = graft.ml.FitCache.getOrFit(s, s"embKmeans:$d")(
-        new KMeans().setK(10).setSeed(42L).setMaxIter(20).fit(feat))
+      val model = graft.ml.Classifiers.kmeans(feat)
       val assigned = model.transform(feat)
         .select(col("vec_id"), col("prediction").cast("long").as("own"))
       val ctrs = broadcast(model.clusterCenters.zipWithIndex.toSeq

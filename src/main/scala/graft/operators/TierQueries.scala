@@ -308,8 +308,8 @@ object TierQueries {
           min(col("signal_id")).as("first_sig"))
         .filter(col("n_segs") >= 2L)),
 
-    "storage_codec_cr" -> ((s, d) => graft.ml.FitCache.putDf(s, s"codecMatrix:$d")(
-      graft.sources.CodecStore.compressionMatrix(r(s, d)))),
+    "storage_codec_cr" -> ((s, d) =>
+      graft.sources.CodecStore.compressionMatrix(r(s, d))),
 
     // hash-exact companion to storage_codec_cr (the same treatment the
     // three ML dumps got): the matrix's BYTES stay machine-measured (no
@@ -317,15 +317,12 @@ object TierQueries {
     // every (codec, repr) cell present, every byte count positive, the
     // cr column exactly bytes/baseline-bytes (same IEEE operands on both
     // computations), and the three native segment codecs decode back
-    // bit-exactly over every segment. Reuses storage_codec_cr's
-    // published matrix when that query already ran this session, so the
-    // bench row's work depends on sweep order (sf0.1, local[4]: 15 jobs
-    // after storage_codec_cr, 53 run alone).
+    // bit-exactly over every segment. The matrix is measured here too; it
+    // is a local frame, so its several reads below never re-measure it.
     "storage_codec_cr_check" -> ((s, d) => {
       import s.implicits._
       import graft.functions.CodecFunctions._
-      val matrix = graft.ml.FitCache.getOrFitDf(s, s"codecMatrix:$d")(
-        graft.sources.CodecStore.compressionMatrix(r(s, d)))
+      val matrix = graft.sources.CodecStore.compressionMatrix(r(s, d))
       val expected = (for {
         repr <- Seq("double", "fixed_q", "delta_q")
         codec <- graft.sources.CodecStore.Codecs
@@ -521,7 +518,7 @@ object TierQueries {
     // the same compressed-domain queries
     "buff_range_outlier" -> ((s, d) => {
       // one seq_no derivation, KEPT only on the outlier-coded rows
-      // (measured r15: the majority/exception encoding consumes the
+      // (measured: the majority/exception encoding consumes the
       // plane frame 4-5x so materializing wins; on the plain-plane rows
       // the checkpoint cost exceeded the one saved window and was
       // reverted)
@@ -550,7 +547,7 @@ object TierQueries {
     // projection, scan I/O is exception bytes + definition levels only
     "buff_max_outlier" -> ((s, d) => {
       // one seq_no derivation, KEPT only on the outlier-coded rows
-      // (measured r15: the majority/exception encoding consumes the
+      // (measured: the majority/exception encoding consumes the
       // plane frame 4-5x so materializing wins; on the plain-plane rows
       // the checkpoint cost exceeded the one saved window and was
       // reverted)

@@ -206,9 +206,8 @@ object Ingest {
     * and never probes its own bands (StreamingSpec drops a commit entry,
     * restarts, and compares every store to a clean run).
     *
-    * Per-batch counts are logged (`[dedup-grow]` stderr lines). Returns
-    * the started query; per-batch cost lives in `recentProgress`
-    * (addBatch).
+    * Returns the started query; per-batch cost lives in `recentProgress`
+    * (addBatch), and each batch's confirmed pairs in `<store>/pairs`.
     */
   def dedupGrowStream(spark: SparkSession, inDir: String, storeDir: String,
                       threshold: Double = 0.5,
@@ -250,7 +249,7 @@ object Ingest {
           // only at the flagged dup_of ids (join pruning), the batch's
           // own sets broadcast, same size-ratio prune + one-pass
           // Jaccard as the batch confirm
-          val confirmed = Materialize.cache(cand
+          val confirmed = cand
             .join(landed(setStore, batchSets)
                 .select(col("doc_id").as("dup_of"), col("sh").as("shb")),
               Seq("dup_of"))
@@ -262,13 +261,8 @@ object Ingest {
             .withColumn("jac",
               graft.functions.TextOps.jaccardLongSets(col("sh"), col("shb")))
             .filter(col("jac") >= threshold)
-            .select(col("new_id").as("doc_id"), col("dup_of"), col("jac")))
-          val nConfirmed = confirmed.count()
+            .select(col("new_id").as("doc_id"), col("dup_of"), col("jac"))
           pairStore.write(confirmed, batchId)
-          System.err.println(s"[dedup-grow] batch_id=$batchId " +
-            s"confirmed_pairs=$nConfirmed")
-        } else {
-          System.err.println(s"[dedup-grow] batch_id=$batchId store empty")
         }
         bandStore.write(bands, batchId)
         setStore.write(batchSets, batchId)

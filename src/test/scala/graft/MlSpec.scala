@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{Classifiers, CrPredictor, Fixtures}
-import graft.operators.Readings
+import graft.operators.{Materialize, Readings}
 
 /** M3/M4/M5 — quality-range assertions (reference-style: metrics, not
   * identical labels, SURVEY §7.4).
@@ -38,6 +38,29 @@ class MlSpec extends AnyFunSuite with SparkTest {
     assert(purity > 0.9, s"purity $purity")
   }
 
+  private val sf = "/root/testdata/sf0.001"
+
+  test("a companion row's work is its own, whether or not its primary ran") {
+    def run(q: String) = counters(Materialize.scoped {
+      SparkEntry.queries(q)(spark, sf).count(); ()
+    }).filter { case (k, _) => k == "jobs" || k == "tasks" }
+    val alone = run("ml_kmeans_purity_check")
+    run("ml_kmeans_purity")
+    assert(run("ml_kmeans_purity_check") == alone)
+  }
+
+  test("emb_kmeans and the purity rows fit the same embeddings k-means") {
+    import org.apache.spark.ml.functions.array_to_vector
+    val e = graft.Tables.embeddings(spark, sf)
+    val embFeatures = e.select(col("vec_id"), col("label"),
+      array_to_vector(col("embedding").cast("array<double>")).as("features"))
+    val purityFeatures = Classifiers.featuresFrame(e, "embedding", "label")
+    val centres = Seq(embFeatures, purityFeatures)
+      .map(f => Classifiers.kmeans(f).clusterCenters.map(_.toArray.toSeq).toSeq)
+    assert(centres(0).size == 10)
+    assert(centres(0) == centres(1))
+  }
+
   test("outlier fixture hits the requested ratio deterministically") {
     val f = Fixtures.outlierColumn(spark, 20000L, 0.1)
     val n = f.count()
@@ -56,7 +79,7 @@ class MlSpec extends AnyFunSuite with SparkTest {
   }
 
   test("CR predictor orders codecs sensibly and respects the target guard") {
-    val r = Readings.of(spark, "/root/testdata/sf0.001")
+    val r = Readings.of(spark, sf)
     val est = CrPredictor.estimate(r, 0.5, Readings.Scale)
       .collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
     assert(est("uncompressed") == 1.0)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SparkEntrySpec extends AnyFunSuite {
 
-  test("every oracle names a query, and only the FitCache primaries lack one") {
+  test("every oracle names a query, and only the fit primaries lack one") {
     val (queries, oracles) = (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
     assert(oracles.subsetOf(queries), s"oracles without a query: ${oracles -- queries}")
     assert(queries -- oracles ==
